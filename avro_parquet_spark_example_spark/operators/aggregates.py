@@ -548,13 +548,12 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and queries all four quantiles — identical sketch, identical
     # estimates (A/B collect-compared). Warm noop 1.2 -> 0.5 s at sf0.1.
     pcts = [(0.25, "p25"), (0.50, "p50"), (0.75, "p75"), (0.95, "p95")]
-    arr = ",".join(str(p) for p, _ in pcts)
     return (
         li.groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr(
-                f"approx_percentile(l_extendedprice, array({arr}), 10000)"
+            F.percentile_approx(
+                "l_extendedprice", [p for p, _ in pcts], 10000
             ).alias("__ps"),
         )
         .select(

@@ -628,9 +628,9 @@ def exact_verified_pairs(
     shingle side then prunes by a pushed-down filter on the doc scan
     instead of computing + broadcasting the distinct candidate-id set —
     one less plan and one less broadcast job when the caller statically
-    knows the universe. Shared by ``dedup_minhash_verified`` and
-    ``tools/minhash_profile.py`` so the profiler can never measure a
-    stale copy of the stage."""
+    knows the universe. Shared by ``dedup_minhash_verified`` and the
+    stage profiler that lived in ``tools/`` up to commit ced5246, so the
+    profiler could never measure a stale copy of the stage."""
     hint = F.broadcast if bounded else (lambda df: df)
     if doc_filter is not None:
         doc_side = docs.filter(doc_filter)

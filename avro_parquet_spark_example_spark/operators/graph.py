@@ -1052,8 +1052,9 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, the same profile as PageRank; localCheckpoint cuts lineage
     per round.
 
-    Stage-attributed r10 (tools/hits_profile.py — VERDICT r9 asked for
-    the minhash_profile treatment of the registry's cost outlier): the
+    Stage-attributed r10 (a one-off HITS profiler, in ``tools/`` up to
+    commit ced5246 — VERDICT r9 asked for a per-stage split of the
+    registry's cost outlier): the
     score frames are NODE-cardinality (≤ |supp|+|part|) but, coming off
     a checkpoint+crossJoin, carry no stats, so Spark shuffle-joined the
     full incidence frame per half-round. Forcing ``F.broadcast(score)``

@@ -179,7 +179,8 @@ def scaled_lsh_bits(
     finding): per-table sign bits K must grow with the corpus so expected
     bucket occupancy n/2^K — and with it the scored-candidate fraction
     ≈ L·(K+1)·n/2^K — stays constant. At the fixture's K=4 a ×100 corpus
-    is scored at 99.4% (tools/scaleup_r15_ann.py measured: 16 buckets per
+    is scored at 99.4% (the ×100 ANN script, in ``tools/`` up to commit
+    ced5246, measured: 16 buckets per
     table cannot prune 200k vectors — the index degenerates to brute
     force with extra steps); K = 4 + log₂(100) ≈ 11 restores ~constant
     per-bucket occupancy. The price is per-table collision p^K for
@@ -2101,7 +2102,8 @@ def scaled_anchor_count(
     optimum, not a linearizer: graph-build work = n·anchors (assignment)
     + nprobe·n²/anchors (candidate scoring) is minimized at anchors ∝
     √n, where BOTH terms — and the candidate-pair count — grow as
-    Θ(n^1.5). Measured at a genuine 10× corpus (tools/scaleup_r9b.py):
+    Θ(n^1.5). Measured at a genuine 10× corpus (key-shifted copies, by a
+    scale-up script in ``tools/`` up to commit ced5246):
     candidates ×32 ≈ 10^1.5, exactly the theory line, vs ~×100 for the
     r10 fixed-anchor caveat. Making candidates truly LINEAR needs
     constant-size cells (anchors ∝ n), which a flat quantizer can't

@@ -469,19 +469,18 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies before thresholding. The recursion y_i = αx_i + (1−α)y_{i−1}
     looks inherently sequential, but with dyadic α it has an EXACT
     distributed closed form: 2^n·y_n = 2x_1 + Σ_{i≥2} 2^{i−1}x_i, so the
-    EWMA is one integer running-sum window over weighted counts, divided
-    by 2^n. Every step is exact: the weighted terms are integers < 2^53,
-    the running sum is a BIGINT, and the final division only rescales the
-    exponent — both engines produce bit-identical doubles with NO
-    rounding step (contrast Spark's float sum folds, which need the
-    decimal-moment trick of ts_anomaly_zscore).
+    EWMA is one running-sum window over weighted counts, divided by 2^n.
+    The weights and the running sum are DOUBLEs holding integers: while
+    the sum stays below 2^53 every step is exact and the final division
+    only rescales the exponent, so the result is bit-identical to the
+    oracle's BIGINT form (the fixtures span 30 days: sums < 2^40).
+    Longer series round each addition once (relative error ~2^-53 per
+    step) instead of overflowing BIGINT past 62 days, which a ×10 events
+    log with disjoint 366-day copies reaches; 2^rn stays finite up to
+    1023 days per key.
 
     Scale shape: one map-side-combined count, one per-key window — the
-    same single-shuffle profile as every operator in this family. The
-    2^rn weights cap the window at 62 steps per key before BIGINT
-    overflow; production streams renormalize in blocks (subtract the
-    block max exponent, exactly like log-sum-exp) — the fixture spans
-    ~30 days, well inside one block."""
+    same single-shuffle profile as every operator in this family."""
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
@@ -489,16 +488,12 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("day")
     idx = daily.withColumn("rn", F.row_number().over(w))
     tw = F.when(F.col("rn") == 1, 2 * F.col("n")).otherwise(
-        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(rn - 1 AS INT)) * n")
+        F.pow(F.lit(2.0), F.col("rn") - 1) * F.col("n")
     )
     run = Window.partitionBy("event_type").orderBy("rn")
     return (
-        idx.withColumn("tw", tw)
-        .withColumn(
-            "ewma",
-            F.sum("tw").over(run).cast("double")
-            / F.expr("CAST(shiftleft(CAST(1 AS BIGINT), CAST(rn AS INT)) AS DOUBLE)"),
-        )
+        idx.withColumn("tw", tw.cast("double"))
+        .withColumn("ewma", F.sum("tw").over(run) / F.pow(F.lit(2.0), F.col("rn")))
         .select("event_type", "day", "n", "ewma")
     )
 

@@ -20,6 +20,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,8 +36,8 @@ SCRATCH = "/tmp/avro_parquet_spark_example_spark_streams"
 
 #: Micro-batch progress of the most recent :func:`run_to_table` run —
 #: ``StreamingQueryProgress`` JSON dicts, newest last. Diagnostic only
-#: (tools/stream_profile.py reads it to attribute wall time to batches /
-#: state commits / sink setup); queries never consume it.
+#: (tests read it to pin the batch count; tools/perf_sweep.py counts
+#: batches with a ``StreamingQueryListener``); queries never consume it.
 LAST_STREAM_PROGRESS: list[dict] = []
 
 
@@ -75,6 +76,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events(spark.readStream.schema(schema).parquet(stage_dir))
 
 
+def parquet_rows(path: str) -> int:
+    """Row count of a Parquet file or directory, read from its footers
+    with pyarrow — no Spark job."""
+    return pads.dataset(path, format="parquet").count_rows()
+
+
 def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """State-store partition count SIZED TO THE REPLAY'S INPUT (r14,
     VERDICT task #6): each streaming state partition costs a fixed
@@ -87,8 +94,8 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     floor 4, capped at the session's shuffle parallelism — so the ×100
     scale-up replay (10M rows) gets the full 32 and an unbounded
     production deployment (which sets shuffle partitions to cluster
-    width) is uncapped. The parquet row count is metadata-only."""
-    n_rows = spark.read.parquet(table_path(sf_dir, "events")).count()
+    width) is uncapped."""
+    n_rows = parquet_rows(table_path(sf_dir, "events"))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return max(4, min(cap, n_rows // 25_000))
 

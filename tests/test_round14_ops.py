@@ -4,6 +4,8 @@ Engine.scc default forwarding)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from avro_parquet_spark_example_spark.registry import get_query
@@ -186,6 +188,18 @@ def test_stream_state_partitions_sizing(spark, sf_dir):
 
     # sf0.001 events (1k rows) -> floor of 4
     assert stream_state_partitions(spark, sf_dir) == 4
+
+
+def test_parquet_rows_matches_spark_count(spark, sf_dir, tmp_path):
+    from avro_parquet_spark_example_spark.sources.catalog import table_path
+    from avro_parquet_spark_example_spark.streaming.stateful import parquet_rows
+
+    single = table_path(sf_dir, "events")
+    two_files = str(tmp_path / "events.parquet")
+    spark.read.parquet(single).repartition(2).write.parquet(two_files)
+    assert len([f for f in os.listdir(two_files) if f.endswith(".parquet")]) == 2
+    for path in (single, two_files):
+        assert parquet_rows(path) == spark.read.parquet(path).count()
 
 
 def test_run_to_table_restores_session_confs(spark, sf_dir):

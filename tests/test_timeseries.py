@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 from avro_parquet_spark_example_spark.registry import get_query
 
 
-def test_ewma_equals_sequential_recursion(spark, sf_dir):
-    """The distributed closed form (2^n·y_n as an integer running sum) is
-    EXACTLY the recursion y_i = x_i/2 + y_{i−1}/2, y_1 = x_1 — dyadic
-    arithmetic means equality is ==, not approx."""
+def _assert_ewma_is_recursion(spark, sf_dir, rel_tol):
     rows = get_query("ts_ewma").fn(spark, sf_dir).collect()
     by_type: dict[str, list] = {}
     for r in sorted(rows, key=lambda r: (r.event_type, r.day)):
@@ -23,7 +20,25 @@ def test_ewma_equals_sequential_recursion(spark, sf_dir):
         y = None
         for r in series:
             y = float(r.n) if y is None else r.n / 2 + y / 2
-            assert r.ewma == y, (r.event_type, r.day, r.ewma, y)
+            assert abs(r.ewma - y) <= rel_tol * y, (r.event_type, r.day, r.ewma, y)
+
+
+def test_ewma_equals_sequential_recursion(spark, sf_dir):
+    """The distributed closed form (2^n·y_n as an integer-valued running
+    sum) is EXACTLY the recursion y_i = x_i/2 + y_{i−1}/2, y_1 = x_1 —
+    dyadic arithmetic means equality is ==, not approx."""
+    _assert_ewma_is_recursion(spark, sf_dir, rel_tol=0.0)
+
+
+def test_ewma_long_series_does_not_overflow(spark, tmp_path):
+    """100 days of one type: 2^rn weights overflowed a BIGINT past day 62;
+    the double running sum rounds instead and still tracks the recursion."""
+    spark.range(250).selectExpr(
+        "id AS event_id",
+        "'click' AS event_type",
+        "timestamp_seconds(1704067200 + (id % 100) * 86400) AS ts",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    _assert_ewma_is_recursion(spark, str(tmp_path), rel_tol=1e-12)
 
 
 def test_transition_matrix_conserves_events(spark, sf_dir):

@@ -1,29 +1,30 @@
-"""Per-query timing sweep over the ENTIRE registry (PERF_r{N}.json).
+"""Per-key profile sweep over the ENTIRE registry (PERF_r{N}.json).
 
-bench.py tracks 7 headline keys; this harness times every registered query
-at $PERF_SF_DIR (default sf0.1) and writes one JSON object with THREE
-timing sections:
+bench.py tracks the headline keys; this harness profiles every registered
+query at $PERF_SF_DIR (default sf0.1) with :meth:`Profiler.profile` and
+writes one JSON object holding one record per key. A record comes from one
+discarded warm-up run and one measured run of the RAW registry function, so
+the plan is rebuilt and every shuffle re-executes. It splits the measured
+run into layers:
 
-* ``timings`` (warm best-of-2 after one discarded warm-up, plan cache
-  enabled): steady-state execution — no Catalyst analysis, and repeated
-  collects of a cached DataFrame skip completed shuffle map stages (see
-  registry.py), so shuffle queries report post-shuffle cost here. This is
-  the r4..r12 series, kept for round-over-round diffability.
-* ``first_run``: the discarded warm-up's wall time — plan build + FIRST
-  full execution including every shuffle. Noisier than ``timings`` but the
-  only section where a heavy shuffle query shows its real cost, so it is
-  what ranks the fresh section.
-* ``fresh_top`` (r13, VERDICT r12 "what's wrong #2"): for the top-N
-  queries by ``first_run`` (default 20, $PERF_FRESH_TOP), the RAW registry
-  fn is re-invoked per run — new DataFrame, new RDD DAG, full re-execution
-  including every shuffle (bench.py's fresh protocol). Best of 2 after one
-  discarded rebuild. This closes the plan-cache blind spot: a regression
-  in precisely the heaviest family is now a diffable number instead of a
-  0.02 s cached artifact.
+* ``build_s`` — wall of ``fn(spark, sf_dir)``: Python, Catalyst analysis,
+  and the Spark jobs the operator runs while it builds (checkpoints, limit
+  probes, iterative rounds); ``build_jobs`` counts those jobs;
+* ``action_s`` — wall of a noop-sink write of the returned frame, which
+  computes every column of every row at no sink cost;
+* ``jobs``, ``stages``, ``tasks``, ``executor_cpu_s``, ``input_bytes``,
+  ``shuffle_write_bytes``, ``shuffle_read_bytes``, ``spill_bytes`` — over
+  the jobs of build and action together, read from Spark's status store
+  (``perfbench.tracing.StatusStore``). Jobs are the job-id delta across the
+  run, so jobs hidden behind a checkpoint or started by a streaming thread
+  count too;
+* ``stream_batches`` — micro-batches seen by a ``StreamingQueryListener``
+  (``perfbench.tracing.StreamListener``).
 
-Committed per round as PERF_r{N}.json, it turns "did anything regress?"
-into a diff instead of a guess. Queries run in sorted order; streaming
-queries re-execute their sinks, so their numbers include sink setup.
+tools/scaleup.py runs the same function on a base and a grown corpus. The
+record header states the master and parallelism it ran at, and bench.py's
+noise probes at sweep start and end, so a reader can normalize before
+calling a delta a regression. Queries run in sorted order.
 
 Usage: python tools/perf_sweep.py [out.json]
 """
@@ -37,85 +38,107 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.tracing import StatusStore, StreamListener  # noqa: E402
+
 SF_DIR = os.environ.get("PERF_SF_DIR", "/root/testdata/sf0.1")
-FRESH_TOP = int(os.environ.get("PERF_FRESH_TOP", "20"))
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+class Profiler:
+    """Profiles registry keys on one session (see the module docstring)."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.status = StatusStore(spark)
+        self.listener = StreamListener()
+        spark.streams.addListener(self.listener)
+
+    def close(self) -> None:
+        self.spark.streams.removeListener(self.listener)
+
+    def profile(self, name: str, sf_dir: str) -> dict:
+        from avro_parquet_spark_example_spark.registry import get_query
+
+        fn = get_query(name).fn
+        _noop(fn(self.spark, sf_dir))  # warm-up: JIT, page cache, file listing
+        self.status.new_jobs()
+        self.listener.take()
+        t0 = time.perf_counter()
+        df = fn(self.spark, sf_dir)
+        build_s = time.perf_counter() - t0
+        build_jobs = self.status.new_jobs()
+        t0 = time.perf_counter()
+        _noop(df)
+        action_s = time.perf_counter() - t0
+        jobs = build_jobs + self.status.new_jobs()
+        _, progress = self.listener.take()
+        stage_ids = {sid for j in jobs for sid in j["stageIds"]}
+        stages = [s for s in self.status.stages(stage_ids) if s["status"] != "SKIPPED"]
+
+        def total(field: str) -> int:
+            return sum(s[field] for s in stages)
+
+        return {
+            "build_s": round(build_s, 4),
+            "build_jobs": len(build_jobs),
+            "action_s": round(action_s, 4),
+            "jobs": len(jobs),
+            "stages": len(stages),
+            "tasks": total("numCompleteTasks"),
+            "executor_cpu_s": round(total("executorCpuTime") / 1e9, 3),
+            "input_bytes": total("inputBytes"),
+            "shuffle_write_bytes": total("shuffleWriteBytes"),
+            "shuffle_read_bytes": total("shuffleReadBytes"),
+            "spill_bytes": total("diskBytesSpilled") + total("memoryBytesSpilled"),
+            "stream_batches": len(progress),
+        }
 
 
 def main(out_path: str | None) -> int:
-    from avro_parquet_spark_example_spark.registry import all_queries, get_query
+    from avro_parquet_spark_example_spark.registry import all_queries
     from avro_parquet_spark_example_spark.session import get_session
-
-    spark = get_session(app_name="perf-sweep")
-    # Calibration header (r15): PERF records are diffed across rounds that
-    # may run on differently-loaded sandboxes (the r15 continuation session
-    # measured 3-4x machine-level elevation vs the round's first capture).
-    # Record the same three noise probes bench.py uses, at sweep start AND
-    # end, so a reader can normalize before calling a delta a regression.
     from bench import _calibrate, _calibrate_scan, _calibrate_shuffle
 
-    calib_start = {
-        "calib_sec": _calibrate(spark),
-        "calib_shuffle_sec": _calibrate_shuffle(spark),
-        "calib_scan_sec": _calibrate_scan(spark, SF_DIR),
-    }
-    timings: dict[str, float] = {}
-    first_run: dict[str, float] = {}
+    spark = get_session(app_name="perf-sweep")
+
+    def calibrate() -> dict:
+        return {
+            "calib_sec": _calibrate(spark),
+            "calib_shuffle_sec": _calibrate_shuffle(spark),
+            "calib_scan_sec": _calibrate_scan(spark, SF_DIR),
+        }
+
+    calib_start = calibrate()
+    profiler = Profiler(spark)
+    keys: dict[str, dict] = {}
     failures: dict[str, str] = {}
-    for name, fn in all_queries().items():
+    for name in all_queries():
         try:
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).collect()  # warm-up (build + first full exec)
-            first_run[name] = round(time.perf_counter() - t0, 4)
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).collect()
-                runs.append(time.perf_counter() - t0)
-            timings[name] = round(min(runs), 4)
-            print(f"{name}: {timings[name]}s (first {first_run[name]}s)", flush=True)
+            keys[name] = rec = profiler.profile(name, SF_DIR)
+            print(f"{name}: {json.dumps(rec)}", flush=True)
         except Exception as exc:  # noqa: BLE001 - record and continue
             failures[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"FAIL {name}: {failures[name]}", flush=True)
-
-    # fresh section: full re-execution for the first_run top-N (the heavy
-    # family the cached series cannot see regress)
-    heavy = sorted(first_run.items(), key=lambda kv: -kv[1])[:FRESH_TOP]
-    fresh_top: dict[str, float] = {}
-    for name, _ in heavy:
-        raw = get_query(name).fn
-        try:
-            runs = []
-            for i in range(3):
-                t0 = time.perf_counter()
-                raw(spark, SF_DIR).collect()  # new DataFrame every run
-                runs.append(time.perf_counter() - t0)
-            fresh_top[name] = round(min(runs[1:]), 4)
-            print(f"fresh {name}: {fresh_top[name]}s", flush=True)
-        except Exception as exc:  # noqa: BLE001
-            failures[f"fresh:{name}"] = f"{type(exc).__name__}: {exc}"[:200]
-            print(f"FAIL fresh {name}: {failures[f'fresh:{name}']}", flush=True)
-
-    calib_end = {
-        "calib_sec": _calibrate(spark),
-        "calib_shuffle_sec": _calibrate_shuffle(spark),
-        "calib_scan_sec": _calibrate_scan(spark, SF_DIR),
-    }
+    profiler.close()
     doc = {
         "sf_dir": SF_DIR,
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "calib_start": calib_start,
-        "calib_end": calib_end,
-        "total_sec": round(sum(timings.values()), 2),
-        "n_queries": len(timings),
+        "calib_end": calibrate(),
+        "n_queries": len(keys),
+        "total_sec": round(sum(r["build_s"] + r["action_s"] for r in keys.values()), 2),
         "failures": failures,
-        "fresh_top": dict(sorted(fresh_top.items(), key=lambda kv: -kv[1])),
-        "first_run_top": dict(heavy),
-        "timings": dict(sorted(timings.items(), key=lambda kv: -kv[1])),
+        "keys": keys,
     }
     out = out_path or "PERF_sweep.json"
     with open(out, "w") as fh:
         json.dump(doc, fh, indent=1)
-    print(f"\nwrote {out}: {len(timings)} queries, {doc['total_sec']}s total, "
-          f"{len(fresh_top)} fresh-timed, {len(failures)} failures")
+    print(f"\nwrote {out}: {len(keys)} queries, {doc['total_sec']}s total, "
+          f"{len(failures)} failures")
     return 1 if failures else 0
 
 
