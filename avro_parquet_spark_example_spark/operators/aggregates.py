@@ -473,6 +473,27 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Quantile levels and output columns of the two percentile queries.
+_PCTS = ((0.25, "p25"), (0.50, "p50"), (0.75, "p75"), (0.95, "p95"))
+
+
+def _flag_quantiles(li: DataFrame, ps: Column) -> DataFrame:
+    """(l_returnflag, n, p25..p95) per return flag, from ``ps``: an
+    aggregate returning the array of the _PCTS quantiles."""
+    return (
+        li.groupBy("l_returnflag")
+        .agg(F.count(F.lit(1)).alias("n"), ps.alias("__ps"))
+        .select(
+            "l_returnflag",
+            "n",
+            *[
+                F.round(F.col("__ps")[i], 4).alias(name)
+                for i, (_, name) in enumerate(_PCTS)
+            ],
+        )
+    )
+
+
 @register(
     "agg_percentiles",
     oracle="""
@@ -512,23 +533,9 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpolation over the same sorted sequence, so the outputs are
     # bit-identical (A/B collect-compared; oracle hash PASS both SFs).
     # Measured warm noop 2.4 -> 1.1 s at sf0.1.
-    pcts = [(0.25, "p25"), (0.50, "p50"), (0.75, "p75"), (0.95, "p95")]
-    return (
-        pr.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.percentile(
-                "l_extendedprice", F.array(*[F.lit(p) for p, _ in pcts])
-            ).alias("__ps"),
-        )
-        .select(
-            "l_returnflag",
-            "n",
-            *[
-                F.round(F.col("__ps")[i], 4).alias(name)
-                for i, (_, name) in enumerate(pcts)
-            ],
-        )
+    return _flag_quantiles(
+        pr,
+        F.percentile("l_extendedprice", F.array(*[F.lit(p) for p, _ in _PCTS])),
     )
 
 
@@ -547,23 +554,8 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical G-K sketch over the group; the array form builds it once
     # and queries all four quantiles — identical sketch, identical
     # estimates (A/B collect-compared). Warm noop 1.2 -> 0.5 s at sf0.1.
-    pcts = [(0.25, "p25"), (0.50, "p50"), (0.75, "p75"), (0.95, "p95")]
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.percentile_approx(
-                "l_extendedprice", [p for p, _ in pcts], 10000
-            ).alias("__ps"),
-        )
-        .select(
-            "l_returnflag",
-            "n",
-            *[
-                F.round(F.col("__ps")[i], 4).alias(name)
-                for i, (_, name) in enumerate(pcts)
-            ],
-        )
+    return _flag_quantiles(
+        li, F.percentile_approx("l_extendedprice", [p for p, _ in _PCTS], 10000)
     )
 
 
@@ -754,6 +746,21 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_bitmap_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, word, bits): each type's users as 62-bit bitmap words
+    (user u sets bit u % 62 of word u div 62)."""
+    e = load(spark, sf_dir, "events").filter(F.col("user_id") >= 0)
+    return (
+        e.select(
+            "event_type",
+            F.expr("user_id div 62").alias("word"),
+            F.expr("shiftleft(1L, cast(user_id % 62 as int))").alias("mask"),
+        )
+        .groupBy("event_type", "word")
+        .agg(F.bit_or("mask").alias("bits"))
+    )
+
+
 @register(
     "agg_bitmap_exact_distinct",
     oracle="""
@@ -791,16 +798,7 @@ def agg_bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would floor-div/mod inconsistently and shift by a negative count —
     # identically wrong on both engines, i.e. invisible to the oracle), so
     # the domain contract is an explicit filter, not an assumption
-    e = load(spark, sf_dir, "events").filter(F.col("user_id") >= 0)
-    words = (
-        e.select(
-            "event_type",
-            F.expr("user_id div 62").alias("word"),
-            F.expr("shiftleft(1L, cast(user_id % 62 as int))").alias("mask"),
-        )
-        .groupBy("event_type", "word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
+    words = _user_bitmap_words(spark, sf_dir)
     return words.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).alias("n_distinct_users"),
         F.count(F.lit(1)).alias("n_words"),
@@ -852,15 +850,8 @@ def agg_bitmap_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-set-ops equivalent of a theta-sketch union/intersection, with
     zero approximation error."""
     # same non-negative id contract as agg_bitmap_exact_distinct
-    e = load(spark, sf_dir, "events").filter(F.col("user_id") >= 0)
     words = (
-        e.select(
-            "event_type",
-            F.expr("user_id div 62").alias("word"),
-            F.expr("shiftleft(1L, cast(user_id % 62 as int))").alias("mask"),
-        )
-        .groupBy("event_type", "word")
-        .agg(F.bit_or("mask").alias("bits"))
+        _user_bitmap_words(spark, sf_dir)
         # the bitmap table is domain-bounded (types x id-range/62 words)
         # and feeds tot plus both sides of the pair self-join — the lazy
         # form re-planned the corpus scan 4x (r15)
@@ -905,9 +896,9 @@ def agg_bitmap_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "agg_equidepth_histogram_bucketed",
-    oracle="""
+#: Oracle of both equi-depth histogram queries (the window form and the
+#: bucketed form are bit-identical twins of one definition).
+_EQUIDEPTH_DUCK = """
     WITH b AS (
         SELECT event_type, value,
                NTILE(8) OVER (PARTITION BY event_type
@@ -917,7 +908,25 @@ def agg_bitmap_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, bucket, COUNT(*) AS n,
            MIN(value) AS lo, MAX(value) AS hi
     FROM b GROUP BY event_type, bucket
-    """,
+    """
+
+
+def _bucket_bounds(rows: DataFrame) -> DataFrame:
+    """(event_type, bucket, n, lo, hi): row count and value range of each
+    (event_type, bucket) of ``rows``."""
+    return (
+        rows        .groupBy("event_type", "bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("value").alias("lo"),
+            F.max("value").alias("hi"),
+        )
+    )
+
+
+@register(
+    "agg_equidepth_histogram_bucketed",
+    oracle=_EQUIDEPTH_DUCK,
 )
 def agg_equidepth_histogram_bucketed(
     spark: SparkSession, sf_dir: str
@@ -1017,30 +1026,12 @@ def equidepth_histogram_bucketed(
         "     ELSE __r + (__rn - __r * (__q + 1) + greatest(__q, 1) - 1)"
         "              div greatest(__q, 1) END"
     )
-    return (
-        ranked.withColumn("bucket", tile.cast("int"))
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("value").alias("lo"),
-            F.max("value").alias("hi"),
-        )
-    )
+    return _bucket_bounds(ranked.withColumn("bucket", tile.cast("int")))
 
 
 @register(
     "agg_equidepth_histogram",
-    oracle="""
-    WITH b AS (
-        SELECT event_type, value,
-               NTILE(8) OVER (PARTITION BY event_type
-                              ORDER BY value, event_id) AS bucket
-        FROM events
-    )
-    SELECT event_type, bucket, COUNT(*) AS n,
-           MIN(value) AS lo, MAX(value) AS hi
-    FROM b GROUP BY event_type, bucket
-    """,
+    oracle=_EQUIDEPTH_DUCK,
 )
 def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3b — equi-DEPTH histogram (8 quantile buckets per event type, each
@@ -1058,14 +1049,8 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's shape the direct window is the cheaper plan."""
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    return (
+    return _bucket_bounds(
         e.select("event_type", "value", F.ntile(8).over(w).alias("bucket"))
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("value").alias("lo"),
-            F.max("value").alias("hi"),
-        )
     )
 
 

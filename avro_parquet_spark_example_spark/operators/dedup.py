@@ -1015,14 +1015,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # H2c — token-set Jaccard via inverted-index join (oracle-checked)
 
 
-@register(
-    "neardup_jaccard",
-    oracle="""
-    WITH toks AS (
-        SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS tok
-        FROM documents WHERE doc_id < 150
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
+def _jaccard_pairs_duck(threshold: float) -> str:
+    """DuckDB tail of the exact token-set Jaccard oracles: from per-doc
+    token sets ``toks`` (doc_id, tok), every doc pair (a < b) whose
+    Jaccard similarity is at least ``threshold``."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
     common AS (
         SELECT a.doc_id AS a, b.doc_id AS b, COUNT(*) AS c
         FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
@@ -1032,8 +1029,18 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM common
     JOIN sizes sa ON sa.doc_id = a
     JOIN sizes sb ON sb.doc_id = b
-    WHERE c * 1.0 / (sa.sz + sb.sz - c) >= 0.55
-    """,
+    WHERE c * 1.0 / (sa.sz + sb.sz - c) >= {threshold}
+    """
+
+
+@register(
+    "neardup_jaccard",
+    oracle=f"""
+    WITH toks AS (
+        SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS tok
+        FROM documents WHERE doc_id < 150
+    ),
+    {_jaccard_pairs_duck(0.55)}""",
 )
 def neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H2c — exact token-set Jaccard pairs ≥ 0.55 via an inverted-index
@@ -2067,18 +2074,7 @@ PREFIX_JACCARD_MAX_DOC = 400
                    s -> s IS NOT NULL)) AS tok
         FROM d
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS a, b.doc_id AS b, COUNT(*) AS c
-        FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT a, b, ROUND(c * 1.0 / (sa.sz + sb.sz - c), 6) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc_id = a
-    JOIN sizes sb ON sb.doc_id = b
-    WHERE c * 1.0 / (sa.sz + sb.sz - c) >= {PREFIX_JACCARD_T}
-    """,
+    {_jaccard_pairs_duck(PREFIX_JACCARD_T)}""",
 )
 def neardup_jaccard_prefix_filter(
     spark: SparkSession, sf_dir: str

@@ -335,21 +335,27 @@ def er_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "er_match_clusters",
-    oracle=f"""
-    WITH RECURSIVE {_ER_RECS_SQL},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM pairs
+def _reach_duck(pairs: str) -> str:
+    """DuckDB transitive closure ``reach`` (node, reachable r) over the
+    undirected match edges of relation ``pairs`` (id_a, id_b)."""
+    return f"""edges AS (
+        SELECT id_a AS u, id_b AS v FROM {pairs}
         UNION ALL
-        SELECT id_b AS u, id_a AS v FROM pairs
+        SELECT id_b AS u, id_a AS v FROM {pairs}
     ),
     nodes AS (SELECT DISTINCT u AS node FROM edges),
     reach(node, r) AS (
         SELECT node, node FROM nodes
         UNION
         SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r
-    )
+    )"""
+
+
+@register(
+    "er_match_clusters",
+    oracle=f"""
+    WITH RECURSIVE {_ER_RECS_SQL},
+    {_reach_duck("pairs")}
     SELECT node AS id, MIN(r) AS cluster_id, (MIN(r) = node) AS is_golden
     FROM reach GROUP BY node
     """,
@@ -384,17 +390,7 @@ def er_match_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "er_golden_record",
     oracle=f"""
     WITH RECURSIVE {_ER_RECS_SQL},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM pairs
-        UNION ALL
-        SELECT id_b AS u, id_a AS v FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT u AS node FROM edges),
-    reach(node, r) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r
-    ),
+    {_reach_duck("pairs")},
     clusters AS (
         SELECT node AS id, MIN(r) AS cluster_id FROM reach GROUP BY node
     )
@@ -774,17 +770,7 @@ def er_weighted_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_ER_RECS_MF_SQL},
     {_ER_WEIGHTED_PAIRS_SQL},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM wpairs
-        UNION ALL
-        SELECT id_b AS u, id_a AS v FROM wpairs
-    ),
-    nodes AS (SELECT DISTINCT u AS node FROM edges),
-    reach(node, r) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r
-    )
+    {_reach_duck("wpairs")}
     SELECT node AS id, MIN(r) AS cluster_id, (MIN(r) = node) AS is_golden
     FROM reach GROUP BY node
     """,

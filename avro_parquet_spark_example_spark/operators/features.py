@@ -17,7 +17,7 @@ answer is independent of partition order at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import register
@@ -386,9 +386,15 @@ _S7 = 10_000_000
 _S14 = _S7 * _S7
 
 
-def _gd_oracle() -> str:
-    """Unrolled DuckDB twin of ml_linreg_gd: identical fixed-point
-    arithmetic round by round (HUGEINT vs Spark DECIMAL(38,0))."""
+#: DuckDB linear predictor x·β of one row in the unrolled GD rounds.
+_GD_DOT_DUCK = "SUM(CAST(b.b7 AS HUGEINT) * x.x7)"
+
+
+def _gd_oracle(fit: str) -> str:
+    """Unrolled DuckDB twin of :func:`_fixed_point_gd`: identical
+    fixed-point arithmetic round by round (HUGEINT vs Spark
+    DECIMAL(38,0)). ``fit`` is the per-row model output in 1e14 fixed
+    point over the round's ``b.b7`` and ``x.x7``."""
     parts = [
         f"""
     WITH x AS (
@@ -415,7 +421,7 @@ def _gd_oracle() -> str:
             f""",
     r{k} AS (
         SELECT x.vec_id,
-               SUM(CAST(b.b7 AS HUGEINT) * x.x7) - MAX(y.y14) AS r14
+               {fit} - MAX(y.y14) AS r14
         FROM x JOIN b{k - 1} b ON b.j = x.j
                JOIN y ON y.vec_id = x.vec_id
         GROUP BY x.vec_id
@@ -443,7 +449,7 @@ def _gd_oracle() -> str:
     return "".join(parts)
 
 
-@register("ml_linreg_gd", oracle=_gd_oracle())
+@register("ml_linreg_gd", oracle=_gd_oracle(_GD_DOT_DUCK))
 def ml_linreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML5 — distributed batch gradient descent, EXACTLY: 3 rounds of
     β ← β − η·Xᵀ(Xβ − y)/n (η = 1/4, y = label parity, features =
@@ -461,6 +467,28 @@ def ml_linreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A pytest checks the fixed-point trajectory tracks float GD and that
     the exact quadratic loss strictly decreases round over round."""
+    return _fixed_point_gd(spark, sf_dir, _linreg_residual)
+
+
+def _linreg_residual(beta: list[int]) -> Column:
+    """Least-squares residual x·β − y in 1e14 fixed point."""
+    return (
+        sum(
+            (
+                F.lit(beta[j]).cast("decimal(19,0)") * F.col(f"x{j}")
+                for j in range(OLS_DIMS + 1)
+            ),
+            start=F.lit(0).cast("decimal(38,0)"),
+        )
+        - F.col("y14")
+    )
+
+
+def _fixed_point_gd(spark: SparkSession, sf_dir: str, residual) -> DataFrame:
+    """GD_ROUNDS rounds of β ← β − Xᵀ·residual(β)/(4n) over the embeddings
+    fixture in exact fixed point (features ×1e7, ``residual(beta)`` a
+    1e14 fixed-point Column over x0..x{OLS_DIMS} and y14), each update a
+    half-up integer division; returns (j, beta7, n)."""
     e = load(spark, sf_dir, "embeddings")
     wide = e.select(
         "vec_id",
@@ -477,16 +505,7 @@ def ml_linreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = 4 * n * _S14
     beta = [0] * (OLS_DIMS + 1)
     for _ in range(GD_ROUNDS):
-        r14 = (
-            sum(
-                (
-                    F.lit(beta[j]).cast("decimal(19,0)") * F.col(f"x{j}")
-                    for j in range(OLS_DIMS + 1)
-                ),
-                start=F.lit(0).cast("decimal(38,0)"),
-            )
-            - F.col("y14")
-        )
+        r14 = residual(beta)
         grads = wide.agg(
             *[
                 F.sum(F.col(f"x{j}").cast("decimal(19,0)") * r14).alias(
@@ -663,8 +682,7 @@ def decision_stump(vals: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Logistic regression, hard-sigmoid link — exact fixed-point GD (3 rounds)
 
-#: Hard-sigmoid shift/scale in 1e14 fixed point: clamp(z/4 + 1/2, 0, 1).
-_HS_HALF = _S14 // 2
+#: Hard-sigmoid shift in 1e14 fixed point: clamp(z/4 + 1/2, 0, 1).
 _HS_TWO = 2 * _S14
 
 
@@ -682,65 +700,10 @@ def _lgd_sigma_sql(z_expr: str, intdiv: str, big: str = "DECIMAL(38,0)") -> str:
     )
 
 
-def _lgd_oracle() -> str:
-    """Unrolled DuckDB twin of ml_logistic_gd: identical hard-sigmoid
-    fixed-point trajectory round by round."""
-    parts = [
-        f"""
-    WITH x AS (
-        SELECT vec_id, 0 AS j, CAST({_S7} AS BIGINT) AS x7 FROM embeddings
-        UNION ALL
-        SELECT vec_id, r.range AS j,
-               CAST(FLOOR(CAST(embedding[CAST(r.range AS INT)] AS DOUBLE)
-                          * {_S7}) AS BIGINT) AS x7
-        FROM embeddings, RANGE(1, {OLS_DIMS + 1}) r
-    ),
-    y AS (
-        SELECT vec_id, CAST(label % 2 AS HUGEINT) * {_S14} AS y14
-        FROM embeddings
-    ),
-    den AS (
-        SELECT 4 * COUNT(*) * CAST({_S14} AS HUGEINT) AS d FROM embeddings
-    ),
-    b0 AS (
-        SELECT j, CAST(0 AS HUGEINT) AS b7 FROM RANGE(0, {OLS_DIMS + 1}) t(j)
-    )"""
-    ]
-    sigma = _lgd_sigma_sql("SUM(CAST(b.b7 AS HUGEINT) * x.x7)", "//", "HUGEINT")
-    for k in range(1, GD_ROUNDS + 1):
-        parts.append(
-            f""",
-    r{k} AS (
-        SELECT x.vec_id,
-               {sigma} - MAX(y.y14) AS r14
-        FROM x JOIN b{k - 1} b ON b.j = x.j
-               JOIN y ON y.vec_id = x.vec_id
-        GROUP BY x.vec_id
-    ),
-    g{k} AS (
-        SELECT x.j, SUM(CAST(x.x7 AS HUGEINT) * r.r14) AS g21
-        FROM x JOIN r{k} r ON r.vec_id = x.vec_id GROUP BY x.j
-    ),
-    b{k} AS (
-        SELECT g.j,
-               b.b7 - CASE WHEN g.g21 >= 0
-                           THEN (2 * g.g21 + d.d) // (2 * d.d)
-                           ELSE -((2 * (-g.g21) + d.d) // (2 * d.d))
-                      END AS b7
-        FROM g{k} g JOIN b{k - 1} b ON b.j = g.j CROSS JOIN den d
-    )"""
-        )
-    parts.append(
-        f"""
-    SELECT j, CAST(b7 AS BIGINT) AS beta7,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n
-    FROM b{GD_ROUNDS}
-    """
-    )
-    return "".join(parts)
-
-
-@register("ml_logistic_gd", oracle=_lgd_oracle())
+@register(
+    "ml_logistic_gd",
+    oracle=_gd_oracle(_lgd_sigma_sql(_GD_DOT_DUCK, "//", "HUGEINT")),
+)
 def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML — distributed LOGISTIC regression by batch gradient descent,
     EXACTLY: 3 rounds of β ← β − η·Xᵀ(σ̂(Xβ) − y)/n with the
@@ -758,44 +721,12 @@ def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; β updates are driver-side on d+1 ints (kmeans-centroid
     precedent). The classifier this trains is the engine's iterative-ML
     exemplar for models with no closed form."""
-    e = load(spark, sf_dir, "embeddings")
-    wide = e.select(
-        "vec_id",
-        F.lit(_S7).cast("bigint").alias("x0"),
-        *[
-            F.floor(
-                F.element_at("embedding", j).cast("double") * _S7
-            ).alias(f"x{j}")
-            for j in range(1, OLS_DIMS + 1)
-        ],
-        ((F.col("label") % 2).cast("decimal(38,0)") * _S14).alias("y14"),
+    return _fixed_point_gd(spark, sf_dir, _logistic_residual)
+
+
+def _logistic_residual(beta: list[int]) -> Column:
+    """Hard-sigmoid residual σ̂(x·β) − y in 1e14 fixed point."""
+    z = " + ".join(
+        f"CAST({beta[j]} AS DECIMAL(19,0)) * x{j}" for j in range(OLS_DIMS + 1)
     )
-    n = e.count()
-    den = 4 * n * _S14
-    beta = [0] * (OLS_DIMS + 1)
-    for _ in range(GD_ROUNDS):
-        z = " + ".join(
-            f"CAST({beta[j]} AS DECIMAL(19,0)) * x{j}"
-            for j in range(OLS_DIMS + 1)
-        )
-        r14 = F.expr(f"{_lgd_sigma_sql(z, 'div')} - y14")
-        grads = wide.agg(
-            *[
-                F.sum(F.col(f"x{j}").cast("decimal(19,0)") * r14).alias(
-                    f"g{j}"
-                )
-                for j in range(OLS_DIMS + 1)
-            ]
-        ).collect()[0]
-        for j in range(OLS_DIMS + 1):
-            g = int(grads[f"g{j}"])
-            step = (
-                (2 * g + den) // (2 * den)
-                if g >= 0
-                else -((2 * -g + den) // (2 * den))
-            )
-            beta[j] -= step
-    return spark.createDataFrame(
-        [(j, beta[j], n) for j in range(OLS_DIMS + 1)],
-        "j bigint, beta7 bigint, n bigint",
-    )
+    return F.expr(f"{_lgd_sigma_sql(z, 'div')} - y14")

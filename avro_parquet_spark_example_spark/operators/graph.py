@@ -70,14 +70,12 @@ def _edges_sql(max_user: int | None = None) -> str:
 """
 
 
-def cooccurrence_edges(
-    spark: SparkSession, sf_dir: str, max_user: int | None = None
+def _shared_bucket_pairs(
+    spark: SparkSession, sf_dir: str, max_user: int | None
 ) -> DataFrame:
-    """Distinct oriented edges (u < v): users sharing a (type, 5-minute)
-    bucket. The distinct-before-join projection is what bounds cost — the
-    self-join runs on unique (bucket, user) memberships, not raw events.
-    ``max_user`` is the deterministic node cap quadratic consumers use to
-    pin their cost at large SFs."""
+    """Self-join ``a`` ⋈ ``b`` of the distinct (event_type, 5-minute
+    bucket, user_id) memberships on a shared bucket, a.user_id <
+    b.user_id; users restricted to user_id < ``max_user`` when given."""
     e = load(spark, sf_dir, "events")
     if max_user is not None:
         e = e.filter(F.col("user_id") < max_user)
@@ -92,13 +90,24 @@ def cooccurrence_edges(
     )
     a = m.alias("a")
     b = m.alias("b")
+    return a.join(
+        b,
+        (F.col("a.event_type") == F.col("b.event_type"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.user_id") < F.col("b.user_id")),
+    )
+
+
+def cooccurrence_edges(
+    spark: SparkSession, sf_dir: str, max_user: int | None = None
+) -> DataFrame:
+    """Distinct oriented edges (u < v): users sharing a (type, 5-minute)
+    bucket. The distinct-before-join projection is what bounds cost — the
+    self-join runs on unique (bucket, user) memberships, not raw events.
+    ``max_user`` is the deterministic node cap quadratic consumers use to
+    pin their cost at large SFs."""
     return (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
+        _shared_bucket_pairs(spark, sf_dir, max_user)
         .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
         .distinct()
     )
@@ -142,10 +151,9 @@ def graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRI_MAX_USER = 600
 
 
-@register(
-    "graph_triangle_count",
-    oracle=_edges_sql(TRI_MAX_USER)
-    + """
+#: DuckDB CTEs appended to the edge list: every triangle ``tri`` (a, b, c)
+#: and one ``member`` row per (triangle, corner node).
+_TRI_MEMBER_DUCK = """
     , tri AS (
         SELECT e1.u AS a, e1.v AS b, e2.v AS c
         FROM edges e1
@@ -156,7 +164,14 @@ TRI_MAX_USER = 600
         SELECT a AS node FROM tri
         UNION ALL SELECT b FROM tri
         UNION ALL SELECT c FROM tri
-    )
+    )"""
+
+
+@register(
+    "graph_triangle_count",
+    oracle=_edges_sql(TRI_MAX_USER)
+    + _TRI_MEMBER_DUCK
+    + """
     SELECT node, COUNT(*) AS n_triangles
     FROM member GROUP BY node
     """,
@@ -709,26 +724,8 @@ def weighted_cooccurrence_edges(
     tie-strength weight, mapped to an integer traversal cost
     ``floor(1e6 / n_shared) + 1`` (stronger ties are cheaper; exact
     integer arithmetic in both engines)."""
-    e = load(spark, sf_dir, "events")
-    if max_user is not None:
-        e = e.filter(F.col("user_id") < max_user)
-    m = (
-        e.select("event_type", ts_us(e).alias("ts_us"), "user_id")
-        .select(
-            "event_type",
-            F.expr(f"ts_us div {BUCKET_US}").alias("bucket"),
-            "user_id",
-        )
-        .distinct()
-    )
-    a, b = m.alias("a"), m.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
+        _shared_bucket_pairs(spark, sf_dir, max_user)
         .groupBy(
             F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v")
         )
@@ -1372,18 +1369,8 @@ def graph_personalized_pagerank(
 @register(
     "graph_clustering_coefficient",
     oracle=_edges_sql(TRI_MAX_USER)
-    + """
-    , tri AS (
-        SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        FROM edges e1
-        JOIN edges e2 ON e2.u = e1.v
-        JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
-    ),
-    member AS (
-        SELECT a AS node FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-    ),
+    + _TRI_MEMBER_DUCK
+    + """,
     tcount AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS t
                FROM member GROUP BY node),
     deg AS (

@@ -22,7 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import register
-from avro_parquet_spark_example_spark.sources.catalog import load, spread
+from avro_parquet_spark_example_spark.sources.catalog import cents, load, spread
 
 # --------------------------------------------------------------------------
 # pass@k (Chen et al. 2021, "Evaluating LLMs Trained on Code", eq. 1)
@@ -149,11 +149,9 @@ def pass_at_k(per: DataFrame) -> DataFrame:
 #: at all SFs, so the first-n window never under-fills an item).
 _FLEISS_N = 5
 
-
-@register(
-    "eval_fleiss_kappa",
-    oracle=f"""
-    WITH firstn AS (
+#: DuckDB CTEs shared by the Fleiss and Krippendorff oracles: each user's
+#: first _FLEISS_N events (``firstn``) and their per-type counts (``nij``).
+_FLEISS_NIJ_DUCK = f"""firstn AS (
         SELECT user_id, event_type
         FROM (
             SELECT user_id, event_type,
@@ -166,7 +164,13 @@ _FLEISS_N = 5
     nij AS (
         SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS nij
         FROM firstn GROUP BY 1, 2
-    ),
+    )"""
+
+
+@register(
+    "eval_fleiss_kappa",
+    oracle=f"""
+    WITH {_FLEISS_NIJ_DUCK},
     agree AS (
         SELECT CAST(SUM(nij * nij) AS DECIMAL(38,0))
                  - CAST(COUNT(DISTINCT user_id) AS DECIMAL(38,0))
@@ -1018,9 +1022,11 @@ def stat_randomization_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BH_Q = (1, 10)
 
 
-@register(
-    "stat_bh_fdr",
-    oracle=f"""
+def _step_up_duck(accept: str) -> str:
+    """DuckDB oracle of a step-up FDR procedure over the randomization
+    p-values: ``accept`` is the per-rank SQL predicate over ``r.a``,
+    ``r.rk`` and ``t.m`` that admits rank ``r.rk`` into the rejection set."""
+    return f"""
     WITH {_rand_base_duck()},
     ranked AS (
         SELECT x.event_type, x.dow, x.a,
@@ -1032,8 +1038,7 @@ _BH_Q = (1, 10)
     ),
     mtot AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pvals),
     kmax AS (
-        SELECT COALESCE(MAX(CASE WHEN (1 + r.a) * t.m * {_BH_Q[1]}
-                                  <= r.rk * {_RAND_R + 1} * {_BH_Q[0]}
+        SELECT COALESCE(MAX(CASE WHEN {accept}
                              THEN r.rk END), 0) AS k
         FROM ranked r, mtot t
     )
@@ -1042,24 +1047,14 @@ _BH_Q = (1, 10)
            r.rk AS p_rank,
            (r.rk <= k.k) AS rejected
     FROM ranked r, kmax k
-    """,
-)
-def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST — Benjamini–Hochberg step-up FDR control (BH 1995) at
-    q = {_BH_Q[0]}/{_BH_Q[1]} over the m = 35 randomization p-values of
-    :func:`randomization_pvalues` — the multiple-comparisons gate any
-    per-segment metric sweep needs before alerting on "significant"
-    cells. Reject H(1)..H(k) where k = max{{i : p(i) ≤ i·q/m}}.
+    """
 
-    Exactness: p-values are exact rationals (1+a)/(R+1), so the BH
-    inequality clears denominators to (1+a)·m·10 ≤ i·(R+1) — pure
-    integer comparison, no float p anywhere in the decision; ranking
-    ties break deterministically on (a, type, dow).
 
-    Plan hygiene: the rank is a PAIR JOIN over the 35-row hypothesis
-    grid (rk = #{(a',key') ≤lex (a,key)}), not a global window — the
-    audit's no-unpartitioned-window rule holds even though m is tiny,
-    and the pair join is bounded by m² by construction."""
+def _step_up_fdr(spark: SparkSession, sf_dir: str, accept: Column) -> DataFrame:
+    """Step-up FDR rejection over the m randomization p-values of
+    :func:`randomization_pvalues`: rank the hypotheses by (a, type, dow),
+    take k = the largest rank whose ``accept`` predicate (over columns
+    ``a``, ``rk`` and ``m``) holds, and reject ranks 1..k."""
     p = randomization_pvalues(spark, sf_dir).select(
         "event_type", "dow", "a"
     )
@@ -1092,16 +1087,7 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mtot = p.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     kmax = ranked.crossJoin(F.broadcast(mtot)).agg(
-        F.coalesce(
-            F.max(
-                F.when(
-                    (1 + F.col("a")) * F.col("m") * _BH_Q[1]
-                    <= F.col("rk") * (_RAND_R + 1) * _BH_Q[0],
-                    F.col("rk"),
-                )
-            ),
-            F.lit(0),
-        ).alias("k")
+        F.coalesce(F.max(F.when(accept, F.col("rk"))), F.lit(0)).alias("k")
     )
     return ranked.crossJoin(F.broadcast(kmax)).select(
         "event_type",
@@ -1111,6 +1097,37 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("rk").alias("p_rank"),
         (F.col("rk") <= F.col("k")).alias("rejected"),
+    )
+
+
+@register(
+    "stat_bh_fdr",
+    oracle=_step_up_duck(
+        f"""(1 + r.a) * t.m * {_BH_Q[1]}
+                                  <= r.rk * {_RAND_R + 1} * {_BH_Q[0]}"""
+    ),
+)
+def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST — Benjamini–Hochberg step-up FDR control (BH 1995) at
+    q = {_BH_Q[0]}/{_BH_Q[1]} over the m = 35 randomization p-values of
+    :func:`randomization_pvalues` — the multiple-comparisons gate any
+    per-segment metric sweep needs before alerting on "significant"
+    cells. Reject H(1)..H(k) where k = max{{i : p(i) ≤ i·q/m}}.
+
+    Exactness: p-values are exact rationals (1+a)/(R+1), so the BH
+    inequality clears denominators to (1+a)·m·10 ≤ i·(R+1) — pure
+    integer comparison, no float p anywhere in the decision; ranking
+    ties break deterministically on (a, type, dow).
+
+    Plan hygiene: the rank is a PAIR JOIN over the 35-row hypothesis
+    grid (rk = #{(a',key') ≤lex (a,key)}), not a global window — the
+    audit's no-unpartitioned-window rule holds even though m is tiny,
+    and the pair join is bounded by m² by construction."""
+    return _step_up_fdr(
+        spark,
+        sf_dir,
+        (1 + F.col("a")) * F.col("m") * _BH_Q[1]
+        <= F.col("rk") * (_RAND_R + 1) * _BH_Q[0],
     )
 
 
@@ -1125,31 +1142,11 @@ _BY_H35 = "4.146781419016861"
 
 @register(
     "stat_by_fdr",
-    oracle=f"""
-    WITH {_rand_base_duck()},
-    ranked AS (
-        SELECT x.event_type, x.dow, x.a,
-               CAST(COUNT(*) AS BIGINT) AS rk
-        FROM pvals x JOIN pvals y
-          ON (y.a < x.a) OR (y.a = x.a AND (y.event_type < x.event_type
-              OR (y.event_type = x.event_type AND y.dow <= x.dow)))
-        GROUP BY 1, 2, 3
-    ),
-    mtot AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pvals),
-    kmax AS (
-        SELECT COALESCE(MAX(CASE WHEN
-                 (((CAST(1 + r.a AS DOUBLE) * t.m) * {_BH_Q[1]})
+    oracle=_step_up_duck(
+        f"""(((CAST(1 + r.a AS DOUBLE) * t.m) * {_BH_Q[1]})
                   * {_BY_H35})
-                 <= CAST(r.rk * {_RAND_R + 1} * {_BH_Q[0]} AS DOUBLE)
-               THEN r.rk END), 0) AS k
-        FROM ranked r, mtot t
-    )
-    SELECT r.event_type, r.dow,
-           ROUND(CAST(1 + r.a AS DOUBLE) / {_RAND_R + 1}, 6) AS p_value,
-           r.rk AS p_rank,
-           (r.rk <= k.k) AS rejected
-    FROM ranked r, kmax k
-    """,
+                 <= CAST(r.rk * {_RAND_R + 1} * {_BH_Q[0]} AS DOUBLE)"""
+    ),
 )
 def stat_by_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST — Benjamini–Yekutieli step-up FDR control (BY 2001) at
@@ -1169,60 +1166,55 @@ def stat_by_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to stat_bh_fdr — the m²-bounded hypothesis-grid
     pair join after the one corpus-scan pipeline."""
-    p = randomization_pvalues(spark, sf_dir).select(
-        "event_type", "dow", "a"
-    )
-    p = p.localCheckpoint(eager=True)  # m rows; consumed 3x below
-    x = p.select(
-        F.col("event_type").alias("xt"),
-        F.col("dow").alias("xd"),
-        F.col("a").alias("xa"),
-    )
-    y = p.select(
-        F.col("event_type").alias("yt"),
-        F.col("dow").alias("yd"),
-        F.col("a").alias("ya"),
-    )
-    lex = (F.col("ya") < F.col("xa")) | (
-        (F.col("ya") == F.col("xa"))
-        & (
-            (F.col("yt") < F.col("xt"))
-            | ((F.col("yt") == F.col("xt")) & (F.col("yd") <= F.col("xd")))
-        )
-    )
-    ranked = (
-        x.join(y, lex)
-        .groupBy(
-            F.col("xt").alias("event_type"),
-            F.col("xd").alias("dow"),
-            F.col("xa").alias("a"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("rk"))
-    )
-    mtot = p.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     lhs = (
         (1 + F.col("a")).cast("double") * F.col("m") * _BH_Q[1]
     ) * F.expr(_BY_H35)
     rhs = (F.col("rk") * (_RAND_R + 1) * _BH_Q[0]).cast("double")
-    kmax = ranked.crossJoin(F.broadcast(mtot)).agg(
-        F.coalesce(
-            F.max(F.when(lhs <= rhs, F.col("rk"))), F.lit(0)
-        ).alias("k")
-    )
-    return ranked.crossJoin(F.broadcast(kmax)).select(
-        "event_type",
-        "dow",
-        F.round((1 + F.col("a")).cast("double") / (_RAND_R + 1), 6).alias(
-            "p_value"
-        ),
-        F.col("rk").alias("p_rank"),
-        (F.col("rk") <= F.col("k")).alias("rejected"),
-    )
+    return _step_up_fdr(spark, sf_dir, lhs <= rhs)
 
 
 # --------------------------------------------------------------------------
 # Fisher's exact test (Fisher 1935) — 2x2 independence per stratum
 # --------------------------------------------------------------------------
+
+#: DuckDB CTEs shared by the weekend x high-value 2x2 oracles
+#: (stat_fisher_exact, stat_g_test): per-event flags ``base`` and the
+#: per-type margins ``marg`` (a = weekend & high, r1, c1, n).
+_WK_HI_MARG_DUCK = """base AS (
+        SELECT event_type,
+               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
+                    THEN 1 ELSE 0 END AS wk,
+               CASE WHEN value > 50 THEN 1 ELSE 0 END AS hi
+        FROM events
+    ),
+    marg AS (
+        SELECT event_type,
+               CAST(SUM(wk * hi) AS BIGINT) AS a,
+               CAST(SUM(wk) AS BIGINT) AS r1,
+               CAST(SUM(hi) AS BIGINT) AS c1,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM base GROUP BY 1
+    )"""
+
+#: DuckDB twin of :func:`_weekend_split` (``base``) and of the weekend /
+#: weekday moments of :func:`_two_sample_moments` (``moms``).
+_WK_Q_BASE_DUCK = """base AS (
+        SELECT event_type,
+               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
+                    THEN 1 ELSE 0 END AS wk,
+               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS q
+        FROM events
+    )"""
+_WK_MOMS_DUCK = """moms AS (
+        SELECT event_type,
+               CAST(SUM(wk) AS BIGINT) AS n1,
+               CAST(SUM(1 - wk) AS BIGINT) AS n2,
+               CAST(SUM(wk * q) AS DECIMAL(38,0)) AS s1,
+               CAST(SUM((1 - wk) * q) AS DECIMAL(38,0)) AS s2,
+               CAST(SUM(wk * q * q) AS DECIMAL(38,0)) AS ss1,
+               CAST(SUM((1 - wk) * q * q) AS DECIMAL(38,0)) AS ss2
+        FROM base GROUP BY 1
+    )"""
 
 #: Loud-failure bound on the largest stratum's row count: the exact
 #: test broadcasts an O(nmax) log-factorial table and scans an
@@ -1268,22 +1260,8 @@ def _logfact_frame(spark: SparkSession, nmax: int) -> DataFrame:
 
 @register(
     "stat_fisher_exact",
-    oracle="""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CASE WHEN value > 50 THEN 1 ELSE 0 END AS hi
-        FROM events
-    ),
-    marg AS (
-        SELECT event_type,
-               CAST(SUM(wk * hi) AS BIGINT) AS a,
-               CAST(SUM(wk) AS BIGINT) AS r1,
-               CAST(SUM(hi) AS BIGINT) AS c1,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM base GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_WK_HI_MARG_DUCK},
     lf AS (
         SELECT i, CAST(SUM(CAST(ROUND(LN(CAST(i AS DOUBLE)), 12)
                                 AS DECIMAL(28,12)))
@@ -1505,24 +1483,9 @@ def fisher_exact_frame(e: DataFrame) -> DataFrame:
 
 @register(
     "stat_effect_sizes",
-    oracle="""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS q
-        FROM events
-    ),
-    moms AS (
-        SELECT event_type,
-               CAST(SUM(wk) AS BIGINT) AS n1,
-               CAST(SUM(1 - wk) AS BIGINT) AS n2,
-               CAST(SUM(wk * q) AS DECIMAL(38,0)) AS s1,
-               CAST(SUM((1 - wk) * q) AS DECIMAL(38,0)) AS s2,
-               CAST(SUM(wk * q * q) AS DECIMAL(38,0)) AS ss1,
-               CAST(SUM((1 - wk) * q * q) AS DECIMAL(38,0)) AS ss2
-        FROM base GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_WK_Q_BASE_DUCK},
+    {_WK_MOMS_DUCK},
     dvals AS (
         SELECT event_type, q,
                CAST(SUM(wk) AS BIGINT) AS c1,
@@ -1593,14 +1556,34 @@ def stat_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined moment aggregate + one distinct-value
     aggregate; the rank window partitions by type over the VALUE GRID
     (≤ 60k distinct 2-decimal values), not row cardinality."""
-    e = load(spark, sf_dir, "events").select(
+    return effect_sizes(_weekend_split(spark, sf_dir))
+
+
+def _weekend_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, wk, q) over events: ``wk`` = 1 on Saturday/Sunday,
+    ``q`` = value in exact integer cents — the two-sample frame of the
+    weekend-vs-weekday statistics."""
+    return load(spark, sf_dir, "events").select(
         "event_type",
         F.when(F.dayofweek(F.col("ts").cast("date")).isin(1, 7), 1)
         .otherwise(0)
         .alias("wk"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("q"),
+        cents().alias("q"),
     )
-    return effect_sizes(e)
+
+
+def _pooled_sd() -> Column:
+    """Pooled two-sample standard deviation (in cents) over the exact
+    moments of :func:`_two_sample_moments`."""
+    return F.sqrt(
+        (
+            F.col("ss1").cast("double")
+            - F.col("s1").cast("double") * F.col("s1").cast("double") / F.col("n1")
+            + F.col("ss2").cast("double")
+            - F.col("s2").cast("double") * F.col("s2").cast("double") / F.col("n2")
+        )
+        / (F.col("n1") + F.col("n2") - 2)
+    )
 
 
 def _two_sample_moments(e: DataFrame) -> DataFrame:
@@ -1653,15 +1636,7 @@ def effect_sizes(e: DataFrame) -> DataFrame:
     )
     m1 = F.col("s1").cast("double") / F.col("n1")
     m2 = F.col("s2").cast("double") / F.col("n2")
-    sp = F.sqrt(
-        (
-            F.col("ss1").cast("double")
-            - F.col("s1").cast("double") * F.col("s1").cast("double") / F.col("n1")
-            + F.col("ss2").cast("double")
-            - F.col("s2").cast("double") * F.col("s2").cast("double") / F.col("n2")
-        )
-        / (F.col("n1") + F.col("n2") - 2)
-    )
+    sp = _pooled_sd()
     d = (m1 - m2) / sp
     # degenerate-margin guards (r15 ANSI sweep): an empty side divides
     # the moments by 0; n1 + n2 = 2 zeroes the pooled-variance df; two
@@ -1930,13 +1905,7 @@ _Z80 = "0.8416212335729143"
 @register(
     "stat_power_mde",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS q
-        FROM events
-    ),
+    WITH {_WK_Q_BASE_DUCK},
     moms AS (
         SELECT event_type,
                CAST(SUM(wk) AS BIGINT) AS n1,
@@ -1990,14 +1959,7 @@ def stat_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined moment aggregate; output is
     K rows of pure algebra."""
-    e = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.when(F.dayofweek(F.col("ts").cast("date")).isin(1, 7), 1)
-        .otherwise(0)
-        .alias("wk"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("q"),
-    )
-    return power_mde(e)
+    return power_mde(_weekend_split(spark, sf_dir))
 
 
 def power_mde(e: DataFrame) -> DataFrame:
@@ -2007,22 +1969,7 @@ def power_mde(e: DataFrame) -> DataFrame:
     form the Engine facade exposes (``stat_power_mde`` is its
     registered oracle-checked instance)."""
     moms = _two_sample_moments(e)
-    sp = (
-        F.sqrt(
-            (
-                F.col("ss1").cast("double")
-                - F.col("s1").cast("double")
-                * F.col("s1").cast("double")
-                / F.col("n1")
-                + F.col("ss2").cast("double")
-                - F.col("s2").cast("double")
-                * F.col("s2").cast("double")
-                / F.col("n2")
-            )
-            / (F.col("n1") + F.col("n2") - 2)
-        )
-        / 100.0
-    )
+    sp = _pooled_sd() / 100.0
     mde = (
         F.expr(f"{_Z975} + {_Z80}")
         * sp
@@ -2169,16 +2116,21 @@ def eval_win_rate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MSPRT_LN20 = "2.995732273553991"
 
 
-@register(
-    "stat_msprt_sequential",
-    oracle=f"""
-    WITH base AS (
+#: DuckDB per-(event_type, day) event count ``n`` and exact cents total
+#: ``s`` — the daily grid of the two sequential-testing oracles.
+_DAILY_CENTS_DUCK = """
         SELECT event_type, CAST(ts AS DATE) AS day,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
                     AS DECIMAL(38,0)) AS s
         FROM events GROUP BY 1, 2
-    ),
+    """
+
+
+@register(
+    "stat_msprt_sequential",
+    oracle=f"""
+    WITH base AS ({_DAILY_CENTS_DUCK}),
     gtot AS (
         SELECT CAST(SUM(n) AS BIGINT) AS ng,
                CAST(SUM(s) AS DECIMAL(38,0)) AS sg,
@@ -2266,7 +2218,7 @@ def stat_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "event_type",
         F.col("ts").cast("date").alias("day"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("q"),
+        cents().alias("q"),
     )
     base = e.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -2337,6 +2289,100 @@ def stat_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+#: DuckDB CTEs shared by the two bootstrap-AUC oracles: from ``awb``
+#: (replicate r, score v, weighted class totals wp/wn) to each replicate's
+#: AUC ``rep`` and the replicate-grid order statistics ``ranked``.
+_AUC_BOOT_RANKED_DUCK = """awc AS (
+        SELECT r, v, wp, wn,
+               CAST(COALESCE(SUM(wn) OVER (
+                   PARTITION BY r ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS DECIMAL(38,0)) AS cwn
+        FROM awb
+    ),
+    rep AS (
+        SELECT r,
+               ROUND(CAST(SUM(wp * (2 * cwn + wn)) AS DOUBLE)
+                     / (2.0 * CAST(SUM(wp) AS DOUBLE)
+                        * CAST(SUM(wn) AS DOUBLE)), 9) AS m
+        FROM awc GROUP BY r
+    ),
+    ranked AS (
+        SELECT x.r, x.m, CAST(COUNT(*) AS BIGINT) AS rk
+        FROM (SELECT * FROM rep WHERE r > 0) x
+        JOIN (SELECT * FROM rep WHERE r > 0) y
+          ON (y.m < x.m) OR (y.m = x.m AND y.r <= x.r)
+        GROUP BY 1, 2
+    )"""
+
+
+def _boot_auc_ci(awb: DataFrame, tot: DataFrame) -> DataFrame:
+    """``tot`` × (auc, ci_lo, ci_hi) from per-(replicate r, score v)
+    weighted class totals ``wp``/``wn``: each replicate's exact weighted
+    midrank AUC, replicate 0 as the point estimate, and the CI as the
+    _BOOT_LO_RK/_BOOT_HI_RK order statistics of replicates 1..R."""
+    wcum = (
+        Window.partitionBy("r")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = awb.withColumn(
+        "cwn",
+        F.coalesce(F.sum("wn").over(wcum), F.lit(0)).cast("decimal(38,0)"),
+    )
+    rep = cum.groupBy("r").agg(
+        # one-class input: a replicate's positive (or negative) weight
+        # total is 0 and its AUC is undefined — ANSI Spark threw where
+        # DuckDB returns NULL (r15 sweep); the NULL propagates to the
+        # point estimate and CI (the rank join drops NULL replicates)
+        F.when(
+            (F.sum("wp") == 0) | (F.sum("wn") == 0),
+            F.lit(None).cast("double"),
+        )
+        .otherwise(
+            F.round(
+                F.sum(
+                    F.col("wp") * (2 * F.col("cwn") + F.col("wn"))
+                ).cast("double")
+                / (
+                    2.0
+                    * F.sum("wp").cast("double")
+                    * F.sum("wn").cast("double")
+                ),
+                9,
+            )
+        )
+        .alias("m")
+    )
+    rep = rep.localCheckpoint(eager=True)  # R+1 rows; consumed 3x
+    boot = rep.filter(F.col("r") > 0)
+    x = boot.select(F.col("r").alias("xr"), F.col("m").alias("xm"))
+    y = boot.select(F.col("r").alias("yr"), F.col("m").alias("ym"))
+    ranked = (
+        x.join(
+            y,
+            (F.col("ym") < F.col("xm"))
+            | ((F.col("ym") == F.col("xm")) & (F.col("yr") <= F.col("xr"))),
+        )
+        .groupBy("xr", "xm")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("rk"))
+    )
+    point = rep.filter(F.col("r") == 0).select(
+        F.round("m", 6).alias("auc")
+    )
+    ci = ranked.agg(
+        F.round(
+            F.min(F.when(F.col("rk") == _BOOT_LO_RK, F.col("xm"))), 6
+        ).alias("ci_lo"),
+        F.round(
+            F.min(F.when(F.col("rk") == _BOOT_HI_RK, F.col("xm"))), 6
+        ).alias("ci_hi"),
+    )
+    return (
+        tot.crossJoin(F.broadcast(point)).crossJoin(F.broadcast(ci))
+    )
+
+
 @register(
     "eval_auc_bootstrap_ci",
     oracle=f"""
@@ -2368,28 +2414,7 @@ def stat_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(w * (1 - pos)) AS DECIMAL(38,0)) AS wn
         FROM weighted GROUP BY 1, 2
     ),
-    awc AS (
-        SELECT r, v, wp, wn,
-               CAST(COALESCE(SUM(wn) OVER (
-                   PARTITION BY r ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS DECIMAL(38,0)) AS cwn
-        FROM awb
-    ),
-    rep AS (
-        SELECT r,
-               ROUND(CAST(SUM(wp * (2 * cwn + wn)) AS DOUBLE)
-                     / (2.0 * CAST(SUM(wp) AS DOUBLE)
-                        * CAST(SUM(wn) AS DOUBLE)), 9) AS m
-        FROM awc GROUP BY r
-    ),
-    ranked AS (
-        SELECT x.r, x.m, CAST(COUNT(*) AS BIGINT) AS rk
-        FROM (SELECT * FROM rep WHERE r > 0) x
-        JOIN (SELECT * FROM rep WHERE r > 0) y
-          ON (y.m < x.m) OR (y.m = x.m AND y.r <= x.r)
-        GROUP BY 1, 2
-    )
+    {_AUC_BOOT_RANKED_DUCK}
     SELECT (SELECT CAST(SUM(pos) AS BIGINT) FROM base) AS n_pos,
            (SELECT CAST(SUM(1 - pos) AS BIGINT) FROM base) AS n_neg,
            (SELECT ROUND(m, 6) FROM rep WHERE r = 0) AS auc,
@@ -2482,75 +2507,14 @@ def eval_auc_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wn"),
         )
     )
-    wcum = (
-        Window.partitionBy("r")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = drawn.withColumn(
-        "cwn",
-        F.coalesce(F.sum("wn").over(wcum), F.lit(0)).cast("decimal(38,0)"),
-    )
-    rep = cum.groupBy("r").agg(
-        # one-class input: a replicate's positive (or negative) weight
-        # total is 0 and its AUC is undefined — ANSI Spark threw where
-        # DuckDB returns NULL (r15 sweep); the NULL propagates to the
-        # point estimate and CI (the rank join drops NULL replicates)
-        F.when(
-            (F.sum("wp") == 0) | (F.sum("wn") == 0),
-            F.lit(None).cast("double"),
-        )
-        .otherwise(
-            F.round(
-                F.sum(
-                    F.col("wp") * (2 * F.col("cwn") + F.col("wn"))
-                ).cast("double")
-                / (
-                    2.0
-                    * F.sum("wp").cast("double")
-                    * F.sum("wn").cast("double")
-                ),
-                9,
-            )
-        )
-        .alias("m")
-    )
-    rep = rep.localCheckpoint(eager=True)  # R+1 rows; consumed 3x
-    boot = rep.filter(F.col("r") > 0)
-    x = boot.select(F.col("r").alias("xr"), F.col("m").alias("xm"))
-    y = boot.select(F.col("r").alias("yr"), F.col("m").alias("ym"))
-    ranked = (
-        x.join(
-            y,
-            (F.col("ym") < F.col("xm"))
-            | ((F.col("ym") == F.col("xm")) & (F.col("yr") <= F.col("xr"))),
-        )
-        .groupBy("xr", "xm")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("rk"))
-    )
     tot = base.agg(
         F.sum("pos").cast("bigint").alias("n_pos"),
         F.sum(1 - F.col("pos")).cast("bigint").alias("n_neg"),
     )
-    point = rep.filter(F.col("r") == 0).select(
-        F.round("m", 6).alias("auc")
-    )
-    ci = ranked.agg(
-        F.round(
-            F.min(F.when(F.col("rk") == _BOOT_LO_RK, F.col("xm"))), 6
-        ).alias("ci_lo"),
-        F.round(
-            F.min(F.when(F.col("rk") == _BOOT_HI_RK, F.col("xm"))), 6
-        ).alias("ci_hi"),
-    )
     sampled = nn.select(
         (F.col("nr") > F.lit(_BOOT_MAX_ROWS)).alias("sampled")
     )
-    return (
-        tot.crossJoin(F.broadcast(point))
-        .crossJoin(F.broadcast(ci))
-        .crossJoin(F.broadcast(sampled))
-    )
+    return _boot_auc_ci(drawn, tot).crossJoin(F.broadcast(sampled))
 
 
 # --------------------------------------------------------------------------
@@ -2628,28 +2592,7 @@ _CELL_ID_DUCK = "CAST(v AS VARCHAR) || ':' || CAST(pos AS VARCHAR)"
                     AS DECIMAL(38,0)) AS wn
         FROM wts GROUP BY 1, 2
     ),
-    awc AS (
-        SELECT r, v, wp, wn,
-               CAST(COALESCE(SUM(wn) OVER (
-                   PARTITION BY r ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS DECIMAL(38,0)) AS cwn
-        FROM awb
-    ),
-    rep AS (
-        SELECT r,
-               ROUND(CAST(SUM(wp * (2 * cwn + wn)) AS DOUBLE)
-                     / (2.0 * CAST(SUM(wp) AS DOUBLE)
-                        * CAST(SUM(wn) AS DOUBLE)), 9) AS m
-        FROM awc GROUP BY r
-    ),
-    ranked AS (
-        SELECT x.r, x.m, CAST(COUNT(*) AS BIGINT) AS rk
-        FROM (SELECT * FROM rep WHERE r > 0) x
-        JOIN (SELECT * FROM rep WHERE r > 0) y
-          ON (y.m < x.m) OR (y.m = x.m AND y.r <= x.r)
-        GROUP BY 1, 2
-    )
+    {_AUC_BOOT_RANKED_DUCK}
     SELECT (SELECT CAST(SUM(CASE WHEN pos = 1 THEN n ELSE 0 END)
                         AS BIGINT) FROM cells) AS n_pos,
            (SELECT CAST(SUM(CASE WHEN pos = 0 THEN n ELSE 0 END)
@@ -2733,52 +2676,6 @@ def auc_bootstrap_cell(scored: DataFrame) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("wn"),
     )
-    wcum = (
-        Window.partitionBy("r")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = awb.withColumn(
-        "cwn",
-        F.coalesce(F.sum("wn").over(wcum), F.lit(0)).cast("decimal(38,0)"),
-    )
-    rep = cum.groupBy("r").agg(
-        # one-class input: a replicate's positive (or negative) weight
-        # total is 0 and its AUC is undefined — ANSI Spark threw where
-        # DuckDB returns NULL (r15 sweep); the NULL propagates to the
-        # point estimate and CI (the rank join drops NULL replicates)
-        F.when(
-            (F.sum("wp") == 0) | (F.sum("wn") == 0),
-            F.lit(None).cast("double"),
-        )
-        .otherwise(
-            F.round(
-                F.sum(
-                    F.col("wp") * (2 * F.col("cwn") + F.col("wn"))
-                ).cast("double")
-                / (
-                    2.0
-                    * F.sum("wp").cast("double")
-                    * F.sum("wn").cast("double")
-                ),
-                9,
-            )
-        )
-        .alias("m")
-    )
-    rep = rep.localCheckpoint(eager=True)  # R+1 rows; consumed 3x
-    boot = rep.filter(F.col("r") > 0)
-    x = boot.select(F.col("r").alias("xr"), F.col("m").alias("xm"))
-    y = boot.select(F.col("r").alias("yr"), F.col("m").alias("ym"))
-    ranked = (
-        x.join(
-            y,
-            (F.col("ym") < F.col("xm"))
-            | ((F.col("ym") == F.col("xm")) & (F.col("yr") <= F.col("xr"))),
-        )
-        .groupBy("xr", "xm")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("rk"))
-    )
     tot = cells.agg(
         F.sum(F.when(F.col("pos") == 1, F.col("n")).otherwise(0))
         .cast("bigint")
@@ -2787,20 +2684,7 @@ def auc_bootstrap_cell(scored: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("n_neg"),
     )
-    point = rep.filter(F.col("r") == 0).select(
-        F.round("m", 6).alias("auc")
-    )
-    ci = ranked.agg(
-        F.round(
-            F.min(F.when(F.col("rk") == _BOOT_LO_RK, F.col("xm"))), 6
-        ).alias("ci_lo"),
-        F.round(
-            F.min(F.when(F.col("rk") == _BOOT_HI_RK, F.col("xm"))), 6
-        ).alias("ci_hi"),
-    )
-    return (
-        tot.crossJoin(F.broadcast(point)).crossJoin(F.broadcast(ci))
-    )
+    return _boot_auc_ci(awb, tot)
 
 
 # --------------------------------------------------------------------------
@@ -2817,23 +2701,8 @@ _TOST_NUM, _TOST_DEN = 1, 20
 @register(
     "stat_equivalence_tost",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS q
-        FROM events
-    ),
-    moms AS (
-        SELECT event_type,
-               CAST(SUM(wk) AS BIGINT) AS n1,
-               CAST(SUM(1 - wk) AS BIGINT) AS n2,
-               CAST(SUM(wk * q) AS DECIMAL(38,0)) AS s1,
-               CAST(SUM((1 - wk) * q) AS DECIMAL(38,0)) AS s2,
-               CAST(SUM(wk * q * q) AS DECIMAL(38,0)) AS ss1,
-               CAST(SUM((1 - wk) * q * q) AS DECIMAL(38,0)) AS ss2
-        FROM base GROUP BY 1
-    ),
+    WITH {_WK_Q_BASE_DUCK},
+    {_WK_MOMS_DUCK},
     gmean AS (
         SELECT CAST(SUM(q) AS DOUBLE) / 100.0 / COUNT(*) AS mu
         FROM base
@@ -2884,13 +2753,7 @@ def stat_equivalence_tost(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined moment aggregate + a 1-row global
     mean; K rows of algebra."""
-    e = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.when(F.dayofweek(F.col("ts").cast("date")).isin(1, 7), 1)
-        .otherwise(0)
-        .alias("wk"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("q"),
-    )
+    e = _weekend_split(spark, sf_dir)
     moms = _two_sample_moments(e)
     gmean = e.agg(
         (F.sum("q").cast("double") / 100.0 / F.count(F.lit(1))).alias("mu")
@@ -2905,22 +2768,7 @@ def stat_equivalence_tost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     half = F.round(
         F.expr(_Z90)
-        * (
-            F.sqrt(
-                (
-                    F.col("ss1").cast("double")
-                    - F.col("s1").cast("double")
-                    * F.col("s1").cast("double")
-                    / F.col("n1")
-                    + F.col("ss2").cast("double")
-                    - F.col("s2").cast("double")
-                    * F.col("s2").cast("double")
-                    / F.col("n2")
-                )
-                / (F.col("n1") + F.col("n2") - 2)
-            )
-            / 100.0
-        )
+        * (_pooled_sd() / 100.0)
         * F.sqrt(1.0 / F.col("n1") + 1.0 / F.col("n2")),
         9,
     )
@@ -3164,20 +3012,7 @@ def cochran_q(paired: DataFrame) -> DataFrame:
 @register(
     "stat_krippendorff_alpha",
     oracle=f"""
-    WITH firstn AS (
-        SELECT user_id, event_type
-        FROM (
-            SELECT user_id, event_type,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                   ) AS rn
-            FROM events
-        ) WHERE rn <= {_FLEISS_N}
-    ),
-    nij AS (
-        SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS nij
-        FROM firstn GROUP BY 1, 2
-    ),
+    WITH {_FLEISS_NIJ_DUCK},
     agg AS (
         SELECT CAST(COUNT(DISTINCT user_id) AS DECIMAL(38,0)) AS n_items,
                CAST(SUM(nij * nij) AS DECIMAL(38,0)) AS s_in
@@ -3312,6 +3147,21 @@ def krippendorff_alpha(
 _Z95 = "1.959963984540054"
 
 
+#: DuckDB DeLong variance of the AUC from the placement moments ``m``
+#: (m10/q10, m01/q01) and class totals ``t`` (np, nn) — the radicand of
+#: the se and of both CI bounds in the eval_auc_delong_se oracle.
+_DELONG_VAR_DUCK = """((CAST(m.q10 AS DOUBLE)
+                 - CAST(m.m10 AS DOUBLE) * CAST(m.m10 AS DOUBLE) / t.np)
+                / (t.np - 1)
+                / (4.0 * CAST(t.nn AS DOUBLE) * CAST(t.nn AS DOUBLE)))
+               / t.np
+               + ((CAST(m.q01 AS DOUBLE)
+                   - CAST(m.m01 AS DOUBLE) * CAST(m.m01 AS DOUBLE) / t.nn)
+                  / (t.nn - 1)
+                  / (4.0 * CAST(t.np AS DOUBLE) * CAST(t.np AS DOUBLE)))
+                 / t.nn"""
+
+
 @register(
     "eval_auc_delong_se",
     oracle=f"""
@@ -3363,42 +3213,15 @@ _Z95 = "1.959963984540054"
                  / (2.0 * CAST(t.np AS DOUBLE) * CAST(t.nn AS DOUBLE)),
                  6) AS auc,
            ROUND(SQRT(
-               ((CAST(m.q10 AS DOUBLE)
-                 - CAST(m.m10 AS DOUBLE) * CAST(m.m10 AS DOUBLE) / t.np)
-                / (t.np - 1)
-                / (4.0 * CAST(t.nn AS DOUBLE) * CAST(t.nn AS DOUBLE)))
-               / t.np
-               + ((CAST(m.q01 AS DOUBLE)
-                   - CAST(m.m01 AS DOUBLE) * CAST(m.m01 AS DOUBLE) / t.nn)
-                  / (t.nn - 1)
-                  / (4.0 * CAST(t.np AS DOUBLE) * CAST(t.np AS DOUBLE)))
-                 / t.nn), 6) AS se_delong,
+               {_DELONG_VAR_DUCK}), 6) AS se_delong,
            ROUND(CAST(m.m10 AS DOUBLE)
                  / (2.0 * CAST(t.np AS DOUBLE) * CAST(t.nn AS DOUBLE))
                  - {_Z95} * SQRT(
-               ((CAST(m.q10 AS DOUBLE)
-                 - CAST(m.m10 AS DOUBLE) * CAST(m.m10 AS DOUBLE) / t.np)
-                / (t.np - 1)
-                / (4.0 * CAST(t.nn AS DOUBLE) * CAST(t.nn AS DOUBLE)))
-               / t.np
-               + ((CAST(m.q01 AS DOUBLE)
-                   - CAST(m.m01 AS DOUBLE) * CAST(m.m01 AS DOUBLE) / t.nn)
-                  / (t.nn - 1)
-                  / (4.0 * CAST(t.np AS DOUBLE) * CAST(t.np AS DOUBLE)))
-                 / t.nn), 6) AS ci_lo,
+               {_DELONG_VAR_DUCK}), 6) AS ci_lo,
            ROUND(CAST(m.m10 AS DOUBLE)
                  / (2.0 * CAST(t.np AS DOUBLE) * CAST(t.nn AS DOUBLE))
                  + {_Z95} * SQRT(
-               ((CAST(m.q10 AS DOUBLE)
-                 - CAST(m.m10 AS DOUBLE) * CAST(m.m10 AS DOUBLE) / t.np)
-                / (t.np - 1)
-                / (4.0 * CAST(t.nn AS DOUBLE) * CAST(t.nn AS DOUBLE)))
-               / t.np
-               + ((CAST(m.q01 AS DOUBLE)
-                   - CAST(m.m01 AS DOUBLE) * CAST(m.m01 AS DOUBLE) / t.nn)
-                  / (t.nn - 1)
-                  / (4.0 * CAST(t.np AS DOUBLE) * CAST(t.np AS DOUBLE)))
-                 / t.nn), 6) AS ci_hi
+               {_DELONG_VAR_DUCK}), 6) AS ci_hi
     FROM moms m, tots t
     """,
 )
@@ -3612,7 +3435,7 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance residual asserted non-negative."""
     base = load(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("q"),
+        cents().alias("q"),
         F.when(
             F.dayofweek(F.col("ts").cast("date")).isin(1, 7), 1
         )
@@ -3712,21 +3535,7 @@ def brier_decomposition(scored: DataFrame) -> DataFrame:
 @register(
     "stat_g_test",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CASE WHEN value > 50 THEN 1 ELSE 0 END AS hi
-        FROM events
-    ),
-    marg AS (
-        SELECT event_type,
-               CAST(SUM(wk * hi) AS BIGINT) AS a,
-               CAST(SUM(wk) AS BIGINT) AS r1,
-               CAST(SUM(hi) AS BIGINT) AS c1,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM base GROUP BY 1
-    ),
+    WITH {_WK_HI_MARG_DUCK},
     cells AS (
         SELECT event_type, n, o, r, c FROM (
             SELECT event_type, n, a AS o, r1 AS r, c1 AS c FROM marg
@@ -4102,7 +3911,7 @@ def stat_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = e.agg(
         (F.min("ts") + F.expr("INTERVAL 15 DAYS")).alias("cut")
     )
-    q = F.floor(F.col("value") * 100.0 + 0.5).cast("bigint")
+    q = cents()
     per_user = (
         e.crossJoin(F.broadcast(cut))
         .groupBy("user_id")
@@ -4192,13 +4001,7 @@ def _obf_bound_case() -> str:
 @register(
     "stat_group_sequential_obf",
     oracle=f"""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
-                    AS DECIMAL(38,0)) AS s
-        FROM events GROUP BY 1, 2
-    ),
+    WITH daily AS ({_DAILY_CENTS_DUCK}),
     gtot AS (
         SELECT CAST(SUM(n) AS BIGINT) AS ng,
                CAST(SUM(s) AS DECIMAL(38,0)) AS sg,
@@ -4276,7 +4079,7 @@ def stat_group_sequential_obf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "event_type",
         F.col("ts").cast("date").alias("day"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("q"),
+        cents().alias("q"),
     )
     daily = e.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

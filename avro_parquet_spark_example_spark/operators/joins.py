@@ -724,6 +724,29 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 ASOF_TOL_US = 6 * 3600 * 1_000_000
 
 
+def _purchases_and_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_id, user_id, ts_us, side, click_us) — purchases (side 1,
+    click_us NULL) unioned with clicks (side 0, event_id NULL, click_us
+    = ts_us), the input of the ordered as-of carries."""
+    ev = load(spark, sf_dir, "events")
+    us = ts_us(ev)
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id",
+        "user_id",
+        us.alias("ts_us"),
+        F.lit(1).alias("side"),
+        F.lit(None).cast("bigint").alias("click_us"),
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.lit(None).cast("long").alias("event_id"),
+        "user_id",
+        us.alias("ts_us"),
+        F.lit(0).alias("side"),
+        us.alias("click_us"),
+    )
+    return purchases.unionByName(clicks)
+
+
 @register(
     "join_asof_tolerance",
     oracle=f"""
@@ -751,30 +774,14 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB twin composes ASOF LEFT JOIN with the same TTL CASE,
     pinning both the match choice (latest at-or-before, ties to the
     click) and the staleness rule cross-engine."""
-    ev = load(spark, sf_dir, "events")
-    us = ts_us(ev)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id",
-        "user_id",
-        us.alias("ts_us"),
-        F.lit(1).alias("side"),
-        F.lit(None).cast("bigint").alias("click_us"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        us.alias("ts_us"),
-        F.lit(0).alias("side"),
-        us.alias("click_us"),
-    )
+    events = _purchases_and_clicks(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_us", "side")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = (
-        purchases.unionByName(clicks)
-        .withColumn("asof_us", F.last("click_us", ignorenulls=True).over(w))
+        events.withColumn("asof_us", F.last("click_us", ignorenulls=True).over(w))
         .filter(F.col("side") == 1)
     )
     fresh = F.col("ts_us") - F.col("asof_us") <= ASOF_TOL_US
@@ -869,28 +876,14 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE with no extra shuffle. Same-timestamp clicks sort before
     purchases (side 0 < 1), making a co-timed click 'before' — distance
     0, always wins — identically in both engines."""
-    ev = load(spark, sf_dir, "events")
-    us = ts_us(ev)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id",
-        "user_id",
-        us.alias("ts_us"),
-        F.lit(1).alias("side"),
-        F.lit(None).cast("bigint").alias("click_us"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        us.alias("ts_us"),
-        F.lit(0).alias("side"),
-        us.alias("click_us"),
-    )
+    events = _purchases_and_clicks(spark, sf_dir)
     base = Window.partitionBy("user_id").orderBy("ts_us", "side")
     w_prev = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_next = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     carried = (
-        purchases.unionByName(clicks)
-        .withColumn("prev_click", F.last("click_us", ignorenulls=True).over(w_prev))
+        events.withColumn(
+            "prev_click", F.last("click_us", ignorenulls=True).over(w_prev)
+        )
         .withColumn("next_click", F.first("click_us", ignorenulls=True).over(w_next))
         .filter(F.col("side") == 1)
     )

@@ -276,9 +276,12 @@ def diag_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dq_drift_psi",
-    oracle="""
+def _drift_duck(term: str) -> str:
+    """DuckDB oracle of a per-bucket drift divergence between the
+    reference (orderdate < 1997) and current order-value distributions:
+    ``term`` is the SQL of the named per-bucket term over the bucket
+    counts c_ref/c_cur and the period totals t.n_ref/t.n_cur."""
+    return f"""
     WITH bucketed AS (
         SELECT LEAST(CAST(FLOOR(o_totalprice / 50000) AS BIGINT), 9) AS bucket,
                (o_orderdate < TIMESTAMP '1997-01-01') AS is_ref
@@ -301,13 +304,43 @@ def diag_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COALESCE(a.c_cur, 0) AS BIGINT) AS c_cur
         FROM RANGE(0, 10) b LEFT JOIN agg a ON a.bucket = b.range
     )
-    SELECT bucket,
-           c_ref, c_cur,
-           ROUND(((c_ref + 1.0) / (t.n_ref + 10) - (c_cur + 1.0) / (t.n_cur + 10))
-                 * LN(((c_ref + 1.0) / (t.n_ref + 10))
-                      / ((c_cur + 1.0) / (t.n_cur + 10))), 9) AS psi_term
+    SELECT bucket, c_ref, c_cur,
+           {term}
     FROM per_bucket CROSS JOIN totals t
-    """,
+    """
+
+
+def _drift_counts(spark: SparkSession, sf_dir: str):
+    """(totals, agg) of the order-value drift queries: the period sizes
+    (n_ref, n_cur) and the per-bucket counts (bucket, c_ref, c_cur) over
+    10 fixed-width 50k buckets, reference period = orderdate < 1997."""
+    o = load(spark, sf_dir, "orders")
+    bucketed = o.select(
+        F.least(
+            F.floor(F.col("o_totalprice") / 50000).cast("bigint"), F.lit(9)
+        ).alias("bucket"),
+        (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")).alias(
+            "is_ref"
+        ),
+    )
+    totals = bucketed.agg(
+        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("n_ref"),
+        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("n_cur"),
+    )
+    agg = bucketed.groupBy("bucket").agg(
+        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
+        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("c_cur"),
+    )
+    return totals, agg
+
+
+@register(
+    "dq_drift_psi",
+    oracle=_drift_duck(
+        """ROUND(((c_ref + 1.0) / (t.n_ref + 10) - (c_cur + 1.0) / (t.n_cur + 10))
+                 * LN(((c_ref + 1.0) / (t.n_ref + 10))
+                      / ((c_cur + 1.0) / (t.n_cur + 10))), 9) AS psi_term"""
+    ),
 )
 def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ4 — distribution-drift monitoring via the Population Stability
@@ -323,26 +356,12 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined, 10 groups), a broadcast 1-row totals join — drift monitoring
     over 100 TB is scan-bound, no per-row state. The fixed bucket RANGE
     table is broadcast so never-hit buckets still report."""
-    o = load(spark, sf_dir, "orders")
-    bucketed = o.select(
-        F.least(F.floor(F.col("o_totalprice") / 50000).cast("bigint"), F.lit(9)).alias(
-            "bucket"
-        ),
-        (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")).alias("is_ref"),
-    )
-    totals = bucketed.agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("n_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("n_cur"),
-    )
+    totals, agg = _drift_counts(spark, sf_dir)
     # aggregate FIRST (map-side combined, 10 groups), then left-join the
     # fixed grid so never-hit buckets report 0 — joining per-row orders
     # onto the 10-value grid would both skew the shuffle and count each
     # null-extended row of an empty bucket as a phantom observation
     grid = spark.range(0, 10).select(F.col("id").alias("bucket"))
-    agg = bucketed.groupBy("bucket").agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("c_cur"),
-    )
     per_bucket = (
         grid.join(F.broadcast(agg), "bucket", "left")
         .select(
@@ -1406,31 +1425,8 @@ def eval_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_drift_jsd",
-    oracle="""
-    WITH bucketed AS (
-        SELECT LEAST(CAST(FLOOR(o_totalprice / 50000) AS BIGINT), 9) AS bucket,
-               (o_orderdate < TIMESTAMP '1997-01-01') AS is_ref
-        FROM orders
-    ),
-    totals AS (
-        SELECT SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS n_ref,
-               SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS n_cur
-        FROM bucketed
-    ),
-    agg AS (
-        SELECT bucket,
-               SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS c_ref,
-               SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS c_cur
-        FROM bucketed GROUP BY bucket
-    ),
-    per_bucket AS (
-        SELECT b.range AS bucket,
-               CAST(COALESCE(a.c_ref, 0) AS BIGINT) AS c_ref,
-               CAST(COALESCE(a.c_cur, 0) AS BIGINT) AS c_cur
-        FROM RANGE(0, 10) b LEFT JOIN agg a ON a.bucket = b.range
-    )
-    SELECT bucket, c_ref, c_cur,
-           ROUND(0.5 * (((c_ref + 1.0) / (t.n_ref + 10))
+    oracle=_drift_duck(
+        """ROUND(0.5 * (((c_ref + 1.0) / (t.n_ref + 10))
                         * LOG2((2.0 * ((c_ref + 1.0) / (t.n_ref + 10)))
                                / (((c_ref + 1.0) / (t.n_ref + 10))
                                   + ((c_cur + 1.0) / (t.n_cur + 10))))
@@ -1438,9 +1434,8 @@ def eval_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * LOG2((2.0 * ((c_cur + 1.0) / (t.n_cur + 10)))
                                / (((c_ref + 1.0) / (t.n_ref + 10))
                                   + ((c_cur + 1.0) / (t.n_cur + 10))))),
-                 9) AS jsd_term
-    FROM per_bucket CROSS JOIN totals t
-    """,
+                 9) AS jsd_term"""
+    ),
 )
 def dq_drift_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ4d — Jensen-Shannon divergence drift, per bucket (base-2:
@@ -1457,23 +1452,7 @@ def dq_drift_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one scan, a 10-group CASE-sum aggregate (map-side
     combined), broadcast 1-row totals, broadcast 10-row bucket range —
     the PSI plan verbatim."""
-    o = load(spark, sf_dir, "orders")
-    bucketed = o.select(
-        F.least(
-            F.floor(F.col("o_totalprice") / 50000).cast("bigint"), F.lit(9)
-        ).alias("bucket"),
-        (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")).alias(
-            "is_ref"
-        ),
-    )
-    totals = bucketed.agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("n_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("n_cur"),
-    )
-    agg = bucketed.groupBy("bucket").agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("c_cur"),
-    )
+    totals, agg = _drift_counts(spark, sf_dir)
     buckets = spark.range(0, 10).select(F.col("id").alias("bucket"))
     per_bucket = (
         buckets.join(F.broadcast(agg), "bucket", "left")
@@ -1853,35 +1832,11 @@ def brier_score(
 
 @register(
     "dq_drift_kl",
-    oracle="""
-    WITH bucketed AS (
-        SELECT LEAST(CAST(FLOOR(o_totalprice / 50000) AS BIGINT), 9) AS bucket,
-               (o_orderdate < TIMESTAMP '1997-01-01') AS is_ref
-        FROM orders
-    ),
-    totals AS (
-        SELECT SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS n_ref,
-               SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS n_cur
-        FROM bucketed
-    ),
-    agg AS (
-        SELECT bucket,
-               SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS c_ref,
-               SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS c_cur
-        FROM bucketed GROUP BY bucket
-    ),
-    per_bucket AS (
-        SELECT b.range AS bucket,
-               CAST(COALESCE(a.c_ref, 0) AS BIGINT) AS c_ref,
-               CAST(COALESCE(a.c_cur, 0) AS BIGINT) AS c_cur
-        FROM RANGE(0, 10) b LEFT JOIN agg a ON a.bucket = b.range
-    )
-    SELECT bucket, c_ref, c_cur,
-           ROUND(((c_cur + 1.0) / (t.n_cur + 10))
+    oracle=_drift_duck(
+        """ROUND(((c_cur + 1.0) / (t.n_cur + 10))
                  * LN(((c_cur + 1.0) / (t.n_cur + 10))
-                      / ((c_ref + 1.0) / (t.n_ref + 10))), 9) AS kl_term
-    FROM per_bucket CROSS JOIN totals t
-    """,
+                      / ((c_ref + 1.0) / (t.n_ref + 10))), 9) AS kl_term"""
+    ),
 )
 def dq_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ4'' — Kullback-Leibler drift KL(current ‖ reference) per bucket,
@@ -1898,24 +1853,8 @@ def dq_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the PSI plan verbatim — one scan, a 10-group
     CASE-sum, a broadcast totals join."""
-    o = load(spark, sf_dir, "orders")
-    bucketed = o.select(
-        F.least(
-            F.floor(F.col("o_totalprice") / 50000).cast("bigint"), F.lit(9)
-        ).alias("bucket"),
-        (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")).alias(
-            "is_ref"
-        ),
-    )
-    totals = bucketed.agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("n_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("n_cur"),
-    )
-    agg = bucketed.groupBy("bucket").agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).alias("c_cur"),
-    )
-    grid = o.sparkSession.range(0, 10).select(
+    totals, agg = _drift_counts(spark, sf_dir)
+    grid = spark.range(0, 10).select(
         F.col("id").cast("bigint").alias("bucket")
     )
     per_bucket = (

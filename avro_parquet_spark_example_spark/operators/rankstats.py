@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import register
-from avro_parquet_spark_example_spark.sources.catalog import load
+from avro_parquet_spark_example_spark.sources.catalog import cents, load
 
 #: Shared critical-value literals (both engines compare UNROUNDED doubles
 #: against these).
@@ -37,13 +37,42 @@ _DOW_DUCK = "DAYOFWEEK(CAST(ts AS DATE)) + 1"
 _CLIFF_BANDS = (0.147, 0.33, 0.474)
 
 
+#: DuckDB (event_type, wk, v) frame of the weekend-vs-weekday tests
+#: (wk = 1 on Saturday/Sunday, v = value in exact cents) and its
+#: per-value sample counts ``cells`` (c1 weekend, c2 weekday).
+_WK_V_BASE_DUCK = """base AS (
+        SELECT event_type,
+               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
+                    THEN 1 ELSE 0 END AS wk,
+               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS v
+        FROM events
+    )"""
+_WK_CELLS_DUCK = f"""{_WK_V_BASE_DUCK},
+    cells AS (
+        SELECT event_type, v,
+               CAST(SUM(wk) AS BIGINT) AS c1,
+               CAST(SUM(1 - wk) AS BIGINT) AS c2
+        FROM base GROUP BY 1, 2
+    )"""
+
+
+def _ecdf_cum_duck(extra: str) -> str:
+    """DuckDB twin of :func:`_ecdf_cells` over ``cells``; ``extra`` is
+    the SQL of any further output columns, each followed by a comma."""
+    return f"""cum AS (
+        SELECT event_type, v,{extra}
+               CAST(SUM(c1) OVER w AS BIGINT) AS f1,
+               CAST(SUM(c2) OVER w AS BIGINT) AS f2,
+               CAST(SUM(c1) OVER (PARTITION BY event_type) AS BIGINT) AS n1,
+               CAST(SUM(c2) OVER (PARTITION BY event_type) AS BIGINT) AS n2
+        FROM cells
+        WINDOW w AS (PARTITION BY event_type ORDER BY v
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    )"""
+
+
 def _dow_spark():
     return F.dayofweek(F.col("ts").cast("date"))
-
-
-def _q100():
-    """events.value quantized to exact integer cents (iusum rule)."""
-    return F.floor(F.col("value") * 100.0 + 0.5).cast("bigint")
 
 
 # --------------------------------------------------------------------------
@@ -190,7 +219,7 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     (values × 7) per type and every window partitions it. At 100 TB
     the corpus scan dominates; the grid algebra is value-domain-sized."""
     base = load(spark, sf_dir, "events").select(
-        "event_type", _dow_spark().alias("g"), _q100().alias("v")
+        "event_type", _dow_spark().alias("g"), cents().alias("v")
     )
     return jonckheere_terpstra(base)
 
@@ -391,7 +420,7 @@ def stat_gk_gamma_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "events").select(
         "event_type",
         _dow_spark().alias("x"),
-        F.least(F.lit(9), _q100() / F.lit(1000)).cast("bigint").alias("y"),
+        F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint").alias("y"),
     )
     return gk_gamma_tau(base)
 
@@ -601,7 +630,7 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one value-grid aggregate + one counting aggregate. The
     2-row-per-type table is driver-size by construction."""
     base = load(spark, sf_dir, "events").select(
-        "event_type", _q100().alias("q")
+        "event_type", cents().alias("q")
     )
     return mood_median(base)
 
@@ -791,7 +820,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.sum(_q100()).cast("bigint").alias("tq"))
+        .agg(F.sum(cents()).cast("bigint").alias("tq"))
     )
     return runs_test(daily)
 
@@ -888,13 +917,7 @@ def runs_test(daily: DataFrame) -> DataFrame:
 @register(
     "stat_cliff_delta",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS v
-        FROM events
-    ),
+    WITH {_WK_V_BASE_DUCK},
     cells AS (
         SELECT event_type, v,
                CAST(SUM(wk) AS BIGINT) AS cw,
@@ -957,7 +980,7 @@ def stat_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "events").select(
         "event_type",
         F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
-        _q100().alias("v"),
+        cents().alias("v"),
     )
     return cliff_delta(base)
 
@@ -1109,7 +1132,7 @@ def eval_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one counting aggregate to ≤100 cells/type; the marginal
     cross join is 10×10 grid algebra."""
-    dec = F.least(F.lit(9), _q100() / F.lit(1000)).cast("bigint")
+    dec = F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint")
     base = load(spark, sf_dir, "events").select(
         "event_type",
         dec.alias("ra"),
@@ -1196,6 +1219,36 @@ def kappa_weighted(base: DataFrame) -> DataFrame:
     )
 
 
+def _sample_cells(base: DataFrame) -> DataFrame:
+    """(event_type, v, c1, c2) — per-value counts of the two samples
+    (wk = 1 and wk = 0) of a (event_type, wk, v) frame."""
+    return base.groupBy("event_type", "v").agg(
+        F.sum("wk").cast("bigint").alias("c1"),
+        F.sum(1 - F.col("wk")).cast("bigint").alias("c2"),
+    )
+
+
+def _ecdf_cells(base: DataFrame, *extra) -> DataFrame:
+    """(event_type, *extra, f1, f2, n1, n2) per value cell of
+    :func:`_sample_cells`: the two samples' cumulative counts f1/f2 up to
+    and including the cell, and their totals n1/n2 in the stratum."""
+    cells = _sample_cells(base)
+    wcum = (
+        Window.partitionBy("event_type")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wall = Window.partitionBy("event_type")
+    return cells.select(
+        "event_type",
+        *extra,
+        F.sum("c1").over(wcum).cast("bigint").alias("f1"),
+        F.sum("c2").over(wcum).cast("bigint").alias("f2"),
+        F.sum("c1").over(wall).cast("bigint").alias("n1"),
+        F.sum("c2").over(wall).cast("bigint").alias("n2"),
+    )
+
+
 # --------------------------------------------------------------------------
 # Exact two-sample Kolmogorov–Smirnov distance
 # --------------------------------------------------------------------------
@@ -1204,29 +1257,8 @@ def kappa_weighted(base: DataFrame) -> DataFrame:
 @register(
     "stat_ks_two_sample",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS v
-        FROM events
-    ),
-    cells AS (
-        SELECT event_type, v,
-               CAST(SUM(wk) AS BIGINT) AS c1,
-               CAST(SUM(1 - wk) AS BIGINT) AS c2
-        FROM base GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT event_type, v,
-               CAST(SUM(c1) OVER w AS BIGINT) AS f1,
-               CAST(SUM(c2) OVER w AS BIGINT) AS f2,
-               CAST(SUM(c1) OVER (PARTITION BY event_type) AS BIGINT) AS n1,
-               CAST(SUM(c2) OVER (PARTITION BY event_type) AS BIGINT) AS n2
-        FROM cells
-        WINDOW w AS (PARTITION BY event_type ORDER BY v
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
+    WITH {_WK_CELLS_DUCK},
+    {_ecdf_cum_duck("")},
     s AS (
         SELECT event_type,
                CAST(MIN(n1) AS BIGINT) AS n1, CAST(MIN(n2) AS BIGINT) AS n2,
@@ -1274,7 +1306,7 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "events").select(
         "event_type",
         F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
-        _q100().alias("v"),
+        cents().alias("v"),
     )
     return ks_two_sample(base)
 
@@ -1283,23 +1315,7 @@ def ks_two_sample(base: DataFrame) -> DataFrame:
     """Frame-level core of :func:`stat_ks_two_sample` (the library form
     the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
-    cells = base.groupBy("event_type", "v").agg(
-        F.sum("wk").cast("bigint").alias("c1"),
-        F.sum(1 - F.col("wk")).cast("bigint").alias("c2"),
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("event_type")
-    cum = cells.select(
-        "event_type",
-        F.sum("c1").over(wcum).cast("bigint").alias("f1"),
-        F.sum("c2").over(wcum).cast("bigint").alias("f2"),
-        F.sum("c1").over(wall).cast("bigint").alias("n1"),
-        F.sum("c2").over(wall).cast("bigint").alias("n2"),
-    )
+    cum = _ecdf_cells(base)
     # r15 self-review: the cross-multiplied CDF terms f1·n2 are ~n² per
     # stratum — int64 crossing at ~3e9 rows/type; DECIMAL factors and
     # max on both engines (dstar is internal; outputs unchanged).
@@ -1348,9 +1364,9 @@ def ks_two_sample(base: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "agg_lorenz_curve",
-    oracle="""
+#: Oracle of both Lorenz-curve queries: the window form and the bucketed
+#: form are bit-identical twins of one definition.
+_LORENZ_DUCK = """
     WITH per_user AS (
         SELECT event_type, user_id,
                CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
@@ -1386,44 +1402,20 @@ def ks_two_sample(base: DataFrame) -> DataFrame:
     FROM dec
     WINDOW w AS (PARTITION BY event_type ORDER BY decile
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    """,
-)
-def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AG — LORENZ curve (Lorenz 1905) per event type: users ranked by
-    their value total ascending, split into 10 equal-population
-    deciles; each row is one curve point (cumulative user share →
-    cumulative value share). The curve BEHIND agg_gini_concentration
-    (Gini = 1 − 2·area under this curve): the whole distributional
-    picture — "the top decile of users holds X% of spend" — instead of
-    the single coefficient.
+    """
 
-    Exactness: per-user sums are exact integers; decile assignment is
-    the exact integer formula (rk·10−1) div n + 1 (rank ties broken by
-    user_id — deterministic); cumulative sums are DECIMAL(38,0); the
-    two shares are single IEEE divisions rounded 6.
 
-    Scale: one per-user aggregate (map-side combined), one per-type
-    window over users, then 10-row grid algebra per type."""
-    per_user = load(spark, sf_dir, "events").groupBy(
+def _per_user_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, user_id, s) — each user's exact cents total per type."""
+    return load(spark, sf_dir, "events").groupBy(
         "event_type", "user_id"
-    ).agg(F.sum(_q100()).cast("bigint").alias("s"))
-    return lorenz_curve(per_user)
+    ).agg(F.sum(cents()).cast("bigint").alias("s"))
 
 
-def lorenz_curve(per_user: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`agg_lorenz_curve` (the library form
-    the Engine facade exposes): ``per_user`` has columns (event_type
-    group key, user_id ranking tiebreak, s integer value total) — one
-    row per unit."""
-    wrk = Window.partitionBy("event_type").orderBy("s", "user_id")
-    wall = Window.partitionBy("event_type")
-    ranked = per_user.select(
-        "event_type",
-        "s",
-        F.row_number().over(wrk).alias("rk"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-        F.sum("s").over(wall).cast("decimal(38,0)").alias("tot"),
-    )
+def _lorenz_points(ranked: DataFrame) -> DataFrame:
+    """The ten decile points of the Lorenz curve from per-user rows
+    (event_type, s, rk, n, tot): rank ``rk`` within the type, ``n`` users
+    and ``tot`` value in the type."""
     dec = ranked.groupBy(
         "event_type",
         ((F.col("rk") * 10 - 1) / F.col("n") + 1)
@@ -1466,44 +1458,48 @@ def lorenz_curve(per_user: DataFrame) -> DataFrame:
 
 
 @register(
-    "agg_lorenz_curve_bucketed",
-    oracle="""
-    WITH per_user AS (
-        SELECT event_type, user_id,
-               CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
-                    AS BIGINT) AS s
-        FROM events GROUP BY 1, 2
-    ),
-    ranked AS (
-        SELECT event_type, s,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY s, user_id) AS rk,
-               CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT)
-                   AS n,
-               CAST(SUM(s) OVER (PARTITION BY event_type)
-                    AS DECIMAL(38,0)) AS tot
-        FROM per_user
-    ),
-    dec AS (
-        SELECT event_type,
-               CAST((rk * 10 - 1) // n + 1 AS BIGINT) AS decile,
-               CAST(COUNT(*) AS BIGINT) AS n_users,
-               CAST(SUM(s) AS DECIMAL(38,0)) AS ds,
-               CAST(MIN(n) AS BIGINT) AS n,
-               CAST(MIN(tot) AS DECIMAL(38,0)) AS tot
-        FROM ranked GROUP BY 1, 2
+    "agg_lorenz_curve",
+    oracle=_LORENZ_DUCK,
+)
+def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AG — LORENZ curve (Lorenz 1905) per event type: users ranked by
+    their value total ascending, split into 10 equal-population
+    deciles; each row is one curve point (cumulative user share →
+    cumulative value share). The curve BEHIND agg_gini_concentration
+    (Gini = 1 − 2·area under this curve): the whole distributional
+    picture — "the top decile of users holds X% of spend" — instead of
+    the single coefficient.
+
+    Exactness: per-user sums are exact integers; decile assignment is
+    the exact integer formula (rk·10−1) div n + 1 (rank ties broken by
+    user_id — deterministic); cumulative sums are DECIMAL(38,0); the
+    two shares are single IEEE divisions rounded 6.
+
+    Scale: one per-user aggregate (map-side combined), one per-type
+    window over users, then 10-row grid algebra per type."""
+    return lorenz_curve(_per_user_cents(spark, sf_dir))
+
+
+def lorenz_curve(per_user: DataFrame) -> DataFrame:
+    """Frame-level core of :func:`agg_lorenz_curve` (the library form
+    the Engine facade exposes): ``per_user`` has columns (event_type
+    group key, user_id ranking tiebreak, s integer value total) — one
+    row per unit."""
+    wrk = Window.partitionBy("event_type").orderBy("s", "user_id")
+    wall = Window.partitionBy("event_type")
+    ranked = per_user.select(
+        "event_type",
+        "s",
+        F.row_number().over(wrk).alias("rk"),
+        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
+        F.sum("s").over(wall).cast("decimal(38,0)").alias("tot"),
     )
-    SELECT event_type, decile, n_users,
-           ROUND(CAST(SUM(CAST(n_users AS DECIMAL(38,0))) OVER w AS DOUBLE)
-                 / CAST(n AS DOUBLE), 6) AS cum_user_share,
-           CASE WHEN tot = 0 THEN NULL
-                ELSE ROUND(CAST(SUM(ds) OVER w AS DOUBLE)
-                           / CAST(tot AS DOUBLE), 6) END
-               AS cum_value_share
-    FROM dec
-    WINDOW w AS (PARTITION BY event_type ORDER BY decile
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    """,
+    return _lorenz_points(ranked)
+
+
+@register(
+    "agg_lorenz_curve_bucketed",
+    oracle=_LORENZ_DUCK,
 )
 def agg_lorenz_curve_bucketed(
     spark: SparkSession, sf_dir: str
@@ -1516,10 +1512,7 @@ def agg_lorenz_curve_bucketed(
     rows in one sorter at 100 TB. Same oracle, bit-identical output
     (pinned in tests/test_round15_ops.py); the window form stays
     registered as the semantics reference."""
-    per_user = load(spark, sf_dir, "events").groupBy(
-        "event_type", "user_id"
-    ).agg(F.sum(_q100()).cast("bigint").alias("s"))
-    return lorenz_curve_bucketed(per_user)
+    return lorenz_curve_bucketed(_per_user_cents(spark, sf_dir))
 
 
 def lorenz_curve_bucketed(
@@ -1600,45 +1593,7 @@ def lorenz_curve_bucketed(
         "tot",
         (F.col("__off") + F.row_number().over(wbk)).alias("rk"),
     )
-    dec = ranked.groupBy(
-        "event_type",
-        ((F.col("rk") * 10 - 1) / F.col("n") + 1)
-        .cast("bigint")
-        .alias("decile"),
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum("s").cast("decimal(38,0)").alias("ds"),
-        F.min("n").alias("n"),
-        F.min("tot").alias("tot"),
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("decile")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return dec.select(
-        "event_type",
-        "decile",
-        "n_users",
-        F.round(
-            F.sum(F.col("n_users").cast("decimal(38,0)"))
-            .over(wcum)
-            .cast("double")
-            / F.col("n").cast("double"),
-            6,
-        ).alias("cum_user_share"),
-        # all-zero totals (tot = 0) leave value shares undefined — an
-        # ANSI-Spark divide-by-zero throw vs DuckDB NULL (r15 review)
-        F.when(F.col("tot") == 0, F.lit(None).cast("double"))
-        .otherwise(
-            F.round(
-                F.sum("ds").over(wcum).cast("double")
-                / F.col("tot").cast("double"),
-                6,
-            )
-        )
-        .alias("cum_value_share"),
-    )
+    return _lorenz_points(ranked)
 
 
 # --------------------------------------------------------------------------
@@ -1822,19 +1777,7 @@ def auc_partial(scored: DataFrame) -> DataFrame:
 @register(
     "stat_brunner_munzel",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS v
-        FROM events
-    ),
-    cells AS (
-        SELECT event_type, v,
-               CAST(SUM(wk) AS BIGINT) AS c1,
-               CAST(SUM(1 - wk) AS BIGINT) AS c2
-        FROM base GROUP BY 1, 2
-    ),
+    WITH {_WK_CELLS_DUCK},
     cum AS (
         SELECT event_type, v, c1, c2,
                CAST(COALESCE(SUM(c1 + c2) OVER w, 0) AS BIGINT) AS cl,
@@ -1934,7 +1877,7 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "events").select(
         "event_type",
         F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
-        _q100().alias("v"),
+        cents().alias("v"),
     )
     return brunner_munzel(base)
 
@@ -1943,10 +1886,7 @@ def brunner_munzel(base: DataFrame) -> DataFrame:
     """Frame-level core of :func:`stat_brunner_munzel` (the library
     form the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
-    cells = base.groupBy("event_type", "v").agg(
-        F.sum("wk").cast("bigint").alias("c1"),
-        F.sum(1 - F.col("wk")).cast("bigint").alias("c2"),
-    )
+    cells = _sample_cells(base)
     wless = (
         Window.partitionBy("event_type")
         .orderBy("v")
@@ -2042,29 +1982,8 @@ _CVM_C05 = "0.461"
 @register(
     "stat_cvm_two_sample",
     oracle=f"""
-    WITH base AS (
-        SELECT event_type,
-               CASE WHEN DAYOFWEEK(CAST(ts AS DATE)) IN (0, 6)
-                    THEN 1 ELSE 0 END AS wk,
-               CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS v
-        FROM events
-    ),
-    cells AS (
-        SELECT event_type, v,
-               CAST(SUM(wk) AS BIGINT) AS c1,
-               CAST(SUM(1 - wk) AS BIGINT) AS c2
-        FROM base GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT event_type, v, c1 + c2 AS cz,
-               CAST(SUM(c1) OVER w AS BIGINT) AS f1,
-               CAST(SUM(c2) OVER w AS BIGINT) AS f2,
-               CAST(SUM(c1) OVER (PARTITION BY event_type) AS BIGINT) AS n1,
-               CAST(SUM(c2) OVER (PARTITION BY event_type) AS BIGINT) AS n2
-        FROM cells
-        WINDOW w AS (PARTITION BY event_type ORDER BY v
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
+    WITH {_WK_CELLS_DUCK},
+    {_ecdf_cum_duck(" c1 + c2 AS cz,")},
     s AS (
         SELECT event_type,
                CAST(MIN(n1) AS BIGINT) AS n1, CAST(MIN(n2) AS BIGINT) AS n2,
@@ -2113,7 +2032,7 @@ def stat_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "events").select(
         "event_type",
         F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
-        _q100().alias("v"),
+        cents().alias("v"),
     )
     return cvm_two_sample(base)
 
@@ -2122,24 +2041,7 @@ def cvm_two_sample(base: DataFrame) -> DataFrame:
     """Frame-level core of :func:`stat_cvm_two_sample` (the library form
     the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
-    cells = base.groupBy("event_type", "v").agg(
-        F.sum("wk").cast("bigint").alias("c1"),
-        F.sum(1 - F.col("wk")).cast("bigint").alias("c2"),
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("event_type")
-    cum = cells.select(
-        "event_type",
-        (F.col("c1") + F.col("c2")).alias("cz"),
-        F.sum("c1").over(wcum).cast("bigint").alias("f1"),
-        F.sum("c2").over(wcum).cast("bigint").alias("f2"),
-        F.sum("c1").over(wall).cast("bigint").alias("n1"),
-        F.sum("c2").over(wall).cast("bigint").alias("n2"),
-    )
+    cum = _ecdf_cells(base, (F.col("c1") + F.col("c2")).alias("cz"))
     diff = (
         F.col("f1").cast("double") * F.col("n2")
         - F.col("f2").cast("double") * F.col("n1")
@@ -2251,7 +2153,7 @@ def stat_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "events").select(
         "event_type",
         _dow_spark().cast("bigint").alias("s"),
-        F.when(_q100() >= _CA_THRESH, 1).otherwise(0).alias("y"),
+        F.when(cents() >= _CA_THRESH, 1).otherwise(0).alias("y"),
     )
     return cochran_armitage(base)
 

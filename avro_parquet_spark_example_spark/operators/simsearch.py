@@ -915,10 +915,10 @@ _SPARSE_TF_SQL = """
     )"""
 
 
-@register(
-    "search_hybrid_rrf",
-    oracle=f"""
-    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
+#: DuckDB CTEs shared by the hybrid-retrieval oracles: the query vector
+#: ``q`` and the dense top-RRF_DEPTH list with its ranks ``dense_rank``.
+_DENSE_RANK_DUCK = f"""q AS (SELECT embedding AS qvec FROM embeddings
+               WHERE vec_id = {QUERY_VEC_ID}),
     dense_list AS (
         SELECT e.vec_id, ROUND({_DOT_SQL}, 5) AS score
         FROM embeddings e, q
@@ -929,7 +929,13 @@ _SPARSE_TF_SQL = """
     dense_rank AS (
         SELECT vec_id, ROW_NUMBER() OVER (ORDER BY score DESC, vec_id) AS dr
         FROM dense_list
-    ),{_SPARSE_TF_SQL}
+    )"""
+
+
+@register(
+    "search_hybrid_rrf",
+    oracle=f"""
+    WITH {_DENSE_RANK_DUCK},{_SPARSE_TF_SQL}
     SELECT COALESCE(d.vec_id, s.doc_id) AS doc_id,
            d.dr AS dense_rank, s.sr AS sparse_rank,
            ROUND(COALESCE(1.0 / ({RRF_K} + d.dr), 0.0)
@@ -1013,18 +1019,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "search_rerank_stub",
     oracle=f"""
-    WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
-    dense_list AS (
-        SELECT e.vec_id, ROUND({_DOT_SQL}, 5) AS score
-        FROM embeddings e, q
-        WHERE e.vec_id <> {QUERY_VEC_ID}
-        ORDER BY {_DOT_SQL} DESC, e.vec_id
-        LIMIT {RRF_DEPTH}
-    ),
-    dense_rank AS (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY score DESC, vec_id) AS dr
-        FROM dense_list
-    ),{_SPARSE_TF_SQL},
+    WITH {_DENSE_RANK_DUCK},{_SPARSE_TF_SQL},
     fused AS (
         SELECT COALESCE(d.vec_id, s.doc_id) AS doc_id,
                COALESCE(1.0 / ({RRF_K} + d.dr), 0.0)
@@ -1211,6 +1206,18 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("rank", "vec_id", "rel")
 
 
+def _labelled_queries(e: DataFrame) -> DataFrame:
+    """Broadcast (qid, qvec, qlabel) of the five query vectors
+    (vec_id < 5) the labelled-retrieval queries score against."""
+    return F.broadcast(
+        e.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("qvec"),
+            F.col("label").alias("qlabel"),
+        )
+    )
+
+
 @register(
     "eval_retrieval_metrics",
     oracle=f"""
@@ -1274,13 +1281,7 @@ def eval_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ordered fold over 1..n_rel, and the final division is one IEEE op
     rounded to 6."""
     e = load(spark, sf_dir, "embeddings")
-    qs = F.broadcast(
-        e.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qvec"),
-            F.col("label").alias("qlabel"),
-        )
-    )
+    qs = _labelled_queries(e)
     scored = (
         e.crossJoin(qs)
         .filter(F.col("vec_id") != F.col("qid"))
@@ -1481,6 +1482,30 @@ def _pi_round_sql(win: str, wout: str) -> str:
 #: Power-iteration round count, unrolled identically in the SQL oracle.
 PI_ROUNDS = 3
 
+#: DuckDB CTEs shared by the power-iteration oracles: the exact
+#: fixed-point embeddings ``fixed``, their Gram matrix ``gram``, and
+#: PI_ROUNDS unrolled rounds from the all-ones start w0 to w{PI_ROUNDS}.
+_PI_ROUNDS_DUCK = (
+    """
+    WITH fixed AS (
+        SELECT vec_id, r.range AS pos,
+               CAST(FLOOR(CAST(embedding[CAST(r.range AS INT)] AS DOUBLE)
+                          * 10000000) AS BIGINT) AS v7
+        FROM embeddings, RANGE(1, 65) r
+    ),
+    gram AS (
+        SELECT a.pos AS i, b.pos AS j,
+               SUM(CAST(a.v7 AS DECIMAL(19,0)) * CAST(b.v7 AS DECIMAL(19,0)))
+                   AS m
+        FROM fixed a JOIN fixed b ON a.vec_id = b.vec_id
+        GROUP BY a.pos, b.pos
+    ),
+    w0 AS (SELECT r.range AS j, CAST(1.0 AS DECIMAL(12,9)) AS w
+           FROM RANGE(1, 65) r),
+    """
+    + ",".join(_pi_round_sql(f"w{i}", f"w{i+1}") for i in range(PI_ROUNDS))
+)
+
 
 def _round_half_up9(x: float, scale: int = 9) -> Decimal:
     """Exact replica of Spark's ``ROUND(double, s)`` followed by the cast
@@ -1591,24 +1616,7 @@ def _spectral_materialize(df: DataFrame) -> DataFrame:
 
 @register(
     "vec_power_iteration_top_pc",
-    oracle="""
-    WITH fixed AS (
-        SELECT vec_id, r.range AS pos,
-               CAST(FLOOR(CAST(embedding[CAST(r.range AS INT)] AS DOUBLE)
-                          * 10000000) AS BIGINT) AS v7
-        FROM embeddings, RANGE(1, 65) r
-    ),
-    gram AS (
-        SELECT a.pos AS i, b.pos AS j,
-               SUM(CAST(a.v7 AS DECIMAL(19,0)) * CAST(b.v7 AS DECIMAL(19,0)))
-                   AS m
-        FROM fixed a JOIN fixed b ON a.vec_id = b.vec_id
-        GROUP BY a.pos, b.pos
-    ),
-    w0 AS (SELECT r.range AS j, CAST(1.0 AS DECIMAL(12,9)) AS w
-           FROM RANGE(1, 65) r),
-    """
-    + ",".join(_pi_round_sql(f"w{i}", f"w{i+1}") for i in range(PI_ROUNDS))
+    oracle=_PI_ROUNDS_DUCK
     + f"""
     SELECT j AS pos, w AS direction FROM w{PI_ROUNDS}
     """,
@@ -1646,24 +1654,7 @@ def vec_power_iteration_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vec_remove_top_component",
-    oracle="""
-    WITH fixed AS (
-        SELECT vec_id, r.range AS pos,
-               CAST(FLOOR(CAST(embedding[CAST(r.range AS INT)] AS DOUBLE)
-                          * 10000000) AS BIGINT) AS v7
-        FROM embeddings, RANGE(1, 65) r
-    ),
-    gram AS (
-        SELECT a.pos AS i, b.pos AS j,
-               SUM(CAST(a.v7 AS DECIMAL(19,0)) * CAST(b.v7 AS DECIMAL(19,0)))
-                   AS m
-        FROM fixed a JOIN fixed b ON a.vec_id = b.vec_id
-        GROUP BY a.pos, b.pos
-    ),
-    w0 AS (SELECT r.range AS j, CAST(1.0 AS DECIMAL(12,9)) AS w
-           FROM RANGE(1, 65) r),
-    """
-    + ",".join(_pi_round_sql(f"w{i}", f"w{i+1}") for i in range(PI_ROUNDS))
+    oracle=_PI_ROUNDS_DUCK
     + f"""
     , unit_n AS (
         SELECT SUM(CAST(w * w AS DECIMAL(30,18))) AS n2 FROM w{PI_ROUNDS}
@@ -1803,13 +1794,7 @@ def search_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     query id, and the mined set ships straight into the training
     dataloader."""
     e = load(spark, sf_dir, "embeddings")
-    qs = F.broadcast(
-        e.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qvec"),
-            F.col("label").alias("qlabel"),
-        )
-    )
+    qs = _labelled_queries(e)
     scored = (
         e.crossJoin(qs)
         .filter(
@@ -2470,24 +2455,7 @@ def _pi2_round_sql(win: str, wout: str, v1: str) -> str:
 
 
 _TOP2_SQL = (
-    """
-    WITH fixed AS (
-        SELECT vec_id, r.range AS pos,
-               CAST(FLOOR(CAST(embedding[CAST(r.range AS INT)] AS DOUBLE)
-                          * 10000000) AS BIGINT) AS v7
-        FROM embeddings, RANGE(1, 65) r
-    ),
-    gram AS (
-        SELECT a.pos AS i, b.pos AS j,
-               SUM(CAST(a.v7 AS DECIMAL(19,0)) * CAST(b.v7 AS DECIMAL(19,0)))
-                   AS m
-        FROM fixed a JOIN fixed b ON a.vec_id = b.vec_id
-        GROUP BY a.pos, b.pos
-    ),
-    w0 AS (SELECT r.range AS j, CAST(1.0 AS DECIMAL(12,9)) AS w
-           FROM RANGE(1, 65) r),
-    """
-    + ",".join(_pi_round_sql(f"w{i}", f"w{i+1}") for i in range(PI_ROUNDS))
+    _PI_ROUNDS_DUCK
     + """,
     u0 AS (
         SELECT r.range AS j,
@@ -2738,18 +2706,6 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         )
     )
-
-
-def confusion_matrix(
-    df: DataFrame, true_col: str, pred_col: str
-) -> DataFrame:
-    """(true_label, pred_label, n) confusion-matrix counts of two
-    categorical columns — the shared substrate of the agreement-statistic
-    family (kappa, MCC). One map-side-combined groupBy; |labels|² rows."""
-    return df.groupBy(
-        F.col(true_col).alias("true_label"),
-        F.col(pred_col).alias("pred_label"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
 
 
 def cohens_kappa(conf: DataFrame) -> DataFrame:

@@ -25,7 +25,7 @@ unrounded doubles to shared literals.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import register
@@ -115,10 +115,32 @@ def _km_grid(subj: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "surv_kaplan_meier",
-    oracle=f"""
-    WITH {_DUR_DUCK},
+def _upto_t() -> Window:
+    """Per-group running frame over durations 1..t."""
+    return (
+        Window.partitionBy("grp")
+        .orderBy("t")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _per_t(risk: DataFrame, *estimates: Column) -> DataFrame:
+    """(grp, t, n_risk, n_event, n_censor, *estimates) — one row per
+    (group, duration) of the :func:`_km_grid` risk table."""
+    return risk.select(
+        "grp",
+        "t",
+        "n_risk",
+        F.col("d").alias("n_event"),
+        F.col("c").alias("n_censor"),
+        *estimates,
+    )
+
+
+#: DuckDB twin of :func:`_km_grid` (``risk``, over its histogram
+#: ``hist``) and the Kaplan–Meier running log-survival ``logs`` — shared
+#: by the Kaplan–Meier, Nelson–Aalen and RMST oracles.
+_RISK_DUCK = f"""{_DUR_DUCK},
     hist AS (
         SELECT grp, t, CAST(SUM(ev) AS BIGINT) AS d,
                CAST(SUM(1 - ev) AS BIGINT) AS c
@@ -130,17 +152,24 @@ def _km_grid(subj: DataFrame) -> DataFrame:
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS BIGINT) AS n_risk
         FROM hist
-    ),
-    km AS (
-        SELECT grp, t, d, c, n_risk,
-               CAST(SUM(CASE
+    )"""
+_KM_LOGS_DUCK = """CAST(SUM(CASE
                     WHEN d >= n_risk THEN CAST(-1000000000 AS DECIMAL(28,9))
                     WHEN d = 0 THEN CAST(0 AS DECIMAL(28,9))
                     ELSE CAST(ROUND(LN(1.0 - CAST(d AS DOUBLE) / n_risk),
                                     9) AS DECIMAL(28,9)) END)
                     OVER (PARTITION BY grp ORDER BY t
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS DECIMAL(38,9)) AS logs
+               AS DECIMAL(38,9)) AS logs"""
+
+
+@register(
+    "surv_kaplan_meier",
+    oracle=f"""
+    WITH {_RISK_DUCK},
+    km AS (
+        SELECT grp, t, d, c, n_risk,
+               {_KM_LOGS_DUCK}
         FROM risk
     )
     SELECT grp, t, n_risk, d AS n_event, c AS n_censor,
@@ -198,20 +227,11 @@ def kaplan_meier(subj: DataFrame) -> DataFrame:
             F.log(1.0 - F.col("d").cast("double") / F.col("n_risk")), 9
         ).cast("decimal(28,9)")
     )
-    wcum = (
-        Window.partitionBy("grp")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return risk.select(
-        "grp",
-        "t",
-        "n_risk",
-        F.col("d").alias("n_event"),
-        F.col("c").alias("n_censor"),
+    return _per_t(
+        risk,
         F.round(
             F.exp(
-                F.sum(term).over(wcum).cast("decimal(38,9)").cast("double")
+                F.sum(term).over(_upto_t()).cast("decimal(38,9)").cast("double")
             ),
             6,
         ).alias("survival"),
@@ -401,19 +421,7 @@ def surv_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "surv_nelson_aalen",
     oracle=f"""
-    WITH {_DUR_DUCK},
-    hist AS (
-        SELECT grp, t, CAST(SUM(ev) AS BIGINT) AS d,
-               CAST(SUM(1 - ev) AS BIGINT) AS c
-        FROM subj GROUP BY 1, 2
-    ),
-    risk AS (
-        SELECT grp, t, d, c,
-               CAST(SUM(d + c) OVER (PARTITION BY grp ORDER BY t DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS n_risk
-        FROM hist
-    ),
+    WITH {_RISK_DUCK},
     na AS (
         SELECT grp, t, d, c, n_risk,
                CAST(SUM(CASE WHEN d = 0 THEN CAST(0 AS DECIMAL(28,9))
@@ -478,17 +486,9 @@ def nelson_aalen(subj: DataFrame) -> DataFrame:
             9,
         ).cast("decimal(28,9)")
     )
-    wcum = (
-        Window.partitionBy("grp")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return risk.select(
-        "grp",
-        "t",
-        "n_risk",
-        F.col("d").alias("n_event"),
-        F.col("c").alias("n_censor"),
+    wcum = _upto_t()
+    return _per_t(
+        risk,
         F.round(
             F.sum(h_term).over(wcum).cast("decimal(38,9)").cast("double"), 6
         ).alias("cum_hazard"),
@@ -512,29 +512,10 @@ _RMST_TAU = 30
 @register(
     "surv_rmst",
     oracle=f"""
-    WITH {_DUR_DUCK},
-    hist AS (
-        SELECT grp, t, CAST(SUM(ev) AS BIGINT) AS d,
-               CAST(SUM(1 - ev) AS BIGINT) AS c
-        FROM subj GROUP BY 1, 2
-    ),
-    risk AS (
-        SELECT grp, t, d, c,
-               CAST(SUM(d + c) OVER (PARTITION BY grp ORDER BY t DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS n_risk
-        FROM hist
-    ),
+    WITH {_RISK_DUCK},
     km AS (
         SELECT grp, t,
-               CAST(SUM(CASE
-                    WHEN d >= n_risk THEN CAST(-1000000000 AS DECIMAL(28,9))
-                    WHEN d = 0 THEN CAST(0 AS DECIMAL(28,9))
-                    ELSE CAST(ROUND(LN(1.0 - CAST(d AS DOUBLE) / n_risk),
-                                    9) AS DECIMAL(28,9)) END)
-                    OVER (PARTITION BY grp ORDER BY t
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS DECIMAL(38,9)) AS logs
+               {_KM_LOGS_DUCK}
         FROM risk
     ),
     spans AS (

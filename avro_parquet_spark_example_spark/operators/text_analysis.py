@@ -1197,6 +1197,20 @@ def bm25_topk(
     )
 
 
+def _bigrams() -> Column:
+    """Array of the adjacent-token bigrams ("w1 w2") of token array ``w``."""
+    n = F.size("w")
+    return F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(2), n),
+            lambda i: F.concat_ws(
+                " ", F.element_at("w", i - 1), F.element_at("w", i)
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 @register(
     "text_bigram_logprob",
     oracle="""
@@ -1254,16 +1268,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = ws.select("doc_id", F.explode("w").alias("tok"))
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c1"))
     voc = uni.agg(F.count(F.lit(1)).alias("v"))
-    n = F.size("w")
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(2), n),
-            lambda i: F.concat_ws(
-                " ", F.element_at("w", i - 1), F.element_at("w", i)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = _bigrams()
     bgs = ws.select("doc_id", F.explode(bigrams).alias("bg"))
     bi = bgs.groupBy("bg").agg(F.count(F.lit(1)).alias("c12"))
     lp = F.round(
@@ -1337,16 +1342,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = ws.select(F.explode("w").alias("tok"))
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c1"))
     tot = uni.agg(F.sum("c1").alias("t"))
-    n = F.size("w")
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(2), n),
-            lambda i: F.concat_ws(
-                " ", F.element_at("w", i - 1), F.element_at("w", i)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = _bigrams()
     bi = (
         ws.select(F.explode(bigrams).alias("bg"))
         .groupBy("bg")
@@ -2249,10 +2245,10 @@ def text_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "eval_bleu_corpus",
-    oracle="""
-    WITH pairs AS (
+#: DuckDB CTEs shared by the BLEU and ROUGE oracles: each document paired
+#: with the next one of its 100-id block (``p``: cand, ref), and the
+#: per-pair unigram (cu/ru) and bigram (cb/rb) counts of both texts.
+_NGRAM_PAIRS_DUCK = """pairs AS (
         SELECT lang, doc_id, text AS cand,
                LEAD(text) OVER (
                    PARTITION BY lang, doc_id // 100 ORDER BY doc_id
@@ -2285,7 +2281,13 @@ def text_doclen_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      w[CAST(i AS INT) + 1]
                                      FOR i IN RANGE(1, LEN(w))]) AS tok) b
         GROUP BY 1, 2, 3
-    ),
+    )"""
+
+
+@register(
+    "eval_bleu_corpus",
+    oracle=f"""
+    WITH {_NGRAM_PAIRS_DUCK},
     clip1 AS (
         SELECT cu.lang, CAST(SUM(LEAST(cu.c, ru.c)) AS BIGINT) AS m
         FROM cu JOIN ru USING (lang, doc_id, tok) GROUP BY 1
@@ -2482,41 +2484,8 @@ def bleu_corpus(
 
 @register(
     "eval_rouge_n",
-    oracle="""
-    WITH pairs AS (
-        SELECT lang, doc_id, text AS cand,
-               LEAD(text) OVER (
-                   PARTITION BY lang, doc_id // 100 ORDER BY doc_id
-               ) AS ref
-        FROM documents
-    ),
-    p AS (SELECT * FROM pairs WHERE ref IS NOT NULL),
-    cu AS (
-        SELECT lang, doc_id, u.tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM p, LATERAL (SELECT UNNEST(STRING_SPLIT(cand, ' ')) AS tok) u
-        GROUP BY 1, 2, 3
-    ),
-    ru AS (
-        SELECT lang, doc_id, u.tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM p, LATERAL (SELECT UNNEST(STRING_SPLIT(ref, ' ')) AS tok) u
-        GROUP BY 1, 2, 3
-    ),
-    cb AS (
-        SELECT lang, doc_id, b.tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT lang, doc_id, STRING_SPLIT(cand, ' ') AS w FROM p),
-             LATERAL (SELECT UNNEST([w[CAST(i AS INT)] || ' ' ||
-                                     w[CAST(i AS INT) + 1]
-                                     FOR i IN RANGE(1, LEN(w))]) AS tok) b
-        GROUP BY 1, 2, 3
-    ),
-    rb AS (
-        SELECT lang, doc_id, b.tok, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT lang, doc_id, STRING_SPLIT(ref, ' ') AS w FROM p),
-             LATERAL (SELECT UNNEST([w[CAST(i AS INT)] || ' ' ||
-                                     w[CAST(i AS INT) + 1]
-                                     FOR i IN RANGE(1, LEN(w))]) AS tok) b
-        GROUP BY 1, 2, 3
-    ),
+    oracle=f"""
+    WITH {_NGRAM_PAIRS_DUCK},
     m1 AS (
         SELECT cu.lang, CAST(SUM(LEAST(cu.c, ru.c)) AS BIGINT) AS m
         FROM cu JOIN ru USING (lang, doc_id, tok) GROUP BY 1

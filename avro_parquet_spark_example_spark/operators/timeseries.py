@@ -22,7 +22,7 @@ grid. At 1000 executors this is embarrassingly key-parallel.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import register
@@ -809,6 +809,34 @@ def ts_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 SESS_GAP_US = 24 * 3600 * 1_000_000
 SESS_CAP_US = 72 * 3600 * 1_000_000
 
+#: DuckDB CTEs of the capped sessionization, shared by the batch and the
+#: streaming oracle: per-user gap islands ``isl`` (events as u, ts) and
+#: the recursive session ``anchors`` of each island.
+SESS_ANCHORS_DUCK = f"""base AS (
+        SELECT user_id AS u, EPOCH_US(ts) AS ts FROM events
+    ),
+    isl AS (
+        SELECT u, ts,
+               SUM(CASE WHEN prev IS NULL OR ts - prev > {SESS_GAP_US}
+                        THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY u ORDER BY ts) AS island
+        FROM (SELECT u, ts,
+                     LAG(ts) OVER (PARTITION BY u ORDER BY ts) AS prev
+              FROM base)
+    ),
+    anchors AS (
+        SELECT u, island, MIN(ts) AS anchor FROM isl GROUP BY u, island
+        UNION ALL
+        SELECT a.u, a.island,
+               (SELECT MIN(e.ts) FROM isl e
+                WHERE e.u = a.u AND e.island = a.island
+                  AND e.ts > a.anchor + {SESS_CAP_US}) AS anchor
+        FROM anchors a
+        WHERE EXISTS (SELECT 1 FROM isl e
+                      WHERE e.u = a.u AND e.island = a.island
+                        AND e.ts > a.anchor + {SESS_CAP_US})
+    )"""
+
 
 
 
@@ -866,30 +894,7 @@ def sessionize_capped(
 @register(
     "ts_sessionize_capped",
     oracle=f"""
-    WITH RECURSIVE base AS (
-        SELECT user_id AS u, EPOCH_US(ts) AS ts FROM events
-    ),
-    isl AS (
-        SELECT u, ts,
-               SUM(CASE WHEN prev IS NULL OR ts - prev > {SESS_GAP_US}
-                        THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY u ORDER BY ts) AS island
-        FROM (SELECT u, ts,
-                     LAG(ts) OVER (PARTITION BY u ORDER BY ts) AS prev
-              FROM base)
-    ),
-    anchors AS (
-        SELECT u, island, MIN(ts) AS anchor FROM isl GROUP BY u, island
-        UNION ALL
-        SELECT a.u, a.island,
-               (SELECT MIN(e.ts) FROM isl e
-                WHERE e.u = a.u AND e.island = a.island
-                  AND e.ts > a.anchor + {SESS_CAP_US}) AS anchor
-        FROM anchors a
-        WHERE EXISTS (SELECT 1 FROM isl e
-                      WHERE e.u = a.u AND e.island = a.island
-                        AND e.ts > a.anchor + {SESS_CAP_US})
-    ),
+    WITH RECURSIVE {SESS_ANCHORS_DUCK},
     assigned AS (
         SELECT i.u, i.island, i.ts,
                (SELECT COUNT(*) FROM anchors a
@@ -2085,10 +2090,9 @@ def _holt_sdiv4(expr: str, op: str = "//") -> str:
     )
 
 
-@register(
-    "ts_holt_linear",
-    oracle=f"""
-    WITH RECURSIVE daily AS (
+#: DuckDB per-(event_type, day) event count ``daily`` and its 1-based
+#: day index ``idx`` (rn) — the day grid the recursive-CTE folds walk.
+_DAILY_IDX_DUCK = """daily AS (
         SELECT event_type, CAST(ts AS DATE) AS day,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY 1, 2
@@ -2097,7 +2101,40 @@ def _holt_sdiv4(expr: str, op: str = "//") -> str:
         SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
                                      ORDER BY day) AS rn
         FROM daily
-    ),
+    )"""
+
+
+def _day_grids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, g) — each event type's day-sorted array of (day, n)
+    daily event counts, the input of the per-key folds."""
+    e = load(spark, sf_dir, "events")
+    daily = e.groupBy(
+        "event_type", F.col("ts").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return daily.groupBy("event_type").agg(
+        F.sort_array(F.collect_list(F.struct("day", "n"))).alias("g")
+    )
+
+
+def _holt_rows(folded: DataFrame, *extra: Column) -> DataFrame:
+    """One row per (event_type, day) from a Holt fold's ``out`` array:
+    day, n, level_micro, trend_micro, then ``extra`` columns of ``r``."""
+    return folded.select(
+        "event_type", F.explode("out").alias("r")
+    ).select(
+        "event_type",
+        F.col("r.day").alias("day"),
+        F.col("r.n").alias("n"),
+        F.col("r.lvl").alias("level_micro"),
+        F.col("r.trd").alias("trend_micro"),
+        *extra,
+    )
+
+
+@register(
+    "ts_holt_linear",
+    oracle=f"""
+    WITH RECURSIVE {_DAILY_IDX_DUCK},
     hw AS (
         SELECT event_type, rn, day, n,
                n * {_HOLT_S} AS lvl, CAST(0 AS BIGINT) AS trd
@@ -2138,13 +2175,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     (use ``ts_seasonality_decompose`` for that); Holt is the
     trend-following baseline and its one-step forecast is
     level + trend."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    grids = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("day", "n"))).alias("g")
-    )
+    grids = _day_grids(spark, sf_dir)
 
     def sdiv4(expr: str) -> str:
         return _holt_sdiv4(expr, op="div")
@@ -2191,15 +2222,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     )
-    return folded.select(
-        "event_type", F.explode("out").alias("r")
-    ).select(
-        "event_type",
-        F.col("r.day").alias("day"),
-        F.col("r.n").alias("n"),
-        F.col("r.lvl").alias("level_micro"),
-        F.col("r.trd").alias("trend_micro"),
-    )
+    return _holt_rows(folded)
 
 
 # ---------------------------------------------------------------------------
@@ -2231,16 +2254,7 @@ _HW_LVL_SQL, _HW_TRD_SQL, _HW_SEA_SQL = _hw_exprs(
 @register(
     "ts_holt_winters",
     oracle=f"""
-    WITH RECURSIVE daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-                                     ORDER BY day) AS rn
-        FROM daily
-    ),
+    WITH RECURSIVE {_DAILY_IDX_DUCK},
     init AS (
         SELECT event_type,
                CAST((SUM(n) * {_HOLT_S}) // {_HW_M} AS BIGINT) AS lvl0,
@@ -2292,13 +2306,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus-volume part is ONE map-side-combined daily
     aggregate; the fold is per-key sequential over |days| structs,
     cross-key parallel, zero driver state."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    grids = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("day", "n"))).alias("g")
-    )
+    grids = _day_grids(spark, sf_dir)
     lvl_t, trd_t, sea_t = _hw_exprs(
         "x.n", "element_at(acc.season, 1)", "acc.l", "acc.b", "div"
     )
@@ -2352,16 +2360,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     )
-    return folded.select(
-        "event_type", F.explode("out").alias("r")
-    ).select(
-        "event_type",
-        F.col("r.day").alias("day"),
-        F.col("r.n").alias("n"),
-        F.col("r.lvl").alias("level_micro"),
-        F.col("r.trd").alias("trend_micro"),
-        F.col("r.sea").alias("season_micro"),
-    )
+    return _holt_rows(folded, F.col("r.sea").alias("season_micro"))
 
 
 # ---------------------------------------------------------------------------
@@ -2374,16 +2373,7 @@ _CUSUM_S = 1_000_000
 @register(
     "ts_cusum_drift",
     oracle=f"""
-    WITH RECURSIVE daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-                                     ORDER BY day) AS rn
-        FROM daily
-    ),
+    WITH RECURSIVE {_DAILY_IDX_DUCK},
     stats AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_days,
@@ -2669,6 +2659,42 @@ def ts_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lead_lag_xcorr(lead, lagf, max_lag=XCORR_MAX_LAG)
 
 
+def _pair_moments(pairs: DataFrame, *keys: str) -> DataFrame:
+    """Per-``keys`` pair count n and moment sums of paired series (xa,
+    xb). Squared-value sums are DECIMAL(38,0): daily volumes at 100 TB
+    are ~10^10-10^12, so Σx² passes int64's 9.2e18 ceiling (r12
+    overflow-headroom audit; oracle uses HUGEINT). Linear sums stay
+    BIGINT."""
+    return pairs.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("xa").cast("bigint").alias("sa"),
+        F.sum("xb").cast("bigint").alias("sb"),
+        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xa")).alias("saa"),
+        F.sum(F.col("xb").cast("decimal(38,0)") * F.col("xb")).alias("sbb"),
+        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xb")).alias("sab"),
+    )
+
+
+def _pearson6() -> Column:
+    """Pearson r of the :func:`_pair_moments` sums rounded to 6 places.
+    A constant side zeroes its variance and leaves r undefined: NULL, as
+    DuckDB returns (ANSI Spark threw on the division, r15 sweep)."""
+    nd = F.col("n").cast("double")
+    vara = nd * F.col("saa").cast("double") - F.col("sa").cast(
+        "double"
+    ) * F.col("sa").cast("double")
+    varb = nd * F.col("sbb").cast("double") - F.col("sb").cast(
+        "double"
+    ) * F.col("sb").cast("double")
+    r = (
+        nd * F.col("sab").cast("double")
+        - F.col("sa").cast("double") * F.col("sb").cast("double")
+    ) / (F.sqrt(vara) * F.sqrt(varb))
+    return F.when((vara == 0) | (varb == 0), F.lit(None).cast("double")).otherwise(
+        F.round(r, 6)
+    )
+
+
 def lead_lag_xcorr(
     lead: DataFrame, lagging: DataFrame, max_lag: int = XCORR_MAX_LAG
 ) -> DataFrame:
@@ -2690,38 +2716,10 @@ def lead_lag_xcorr(
         .withColumn("day_b", F.date_add(F.col("day_a"), F.col("lag")))
         .join(lagf, "day_b")
     )
-    # squared-value moment sums in DECIMAL(38,0): daily volumes at
-    # 100 TB are ~10^10-10^12, so Σx² passes int64's 9.2e18 ceiling
-    # (r12 overflow-headroom audit; oracle uses HUGEINT). Linear sums
-    # stay BIGINT.
-    sums = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("xa").cast("bigint").alias("sa"),
-        F.sum("xb").cast("bigint").alias("sb"),
-        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xa")).alias("saa"),
-        F.sum(F.col("xb").cast("decimal(38,0)") * F.col("xb")).alias("sbb"),
-        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xb")).alias("sab"),
-    )
-    nd = F.col("n").cast("double")
-    vara = nd * F.col("saa").cast("double") - F.col("sa").cast(
-        "double"
-    ) * F.col("sa").cast("double")
-    varb = nd * F.col("sbb").cast("double") - F.col("sb").cast(
-        "double"
-    ) * F.col("sb").cast("double")
-    r = (
-        nd * F.col("sab").cast("double")
-        - F.col("sa").cast("double") * F.col("sb").cast("double")
-    ) / (F.sqrt(vara) * F.sqrt(varb))
-    # degenerate-margin guard (r15 ANSI sweep): a constant side in the
-    # overlap window zeroes its variance — Pearson undefined; ANSI
-    # Spark threw where DuckDB returns NULL
-    return sums.select(
+    return _pair_moments(pairs, "lag").select(
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").alias("n_days"),
-        F.when((vara == 0) | (varb == 0), F.lit(None).cast("double"))
-        .otherwise(F.round(r, 6))
-        .alias("xcorr"),
+        _pearson6().alias("xcorr"),
     )
 
 
@@ -2940,35 +2938,11 @@ def autocorr(
         .withColumn("day_b", F.date_add(F.col("day_a"), F.col("lag")))
         .join(b, ["k", "day_b"])
     )
-    sums = pairs.groupBy("k", "lag").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("xa").cast("bigint").alias("sa"),
-        F.sum("xb").cast("bigint").alias("sb"),
-        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xa")).alias("saa"),
-        F.sum(F.col("xb").cast("decimal(38,0)") * F.col("xb")).alias("sbb"),
-        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xb")).alias("sab"),
-    )
-    nd = F.col("n").cast("double")
-    vara = nd * F.col("saa").cast("double") - F.col("sa").cast(
-        "double"
-    ) * F.col("sa").cast("double")
-    varb = nd * F.col("sbb").cast("double") - F.col("sb").cast(
-        "double"
-    ) * F.col("sb").cast("double")
-    r = (
-        nd * F.col("sab").cast("double")
-        - F.col("sa").cast("double") * F.col("sb").cast("double")
-    ) / (F.sqrt(vara) * F.sqrt(varb))
-    # degenerate-margin guard (r15 ANSI sweep): a constant (or
-    # single-point) window zeroes either variance — the Pearson
-    # denominator is 0 and ANSI Spark threw where DuckDB returns NULL
-    return sums.select(
+    return _pair_moments(pairs, "k", "lag").select(
         F.col("k").alias(key),
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").alias("n_days"),
-        F.when((vara == 0) | (varb == 0), F.lit(None).cast("double"))
-        .otherwise(F.round(r, 6))
-        .alias("acf"),
+        _pearson6().alias("acf"),
     )
 
 

@@ -171,6 +171,11 @@ def ts_us(df: DataFrame, col: str = "ts"):
     )
 
 
+def cents():
+    """events.value quantized to exact integer cents (iusum rule)."""
+    return F.floor(F.col("value") * 100.0 + 0.5).cast("bigint")
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (the modern ``registerTempTable``)."""
     for name in TABLES:

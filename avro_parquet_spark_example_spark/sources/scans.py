@@ -221,15 +221,11 @@ def upsert_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_returnflag") == "R")
         .withColumn("l_discount", F.round(F.col("l_discount") + 0.01, 4))
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # overwrite mode + dynamic → replaces ONLY the l_returnflag=R dir
-        updates.select(*cols).write.mode("overwrite").partitionBy(
-            "l_returnflag"
-        ).parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # overwrite mode + dynamic → replaces ONLY the l_returnflag=R dir;
+    # the per-write option leaves the session's conf untouched
+    updates.select(*cols).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("l_returnflag").parquet(out)
     return (
         spark.read.parquet(out)
         .filter(F.col("l_orderkey") % 12 == 0)

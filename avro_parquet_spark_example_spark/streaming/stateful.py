@@ -296,6 +296,34 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
+def _final_user_state(
+    spark: SparkSession, sf_dir: str, result: DataFrame
+) -> DataFrame:
+    """Drain an update-mode per-user stateful stream and keep each user's
+    final state: the emission with the largest ``n_events`` (rank column
+    ``rn`` = 1).
+
+    The handlers run with no timers, so they never fire on a no-data
+    batch: the sink holds the full answer after the data batches, the
+    trailing batch is elided and the state store is input-sized (r16).
+    Update mode emits a row per touched key per micro-batch (AvailableNow
+    makes that one batch here, but latest-wins keeps the contract under
+    any batching)."""
+    sink = run_to_table(
+        result,
+        "update",
+        state_partitions=stream_state_partitions(spark, sf_dir),
+        final_no_data_batch=False,
+    )
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    return (
+        sink.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+    )
+
+
 @register(
     "stream_custom_stateful",
     oracle="""
@@ -336,25 +364,8 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # UPDATE mode + NoTimeout: the handler never runs on a no-data batch,
-    # so the sink holds the full answer after the data batches — trailing
-    # batch elided, state store input-sized (r16).
-    sink = run_to_table(
-        result,
-        "update",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-        final_no_data_batch=False,
-    )
-    # In update mode each micro-batch emits a row per touched key; the final
-    # state per user is the last emission (AvailableNow ⇒ one batch here,
-    # but the dedup-by-latest keeps the contract under any batching).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "max_value")
+    return _final_user_state(spark, sf_dir, result).select(
+        "user_id", "n_events", "max_value"
     )
 
 
@@ -392,30 +403,11 @@ def stream_windowed_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stream_stream_join",
-    oracle="""
-    SELECT v.user_id,
-           v.event_id AS view_id,
-           p.event_id AS purchase_id,
-           EPOCH_US(p.ts) - EPOCH_US(v.ts) AS us_between
-    FROM events v
-    JOIN events p
-      ON p.user_id = v.user_id
-     AND v.event_type = 'view' AND p.event_type = 'purchase'
-     AND p.ts >= v.ts
-     AND p.ts <= v.ts + INTERVAL 30 MINUTE
-    """,
-)
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G8 — watermarked stream⋈stream inner join: every purchase within 30
-    minutes after a view by the same user, both sides live streams. The
-    time-band condition plus 1-hour watermarks lets Structured Streaming
-    EVICT state: a buffered view can stop waiting once the purchase-side
-    watermark passes view.ts + 30 min, so state is bounded by (rate ×
-    window), not by history — the property that makes an unbounded
-    100 TB/day join feasible. On the bounded replay the emitted pairs must
-    equal the batch join, which is what the oracle checks."""
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """(user_id, view_id, purchase_id, us_between) — the ``how`` join of
+    the view stream with the purchase stream, matching each view to the
+    same user's purchases within the next 30 minutes; both streams carry
+    1-hour watermarks so the join state is evicted."""
     views = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -441,13 +433,41 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_user") == F.col("v_user"))
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
     )
-    joined = joined.select(
+    return joined.select(
         F.col("v_user").alias("user_id"),
         "view_id",
         "purchase_id",
         (ts_us(joined, "p_ts") - ts_us(joined, "v_ts")).alias("us_between"),
     )
+
+
+@register(
+    "stream_stream_join",
+    oracle="""
+    SELECT v.user_id,
+           v.event_id AS view_id,
+           p.event_id AS purchase_id,
+           EPOCH_US(p.ts) - EPOCH_US(v.ts) AS us_between
+    FROM events v
+    JOIN events p
+      ON p.user_id = v.user_id
+     AND v.event_type = 'view' AND p.event_type = 'purchase'
+     AND p.ts >= v.ts
+     AND p.ts <= v.ts + INTERVAL 30 MINUTE
+    """,
+)
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G8 — watermarked stream⋈stream inner join: every purchase within 30
+    minutes after a view by the same user, both sides live streams. The
+    time-band condition plus 1-hour watermarks lets Structured Streaming
+    EVICT state: a buffered view can stop waiting once the purchase-side
+    watermark passes view.ts + 30 min, so state is bounded by (rate ×
+    window), not by history — the property that makes an unbounded
+    100 TB/day join feasible. On the bounded replay the emitted pairs must
+    equal the batch join, which is what the oracle checks."""
+    joined = _view_purchase_join(spark, sf_dir, "inner")
     # INNER join: every match emits with its data batch; the trailing
     # no-data batch only evicts state, so it's elided (r14 — measured
     # 18.1 s -> 3.0 s at sf0.1 with input-sized state partitions).
@@ -637,22 +657,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    # UPDATE + no timers: full answer after the data batches — trailing
-    # batch elided, state store input-sized (r16).
-    sink = run_to_table(
-        result,
-        "update",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-        final_no_data_batch=False,
-    )
-    # update mode: one row per touched key per micro-batch; latest wins
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "first_us", "max_value")
+    return _final_user_state(spark, sf_dir, result).select(
+        "user_id", "n_events", "first_us", "max_value"
     )
 
 
@@ -741,45 +747,39 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical state-eviction math to stream_stream_join — state
     is bounded by rate × (window + delay), never by history; the outer
     side only adds a null-emit at eviction time (no extra state)."""
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    )
-    joined = joined.select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "purchase_id",
-        (ts_us(joined, "p_ts") - ts_us(joined, "v_ts")).alias("us_between"),
-    )
+    joined = _view_purchase_join(spark, sf_dir, "leftOuter")
     # OUTER join: NULL-padded rows emit ON watermark advance, so the
     # trailing no-data batch stays; state partitions size to the input
     # (r14 — same per-partition state-store fixed-cost argument as the
     # inner join).
     return run_to_table(
         joined,
+        "append",
+        state_partitions=stream_state_partitions(spark, sf_dir),
+    )
+
+
+def _session_counts(spark: SparkSession, sf_dir: str, gap) -> DataFrame:
+    """(user_id, session_start, session_end, n_events) of the event
+    stream's per-user session windows with inactivity gap ``gap`` (an
+    interval string or a per-row Column), 1-hour watermark."""
+    stream = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+    agg = (
+        stream.groupBy("user_id", F.session_window("ts", gap))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+        )
+    )
+    # APPEND session windows: closed sessions emit ON watermark advance —
+    # the trailing no-data batch MUST stay (it is what emits the final
+    # closed sessions); the session state store sizes to the replay's
+    # input (r16 profile: 32-partition RocksDB commits dominated).
+    return run_to_table(
+        agg,
         "append",
         state_partitions=stream_state_partitions(spark, sf_dir),
     )
@@ -833,63 +833,20 @@ def stream_session_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     history; this is the mechanism that makes sessionization viable on an
     unbounded feed where the batch gaps-and-islands window would need the
     full day's shuffle."""
-    stream = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = (
-        stream.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    # APPEND session windows: closed sessions emit ON watermark advance —
-    # the trailing no-data batch MUST stay (it is what emits the final
-    # closed sessions); the session state store sizes to the replay's
-    # input (r16 profile: 32-partition RocksDB commits dominated).
-    return run_to_table(
-        agg,
-        "append",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
+    return _session_counts(spark, sf_dir, "30 minutes")
 
 
 #: Shared with operators/timeseries.py so the stream and batch
-#: sessionization can never disagree on the gap/cap.
+#: sessionization oracles can never disagree on the gap/cap.
 from avro_parquet_spark_example_spark.operators.timeseries import (
-    SESS_CAP_US as _SESS_CAP_US,
-    SESS_GAP_US as _SESS_GAP_US,
+    SESS_ANCHORS_DUCK,
 )
 
 
 @register(
     "stream_sessionize_capped",
     oracle=f"""
-    WITH RECURSIVE base AS (
-        SELECT user_id AS u, EPOCH_US(ts) AS ts FROM events
-    ),
-    isl AS (
-        SELECT u, ts,
-               SUM(CASE WHEN prev IS NULL OR ts - prev > {_SESS_GAP_US}
-                        THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY u ORDER BY ts) AS island
-        FROM (SELECT u, ts,
-                     LAG(ts) OVER (PARTITION BY u ORDER BY ts) AS prev
-              FROM base)
-    ),
-    anchors AS (
-        SELECT u, island, MIN(ts) AS anchor FROM isl GROUP BY u, island
-        UNION ALL
-        SELECT a.u, a.island,
-               (SELECT MIN(e.ts) FROM isl e
-                WHERE e.u = a.u AND e.island = a.island
-                  AND e.ts > a.anchor + {_SESS_CAP_US}) AS anchor
-        FROM anchors a
-        WHERE EXISTS (SELECT 1 FROM isl e
-                      WHERE e.u = a.u AND e.island = a.island
-                        AND e.ts > a.anchor + {_SESS_CAP_US})
-    )
+    WITH RECURSIVE {SESS_ANCHORS_DUCK}
     SELECT i.u AS user_id,
            CAST(MAX(i.island) AS BIGINT) AS n_islands,
            (SELECT COUNT(*) FROM anchors a WHERE a.u = i.u) AS n_sessions,
@@ -967,24 +924,7 @@ def stream_sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # UPDATE + no timers: full answer after the data batches — trailing
-    # batch elided, state store input-sized (r16).
-    sink = run_to_table(
-        result,
-        "update",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-        final_no_data_batch=False,
-    )
-    # update mode re-emits a key per touched batch; keep the final state
-    # (largest n_events) per user
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return _final_user_state(spark, sf_dir, result).drop("rn")
 
 
 @register(
@@ -1099,25 +1039,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap_expr = F.when(
         F.col("event_type") == "click", F.lit("30 minutes")
     ).otherwise(F.lit("2 hours"))
-    stream = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = (
-        stream.groupBy("user_id", F.session_window("ts", gap_expr))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    # APPEND session windows: trailing no-data batch MUST stay (final
-    # closed sessions emit on watermark advance); state store sizes to
-    # the replay's input (r16).
-    return run_to_table(
-        agg,
-        "append",
-        state_partitions=stream_state_partitions(spark, sf_dir),
-    )
+    return _session_counts(spark, sf_dir, gap_expr)
 
 
 @register(

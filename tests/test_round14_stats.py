@@ -423,11 +423,8 @@ def test_engine_rankstats_facade_parity(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from avro_parquet_spark_example_spark.engine import Engine
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        _dow_spark,
-        _q100,
-    )
-    from avro_parquet_spark_example_spark.sources.catalog import load
+    from avro_parquet_spark_example_spark.operators.rankstats import _dow_spark
+    from avro_parquet_spark_example_spark.sources.catalog import cents, load
 
     eng = Engine(spark=spark, sf_dir=sf_dir)
     e = load(spark, sf_dir, "events")
@@ -439,7 +436,7 @@ def test_engine_rankstats_facade_parity(spark, sf_dir):
         return rows(get_query(name).fn(spark, sf_dir))
 
     base_gv = e.select(
-        "event_type", _dow_spark().alias("g"), _q100().alias("v")
+        "event_type", _dow_spark().alias("g"), cents().alias("v")
     )
     assert rows(eng.jonckheere_terpstra(base_gv)) == want(
         "stat_jonckheere_terpstra"
@@ -447,24 +444,24 @@ def test_engine_rankstats_facade_parity(spark, sf_dir):
     base_xy = e.select(
         "event_type",
         _dow_spark().alias("x"),
-        F.least(F.lit(9), _q100() / F.lit(1000)).cast("bigint").alias("y"),
+        F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint").alias("y"),
     )
     assert rows(eng.gk_gamma_tau(base_xy)) == want("stat_gk_gamma_tau")
     assert rows(
-        eng.mood_median(e.select("event_type", _q100().alias("q")))
+        eng.mood_median(e.select("event_type", cents().alias("q")))
     ) == want("stat_mood_median")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.sum(_q100()).cast("bigint").alias("tq"))
+    ).agg(F.sum(cents()).cast("bigint").alias("tq"))
     assert rows(eng.runs_test(daily)) == want("stat_runs_test")
     base_wk = e.select(
         "event_type",
         F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
-        _q100().alias("v"),
+        cents().alias("v"),
     )
     assert rows(eng.cliff_delta(base_wk)) == want("stat_cliff_delta")
     assert rows(eng.ks_two_sample(base_wk)) == want("stat_ks_two_sample")
-    dec = F.least(F.lit(9), _q100() / F.lit(1000)).cast("bigint")
+    dec = F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint")
     base_rr = e.select(
         "event_type",
         dec.alias("ra"),
@@ -474,7 +471,7 @@ def test_engine_rankstats_facade_parity(spark, sf_dir):
     )
     assert rows(eng.kappa_weighted(base_rr)) == want("eval_kappa_weighted")
     per_user = e.groupBy("event_type", "user_id").agg(
-        F.sum(_q100()).cast("bigint").alias("s")
+        F.sum(cents()).cast("bigint").alias("s")
     )
     assert rows(eng.lorenz_curve(per_user)) == want("agg_lorenz_curve")
     assert rows(eng.brunner_munzel(base_wk)) == want("stat_brunner_munzel")

@@ -102,3 +102,40 @@ def test_streaming_state_store_is_rocksdb(spark):
         "RocksDBStateStoreProvider"
         in spark.conf.get("spark.sql.streaming.stateStore.providerClass")
     )
+
+
+def test_upsert_partition_overwrite_keeps_session_conf(
+    spark, sf_dir, monkeypatch
+):
+    """The dynamic partition overwrite is a per-write option: the query
+    never writes ``partitionOverwriteMode`` into the shared session conf
+    (a concurrent write there would silently turn dynamic too), and its
+    result still matches the DuckDB oracle."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from tools.check_oracle import canon_rows
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    set_keys = []
+    real_set = spark.conf.set
+
+    def recording_set(k, v):
+        set_keys.append(k)
+        return real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", recording_set)
+    df = e.queries()["upsert_partition_overwrite"](spark, sf_dir)
+    got = canon_rows(df.columns, df.collect())
+    assert key not in set_keys
+    assert spark.conf.get(key) == before
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/lineitem.parquet')"
+    )
+    rel = con.sql(e.oracle_sql()["upsert_partition_overwrite"])
+    assert got == canon_rows(rel.columns, rel.fetchall())
+    assert got

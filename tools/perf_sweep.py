@@ -1,4 +1,4 @@
-"""Per-key profile sweep over the ENTIRE registry (PERF_r{N}.json).
+"""Per-key profile sweep over the ENTIRE registry (PERF_sweep.json).
 
 bench.py tracks the headline keys; this harness profiles every registered
 query at $PERF_SF_DIR (default sf0.1) with :meth:`Profiler.profile` and
@@ -26,7 +26,7 @@ record header states the master and parallelism it ran at, and bench.py's
 noise probes at sweep start and end, so a reader can normalize before
 calling a delta a regression. Queries run in sorted order.
 
-Usage: python tools/perf_sweep.py [out.json]
+Usage: python tools/perf_sweep.py [out.json]   # default PERF_sweep.json
 """
 
 from __future__ import annotations
