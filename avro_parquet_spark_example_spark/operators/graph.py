@@ -45,7 +45,7 @@ from avro_parquet_spark_example_spark.operators.capping import (
     oversized_groups,
 )
 from avro_parquet_spark_example_spark.registry import register
-from avro_parquet_spark_example_spark.sources.catalog import load, ts_us
+from avro_parquet_spark_example_spark.sources.catalog import iterate, load, q12, ts_us
 
 #: 5-minute co-occurrence bucket, in epoch microseconds.
 BUCKET_US = 300 * 1_000_000
@@ -95,6 +95,14 @@ def _shared_bucket_pairs(
         (F.col("a.event_type") == F.col("b.event_type"))
         & (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col("a.user_id") < F.col("b.user_id")),
+    )
+
+
+def both_ways(e: DataFrame, *carry: str) -> DataFrame:
+    """(src, dst, *carry) with every oriented (u, v) edge of ``e`` walked in
+    both directions — the symmetrized edge list undirected walks consume."""
+    return e.select(F.col("u").alias("src"), F.col("v").alias("dst"), *carry).unionByName(
+        e.select(F.col("v").alias("src"), F.col("u").alias("dst"), *carry)
     )
 
 
@@ -217,12 +225,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
 
 @register("graph_pagerank")
-def graph_pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    damping: float = 0.85,
-    iters: int = 10,
-) -> DataFrame:
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GR3 — PageRank on the undirected co-occurrence graph (each edge
     walked both ways), the classic corpus-quality prior. Rows-only driver
     check: rank values are float sums whose partition fold order varies
@@ -234,8 +237,7 @@ def graph_pagerank(
     routed along out-edges (shuffle keyed on node), then summed per
     destination with the damping re-injection. Dangling nodes cannot
     occur here (symmetrized edges ⇒ every node has out-degree ≥ 1)."""
-    e = cooccurrence_edges(spark, sf_dir)
-    return pagerank_edges(e, damping=damping, iters=iters)
+    return pagerank_edges(cooccurrence_edges(spark, sf_dir))
 
 
 def pagerank_edges(
@@ -244,31 +246,26 @@ def pagerank_edges(
     """(node, rank) over an oriented (u < v) edge DataFrame — the library
     form the Engine facade exposes; graph_pagerank is its registered
     instance. See that docstring for the iteration/scale analysis."""
-    e = edges
-    # Symmetrize: undirected PageRank walks each edge in both directions.
-    out = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    out = both_ways(edges).localCheckpoint(eager=True)
     nodes = (
         out.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("out_deg"))
         .localCheckpoint(eager=True)
     )
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for _ in range(iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
             ranks.join(nodes, "node")
             .select("node", (F.col("rank") / F.col("out_deg")).alias("share"))
             .join(out, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"), F.col("share"))
         )
-        ranks = (
+        return (
             contribs.groupBy("node")
             .agg((F.lit(1 - damping) + F.lit(damping) * F.sum("share")).alias("rank"))
-            .localCheckpoint(eager=True)
         )
+
+    ranks = iterate(nodes.select("node", F.lit(1.0).alias("rank")), step, iters)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -326,18 +323,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round one shuffle join (labels × symmetrized edges) and
     one two-level aggregation — identical profile to the connected-
-    components propagation in operators/dedup.py; ``localCheckpoint``
-    cuts lineage each round."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    lbl = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    )
-    for _ in range(LPA_ROUNDS):
+    components propagation in operators/dedup.py; ``catalog.iterate``
+    checkpoints each round."""
+    sym = both_ways(cooccurrence_edges(spark, sf_dir)).localCheckpoint(eager=True)
+
+    def step(lbl: DataFrame) -> DataFrame:
         cnt = (
             sym.join(lbl, lbl["node"] == sym["src"])
             .groupBy(F.col("dst").alias("n2"), "lbl")
@@ -346,12 +336,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         best = F.max_by(
             F.col("lbl"), F.struct(F.col("n"), (-F.col("lbl")).alias("neg"))
         )
-        lbl = (
+        return (
             cnt.groupBy(F.col("n2").alias("node"))
             .agg(best.alias("lbl"))
-            .localCheckpoint(eager=True)
         )
-    return lbl.select("node", F.col("lbl").alias("community"))
+
+    lbl = sym.select(F.col("src").alias("node")).distinct().withColumn(
+        "lbl", F.col("node")
+    )
+    return iterate(lbl, step, LPA_ROUNDS).select("node", F.col("lbl").alias("community"))
 
 
 def _bfs_round_sql(prev: str, out: str) -> str:
@@ -384,17 +377,18 @@ def bfs_hops(sym: DataFrame, seeds: DataFrame, hops: int = BFS_HOPS) -> DataFram
     synchronous min-relaxation rounds — shared by the oracle-checked
     ``graph_bfs_hops`` and ``Engine.bfs``. MIN relaxation is
     order-independent, so no tiebreaks are needed anywhere."""
-    dist = seeds.select("node").withColumn("d", F.lit(0))
-    for _ in range(hops):
+
+    def step(dist: DataFrame) -> DataFrame:
         relaxed = sym.join(dist, dist["node"] == sym["src"]).select(
             F.col("dst").alias("node"), (F.col("d") + 1).alias("d")
         )
-        dist = (
+        return (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
         )
+
+    dist = iterate(seeds.select("node").withColumn("d", F.lit(0)), step, hops)
     return dist.select("node", F.col("d").alias("hops"))
 
 
@@ -432,14 +426,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round one shuffle join (frontier × symmetrized edges) and
     one min-combine aggregation whose partials fold map-side; distances
-    are single longs per node. ``localCheckpoint`` cuts the growing
+    are single longs per node. ``catalog.iterate`` cuts the growing
     lineage each round — the Pregel-on-DataFrames shape at any scale."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    sym = both_ways(cooccurrence_edges(spark, sf_dir)).localCheckpoint(eager=True)
     seeds = (
         sym.select(F.col("src").alias("node"))
         .filter(F.col("node") % BFS_SEED_MOD == 0)
@@ -495,9 +484,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = cooccurrence_edges(spark, sf_dir, max_user=TRI_MAX_USER).localCheckpoint(
         eager=True
     )
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    sym = both_ways(e)
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     a, b = sym.alias("a"), sym.alias("b")
     common = (
@@ -581,43 +568,28 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iteration's semantics cross-engine.
 
     Scale profile identical to graph_pagerank: per round one key join +
-    one map-side-combining decimal sum; localCheckpoint cuts lineage."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    one map-side-combining decimal sum; ``catalog.iterate`` cuts lineage."""
+    sym = both_ways(cooccurrence_edges(spark, sf_dir)).localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_deg")
     ).localCheckpoint(eager=True)
-    ranks = deg.select("node", F.lit(1.0).cast("decimal(20,12)").alias("rank"))
-    for _ in range(PR_EXACT_ROUNDS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         shares = (
             ranks.join(deg, "node")
             .select(
                 "node",
-                F.round(
-                    F.col("rank").cast("double") / F.col("out_deg"), 12
-                )
-                .cast("decimal(20,12)")
-                .alias("share"),
+                q12(F.col("rank").cast("double") / F.col("out_deg")).alias("share"),
             )
             .join(sym, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"), "share")
         )
-        ranks = (
-            shares.groupBy("node")
-            .agg(
-                F.round(
-                    F.lit(0.15) + F.lit(0.85) * F.sum("share").cast("double"),
-                    12,
-                )
-                .cast("decimal(20,12)")
-                .alias("rank")
-            )
-            .localCheckpoint(eager=True)
+        return shares.groupBy("node").agg(
+            q12(F.lit(0.15) + F.lit(0.85) * F.sum("share").cast("double")).alias("rank")
         )
+
+    ranks = deg.select("node", F.lit(1.0).cast("decimal(20,12)").alias("rank"))
+    ranks = iterate(ranks, step, PR_EXACT_ROUNDS)
     return ranks.select("node", F.round(F.col("rank").cast("double"), 6).alias("rank"))
 
 
@@ -677,11 +649,11 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented, not hidden).
 
     Scale: per round one degree aggregation (map-side combining) + one
-    semi-join-shaped edge filter; edge set only shrinks. localCheckpoint
-    per round cuts lineage — the same Pregel-on-DataFrames profile as
+    semi-join-shaped edge filter; edge set only shrinks. ``catalog.iterate``
+    cuts lineage per round — the same Pregel-on-DataFrames profile as
     BFS/LPA."""
-    e = cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True)
-    for _ in range(KCORE_ROUNDS):
+
+    def step(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.col("u").alias("node"))
             .unionByName(e.select(F.col("v").alias("node")))
@@ -689,12 +661,14 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= KCORE_K).select("node")
-        e = (
+        return (
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
+
+    e = cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = iterate(e, step, KCORE_ROUNDS)
     return (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -1093,9 +1067,7 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             mx = raw.agg(F.max("s").cast("double").alias("mx"))
             out = raw.crossJoin(F.broadcast(mx)).select(
                 key,
-                F.round(F.col("s").cast("double") / F.col("mx"), 12)
-                .cast("decimal(20,12)")
-                .alias("score"),
+                q12(F.col("s").cast("double") / F.col("mx")).alias("score"),
             )
             if key == "part":
                 a = out
@@ -1295,15 +1267,8 @@ def graph_personalized_pagerank(
     handful of seeds touches a vanishing fraction of the graph).
 
     Scale: per round one frontier join + map-side-combined decimal sum
-    + broadcast seed membership; localCheckpoint cuts lineage."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    + broadcast seed membership; ``catalog.iterate`` cuts lineage."""
+    sym = both_ways(cooccurrence_edges(spark, sf_dir)).localCheckpoint(eager=True)
     deg = (
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("out_deg"))
@@ -1322,23 +1287,20 @@ def graph_personalized_pagerank(
         .cast("decimal(20,12)")
         .alias("rank"),
     )
-    for _ in range(PPR_ROUNDS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         shares = (
             ranks.filter(F.col("rank") != 0)
             .join(deg, "node")
             .select(
                 "node",
-                F.round(
-                    F.col("rank").cast("double") / F.col("out_deg"), 12
-                )
-                .cast("decimal(20,12)")
-                .alias("share"),
+                q12(F.col("rank").cast("double") / F.col("out_deg")).alias("share"),
             )
             .join(sym, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"), "share")
         )
         summed = shares.groupBy("node").agg(F.sum("share").alias("s"))
-        ranks = (
+        return (
             deg.select("node")
             .join(summed, "node", "left")
             .join(
@@ -1348,19 +1310,17 @@ def graph_personalized_pagerank(
             )
             .select(
                 "node",
-                F.round(
+                q12(
                     F.when(is_seed, F.lit(0.15)).otherwise(F.lit(0.0))
                     + F.lit(0.85)
                     * F.coalesce(
                         F.col("s").cast("double"), F.lit(0.0)
-                    ),
-                    12,
-                )
-                .cast("decimal(20,12)")
-                .alias("rank"),
+                    )
+                ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    ranks = iterate(ranks, step, PPR_ROUNDS)
     return ranks.filter(F.col("rank") != 0).select(
         "node", F.round(F.col("rank").cast("double"), 6).alias("rank")
     )

@@ -16,8 +16,9 @@ from avro_parquet_spark_example_spark.operators.capping import (
     admitted_keys,
     group_sizes,
 )
+from avro_parquet_spark_example_spark.operators.graph import both_ways
 from avro_parquet_spark_example_spark.registry import register
-from avro_parquet_spark_example_spark.sources.catalog import load
+from avro_parquet_spark_example_spark.sources.catalog import iterate, load, q12
 
 #: Production default document-frequency cap for posting-list joins: a term
 #: appearing in more than this fraction of the corpus is excluded from the
@@ -1968,48 +1969,32 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    tsym = (
-        tedges.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-        .unionByName(
-            tedges.select(
-                F.col("v").alias("src"), F.col("u").alias("dst"), "w"
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
+    tsym = both_ways(tedges, "w").localCheckpoint(eager=True)
     strength = tsym.groupBy(F.col("src").alias("t")).agg(
         F.sum("w").cast("double").alias("str")
     ).localCheckpoint(eager=True)
-    ranks = strength.select(
-        "t", F.lit(1.0).cast("decimal(20,12)").alias("rank")
-    )
-    for _ in range(TEXTRANK_ROUNDS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         shares = (
             ranks.join(strength, "t")
             .join(tsym, F.col("t") == F.col("src"))
             .select(
                 F.col("dst").alias("t2"),
-                F.round(
-                    F.col("rank").cast("double") * F.col("w") / F.col("str"),
-                    12,
-                )
-                .cast("decimal(20,12)")
-                .alias("share"),
+                q12(
+                    F.col("rank").cast("double") * F.col("w") / F.col("str")
+                ).alias("share"),
             )
         )
-        ranks = (
-            shares.groupBy(F.col("t2").alias("t"))
-            .agg(
-                F.round(
-                    F.lit(0.15)
-                    + F.lit(0.85) * F.sum("share").cast("double"),
-                    12,
-                )
-                .cast("decimal(20,12)")
-                .alias("rank")
-            )
-            .localCheckpoint(eager=True)
+        return shares.groupBy(F.col("t2").alias("t")).agg(
+            q12(
+                F.lit(0.15) + F.lit(0.85) * F.sum("share").cast("double")
+            ).alias("rank")
         )
+
+    ranks = strength.select(
+        "t", F.lit(1.0).cast("decimal(20,12)").alias("rank")
+    )
+    ranks = iterate(ranks, step, TEXTRANK_ROUNDS)
     return (
         ranks.select(
             F.col("t").alias("token"),

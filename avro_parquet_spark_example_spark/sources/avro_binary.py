@@ -496,6 +496,9 @@ def read_header(fo: BinaryIO) -> tuple[str, str, bytes, int]:
             k = read_bytes(fo).decode("utf-8")
             meta[k] = read_bytes(fo)
     sync = _read_exact(fo, SYNC_SIZE)
+    if "avro.schema" not in meta:
+        name = getattr(fo, "name", "<stream>")
+        raise AvroBinaryError(f"{name}: header ending at byte {fo.tell()} has no avro.schema")
     schema_json = meta["avro.schema"].decode("utf-8")
     codec = meta.get("avro.codec", b"null").decode("utf-8")
     return schema_json, codec, sync, fo.tell()
@@ -523,22 +526,15 @@ def _decode_block(
 def read_container(path: str) -> tuple[str, Iterator[Any]]:
     """Whole-file sequential read → (schema_json, record iterator).
 
-    The distributed path is ``read_container_split``; this one backs tests
-    and driver-side fixture verification.
+    One ``read_container_split`` over the whole body; it backs tests and
+    driver-side fixture verification.
     """
-    fo = open(path, "rb")
-    schema_json, codec, sync, _ = read_header(fo)
-    decode = compile_decoder(schema_json)
-    size = os.fstat(fo.fileno()).st_size
-
-    def it() -> Iterator[Any]:
-        try:
-            while fo.tell() < size:
-                yield from _decode_block(fo, codec, sync, decode)
-        finally:
-            fo.close()
-
-    return schema_json, it()
+    with open(path, "rb") as fo:
+        schema_json, codec, sync, body_offset = read_header(fo)
+    size = os.path.getsize(path)
+    return schema_json, read_container_split(
+        path, body_offset - SYNC_SIZE, size, schema_json, codec, sync.hex()
+    )
 
 
 def _seek_to_sync(fo: BinaryIO, start: int, end: int, sync: bytes) -> int:
@@ -586,7 +582,8 @@ def read_container_split(
     each block's preceding sync started before ``split_end``. Every block
     is read by exactly one task, any byte range works, and no coordination
     beyond the header parse is needed — this is what makes a 100 TB
-    container file scan out to one task per ~128 MB split.
+    container file scan out to one task per ~128 MB split. A malformed
+    block raises ``AvroBinaryError`` naming ``path`` and the block's offset.
     """
     sync = bytes.fromhex(sync_hex)
     decode = compile_decoder(schema_json)
@@ -596,11 +593,14 @@ def read_container_split(
         if pos == -1:
             return
         fo.seek(pos)
-        while pos < file_size:
-            yield from _decode_block(fo, codec, sync, decode)
-            pos = fo.tell()
-            # the block we'd read next is preceded by the sync we just
-            # consumed at pos - SYNC_SIZE; past split_end it belongs to
-            # the next task
-            if pos - SYNC_SIZE >= split_end:
-                return
+        try:
+            while pos < file_size:
+                yield from _decode_block(fo, codec, sync, decode)
+                pos = fo.tell()
+                # the block we'd read next is preceded by the sync we just
+                # consumed at pos - SYNC_SIZE; past split_end it belongs to
+                # the next task
+                if pos - SYNC_SIZE >= split_end:
+                    return
+        except AvroBinaryError as exc:
+            raise AvroBinaryError(f"{path}: block at byte {pos}: {exc}") from exc

@@ -31,6 +31,7 @@ import glob
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -171,20 +172,22 @@ def write_distributed(
     same shard (last finished attempt wins atomically; both encode
     identical bytes anyway, since sync markers are seeded by partition
     id). Assumes a rename-atomic filesystem (local/HDFS-style; object
-    stores need a committer, as they do for every Spark file sink)."""
+    stores need a committer, as they do for every Spark file sink).
+    Overwrite is all-or-nothing: shards land in a sibling staging directory
+    that replaces ``out_dir`` only once the job succeeds."""
     schema_json = (
         avro_schema if isinstance(avro_schema, str) else json.dumps(avro_schema)
     )
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
+    stem, tag = os.path.normpath(out_dir), uuid.uuid4().hex
+    staging, old = f"{stem}.staging-{tag}", f"{stem}.old-{tag}"
+    os.makedirs(staging)
 
     def write_part(rows) -> None:
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         pid = ctx.partitionId()
-        part_path = os.path.join(out_dir, f"part-{pid:05d}.avro")
+        part_path = os.path.join(staging, f"part-{pid:05d}.avro")
         tmp_path = f"{part_path}.attempt-{ctx.taskAttemptId()}.tmp"
         avro_binary.write_container(
             tmp_path,
@@ -198,7 +201,15 @@ def write_distributed(
         # empty shards are still valid container files (header only);
         # leaving them exercises the reader's zero-block path
 
-    df.foreachPartition(write_part)
+    try:
+        df.foreachPartition(write_part)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.isdir(out_dir):
+        os.rename(out_dir, old)
+    os.rename(staging, out_dir)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 #: Avro twin of the supplier columns used by the round-trip queries

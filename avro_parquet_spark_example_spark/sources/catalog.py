@@ -176,6 +176,20 @@ def cents():
     return F.floor(F.col("value") * 100.0 + 0.5).cast("bigint")
 
 
+def q12(c):
+    """``c`` quantized to 12 decimals as DECIMAL(20,12): sums of it are exact
+    and order-independent (the dsum rule inside an iterative score)."""
+    return F.round(c, 12).cast("decimal(20,12)")
+
+
+def iterate(state: DataFrame, step, rounds: int) -> DataFrame:
+    """``rounds`` fixed rounds of ``state = step(state)``, each round's state
+    eagerly local-checkpointed so lineage never grows past one round."""
+    for _ in range(rounds):
+        state = step(state).localCheckpoint(eager=True)
+    return state
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (the modern ``registerTempTable``)."""
     for name in TABLES:

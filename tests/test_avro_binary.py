@@ -14,6 +14,7 @@ import os
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.sources import avro_binary as ab
 
@@ -129,6 +130,53 @@ def test_sync_mismatch_detected(tmp_path):
     _, it = ab.read_container(path)
     with pytest.raises(ab.AvroBinaryError):
         list(it)
+
+
+def _one_block_container(path: str) -> int:
+    """Write ROWS[:50] as a single-block container; return the block's byte
+    offset (the end of the header)."""
+    ab.write_container(path, FULL_SCHEMA, ROWS[:50], block_records=100)
+    with open(path, "rb") as fo:
+        return ab.read_header(fo)[3]
+
+
+def test_missing_schema_names_file_and_offset(tmp_path):
+    path = str(tmp_path / "noschema.avro")
+    buf = io.BytesIO()
+    buf.write(ab.MAGIC)
+    ab.write_long(buf, 1)
+    ab.write_bytes(buf, b"avro.codec")
+    ab.write_bytes(buf, b"null")
+    ab.write_long(buf, 0)
+    buf.write(b"\x01" * ab.SYNC_SIZE)
+    open(path, "wb").write(buf.getvalue())
+    with pytest.raises(ab.AvroBinaryError) as err:
+        ab.read_container(path)
+    assert path in str(err.value)
+    assert f"byte {len(buf.getvalue())}" in str(err.value)
+
+
+def test_truncated_block_names_file_and_offset(tmp_path):
+    path = str(tmp_path / "truncated.avro")
+    block_at = _one_block_container(path)
+    data = open(path, "rb").read()
+    open(path, "wb").write(data[: len(data) - ab.SYNC_SIZE - 5])
+    _, it = ab.read_container(path)
+    with pytest.raises(ab.AvroBinaryError, match="unexpected EOF") as err:
+        list(it)
+    assert f"{path}: block at byte {block_at}:" in str(err.value)
+
+
+def test_flipped_sync_byte_names_file_and_offset(tmp_path):
+    path = str(tmp_path / "flipped.avro")
+    block_at = _one_block_container(path)
+    data = bytearray(open(path, "rb").read())
+    data[-ab.SYNC_SIZE] ^= 0x01  # first byte of the block's trailing sync
+    open(path, "wb").write(bytes(data))
+    _, it = ab.read_container(path)
+    with pytest.raises(ab.AvroBinaryError, match="sync marker mismatch") as err:
+        list(it)
+    assert f"{path}: block at byte {block_at}:" in str(err.value)
 
 
 @pytest.mark.parametrize("split_bytes", [64, 257, 1000, 4096, 10**9])
@@ -329,3 +377,35 @@ def test_write_distributed_leaves_no_tmp_files(spark, sf_dir, tmp_path):
         len(list(ab.read_container(os.path.join(out, n))[1])) for n in names
     )
     assert total == src.count()
+
+
+def test_write_distributed_failed_overwrite_keeps_previous_output(
+    spark, sf_dir, tmp_path
+):
+    """A job that fails mid-overwrite leaves the previous shards readable and
+    unchanged, and no staging or old directory behind."""
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        SUPPLIER_AVRO_SCHEMA,
+        write_distributed,
+    )
+    from avro_parquet_spark_example_spark.sources.catalog import load
+
+    src = load(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
+    )
+    out = str(tmp_path / "overwrite.avro.d")
+    write_distributed(src.repartition(2), out, SUPPLIER_AVRO_SCHEMA)
+
+    def snapshot() -> dict[str, bytes]:
+        return {n: open(os.path.join(out, n), "rb").read() for n in os.listdir(out)}
+
+    before = snapshot()
+    bad = src.select(
+        F.col("s_name").alias("s_suppkey"), "s_name", "s_nationkey", "s_acctbal"
+    )
+    with pytest.raises(Exception):
+        write_distributed(bad, out, SUPPLIER_AVRO_SCHEMA)
+    assert snapshot() == before
+    assert os.listdir(tmp_path) == ["overwrite.avro.d"]
+    back = [r for n in before for r in ab.read_container(os.path.join(out, n))[1]]
+    assert sorted(back) == sorted(map(tuple, src.collect()))

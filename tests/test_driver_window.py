@@ -3,7 +3,7 @@
 The round driver hash-checks only the FIRST 50 registry keys
 alphabetically; this repo additionally sweeps the first 100 (the drift
 buffer) with ``tools/run_driver_sim.py`` and commits the swept key list
-in ``DRIVER_WINDOW_r{N}.md``. The adopted rule — any new registration
+in ``DRIVER_WINDOW.md``. The adopted rule — any new registration
 sorting at position ≤ 100 re-runs the sweep before the round ends — was
 honored by discipline alone in r7/r9 and silently skipped in r8; this
 test encodes it: it goes red the moment a registration shifts the
@@ -21,10 +21,7 @@ REPO = Path(__file__).resolve().parent.parent
 WINDOW = 100
 
 
-def _latest_window_record() -> Path:
-    records = sorted(REPO.glob("DRIVER_WINDOW_r*.md"))
-    assert records, "no committed DRIVER_WINDOW_r*.md record found"
-    return records[-1]
+RECORD = REPO / "DRIVER_WINDOW.md"
 
 
 def _recorded_keys(path: Path) -> list[str]:
@@ -48,18 +45,17 @@ def _recorded_keys(path: Path) -> list[str]:
 def test_driver_window_record_matches_registry():
     from avro_parquet_spark_example_spark.registry import all_queries
 
-    record = _latest_window_record()
-    recorded = _recorded_keys(record)
+    recorded = _recorded_keys(RECORD)
     assert len(recorded) == WINDOW, (
-        f"{record.name} lists {len(recorded)} keys, expected {WINDOW}"
+        f"{RECORD.name} lists {len(recorded)} keys, expected {WINDOW}"
     )
     current = sorted(all_queries())[:WINDOW]
     if recorded != current:
         added = sorted(set(current) - set(recorded))
         dropped = sorted(set(recorded) - set(current))
         pytest.fail(
-            f"driver check window has shifted since {record.name} "
+            f"driver check window has shifted since {RECORD.name} "
             f"(entered: {added}; left: {dropped}) — re-run "
             "`python tools/run_driver_sim.py --repeat 5 --window 100` "
-            "and commit a fresh DRIVER_WINDOW record before the round ends"
+            "and refresh DRIVER_WINDOW.md before the round ends"
         )

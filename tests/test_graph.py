@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import get_query
 
+from avro_parquet_spark_example_spark.operators import graph, text_analysis
 from avro_parquet_spark_example_spark.operators.graph import (
     cooccurrence_edges,
     graph_pagerank,
@@ -213,3 +214,92 @@ def test_modularity_terms_reconstruct_and_bound(spark, sf_dir):
         assert abs(r.modularity_term - round(term, 9)) < 1e-9
         total += r.modularity_term
     assert -0.5 <= total <= 1.0
+
+
+# ---------------------------------------------------------------------------
+# Build-time Spark jobs per round of each fixed-round loop (catalog.iterate)
+
+
+def _pagerank_edges(spark, sf_dir, monkeypatch, rounds):
+    return graph.pagerank_edges(cooccurrence_edges(spark, sf_dir), iters=rounds)
+
+
+def _bfs_hops(spark, sf_dir, monkeypatch, rounds):
+    # bfs_hops binds BFS_HOPS as its default when defined: patch the default
+    monkeypatch.setattr(graph.bfs_hops, "__defaults__", (rounds,))
+    return graph.graph_bfs_hops(spark, sf_dir)
+
+
+def _via_constant(module, name, fn):
+    def build(spark, sf_dir, monkeypatch, rounds):
+        monkeypatch.setattr(module, name, rounds)
+        return fn(spark, sf_dir)
+
+    return build
+
+
+@pytest.mark.parametrize(
+    "build, rounds, per_round",
+    [
+        pytest.param(_pagerank_edges, 2, {7}, id="pagerank_edges"),
+        pytest.param(_bfs_hops, 2, {5}, id="bfs_hops"),
+        # label propagation's job count is not repeat-stable (5 to 7 jobs
+        # per round across identical sf0.01 builds): pin the observed range
+        pytest.param(
+            _via_constant(graph, "LPA_ROUNDS", graph.graph_label_propagation),
+            2,
+            {5, 6, 7},
+            id="label_propagation",
+        ),
+        pytest.param(
+            _via_constant(graph, "PR_EXACT_ROUNDS", graph.graph_pagerank_exact),
+            2,
+            {7},
+            id="pagerank_exact",
+        ),
+        # from round 3 on the peel has emptied the sf0.001 edge set, and an
+        # empty round runs no job: measure round 2
+        pytest.param(
+            _via_constant(graph, "KCORE_ROUNDS", graph.graph_kcore_peel),
+            1,
+            {2},
+            id="kcore_peel",
+        ),
+        # 9, 10 and 11 jobs per round were all observed across 6 builds
+        pytest.param(
+            _via_constant(
+                graph, "PPR_ROUNDS", graph.graph_personalized_pagerank
+            ),
+            2,
+            {9, 10, 11},
+            id="personalized_pagerank",
+        ),
+        pytest.param(
+            _via_constant(
+                text_analysis, "TEXTRANK_ROUNDS", text_analysis.text_textrank_keywords
+            ),
+            2,
+            {7},
+            id="textrank",
+        ),
+    ],
+)
+def test_jobs_per_round(spark, sf_dir, monkeypatch, build, rounds, per_round):
+    """Each extra round of a fixed-round loop adds a pinned number of Spark
+    jobs while the plan builds: the round's query stages under AQE plus its
+    eager checkpoint. Counted as the job-id delta in Spark's status store
+    between a build at ``rounds`` and one at ``rounds + 1``, after a
+    warm-up build; a change in per-round materialization fails here."""
+    from perfbench.tracing import StatusStore
+
+    # a cached plan fragment (the module's ``edges`` fixture) would be read
+    # from memory instead of rebuilt, changing the count being pinned
+    spark.catalog.clearCache()
+    status = StatusStore(spark)
+    build(spark, sf_dir, monkeypatch, rounds)
+    jobs = []
+    for r in (rounds, rounds + 1):
+        status.new_jobs()
+        build(spark, sf_dir, monkeypatch, r)
+        jobs.append(len(status.new_jobs()))
+    assert jobs[1] - jobs[0] in per_round, jobs

@@ -4,7 +4,7 @@ Round 10 ended with pytest RED at HEAD because the final registration
 (``vec_top2_pcs``, 0cfb9c7) landed AFTER the round's gate record and
 suite run. ``tests/test_driver_window.py`` guards the first-100 window;
 this test extends the same committed-record pattern to the FULL
-registry: the latest ``CORRECTNESS_LOCAL_r*.md`` must list exactly the
+registry: ``CORRECTNESS_LOCAL.md`` must list exactly the
 keys the live registry exposes, at both recorded scale factors. A
 registration landing after the round's gate record is now a red test,
 not a discipline item — regenerate the record (``python
@@ -24,10 +24,7 @@ REPO = Path(__file__).resolve().parent.parent
 LINE = re.compile(r"^(PASS|rows-only|FAIL)\s+([a-z0-9_]+):")
 
 
-def _latest_local_record() -> Path:
-    records = sorted(REPO.glob("CORRECTNESS_LOCAL_r*.md"))
-    assert records, "no committed CORRECTNESS_LOCAL_r*.md record found"
-    return records[-1]
+RECORD = REPO / "CORRECTNESS_LOCAL.md"
 
 
 def _recorded_sections(path: Path) -> dict[str, set[str]]:
@@ -48,11 +45,10 @@ def _recorded_sections(path: Path) -> dict[str, set[str]]:
 def test_local_gate_record_matches_live_registry():
     from avro_parquet_spark_example_spark.registry import all_queries
 
-    record = _latest_local_record()
     live = set(all_queries())
-    sections = _recorded_sections(record)
+    sections = _recorded_sections(RECORD)
     assert len(sections) >= 2, (
-        f"{record.name}: expected gate listings for at least two scale "
+        f"{RECORD.name}: expected gate listings for at least two scale "
         f"factors (sf0.01 and sf0.1), found sections: {list(sections)}"
     )
     for header, recorded in sections.items():
@@ -60,7 +56,7 @@ def test_local_gate_record_matches_live_registry():
         dropped = sorted(recorded - live)
         if added or dropped:
             pytest.fail(
-                f"{record.name} section {header!r} is stale vs the live "
+                f"{RECORD.name} section {header!r} is stale vs the live "
                 f"registry ({len(recorded)} recorded vs {len(live)} live). "
                 f"Registered-after-record: {added}; no-longer-registered: "
                 f"{dropped}. Regenerate the full local gate record "
@@ -69,13 +65,12 @@ def test_local_gate_record_matches_live_registry():
 
 
 def test_local_gate_record_has_no_fail_lines():
-    record = _latest_local_record()
     fails = [
         m.group(2)
-        for ln in record.read_text().splitlines()
+        for ln in RECORD.read_text().splitlines()
         if (m := LINE.match(ln)) and m.group(1) == "FAIL"
     ]
     assert not fails, (
-        f"{record.name} records FAIL lines — the committed round record "
+        f"{RECORD.name} records FAIL lines — the committed round record "
         f"must be green: {fails}"
     )

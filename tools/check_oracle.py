@@ -75,21 +75,19 @@ def canon_rows(cols, rows):
 
 
 def _prev_listing_timings() -> tuple[str, dict[str, float]]:
-    """Per-query seconds from the latest committed CORRECTNESS_LOCAL
+    """Per-query seconds from the committed CORRECTNESS_LOCAL.md
     record's section for THIS scale factor — the only like-for-like
     elevation comparator (same fresh-plan gate protocol, same SF; the
     PERF sweep is plan-cached/warm, so fresh iterative queries are
     structurally >2x it and it cannot distinguish busy-machine from real
     cost). Sums the per-engine split when present (r11+ listings) and
     accepts the single combined number of older listings."""
-    import glob
     import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    records = sorted(glob.glob(os.path.join(root, "CORRECTNESS_LOCAL_r*.md")))
-    if not records:
+    path = os.path.join(root, "CORRECTNESS_LOCAL.md")
+    if not os.path.exists(path):
         return "", {}
-    path = records[-1]
     sf_tag = os.path.basename(SF_DIR.rstrip("/"))  # e.g. sf0.01
     timings: dict[str, float] = {}
     in_section = False
