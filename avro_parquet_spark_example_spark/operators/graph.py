@@ -325,7 +325,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one two-level aggregation — identical profile to the connected-
     components propagation in operators/dedup.py; ``catalog.iterate``
     checkpoints each round."""
-    sym = both_ways(cooccurrence_edges(spark, sf_dir)).localCheckpoint(eager=True)
+    return _label_propagation(cooccurrence_edges(spark, sf_dir))
+
+
+def _label_propagation(e: DataFrame) -> DataFrame:
+    """(node, community) after LPA_ROUNDS synchronous rounds over the
+    oriented edge list ``e`` — ``graph_label_propagation``'s body, shared
+    with ``graph_modularity`` so it reuses its own edge list."""
+    sym = both_ways(e).localCheckpoint(eager=True)
 
     def step(lbl: DataFrame) -> DataFrame:
         cnt = (
@@ -1143,9 +1150,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-shuffled; degree/count aggregates are map-side combined; the
     1-row edge total broadcasts. 100 TB-safe."""
     e = cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True)
-    comm = graph_label_propagation(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
+    comm = _label_propagation(e)
     m_row = F.broadcast(e.agg(F.count(F.lit(1)).alias("m")))
     ca = comm.select(F.col("node").alias("u"), F.col("community"))
     cb = comm.select(

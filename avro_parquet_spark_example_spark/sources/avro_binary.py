@@ -456,7 +456,8 @@ def write_container(
                 # Raw RFC 1951 deflate per the Avro spec: no zlib header, no
                 # Adler-32 trailer. compressobj(wbits=-15) emits exactly that
                 # (slicing zlib.compress output would leave trailer bytes).
-                c = zlib.compressobj(9, zlib.DEFLATED, -15)
+                # Default level (6), as Avro Java and spark.sql.avro.deflate.level.
+                c = zlib.compressobj(zlib.Z_DEFAULT_COMPRESSION, zlib.DEFLATED, -15)
                 data = c.compress(data) + c.flush()
             write_long(fo, count)
             write_long(fo, len(data))
@@ -511,7 +512,10 @@ def _decode_block(
     size = read_long(fo)
     data = _read_exact(fo, size)
     if codec == "deflate":
-        data = zlib.decompress(data, -15)
+        try:
+            data = zlib.decompress(data, -15)
+        except zlib.error as exc:
+            raise AvroBinaryError(f"deflate: {exc}") from exc
     elif codec != "null":
         raise AvroBinaryError(f"unsupported codec {codec!r}")
     bo = io.BytesIO(data)

@@ -15,10 +15,13 @@ it a real Spark source and sink:
   sync marker — so a 100 TB directory of .avro files fans out to one task
   per ~128 MB split with zero coordination beyond the driver-side header
   parse, exactly like Hadoop's AvroInputFormat.
-- **Write**: ``write_distributed`` runs one encoder per partition inside
+- **Write**: ``write_distributed`` first spreads a narrow input (a
+  one-split catalog scan) to ``defaultParallelism`` partitions
+  (``catalog.spread``), then runs one encoder per partition inside
   ``foreachPartition`` (executor-side; the driver never sees a row) and
   emits ``part-NNNNN.avro`` shards, the same layout every Spark file sink
-  uses.
+  uses. Shards = parallelism, so the read fans out to one task per shard
+  even at the default split size.
 
 The registered queries round-trip a real table through both halves and are
 oracle-checked against the ORIGINAL parquet, so the gate proves
@@ -39,6 +42,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from avro_parquet_spark_example_spark.registry import register
 from avro_parquet_spark_example_spark.sources import avro_binary
 from avro_parquet_spark_example_spark.sources.avro_schema import parse_avro_schema
+from avro_parquet_spark_example_spark.sources.catalog import spread
 
 #: Default split size for the read planner. Production-sized; the registered
 #: queries shrink it via option to force many splits even on KB-scale
@@ -90,6 +94,10 @@ class AvroContainerReader(DataSourceReader):
         for path in _list_avro_files(self.path):
             with open(path, "rb") as fo:
                 schema_json, codec, sync, body_offset = avro_binary.read_header(fo)
+            if codec not in ("null", "deflate"):
+                raise avro_binary.AvroBinaryError(
+                    f"{path}: unsupported avro.codec {codec!r}"
+                )
             # Each split decodes with its own file's embedded schema while
             # DataSource.schema() announced the FIRST file's — a mixed
             # directory would silently emit rows that don't conform. Refuse
@@ -161,9 +169,14 @@ def write_distributed(
     """Executor-side sharded container write: each partition encodes its own
     rows into ``part-NNNNN.avro`` (deterministic name from the partition id)
     inside ``foreachPartition`` — rows never cross to the driver, so the
-    write scales exactly like Spark's built-in file sinks: one shard per
-    task, no shuffle, no coordination. Shard sync markers are seeded by
-    partition id, keeping output bytes deterministic run-to-run.
+    write scales like Spark's built-in file sinks: one shard per task, no
+    coordination. An input narrower than ``defaultParallelism`` (a catalog
+    Parquet scan arrives as one split) is first round-robin spread to that
+    width (``catalog.spread``), so every core encodes and the read of the
+    result runs one task per shard; a wide input is written as it is,
+    without a shuffle. Shard sync markers are seeded by partition id and
+    the round-robin is deterministic, keeping output bytes deterministic
+    run-to-run.
 
     Task-retry safety: each attempt writes to an attempt-unique temp name
     and ``os.replace``s it into the final ``part-NNNNN.avro`` — the same
@@ -202,7 +215,7 @@ def write_distributed(
         # leaving them exercises the reader's zero-block path
 
     try:
-        df.foreachPartition(write_part)
+        spread(df).foreachPartition(write_part)
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
@@ -235,15 +248,16 @@ def _roundtrip(spark: SparkSession, sf_dir: str, codec: str, tag: str) -> DataFr
     ensure_registered(spark)
     src = _load_supplier(spark, sf_dir)
     out_dir = _scratch(f"supplier_{tag}.avro.d", sf_dir)
-    # Tiny blocks + 8 KiB splits so even the sf0.01 fixture (100 rows) spans
-    # multiple blocks and every split-alignment branch runs under the gate.
+    # Tiny blocks + 256 B splits so that, at 4 shards, every shard of both
+    # fixtures (~0.7-1 KB at sf0.01, ~4.5-8 KB at sf0.1) spans several
+    # splits and every split-alignment branch runs under the gate.
     write_distributed(
         src, out_dir, SUPPLIER_AVRO_SCHEMA, codec=codec, block_records=16
     )
     return (
         spark.read.format("avrofile")
         .option("path", out_dir)
-        .option("split_bytes", 8 * 1024)
+        .option("split_bytes", 256)
         .load()
     )
 
@@ -261,7 +275,7 @@ def avro_container_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4b — full Avro object-container round trip, distributed both ways:
     supplier rows are encoded shard-per-partition into ``part-*.avro``
     (``write_distributed``), then read back through the splittable
-    ``avrofile`` data source with 8 KiB splits (many splits per shard).
+    ``avrofile`` data source with 256 B splits (many splits per shard).
     Oracle-equality with the ORIGINAL parquet table proves the pure-Python
     binary codec, the block/sync container layout, and the Hadoop-style
     split-ownership rule preserve every value. This is the reference's own

@@ -179,6 +179,52 @@ def test_flipped_sync_byte_names_file_and_offset(tmp_path):
     assert f"{path}: block at byte {block_at}:" in str(err.value)
 
 
+def _recodec(path: str, codec: str) -> int:
+    """Rewrite the container at ``path`` with its header's ``avro.codec``
+    set to ``codec`` and the blocks left as written; return the first
+    block's new byte offset."""
+    data = open(path, "rb").read()
+    with open(path, "rb") as fo:
+        schema_json, _, sync, body_offset = ab.read_header(fo)
+    buf = io.BytesIO()
+    buf.write(ab.MAGIC)
+    ab.write_long(buf, 2)
+    ab.write_bytes(buf, b"avro.schema")
+    ab.write_bytes(buf, schema_json.encode())
+    ab.write_bytes(buf, b"avro.codec")
+    ab.write_bytes(buf, codec.encode())
+    ab.write_long(buf, 0)
+    buf.write(sync)
+    block_at = buf.tell()
+    open(path, "wb").write(buf.getvalue() + data[body_offset:])
+    return block_at
+
+
+def test_codec_mismatch_names_file_and_offset(tmp_path):
+    """Null-coded blocks under a header that says deflate fail with the
+    file and block offset, not a bare zlib error."""
+    path = str(tmp_path / "mislabelled.avro")
+    _one_block_container(path)
+    block_at = _recodec(path, "deflate")
+    _, it = ab.read_container(path)
+    with pytest.raises(ab.AvroBinaryError, match="deflate") as err:
+        list(it)
+    assert f"{path}: block at byte {block_at}:" in str(err.value)
+
+
+def test_unsupported_codec_rejected_at_plan_time(tmp_path):
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        AvroContainerReader,
+    )
+
+    path = str(tmp_path / "snappy.avro")
+    _one_block_container(path)
+    _recodec(path, "snappy")
+    with pytest.raises(ab.AvroBinaryError, match="snappy") as err:
+        AvroContainerReader({"path": str(tmp_path)}).partitions()
+    assert path in str(err.value)
+
+
 @pytest.mark.parametrize("split_bytes", [64, 257, 1000, 4096, 10**9])
 @pytest.mark.parametrize("codec", ["null", "deflate"])
 def test_split_coverage_exact_once(tmp_path, split_bytes, codec):
@@ -210,21 +256,22 @@ def test_datasource_exact_once_at_many_splits(spark, sf_dir, tmp_path):
         SUPPLIER_AVRO_SCHEMA,
         AvroContainerReader,
         ensure_registered,
-        write_distributed,
     )
     from avro_parquet_spark_example_spark.sources.catalog import load
 
     src = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    out = str(tmp_path / "supplier_many_splits.avro.d")
-    # one shard so all splits hit one file; tiny blocks so splits land
+    out = tmp_path / "supplier_many_splits.avro.d"
+    out.mkdir()
+    shard = str(out / "part-00000.avro")
+    out = str(out)
+    # one container so all splits hit one file; tiny blocks so splits land
     # mid-file rather than all past EOF
-    write_distributed(
-        src.coalesce(1), out, SUPPLIER_AVRO_SCHEMA, block_records=4
+    ab.write_container(
+        shard, SUPPLIER_AVRO_SCHEMA, map(tuple, src.collect()), block_records=4
     )
-    [shard] = [f for f in os.listdir(out) if f.endswith(".avro")]
-    size = os.path.getsize(os.path.join(out, shard))
+    size = os.path.getsize(shard)
     # the first split starts after the header, so budget ~20 splits of the
     # full file size to guarantee >=8 land inside the body
     split_bytes = max(size // 20, 1)
@@ -409,3 +456,33 @@ def test_write_distributed_failed_overwrite_keeps_previous_output(
     assert os.listdir(tmp_path) == ["overwrite.avro.d"]
     back = [r for n in before for r in ab.read_container(os.path.join(out, n))[1]]
     assert sorted(back) == sorted(map(tuple, src.collect()))
+
+
+def test_write_distributed_spreads_narrow_input(spark, sf_dir, tmp_path):
+    """A one-split catalog scan is written as defaultParallelism non-empty
+    shards, and the default-split read plans one task per shard."""
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        SUPPLIER_AVRO_SCHEMA,
+        AvroContainerReader,
+        ensure_registered,
+        write_distributed,
+    )
+    from avro_parquet_spark_example_spark.sources.catalog import load
+
+    src = load(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
+    )
+    assert src.rdd.getNumPartitions() == 1
+    width = spark.sparkContext.defaultParallelism
+    out = str(tmp_path / "spread.avro.d")
+    write_distributed(src, out, SUPPLIER_AVRO_SCHEMA)
+    shards = [os.path.join(out, n) for n in sorted(os.listdir(out))]
+    assert len(shards) == width
+    assert all(
+        os.path.basename(p).startswith("part-") and next(ab.read_container(p)[1], None)
+        for p in shards
+    )
+    assert len(AvroContainerReader({"path": out}).partitions()) == width
+    ensure_registered(spark)
+    back = spark.read.format("avrofile").option("path", out).load()
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
