@@ -10,18 +10,21 @@ it a real Spark source and sink:
 
 - **Read**: a Python Data Source (``spark.read.format("avrofile")``) that
   plans one InputPartition per byte split per file and decodes only the
-  blocks owned by each split (``read_container_split``). The container
-  format is splittable by design — every block ends with the file's 16-byte
-  sync marker — so a 100 TB directory of .avro files fans out to one task
-  per ~128 MB split with zero coordination beyond the driver-side header
-  parse, exactly like Hadoop's AvroInputFormat.
+  blocks owned by each split into Arrow record batches
+  (``read_container_batches``), which PySpark passes to the JVM as they
+  are. The container format is splittable by design — every block ends
+  with the file's 16-byte sync marker — so a 100 TB directory of .avro
+  files fans out to one task per ~128 MB split with zero coordination
+  beyond the driver-side header parse, exactly like Hadoop's
+  AvroInputFormat.
 - **Write**: ``write_distributed`` first spreads a narrow input (a
   one-split catalog scan) to ``defaultParallelism`` partitions
-  (``catalog.spread``), then runs one encoder per partition inside
-  ``foreachPartition`` (executor-side; the driver never sees a row) and
-  emits ``part-NNNNN.avro`` shards, the same layout every Spark file sink
-  uses. Shards = parallelism, so the read fans out to one task per shard
-  even at the default split size.
+  (``catalog.spread``), then encodes each partition's Arrow batches inside
+  ``mapInArrow`` (executor-side; the driver never sees a row, and no row
+  becomes a Python object) and emits ``part-NNNNN.avro`` shards
+  (``write_shard``), the same layout every Spark file sink uses. Shards =
+  parallelism, so the read fans out to one task per shard even at the
+  default split size.
 
 The registered queries round-trip a real table through both halves and are
 oracle-checked against the ORIGINAL parquet, so the gate proves
@@ -30,6 +33,7 @@ encode → container layout → split planning → decode preserves every value.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -38,6 +42,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from avro_parquet_spark_example_spark.registry import register
 from avro_parquet_spark_example_spark.sources import avro_binary
@@ -123,13 +128,17 @@ class AvroContainerReader(DataSourceReader):
         return splits
 
     def read(self, partition: _AvroSplit):
-        yield from avro_binary.read_container_split(
+        """Arrow record batches, one per owned block, in the Arrow form of
+        the source's Spark schema; PySpark hands them to the JVM as they
+        are, with no per-row conversion on either side."""
+        yield from avro_binary.read_container_batches(
             partition.path,
             partition.start,
             partition.end,
             partition.schema_json,
             partition.codec,
             partition.sync_hex,
+            to_arrow_schema(parse_avro_schema(partition.schema_json)),
         )
 
 
@@ -159,6 +168,42 @@ def ensure_registered(spark: SparkSession) -> None:
         spark._avrofile_registered = True
 
 
+def write_shard(
+    batches,
+    staging: str,
+    pid: int,
+    attempt: int,
+    schema_json: str,
+    codec: str,
+    block_records: int,
+) -> None:
+    """Encode one partition's Arrow batches into ``staging/part-NNNNN.avro``.
+
+    The shard is written under an attempt-unique temp name and
+    ``os.replace``d into place — the rename-commit Spark's file sinks use,
+    so a retried or speculative attempt can never interleave bytes with
+    another attempt on the same shard. An attempt that fails removes its
+    temp file, so a job that succeeds on retry leaves only shards behind.
+    The sync marker is seeded by partition id, so every attempt writes the
+    same bytes."""
+    part_path = os.path.join(staging, f"part-{pid:05d}.avro")
+    tmp_path = f"{part_path}.attempt-{attempt}.tmp"
+    try:
+        avro_binary.write_container_batches(
+            tmp_path,
+            schema_json,
+            batches,
+            codec=codec,
+            block_records=block_records,
+            sync_seed=pid + 1,
+        )
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp_path)
+        raise
+    os.replace(tmp_path, part_path)
+
+
 def write_distributed(
     df: DataFrame,
     out_dir: str,
@@ -166,28 +211,25 @@ def write_distributed(
     codec: str = "null",
     block_records: int = 1000,
 ) -> None:
-    """Executor-side sharded container write: each partition encodes its own
-    rows into ``part-NNNNN.avro`` (deterministic name from the partition id)
-    inside ``foreachPartition`` — rows never cross to the driver, so the
-    write scales like Spark's built-in file sinks: one shard per task, no
-    coordination. An input narrower than ``defaultParallelism`` (a catalog
-    Parquet scan arrives as one split) is first round-robin spread to that
-    width (``catalog.spread``), so every core encodes and the read of the
-    result runs one task per shard; a wide input is written as it is,
-    without a shuffle. Shard sync markers are seeded by partition id and
-    the round-robin is deterministic, keeping output bytes deterministic
-    run-to-run.
+    """Executor-side sharded container write: each partition's Arrow batches
+    are encoded into ``part-NNNNN.avro`` (deterministic name from the
+    partition id) inside ``mapInArrow`` — rows never cross to the driver
+    and never become Python objects, so the write scales like Spark's
+    built-in file sinks: one shard per task, no coordination. Columns map
+    to the Avro record's fields by position. An input narrower than
+    ``defaultParallelism`` (a catalog Parquet scan arrives as one split)
+    is first round-robin spread to that width (``catalog.spread``), so
+    every core encodes and the read of the result runs one task per shard;
+    a wide input is written as it is, without a shuffle. Shard sync markers
+    are seeded by partition id and the round-robin is deterministic,
+    keeping output bytes deterministic run-to-run. An empty partition
+    still writes a header-only shard.
 
-    Task-retry safety: each attempt writes to an attempt-unique temp name
-    and ``os.replace``s it into the final ``part-NNNNN.avro`` — the same
-    rename-commit Spark's file sinks use, so a retried or speculative
-    attempt can never interleave bytes with a concurrent attempt on the
-    same shard (last finished attempt wins atomically; both encode
-    identical bytes anyway, since sync markers are seeded by partition
-    id). Assumes a rename-atomic filesystem (local/HDFS-style; object
-    stores need a committer, as they do for every Spark file sink).
-    Overwrite is all-or-nothing: shards land in a sibling staging directory
-    that replaces ``out_dir`` only once the job succeeds."""
+    Each shard commits by rename (``write_shard``). Assumes a rename-atomic
+    filesystem (local/HDFS-style; object stores need a committer, as they
+    do for every Spark file sink). Overwrite is all-or-nothing: shards land
+    in a sibling staging directory that replaces ``out_dir`` only once the
+    job succeeds."""
     schema_json = (
         avro_schema if isinstance(avro_schema, str) else json.dumps(avro_schema)
     )
@@ -195,27 +237,24 @@ def write_distributed(
     staging, old = f"{stem}.staging-{tag}", f"{stem}.old-{tag}"
     os.makedirs(staging)
 
-    def write_part(rows) -> None:
+    def write_part(batches):
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        part_path = os.path.join(staging, f"part-{pid:05d}.avro")
-        tmp_path = f"{part_path}.attempt-{ctx.taskAttemptId()}.tmp"
-        avro_binary.write_container(
-            tmp_path,
+        write_shard(
+            batches,
+            staging,
+            ctx.partitionId(),
+            ctx.taskAttemptId(),
             schema_json,
-            (tuple(r) for r in rows),
-            codec=codec,
-            block_records=block_records,
-            sync_seed=pid + 1,
+            codec,
+            block_records,
         )
-        os.replace(tmp_path, part_path)
-        # empty shards are still valid container files (header only);
-        # leaving them exercises the reader's zero-block path
+        return iter(())
 
     try:
-        spread(df).foreachPartition(write_part)
+        # the tasks return no rows: collect() only runs them
+        spread(df).mapInArrow(write_part, "part int").collect()
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise

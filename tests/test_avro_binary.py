@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import datetime
 import io
+import json
 import os
+import struct
 from decimal import Decimal
 
 import pytest
@@ -74,6 +76,46 @@ def _mk_row(i: int) -> tuple:
 
 
 ROWS = [_mk_row(i) for i in range(257)]
+
+_FIELD_NAMES = [f["name"] for f in FULL_SCHEMA["fields"]]
+
+
+def _edge_row(i: int, **values) -> tuple:
+    row = list(_mk_row(i))
+    for name, v in values.items():
+        row[_FIELD_NAMES.index(name)] = v
+    return tuple(row)
+
+
+#: Values a columnar codec can get wrong: NaN, ±Inf and -0.0 in both float
+#: widths, the long and int extremes, empty and non-ASCII strings, and both
+#: branches of each ["null", T] union.
+EDGE_ROWS = [
+    _edge_row(1, f_long=-(2**63), f_int=-(2**31), f_float=float("nan"),
+              f_double=float("nan"), f_str="", f_opt=None, f_bytes=b"",
+              f_nested=(0, None)),
+    _edge_row(2, f_long=2**63 - 1, f_int=2**31 - 1, f_float=float("inf"),
+              f_double=float("-inf"), f_str="żółw · 日本語 · \U0001f980",
+              f_opt="", f_nested=(-(2**63), -0.0)),
+    _edge_row(3, f_float=-0.0, f_double=-0.0, f_str="é", f_opt="ünï",
+              f_nested=(2**63 - 1, float("nan"))),
+    _edge_row(4, f_float=float("-inf"), f_double=float("inf"), f_opt=None),
+]
+
+
+def _canon(v):
+    """Comparable form of a decoded or collected value: Rows and lists
+    become tuples, maps sorted pairs, and floats their bit pattern, so NaN
+    equals NaN and -0.0 differs from 0.0."""
+    if isinstance(v, float):
+        return "nan" if v != v else struct.pack("<d", v)
+    if isinstance(v, (tuple, list)):
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
 
 
 def test_value_roundtrip_all_types():
@@ -156,26 +198,44 @@ def test_missing_schema_names_file_and_offset(tmp_path):
     assert f"byte {len(buf.getvalue())}" in str(err.value)
 
 
-def test_truncated_block_names_file_and_offset(tmp_path):
+@pytest.fixture(params=["read_container", "avrofile"])
+def read_all(request):
+    """(read every record of a container path, the error type it raises):
+    the sequential row reader, or a collect through the ``avrofile`` data
+    source, whose task error carries the reader's message."""
+    if request.param == "read_container":
+        return (lambda path: list(ab.read_container(path)[1])), ab.AvroBinaryError
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        ensure_registered,
+    )
+
+    spark = request.getfixturevalue("spark")
+    ensure_registered(spark)
+    return (
+        lambda path: spark.read.format("avrofile").option("path", path).load().collect()
+    ), Exception
+
+
+def test_truncated_block_names_file_and_offset(tmp_path, read_all):
+    read, error = read_all
     path = str(tmp_path / "truncated.avro")
     block_at = _one_block_container(path)
     data = open(path, "rb").read()
     open(path, "wb").write(data[: len(data) - ab.SYNC_SIZE - 5])
-    _, it = ab.read_container(path)
-    with pytest.raises(ab.AvroBinaryError, match="unexpected EOF") as err:
-        list(it)
+    with pytest.raises(error, match="unexpected EOF") as err:
+        read(path)
     assert f"{path}: block at byte {block_at}:" in str(err.value)
 
 
-def test_flipped_sync_byte_names_file_and_offset(tmp_path):
+def test_flipped_sync_byte_names_file_and_offset(tmp_path, read_all):
+    read, error = read_all
     path = str(tmp_path / "flipped.avro")
     block_at = _one_block_container(path)
     data = bytearray(open(path, "rb").read())
     data[-ab.SYNC_SIZE] ^= 0x01  # first byte of the block's trailing sync
     open(path, "wb").write(bytes(data))
-    _, it = ab.read_container(path)
-    with pytest.raises(ab.AvroBinaryError, match="sync marker mismatch") as err:
-        list(it)
+    with pytest.raises(error, match="sync marker mismatch") as err:
+        read(path)
     assert f"{path}: block at byte {block_at}:" in str(err.value)
 
 
@@ -200,15 +260,15 @@ def _recodec(path: str, codec: str) -> int:
     return block_at
 
 
-def test_codec_mismatch_names_file_and_offset(tmp_path):
+def test_codec_mismatch_names_file_and_offset(tmp_path, read_all):
     """Null-coded blocks under a header that says deflate fail with the
     file and block offset, not a bare zlib error."""
+    read, error = read_all
     path = str(tmp_path / "mislabelled.avro")
     _one_block_container(path)
     block_at = _recodec(path, "deflate")
-    _, it = ab.read_container(path)
-    with pytest.raises(ab.AvroBinaryError, match="deflate") as err:
-        list(it)
+    with pytest.raises(error, match="deflate") as err:
+        read(path)
     assert f"{path}: block at byte {block_at}:" in str(err.value)
 
 
@@ -295,6 +355,44 @@ def test_datasource_exact_once_at_many_splits(spark, sf_dir, tmp_path):
     assert got == expect
 
 
+@pytest.mark.parametrize("split_bytes", [97, 1000, 10**9])
+def test_datasource_rows_equal_split_reader(spark, tmp_path, split_bytes):
+    """The columnar read path (Arrow batches out of ``avrofile``) gives the
+    same rows as the row reader ``read_container_split`` over the same
+    planned splits, for every kernel and fallback type and the edge values,
+    at split sizes from many splits per block run to one split per file."""
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        AvroContainerReader,
+        ensure_registered,
+    )
+
+    rows = ROWS + EDGE_ROWS
+    path = str(tmp_path / "edges.avro")
+    ab.write_container(path, FULL_SCHEMA, rows, codec="deflate", block_records=7)
+    splits = AvroContainerReader(
+        {"path": path, "split_bytes": str(split_bytes)}
+    ).partitions()
+    assert len(splits) > 1 or split_bytes == 10**9
+    want = [
+        r
+        for s in splits
+        for r in ab.read_container_split(
+            s.path, s.start, s.end, s.schema_json, s.codec, s.sync_hex
+        )
+    ]
+    assert _canon(want) == _canon(rows)
+
+    ensure_registered(spark)
+    got = (
+        spark.read.format("avrofile")
+        .option("path", path)
+        .option("split_bytes", split_bytes)
+        .load()
+        .collect()
+    )
+    assert _canon(got) == _canon(want)
+
+
 def test_datasource_rejects_heterogeneous_schemas(tmp_path):
     """A directory mixing .avro files with different schemas must fail at
     plan time (splits decode with per-file schemas while the source
@@ -352,6 +450,14 @@ def test_java_avro_cross_validation(spark, tmp_path, py_codec, j_codec):
 
     schema_json, it = ab.read_container(p_j)
     assert list(it) == ROWS, "values must survive the Java decode/encode cycle"
+
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        ensure_registered,
+    )
+
+    ensure_registered(spark)
+    back = spark.read.format("avrofile").option("path", p_j).load().collect()
+    assert _canon(back) == _canon(ROWS), "the avrofile source must read Java's container"
 
 
 def test_java_avro_split_protocol_agrees(spark, tmp_path):
@@ -486,3 +592,106 @@ def test_write_distributed_spreads_narrow_input(spark, sf_dir, tmp_path):
     ensure_registered(spark)
     back = spark.read.format("avrofile").option("path", out).load()
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
+
+
+@pytest.mark.parametrize("codec", ["null", "deflate"])
+def test_write_distributed_matches_write_container(spark, tmp_path, codec):
+    """Every shard of the columnar writer is byte-identical to
+    ``write_container`` on the same partition's rows, seed and codec: every
+    kernel and fallback type with nulls and edge values, a partition longer
+    than one Arrow batch (so blocks straddle batch boundaries) and an empty
+    partition, which still writes a header-only shard."""
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        write_distributed,
+    )
+    from avro_parquet_spark_example_spark.sources.avro_schema import (
+        parse_avro_schema,
+    )
+
+    sc = spark.sparkContext
+    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    groups = [
+        [_mk_row(i) for i in range(batch_rows + 37)] + EDGE_ROWS,
+        [],
+        ROWS[:40],
+        EDGE_ROWS + ROWS[40:45],
+    ]
+    groups += [ROWS[:3]] * (sc.defaultParallelism - len(groups))
+    df = spark.createDataFrame(
+        sc.parallelize(groups, len(groups)).flatMap(lambda g: g),
+        parse_avro_schema(FULL_SCHEMA),
+    )
+    parts = df.rdd.glom().collect()
+    assert len(parts[0]) > batch_rows and parts[1] == []
+
+    out = str(tmp_path / "columnar.avro.d")
+    write_distributed(df, out, FULL_SCHEMA, codec=codec, block_records=333)
+    assert sorted(os.listdir(out)) == [f"part-{i:05d}.avro" for i in range(len(parts))]
+    for pid, rows in enumerate(parts):
+        want = str(tmp_path / f"want-{pid}.avro")
+        ab.write_container(
+            want, FULL_SCHEMA, map(tuple, rows), codec=codec,
+            block_records=333, sync_seed=pid + 1,
+        )
+        got = open(os.path.join(out, f"part-{pid:05d}.avro"), "rb").read()
+        assert got == open(want, "rb").read(), f"shard {pid} differs"
+
+
+def test_write_shard_failure_removes_attempt_file(tmp_path):
+    """A task whose encode raises leaves no ``.attempt-N.tmp`` file in the
+    staging directory, which a retry that succeeds would turn into the
+    output."""
+    import pyarrow as pa
+
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        SUPPLIER_AVRO_SCHEMA,
+        write_shard,
+    )
+
+    good = pa.RecordBatch.from_pylist(
+        [{"s_suppkey": i, "s_name": f"s{i}", "s_nationkey": i, "s_acctbal": 1.5}
+         for i in range(3)]
+    )
+
+    def batches():
+        yield good
+        raise RuntimeError("encode failed mid-partition")
+
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    with pytest.raises(RuntimeError, match="mid-partition"):
+        write_shard(
+            batches(), str(staging), 3, 17, json.dumps(SUPPLIER_AVRO_SCHEMA),
+            "deflate", 1,
+        )
+    assert os.listdir(staging) == []
+
+
+def test_avro_path_job_counts(spark, sf_dir, tmp_path):
+    """One ``write_distributed`` call runs 2 Spark jobs (under AQE the
+    round-robin spread's shuffle stage, then the encode stage), and one
+    ``avrofile`` read + ``count()`` runs 2 (the scan's partial count, then
+    the final merge). A change that adds a job to the paper's storage path
+    fails here."""
+    from perfbench.tracing import StatusStore
+
+    from avro_parquet_spark_example_spark.sources.avro_datasource import (
+        SUPPLIER_AVRO_SCHEMA,
+        ensure_registered,
+        write_distributed,
+    )
+    from avro_parquet_spark_example_spark.sources.catalog import load
+
+    ensure_registered(spark)
+    src = load(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
+    )
+    out = str(tmp_path / "jobs.avro.d")
+    status = StatusStore(spark)
+    for _ in range(2):  # the first round is a warm-up
+        status.new_jobs()
+        write_distributed(src, out, SUPPLIER_AVRO_SCHEMA, codec="deflate")
+        write_jobs = len(status.new_jobs())
+        spark.read.format("avrofile").option("path", out).load().count()
+        read_jobs = len(status.new_jobs())
+    assert (write_jobs, read_jobs) == (2, 2)
