@@ -28,7 +28,8 @@ split boundaries:
   logical      decimal(bytes/fixed), date, time-millis/micros,
                (local-)timestamp-millis/micros (decoded to Python date/
                datetime/Decimal so rows align with the Spark types produced
-               by ``avro_schema.parse_avro_schema``)
+               by ``avro_schema.parse_avro_schema``; time-millis/micros
+               stay the int/long it declares)
 
 Two interfaces share the container format and the block loop:
 
@@ -100,13 +101,12 @@ def _from_micros(v: int) -> datetime.datetime:
     return _EPOCH_DT + datetime.timedelta(microseconds=v)
 
 
-#: Python value of each integer-backed temporal logical type, keyed by
-#: (Avro base type, logicalType). The per-value codec and the row API return
-#: these; the Arrow read path keeps the integer and casts the column instead.
+#: Python value of each integer-backed date or timestamp logical type, keyed
+#: by (Avro base type, logicalType); time-millis/micros stay ints. The
+#: per-value codec and the row API return these; the Arrow read path keeps
+#: the integer and casts the column instead.
 _FROM_INT: dict[tuple[str, str], Callable[[int], Any]] = {
     ("int", "date"): lambda v: _EPOCH_DATE + datetime.timedelta(days=v),
-    ("int", "time-millis"): lambda v: _from_millis(v).time(),
-    ("long", "time-micros"): lambda v: _from_micros(v).time(),
     ("long", "timestamp-millis"): _from_millis,
     ("long", "local-timestamp-millis"): _from_millis,
     ("long", "timestamp-micros"): _from_micros,

@@ -43,6 +43,10 @@ FULL_SCHEMA = {
                                      "logicalType": "timestamp-millis"}},
         {"name": "f_ts_us", "type": {"type": "long",
                                      "logicalType": "timestamp-micros"}},
+        {"name": "f_time_ms", "type": {"type": "int",
+                                       "logicalType": "time-millis"}},
+        {"name": "f_time_us", "type": {"type": "long",
+                                       "logicalType": "time-micros"}},
         {"name": "f_dec", "type": {"type": "bytes", "logicalType": "decimal",
                                    "precision": 10, "scale": 2}},
         {"name": "f_nested", "type": {
@@ -70,6 +74,8 @@ def _mk_row(i: int) -> tuple:
         datetime.date(1970, 1, 1) + datetime.timedelta(days=i * 37),
         datetime.datetime(2020, 1, 1) + datetime.timedelta(milliseconds=i * 999),
         datetime.datetime(2020, 1, 1) + datetime.timedelta(microseconds=i * 31),
+        i * 86_399 % 86_400_000,
+        i * 86_399_999 % 86_400_000_000,
         Decimal(i * 100 - 5000).scaleb(-2),
         (i * 2, None if i % 2 else float(i)),
     )
@@ -88,15 +94,17 @@ def _edge_row(i: int, **values) -> tuple:
 
 
 #: Values a columnar codec can get wrong: NaN, ±Inf and -0.0 in both float
-#: widths, the long and int extremes, empty and non-ASCII strings, and both
-#: branches of each ["null", T] union.
+#: widths, the long and int extremes, empty and non-ASCII strings, both
+#: branches of each ["null", T] union, and the first and last instant of a
+#: day in both time-of-day types (read back as the int/long Spark declares).
 EDGE_ROWS = [
     _edge_row(1, f_long=-(2**63), f_int=-(2**31), f_float=float("nan"),
               f_double=float("nan"), f_str="", f_opt=None, f_bytes=b"",
-              f_nested=(0, None)),
+              f_nested=(0, None), f_time_ms=0, f_time_us=0),
     _edge_row(2, f_long=2**63 - 1, f_int=2**31 - 1, f_float=float("inf"),
               f_double=float("-inf"), f_str="żółw · 日本語 · \U0001f980",
-              f_opt="", f_nested=(-(2**63), -0.0)),
+              f_opt="", f_nested=(-(2**63), -0.0), f_time_ms=86_399_999,
+              f_time_us=86_399_999_999),
     _edge_row(3, f_float=-0.0, f_double=-0.0, f_str="é", f_opt="ünï",
               f_nested=(2**63 - 1, float("nan"))),
     _edge_row(4, f_float=float("-inf"), f_double=float("inf"), f_opt=None),

@@ -4,6 +4,7 @@ public API (SURVEY.md §0 steps 1-4 mapped to library calls)."""
 from __future__ import annotations
 
 from avro_parquet_spark_example_spark.engine import Engine
+from avro_parquet_spark_example_spark.registry import get_query
 
 
 def _engine(spark, sf_dir):
@@ -1026,3 +1027,139 @@ def test_engine_kendall_w_facade_parity(spark, sf_dir):
         map(tuple, get_query("stat_kendall_w").fn(spark, sf_dir).collect())
     )
     assert got == want
+
+
+def test_engine_rankstats_facade_parity(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from avro_parquet_spark_example_spark.engine import Engine
+    from avro_parquet_spark_example_spark.operators.rankstats import _dow_spark
+    from avro_parquet_spark_example_spark.sources.catalog import cents, load
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    e = load(spark, sf_dir, "events")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def want(name):
+        return rows(get_query(name).fn(spark, sf_dir))
+
+    base_gv = e.select(
+        "event_type", _dow_spark().alias("g"), cents().alias("v")
+    )
+    assert rows(eng.jonckheere_terpstra(base_gv)) == want(
+        "stat_jonckheere_terpstra"
+    )
+    base_xy = e.select(
+        "event_type",
+        _dow_spark().alias("x"),
+        F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint").alias("y"),
+    )
+    assert rows(eng.gk_gamma_tau(base_xy)) == want("stat_gk_gamma_tau")
+    assert rows(
+        eng.mood_median(e.select("event_type", cents().alias("q")))
+    ) == want("stat_mood_median")
+    daily = e.groupBy(
+        "event_type", F.col("ts").cast("date").alias("day")
+    ).agg(F.sum(cents()).cast("bigint").alias("tq"))
+    assert rows(eng.runs_test(daily)) == want("stat_runs_test")
+    base_wk = e.select(
+        "event_type",
+        F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
+        cents().alias("v"),
+    )
+    assert rows(eng.cliff_delta(base_wk)) == want("stat_cliff_delta")
+    assert rows(eng.ks_two_sample(base_wk)) == want("stat_ks_two_sample")
+    dec = F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint")
+    base_rr = e.select(
+        "event_type",
+        dec.alias("ra"),
+        F.least(
+            F.lit(9), dec + F.col("event_id").cast("bigint") % 2
+        ).alias("rb"),
+    )
+    assert rows(eng.kappa_weighted(base_rr)) == want("eval_kappa_weighted")
+    per_user = e.groupBy("event_type", "user_id").agg(
+        F.sum(cents()).cast("bigint").alias("s")
+    )
+    assert rows(eng.lorenz_curve(per_user)) == want("agg_lorenz_curve")
+    assert rows(eng.brunner_munzel(base_wk)) == want("stat_brunner_munzel")
+    li = load(spark, sf_dir, "lineitem").select(
+        F.round(F.col("l_discount") * 100).cast("bigint").alias("v"),
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("pos"),
+    )
+    assert rows(eng.auc_partial(li)) == want("eval_auc_partial")
+
+
+def test_engine_kaplan_meier_facade_parity(spark, sf_dir):
+    from avro_parquet_spark_example_spark.engine import Engine
+    from avro_parquet_spark_example_spark.operators.survival import (
+        _user_durations,
+    )
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    got = sorted(
+        map(tuple, eng.kaplan_meier(_user_durations(spark, sf_dir)).collect())
+    )
+    want = sorted(
+        map(
+            tuple,
+            get_query("surv_kaplan_meier").fn(spark, sf_dir).collect(),
+        )
+    )
+    assert got == want
+
+
+def test_engine_survival_goodness_of_fit_facade_parity(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from avro_parquet_spark_example_spark.engine import Engine
+    from avro_parquet_spark_example_spark.operators.survival import (
+        _user_durations,
+    )
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    subj = _user_durations(spark, sf_dir)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(eng.nelson_aalen(subj)) == rows(
+        get_query("surv_nelson_aalen").fn(spark, sf_dir)
+    )
+    assert rows(eng.rmst(subj)) == rows(
+        get_query("surv_rmst").fn(spark, sf_dir)
+    )
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    wkbase = ev.select(
+        "event_type",
+        F.when(
+            F.dayofweek(F.col("ts").cast("date")).isin(1, 7), 1
+        )
+        .otherwise(0)
+        .alias("wk"),
+        F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("v"),
+    )
+    assert rows(eng.cvm_two_sample(wkbase)) == rows(
+        get_query("stat_cvm_two_sample").fn(spark, sf_dir)
+    )
+    cabase = ev.select(
+        "event_type",
+        F.dayofweek(F.col("ts").cast("date")).cast("bigint").alias("s"),
+        F.when(
+            F.floor(F.col("value") * 100.0 + 0.5).cast("bigint") >= 5000, 1
+        )
+        .otherwise(0)
+        .alias("y"),
+    )
+    assert rows(eng.cochran_armitage(cabase)) == rows(
+        get_query("stat_cochran_armitage").fn(spark, sf_dir)
+    )
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        F.round(F.col("l_discount") * 100).cast("bigint").alias("v"),
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("pos"),
+    )
+    assert rows(eng.hosmer_lemeshow(li)) == rows(
+        get_query("eval_hosmer_lemeshow").fn(spark, sf_dir)
+    )

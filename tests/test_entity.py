@@ -405,3 +405,25 @@ def test_fixture_guard_rejects_keys_above_offsets(spark):
     )
     with pytest.raises(Exception, match="variant offset"):
         er_records(bad).count()
+
+
+def test_er_records_gated_matches_full_form(spark, sf_dir):
+    """The size-gated records frame (bounded variants checkpointed,
+    corpus base lazy) must be row-identical to the plain union — the
+    r16 checkpoint-hygiene change is a materialization choice, never a
+    semantic one."""
+    from avro_parquet_spark_example_spark.operators.entity import (
+        er_records,
+        er_records_gated,
+        er_records_mf,
+        er_records_mf_gated,
+    )
+    from avro_parquet_spark_example_spark.sources.catalog import load
+
+    cust = load(spark, sf_dir, "customer")
+    assert sorted(map(tuple, er_records(cust).collect())) == sorted(
+        map(tuple, er_records_gated(cust).collect())
+    )
+    assert sorted(map(tuple, er_records_mf(cust).collect())) == sorted(
+        map(tuple, er_records_mf_gated(cust).collect())
+    )

@@ -5,11 +5,14 @@ group totals while provably excluding each row's own target."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import functions as F
 
-from avro_parquet_spark_example_spark.operators.features import OLS_DIMS
+from avro_parquet_spark_example_spark.operators.features import OLS_DIMS, decision_stump
 from avro_parquet_spark_example_spark.registry import get_query
+from tests._refs import _frame
 
 
 def _gram(spark, sf_dir):
@@ -242,3 +245,20 @@ def test_linreg_gd_loss_decreases(spark, sf_dir):
         b = b - (X.T @ (X @ b - y)) / (4 * n)
         losses.append(float(((X @ b - y) ** 2).mean()))
     assert all(a > b_ for a, b_ in zip(losses, losses[1:])), losses
+
+
+def test_decision_stump_perfect_separation(spark):
+    # feature < 5 -> negative, >= 5 -> positive: splitting at 4 recovers
+    # the full root entropy as gain and is marked best
+    rows = [(float(v), v >= 5) for v in range(10) for _ in range(4)]
+    vals = _frame(spark, rows, "v double, is_ref boolean")
+    out = {r.threshold: r for r in decision_stump(vals).collect()}
+    n, p = 40, 20
+    h_root = -(0.5 * math.log(0.5) + 0.5 * math.log(0.5))
+    best = [r for r in out.values() if r.is_best]
+    assert len(best) == 1 and best[0].threshold == 4.0
+    assert best[0].gain12 == math.floor(h_root * 1e12)
+    # every non-separating candidate strictly underperforms
+    assert all(
+        r.gain12 < best[0].gain12 for r in out.values() if r.threshold != 4.0
+    )

@@ -303,3 +303,38 @@ def test_jobs_per_round(spark, sf_dir, monkeypatch, build, rounds, per_round):
         build(spark, sf_dir, monkeypatch, r)
         jobs.append(len(status.new_jobs()))
     assert jobs[1] - jobs[0] in per_round, jobs
+
+
+def test_personalized_pagerank_seed_properties(spark, sf_dir):
+    """Seeds carry the restart mass (final rank >= 0.15 exactly — the
+    damped update adds 0.15 to a seed every round), every ranked node is
+    reachable (positive rank only), the frontier is a subset of the
+    graph's nodes, and the run is deterministic."""
+    from pyspark.sql import functions as F
+
+    from avro_parquet_spark_example_spark.operators.graph import (
+        PPR_SEEDS,
+        cooccurrence_edges,
+    )
+
+    rows = (
+        get_query("graph_personalized_pagerank").fn(spark, sf_dir).collect()
+    )
+    got = {r.node: r.rank for r in rows}
+    e = cooccurrence_edges(spark, sf_dir)
+    nodes = sorted(
+        r.n
+        for r in e.select(F.col("u").alias("n"))
+        .unionByName(e.select(F.col("v").alias("n")))
+        .distinct()
+        .collect()
+    )
+    seeds = nodes[:PPR_SEEDS]
+    for s in seeds:
+        assert got.get(s, 0) >= 0.15, (s, got.get(s))
+    assert all(v > 0 for v in got.values())
+    assert set(got) <= set(nodes)
+    rows2 = (
+        get_query("graph_personalized_pagerank").fn(spark, sf_dir).collect()
+    )
+    assert {r.node: r.rank for r in rows2} == got

@@ -7,10 +7,7 @@ import math
 from collections import Counter
 
 from avro_parquet_spark_example_spark.registry import get_query
-
-
-def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet").collect()
+from tests._refs import _events
 
 
 # --------------------------------------------------------------------------
@@ -1380,3 +1377,30 @@ def test_cell_w_cornish_fisher_moments():
     # never negative, and the r=0 arm is the exact count
     assert min(ws) >= 0
     assert _cell_w(n, 7, 1, 0) == n
+
+
+# --------------------------------------------------------------------------
+# Benjamini–Yekutieli vs Benjamini–Hochberg ordering property
+# --------------------------------------------------------------------------
+
+
+def test_by_fdr_never_rejects_more_than_bh(spark, sf_dir):
+    bh = {
+        (r.event_type, r.dow): r
+        for r in get_query("stat_bh_fdr").fn(spark, sf_dir).collect()
+    }
+    by = {
+        (r.event_type, r.dow): r
+        for r in get_query("stat_by_fdr").fn(spark, sf_dir).collect()
+    }
+    assert set(bh) == set(by) and len(by) == 35
+    # identical p-values and ranks; BY threshold is BH's / H(m) -> BY's
+    # rejection set is a SUBSET of BH's (the defining property)
+    for k in bh:
+        assert bh[k].p_value == by[k].p_value
+        assert bh[k].p_rank == by[k].p_rank
+        if by[k].rejected:
+            assert bh[k].rejected
+    # step-up coherence: rejections are exactly ranks 1..k
+    rej = sorted(r.p_rank for r in by.values() if r.rejected)
+    assert rej == list(range(1, len(rej) + 1))

@@ -1,12 +1,13 @@
-"""Copy-paste guard over the package source (no Spark).
+"""Copy-paste guard over the package source and the test suite (no Spark).
 
-A fix to a copied block has to be made once per copy, and copies drift. This
-test fails when a run of ``RUN`` consecutive code lines appears twice under
-``avro_parquet_spark_example_spark/``. Each line is stripped first; blank
-lines, ``#`` comments and lines that are only a closing bracket, an opening
-parenthesis or a docstring quote are skipped, so formatting alone neither
-hides nor creates a copy. Shared fragments belong in one helper in the module
-that owns them (for oracles: one oracle-text constant or builder).
+A fix to a copied block has to be made once per copy, and copies drift. These
+tests fail when a run of ``RUN`` consecutive code lines appears twice under
+``avro_parquet_spark_example_spark/`` or twice under ``tests/``. Each line is
+stripped first; blank lines, ``#`` comments and lines that are only a closing
+bracket, an opening parenthesis or a docstring quote are skipped, so
+formatting alone neither hides nor creates a copy. Shared fragments belong
+in one helper in the module that owns them (for oracles: one oracle-text
+constant or builder; for test references: ``tests/_refs.py``).
 
 A pair that must stay apart goes in ``ALLOWED`` with a one-line reason,
 keyed by the two copies' ``(file, first line text)`` of the shared run.
@@ -17,7 +18,8 @@ from __future__ import annotations
 from collections import defaultdict
 from pathlib import Path
 
-PACKAGE = Path(__file__).resolve().parent.parent / "avro_parquet_spark_example_spark"
+TESTS = Path(__file__).resolve().parent
+PACKAGE = TESTS.parent / "avro_parquet_spark_example_spark"
 
 #: Window length, in retained code lines.
 RUN = 12
@@ -27,6 +29,9 @@ _SKIP = {")", "]", "}", "),", "(", '"""'}
 
 #: Kept copies: frozenset of the two "file:line-text" keys -> reason.
 ALLOWED: dict[frozenset, str] = {}
+
+#: Kept copies under ``tests/``, keyed like ``ALLOWED``.
+ALLOWED_TESTS: dict[frozenset, str] = {}
 
 
 def _code_lines(path: Path) -> list[tuple[int, str]]:
@@ -82,6 +87,18 @@ def test_no_copied_code_blocks():
         "extract each into one shared helper (or allow-list the pair with "
         "a reason): "
         + "; ".join(f"{fa}:{la} == {fb}:{lb}" for fa, la, fb, lb in dups)
+    )
+
+
+def test_no_copied_code_blocks_in_tests():
+    dups = [
+        (fa, la, fb, lb)
+        for fa, la, fb, lb in duplicate_runs(TESTS)
+        if frozenset((_key(TESTS, fa, la), _key(TESTS, fb, lb)))
+        not in ALLOWED_TESTS
+    ]
+    assert not dups, "copied test code: " + "; ".join(
+        f"{fa}:{la} == {fb}:{lb}" for fa, la, fb, lb in dups
     )
 
 

@@ -3,12 +3,16 @@ over generated schemas, and engine invariants over generated corpora."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from avro_parquet_spark_example_spark.sources import avro_binary as ab
 from avro_parquet_spark_example_spark.sources.avro_schema import parse_avro_schema
 
 PRIMITIVES = ["string", "int", "long", "float", "double", "boolean", "bytes"]
@@ -164,3 +168,61 @@ def test_signbit_pack_matches_reference(spark, va, vb):
         1 for x, y in zip(stored.a, stored.b) if (x > 0) != (y > 0)
     )
     assert row.h == mismatches
+
+
+# ---------------------------------------------------------------------------
+# Truncated Avro containers fail loudly (malformed-input contract)
+
+
+def avro_values(t):
+    """Values of an ``avro_types()`` type that survive a round trip exactly
+    (no NaN; floats drawn at the width they are stored in)."""
+    if isinstance(t, list):  # [T, "null"]
+        return st.none() | avro_values(t[0])
+    if isinstance(t, dict):
+        if t["type"] == "array":
+            return st.lists(avro_values(t["items"]), max_size=3)
+        return st.dictionaries(st.text(max_size=4), avro_values(t["values"]), max_size=3)
+    return {
+        "string": st.text(max_size=8),
+        "int": st.integers(-(2**31), 2**31 - 1),
+        "long": st.integers(-(2**63), 2**63 - 1),
+        "float": st.floats(allow_nan=False, width=32),
+        "double": st.floats(allow_nan=False),
+        "boolean": st.booleans(),
+        "bytes": st.binary(max_size=8),
+    }[t]
+
+
+@given(avro_records(), st.sampled_from(["null", "deflate"]), st.data())
+@settings(max_examples=100, deadline=None, derandomize=True)
+def test_truncated_container_keeps_whole_blocks_or_names_the_cut_block(
+    tmp_path_factory, schema, codec, data
+):
+    """A multi-block container cut at any offset past its header reads back
+    as exactly the records of the blocks that end at or before the cut, or
+    raises ``AvroBinaryError`` naming the file and the offset of the block
+    the cut falls in. No other exception, and no other rows."""
+    row = st.tuples(*(avro_values(f["type"]) for f in schema["fields"]))
+    rows = data.draw(st.lists(row, min_size=2, max_size=12))
+    per_block = data.draw(st.integers(1, len(rows) - 1))
+    path = tmp_path_factory.getbasetemp() / "truncated.avro"
+
+    def write(n: int) -> bytes:
+        ab.write_container(str(path), schema, rows[:n], codec=codec, block_records=per_block)
+        return path.read_bytes()
+
+    # blocks are cut every per_block records from the start, so the
+    # container of the first k blocks' records ends where block k ends
+    whole = {len(write(n)): n for n in [*range(0, len(rows), per_block), len(rows)]}
+    blob = write(len(rows))
+    cut = data.draw(st.integers(min(whole), len(blob) - 1))
+    path.write_bytes(blob[:cut])
+    if cut in whole:
+        assert list(ab.read_container(str(path))[1]) == rows[: whole[cut]]
+    else:
+        with pytest.raises(ab.AvroBinaryError) as err:
+            list(ab.read_container(str(path))[1])
+        named = re.search(r"block at byte (\d+)", str(err.value))
+        assert str(path) in str(err.value) and named, str(err.value)
+        assert int(named.group(1)) == max(end for end in whole if end < cut)

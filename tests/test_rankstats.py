@@ -1,8 +1,6 @@
-"""Round-14 rank/ordinal statistics (operators/rankstats.py +
-stat_by_fdr) vs independent Python references + closed-form boundary
-pins — the r11/r12/r13 test model: each operator's exact kernel is
-re-derived in plain Python over the collected fixture and compared
-value-for-value, then pinned on hand-checkable inputs."""
+"""Rank and ordinal statistics (operators/rankstats.py) vs independent
+Python references over the collected fixture, plus closed-form boundary
+pins and degenerate inputs."""
 
 from __future__ import annotations
 
@@ -10,23 +8,12 @@ import math
 from collections import Counter, defaultdict
 
 from avro_parquet_spark_example_spark.registry import get_query
-
-
-def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet").collect()
-
-
-def _q(v) -> int:
-    return int(math.floor(v * 100.0 + 0.5))
+from tests._refs import _events, _is_weekend, _q
 
 
 def _dow(ts) -> int:
     # Spark dayofweek: 1=Sunday..7=Saturday
     return ts.isoweekday() % 7 + 1
-
-
-def _is_weekend(ts) -> bool:
-    return ts.isoweekday() in (6, 7)
 
 
 # --------------------------------------------------------------------------
@@ -388,101 +375,6 @@ def test_lorenz_matches_python_reference(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Benjamini–Yekutieli vs Benjamini–Hochberg ordering property
-# --------------------------------------------------------------------------
-
-
-def test_by_fdr_never_rejects_more_than_bh(spark, sf_dir):
-    bh = {
-        (r.event_type, r.dow): r
-        for r in get_query("stat_bh_fdr").fn(spark, sf_dir).collect()
-    }
-    by = {
-        (r.event_type, r.dow): r
-        for r in get_query("stat_by_fdr").fn(spark, sf_dir).collect()
-    }
-    assert set(bh) == set(by) and len(by) == 35
-    # identical p-values and ranks; BY threshold is BH's / H(m) -> BY's
-    # rejection set is a SUBSET of BH's (the defining property)
-    for k in bh:
-        assert bh[k].p_value == by[k].p_value
-        assert bh[k].p_rank == by[k].p_rank
-        if by[k].rejected:
-            assert bh[k].rejected
-    # step-up coherence: rejections are exactly ranks 1..k
-    rej = sorted(r.p_rank for r in by.values() if r.rejected)
-    assert rej == list(range(1, len(rej) + 1))
-
-
-# --------------------------------------------------------------------------
-# Engine facade parity for the r14 family
-# --------------------------------------------------------------------------
-
-
-def test_engine_rankstats_facade_parity(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from avro_parquet_spark_example_spark.engine import Engine
-    from avro_parquet_spark_example_spark.operators.rankstats import _dow_spark
-    from avro_parquet_spark_example_spark.sources.catalog import cents, load
-
-    eng = Engine(spark=spark, sf_dir=sf_dir)
-    e = load(spark, sf_dir, "events")
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    def want(name):
-        return rows(get_query(name).fn(spark, sf_dir))
-
-    base_gv = e.select(
-        "event_type", _dow_spark().alias("g"), cents().alias("v")
-    )
-    assert rows(eng.jonckheere_terpstra(base_gv)) == want(
-        "stat_jonckheere_terpstra"
-    )
-    base_xy = e.select(
-        "event_type",
-        _dow_spark().alias("x"),
-        F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint").alias("y"),
-    )
-    assert rows(eng.gk_gamma_tau(base_xy)) == want("stat_gk_gamma_tau")
-    assert rows(
-        eng.mood_median(e.select("event_type", cents().alias("q")))
-    ) == want("stat_mood_median")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.sum(cents()).cast("bigint").alias("tq"))
-    assert rows(eng.runs_test(daily)) == want("stat_runs_test")
-    base_wk = e.select(
-        "event_type",
-        F.when(_dow_spark().isin(1, 7), 1).otherwise(0).alias("wk"),
-        cents().alias("v"),
-    )
-    assert rows(eng.cliff_delta(base_wk)) == want("stat_cliff_delta")
-    assert rows(eng.ks_two_sample(base_wk)) == want("stat_ks_two_sample")
-    dec = F.least(F.lit(9), cents() / F.lit(1000)).cast("bigint")
-    base_rr = e.select(
-        "event_type",
-        dec.alias("ra"),
-        F.least(
-            F.lit(9), dec + F.col("event_id").cast("bigint") % 2
-        ).alias("rb"),
-    )
-    assert rows(eng.kappa_weighted(base_rr)) == want("eval_kappa_weighted")
-    per_user = e.groupBy("event_type", "user_id").agg(
-        F.sum(cents()).cast("bigint").alias("s")
-    )
-    assert rows(eng.lorenz_curve(per_user)) == want("agg_lorenz_curve")
-    assert rows(eng.brunner_munzel(base_wk)) == want("stat_brunner_munzel")
-    li = load(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_discount") * 100).cast("bigint").alias("v"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("pos"),
-    )
-    assert rows(eng.auc_partial(li)) == want("eval_auc_partial")
-
-
-# --------------------------------------------------------------------------
 # Partial AUC (McClish)
 # --------------------------------------------------------------------------
 
@@ -593,162 +485,158 @@ def test_brunner_munzel_closed_forms():
 
 
 # --------------------------------------------------------------------------
-# Survival family: Kaplan–Meier + log-rank
+# Cramér–von Mises
 # --------------------------------------------------------------------------
 
 
-def _durations(spark, sf_dir):
-    per: dict[int, list] = {}
-    dmax = None
-    for r in _events(spark, sf_dir):
-        d = r.ts.date()
-        dmax = d if dmax is None or d > dmax else dmax
-        lo, hi = per.get(r.user_id, (d, d))
-        per[r.user_id] = (min(lo, d), max(hi, d))
-    out = []
-    for uid, (d0, d1) in per.items():
-        grp = "treatment" if uid % 2 == 0 else "control"
-        if (dmax - d1).days >= 1:
-            out.append((uid, grp, (d1 - d0).days, 1))
-        else:
-            out.append((uid, grp, (dmax - d0).days, 0))
-    return out
-
-
-def test_kaplan_meier_matches_python_reference(spark, sf_dir):
-    subj = _durations(spark, sf_dir)
+def test_cvm_matches_python_reference(spark, sf_dir):
+    evs = _events(spark, sf_dir)
     got = {
-        (r.grp, r.t): r
-        for r in get_query("surv_kaplan_meier").fn(spark, sf_dir).collect()
+        r.event_type: r
+        for r in get_query("stat_cvm_two_sample").fn(spark, sf_dir).collect()
     }
-    for grp in ("treatment", "control"):
-        rows = [(t, ev) for _, g, t, ev in subj if g == grp]
-        times = sorted({t for t, _ in rows})
-        surv = 1.0
-        logsum = 0.0
-        for t in times:
-            n_risk = sum(1 for tt, _ in rows if tt >= t)
-            d = sum(1 for tt, ev in rows if tt == t and ev == 1)
-            c = sum(1 for tt, ev in rows if tt == t and ev == 0)
-            if d > 0:
-                logsum += round(math.log(1.0 - d / n_risk), 9)
-            surv = math.exp(logsum)
-            row = got[(grp, t)]
-            assert (row.n_risk, row.n_event, row.n_censor) == (n_risk, d, c)
-            assert abs(row.survival - round(surv, 6)) < 1e-6
-        # KM invariants: S is non-increasing, starts <= 1
-        ss = [got[(grp, t)].survival for t in times]
-        assert all(a >= b - 1e-9 for a, b in zip(ss, ss[1:]))
-        assert ss[0] <= 1.0 + 1e-9
+    types = {r.event_type for r in evs}
+    for et in types:
+        xs = sorted(_q(r.value) for r in evs if r.event_type == et and _is_weekend(r.ts))
+        ys = sorted(_q(r.value) for r in evs if r.event_type == et and not _is_weekend(r.ts))
+        n1, n2 = len(xs), len(ys)
+        pooled = sorted(xs + ys)
+        s = 0.0
+        for z in sorted(set(pooled)):
+            cz = pooled.count(z)
+            f1 = sum(1 for x in xs if x <= z)
+            f2 = sum(1 for y in ys if y <= z)
+            diff = (f1 * n2 - f2 * n1) / (n1 * n2)
+            s += round(cz * diff * diff, 9)
+        t = n1 * n2 / (n1 + n2) ** 2 * s
+        assert abs(got[et].cvm_t - round(t, 6)) < 1e-5
+        assert got[et].rejected == (t > 0.461)
 
 
-def test_logrank_matches_python_reference(spark, sf_dir):
-    subj = _durations(spark, sf_dir)
-    t1 = [(t, ev) for _, g, t, ev in subj if g == "treatment"]
-    t2 = [(t, ev) for _, g, t, ev in subj if g == "control"]
-    times = sorted({t for t, _ in t1 + t2})
-    o1 = sum(ev for _, ev in t1)
-    e1 = v = 0.0
-    for t in times:
-        n1 = sum(1 for tt, _ in t1 if tt >= t)
-        n2 = sum(1 for tt, _ in t2 if tt >= t)
-        d1 = sum(1 for tt, ev in t1 if tt == t and ev == 1)
-        d2 = sum(1 for tt, ev in t2 if tt == t and ev == 1)
-        d, n = d1 + d2, n1 + n2
-        if d == 0 or n1 == 0 or n2 == 0:
-            continue
-        e1 += round(d * n1 / n, 9)
-        if n >= 2:
-            v += round(d * n1 * n2 * (n - d) / (n * n * (n - 1)), 9)
-    row = get_query("surv_logrank_test").fn(spark, sf_dir).collect()[0]
-    assert row.o1 == o1
-    assert abs(row.e1 - round(e1, 6)) < 1e-6
-    assert abs(row.var_o1 - round(v, 6)) < 1e-6
-    if v == 0:
-        # degenerate fixture (no death day with both cohorts at risk):
-        # the operator emits NULL chi2 / rejected False by contract
-        assert row.chi2 is None and row.rejected is False
-    else:
-        chi2 = (o1 - e1) ** 2 / v
-        assert abs(row.chi2 - round(chi2, 6)) < 1e-5
-        assert row.rejected == (chi2 > 3.841458820694124)
-
-
-def test_km_closed_forms():
-    # no censoring, one death per time among n: S after k deaths = 1-k/n
-    # via the product form
-    n = 10
-    s = 1.0
-    for k in range(1, 4):
-        s *= 1 - 1 / (n - k + 1)
-    assert abs(s - (n - 3) / n) < 1e-12
-    # all censored -> S stays 1 (no death terms)
-    assert math.exp(0.0) == 1.0
-
-
-def test_km_full_observation_reaches_exact_zero(spark):
-    # r14 ADVICE: when d == n_risk at a group's last death time (any
-    # FULLY OBSERVED cohort), ln(1 - d/n) = -inf; Spark's decimal cast
-    # turned it into NULL, the window SUM skipped it, and survival
-    # silently stayed at its prior value (0.4 below). The -1e9 sentinel
-    # guard must drive survival to an exact IEEE 0.0 instead.
-    from avro_parquet_spark_example_spark.operators.survival import (
-        kaplan_meier,
+def test_cvm_identical_samples_zero(spark):
+    from avro_parquet_spark_example_spark.operators.rankstats import (
+        cvm_two_sample,
     )
 
-    subj = spark.createDataFrame(
-        [(i, "g", t, 1) for i, t in enumerate([1, 1, 2, 3, 3])],
-        "user_id int, grp string, t bigint, ev int",
-    )
-    surv = {r.t: r.survival for r in kaplan_meier(subj).collect()}
-    assert surv[1] == 0.6 and surv[2] == 0.4
-    assert surv[3] == 0.0  # exact zero — NOT 0.4 (the pre-guard bug)
-
-    # DuckDB twin of the oracle's km CASE on the same histogram: the
-    # sentinel must underflow to the same exact 0.0 (a plain CAST of
-    # LN(0) would instead raise a conversion error there).
-    import duckdb
-
-    got = duckdb.sql(
-        """
-        WITH risk(t, d, n_risk) AS (VALUES (1,2,5),(2,1,3),(3,2,2)),
-        km AS (
-            SELECT t,
-                   CAST(SUM(CASE
-                        WHEN d >= n_risk
-                            THEN CAST(-1000000000 AS DECIMAL(28,9))
-                        WHEN d = 0 THEN CAST(0 AS DECIMAL(28,9))
-                        ELSE CAST(ROUND(
-                            LN(1.0 - CAST(d AS DOUBLE) / n_risk), 9)
-                            AS DECIMAL(28,9)) END)
-                        OVER (ORDER BY t ROWS BETWEEN UNBOUNDED
-                              PRECEDING AND CURRENT ROW)
-                   AS DECIMAL(38,9)) AS logs
-            FROM risk
-        )
-        SELECT t, ROUND(EXP(CAST(logs AS DOUBLE)), 6) AS survival
-        FROM km ORDER BY t
-        """
-    ).fetchall()
-    assert [(t, s) for t, s in got] == [(1, 0.6), (2, 0.4), (3, 0.0)]
-    for t, s in got:
-        assert s == surv[t]
+    rows = [("a", w, v) for v in range(10) for w in (0, 1)]
+    base = spark.createDataFrame(rows, "event_type string, wk int, v long")
+    r = cvm_two_sample(base).collect()[0]
+    assert r.cvm_t == 0.0 and r.rejected is False
 
 
-def test_engine_kaplan_meier_facade_parity(spark, sf_dir):
-    from avro_parquet_spark_example_spark.engine import Engine
-    from avro_parquet_spark_example_spark.operators.survival import (
-        _user_durations,
+def test_cvm_degenerate_empty_side(spark):
+    from avro_parquet_spark_example_spark.operators.rankstats import (
+        cvm_two_sample,
     )
 
-    eng = Engine(spark=spark, sf_dir=sf_dir)
-    got = sorted(
-        map(tuple, eng.kaplan_meier(_user_durations(spark, sf_dir)).collect())
+    base = spark.createDataFrame(
+        [("a", 0, v) for v in range(5)], "event_type string, wk int, v long"
     )
-    want = sorted(
-        map(
-            tuple,
-            get_query("surv_kaplan_meier").fn(spark, sf_dir).collect(),
-        )
+    r = cvm_two_sample(base).collect()[0]
+    assert r.cvm_t is None and r.rejected is False
+
+
+# --------------------------------------------------------------------------
+# Cochran–Armitage
+# --------------------------------------------------------------------------
+
+
+def test_cochran_armitage_matches_python_reference(spark, sf_dir):
+    evs = _events(spark, sf_dir)
+    got = {
+        r.event_type: r
+        for r in get_query("stat_cochran_armitage")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    types = {r.event_type for r in evs}
+    for et in types:
+        cells: dict[int, list[int]] = {}
+        for r in evs:
+            if r.event_type != et:
+                continue
+            s = r.ts.isoweekday() % 7 + 1
+            n_r = cells.setdefault(s, [0, 0])
+            n_r[0] += 1
+            n_r[1] += 1 if _q(r.value) >= 5000 else 0
+        n = sum(v[0] for v in cells.values())
+        rr = sum(v[1] for v in cells.values())
+        sr = sum(s * v[1] for s, v in cells.items())
+        sn = sum(s * v[0] for s, v in cells.items())
+        s2n = sum(s * s * v[0] for s, v in cells.items())
+        svar = s2n - sn * sn / n
+        t = sr - rr * sn / n
+        z = t / math.sqrt(rr / n * (1 - rr / n) * svar)
+        assert got[et].n == n and got[et].r == rr
+        assert abs(got[et].z - round(z, 6)) < 1e-6
+        assert got[et].rejected == (abs(z) > 1.959963984540054)
+
+
+def test_cochran_armitage_monotone_sign_and_degenerate(spark):
+    from avro_parquet_spark_example_spark.operators.rankstats import (
+        cochran_armitage,
     )
-    assert got == want
+
+    # success rate rises with score -> z > 0 and strongly significant
+    rows = []
+    for s in range(1, 8):
+        for i in range(40):
+            rows.append(("a", s, 1 if i < s * 5 else 0))
+    base = spark.createDataFrame(rows, "event_type string, s long, y int")
+    r = cochran_armitage(base).collect()[0]
+    assert r.z > 0 and r.rejected is True
+    # all failures -> degenerate NULL/False
+    base0 = spark.createDataFrame(
+        [("a", s, 0) for s in range(1, 8)],
+        "event_type string, s long, y int",
+    )
+    r0 = cochran_armitage(base0).collect()[0]
+    assert r0.z is None and r0.rejected is False
+    # single score level -> score variance 0 -> NULL/False
+    base1 = spark.createDataFrame(
+        [("a", 3, i % 2) for i in range(10)],
+        "event_type string, s long, y int",
+    )
+    r1 = cochran_armitage(base1).collect()[0]
+    assert r1.z is None and r1.rejected is False
+
+
+# --------------------------------------------------------------------------
+# Hosmer–Lemeshow
+# --------------------------------------------------------------------------
+
+
+def test_hosmer_lemeshow_matches_python_reference(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        "l_discount", "l_returnflag"
+    ).collect()
+    grp: dict[int, list[int]] = {}
+    for r in li:
+        v = int(round(r.l_discount * 100))
+        g = grp.setdefault(v, [0, 0])
+        g[0] += 1
+        g[1] += 1 if r.l_returnflag == "R" else 0
+    s = 0.0
+    for v, (n_g, o_g) in grp.items():
+        pi = (v + 1) / 12
+        s += round((o_g - n_g * pi) ** 2 / (n_g * pi * (1 - pi)), 9)
+    row = get_query("eval_hosmer_lemeshow").fn(spark, sf_dir).collect()[0]
+    assert row.n == len(li) and row.n_groups == len(grp)
+    assert abs(row.hl_chi2 - round(s, 6)) < 1e-6
+    assert row.rejected == (s > 16.918977604620448)
+
+
+def test_hosmer_lemeshow_perfectly_calibrated(spark):
+    from avro_parquet_spark_example_spark.operators.rankstats import (
+        hosmer_lemeshow,
+    )
+
+    # O_g == n_g * pi exactly for every group -> chi2 == 0
+    rows = []
+    for v in range(0, 11):
+        n_g = 120  # divisible by 12 -> integer expected counts
+        o_g = n_g * (v + 1) // 12
+        rows += [(v, 1)] * o_g + [(v, 0)] * (n_g - o_g)
+    base = spark.createDataFrame(rows, "v long, pos int")
+    r = hosmer_lemeshow(base).collect()[0]
+    assert r.hl_chi2 == 0.0 and r.rejected is False

@@ -9,14 +9,7 @@ import math
 from collections import Counter
 
 from avro_parquet_spark_example_spark.registry import get_query
-
-
-def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet").collect()
-
-
-def _is_weekend(ts) -> int:
-    return 1 if ts.isoweekday() in (6, 7) else 0
+from tests._refs import _events, _is_weekend
 
 
 # --------------------------------------------------------------------------

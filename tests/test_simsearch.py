@@ -486,3 +486,27 @@ def test_silhouette_sample_is_deterministic(spark, sf_dir):
     )
     frac = len(ids1) / n_total
     assert 0.10 <= frac <= 0.45, frac
+
+
+def test_top2_pcs_orthogonal_and_consistent(spark, sf_dir):
+    """PC1 equals the standalone power-iteration query bit-for-bit; the
+    two emitted directions are near-orthogonal (|cos| small — the
+    per-round 9dp quantization bounds the residual) and non-degenerate."""
+    import math
+
+    rows = get_query("vec_top2_pcs").fn(spark, sf_dir).collect()
+    v1 = {r.pos: float(r.direction) for r in rows if r.pc == 1}
+    v2 = {r.pos: float(r.direction) for r in rows if r.pc == 2}
+    assert len(v1) == 64 and len(v2) == 64
+    standalone = {
+        r.pos: float(r.direction)
+        for r in get_query("vec_power_iteration_top_pc")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    assert v1 == standalone
+    dot = sum(v1[j] * v2[j] for j in v1)
+    n1 = math.sqrt(sum(x * x for x in v1.values()))
+    n2 = math.sqrt(sum(x * x for x in v2.values()))
+    assert n2 > 1e-6  # non-degenerate second direction
+    assert abs(dot / (n1 * n2)) < 1e-3, dot / (n1 * n2)

@@ -150,3 +150,35 @@ def test_stream_source_reads_directory_tables(spark, sf_dir, tmp_path):
     got = get_query("stream_tumbling").fn(spark, out).collect()
     assert len(got) > 0
     assert sum(r.n for r in got) == n
+
+
+def test_stream_dedup_elides_no_data_batch(spark, sf_dir):
+    """Append dropDuplicates emits rows WITH the data batch, so the r16
+    elision must leave exactly the data batch(es) — and the output stays
+    the full dedup (oracle-checked elsewhere; row count pinned here)."""
+    from avro_parquet_spark_example_spark.streaming import stateful
+
+    out = get_query("stream_watermark_dedup").fn(spark, sf_dir)
+    n = out.count()
+    assert n == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert stateful.LAST_STREAM_PROGRESS, "progress not captured"
+    data_batches = [
+        p for p in stateful.LAST_STREAM_PROGRESS if p.get("numInputRows")
+    ]
+    assert len(stateful.LAST_STREAM_PROGRESS) == len(data_batches), (
+        "no-data batch ran despite final_no_data_batch=False"
+    )
+
+
+def test_stream_session_keeps_no_data_batch(spark, sf_dir):
+    """Append session windows emit ON watermark advance: the trailing
+    no-data batch must STAY (eliding it would withhold every session
+    closed by the final watermark — a correctness bug, not a tuning)."""
+    from avro_parquet_spark_example_spark.streaming import stateful
+
+    get_query("stream_session_windowed").fn(spark, sf_dir).count()
+    progress = stateful.LAST_STREAM_PROGRESS
+    assert any(p.get("numInputRows") == 0 for p in progress), (
+        "trailing watermark-advance batch missing on an append session "
+        "window"
+    )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import get_query
+from tests._refs import _frame
 
 
 def _assert_ewma_is_recursion(spark, sf_dir, rel_tol):
@@ -286,3 +287,100 @@ def test_holt_linear_matches_python_recursion(spark, sf_dir):
     assert got == want
     # the recursion genuinely exercises negative-trend division
     assert any(tr < 0 for _, _, tr in want.values())
+
+
+def test_holt_winters_matches_python_reference(spark, sf_dir):
+    """The fixed-point Holt-Winters recursion (level/trend/seasonal-queue,
+    alpha=beta=gamma=1/4, sign-safe truncating /4) recomputed in plain
+    Python from the raw daily grid must match the engine bit-for-bit."""
+    from collections import defaultdict
+
+    from avro_parquet_spark_example_spark.operators.timeseries import (
+        _HOLT_S,
+        _HW_M,
+    )
+
+    rows = get_query("ts_holt_winters").fn(spark, sf_dir).collect()
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
+    daily: dict[str, dict] = defaultdict(lambda: defaultdict(int))
+    for r in ev:
+        daily[r.event_type][r.ts.date()] += 1
+
+    def sdiv4(x: int) -> int:
+        return x // 4 if x >= 0 else -((-x) // 4)
+
+    want = {}
+    for et, days in daily.items():
+        grid = sorted(days.items())
+        if len(grid) <= _HW_M:
+            continue
+        ys = [n * _HOLT_S for _, n in grid[:_HW_M]]
+        lvl = sum(ys) // _HW_M
+        trd = 0
+        season = [y - lvl for y in ys]
+        for day, n in grid[_HW_M:]:
+            shat = season[0]
+            lvl_t = sdiv4(n * _HOLT_S - shat + 3 * (lvl + trd))
+            trd_t = sdiv4(lvl_t - lvl + 3 * trd)
+            sea_t = sdiv4(n * _HOLT_S - lvl_t + 3 * shat)
+            want[(et, day)] = (n, lvl_t, trd_t, sea_t)
+            season = season[1:] + [sea_t]
+            lvl, trd = lvl_t, trd_t
+    assert len(rows) == len(want)
+    for r in rows:
+        assert want[(r.event_type, r.day)] == (
+            r.n,
+            r.level_micro,
+            r.trend_micro,
+            r.season_micro,
+        ), (r.event_type, r.day)
+
+
+def test_cusum_constant_series_is_flat(spark):
+    """A constant daily series has zero CUSUM excursion by definition —
+    via the registered query's own fold machinery on a constructed grid
+    (mu == every x, so every step clamps at 0)."""
+    from pyspark.sql import functions as F
+
+    daily = _frame(
+        spark,
+        [("t", f"2024-01-{d:02d}", 7) for d in range(1, 15)],
+        "event_type string, day string, n long",
+    ).select("event_type", F.col("day").cast("date").alias("day"), "n")
+    stats = daily.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.expr("CAST(sum(n) * 1000000 div count(*) AS BIGINT)").alias("mu6"),
+    )
+    grids = (
+        daily.groupBy("event_type")
+        .agg(F.sort_array(F.collect_list(F.struct("day", "n"))).alias("g"))
+        .join(stats, "event_type")
+    )
+    folded = grids.withColumn(
+        "out",
+        F.expr(
+            """
+            aggregate(
+                g,
+                struct(CAST(0 AS BIGINT) AS cs, CAST(-1 AS BIGINT) AS best,
+                       CAST(NULL AS DATE) AS bestday),
+                (acc, x) -> struct(
+                    GREATEST(CAST(0 AS BIGINT),
+                             acc.cs + x.n * 1000000 - mu6) AS cs,
+                    CASE WHEN GREATEST(CAST(0 AS BIGINT),
+                                       acc.cs + x.n * 1000000 - mu6)
+                              > acc.best
+                         THEN GREATEST(CAST(0 AS BIGINT),
+                                       acc.cs + x.n * 1000000 - mu6)
+                         ELSE acc.best END AS best,
+                    CASE WHEN GREATEST(CAST(0 AS BIGINT),
+                                       acc.cs + x.n * 1000000 - mu6)
+                              > acc.best
+                         THEN x.day ELSE acc.bestday END AS bestday
+                )
+            )
+            """
+        ),
+    ).collect()[0]
+    assert folded["out"]["best"] == 0
+    assert str(folded["out"]["bestday"]) == "2024-01-01"
