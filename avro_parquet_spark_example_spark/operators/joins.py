@@ -360,8 +360,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns every subsequent fact⋈fact join at 100 TB into a zero-shuffle
     merge. The one-time bucketed write is the amortized cost."""
     from avro_parquet_spark_example_spark.sources.catalog import scratch_suffix
+    from avro_parquet_spark_example_spark.sources.scans import _scratch
 
-    scratch = "/tmp/avro_parquet_spark_example_spark_scratch"
     # injective per-sf_dir token — plain sanitization would alias e.g.
     # '/data/sf0.01' and '/data/sf0_01' onto one bucketed table
     suffix = scratch_suffix(sf_dir)
@@ -377,7 +377,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .repartition(8, F.col(key))
                 .write.bucketBy(8, key)
                 .sortBy(key)
-                .option("path", f"{scratch}/{name}")
+                .option("path", _scratch(name, sf_dir))
                 .mode("overwrite")
                 .saveAsTable(name)
             )

@@ -73,6 +73,12 @@ from typing import Any, BinaryIO, Callable, Iterable, Iterator, NamedTuple
 import numpy as np
 import pyarrow as pa
 
+from avro_parquet_spark_example_spark.sources.avro_schema import (
+    _PRIMITIVES,
+    _fullname_and_ns,
+    _resolve_ref,
+)
+
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
 
@@ -183,20 +189,35 @@ def write_bytes(fo: BinaryIO, b: bytes) -> None:
 # Schemas compile ONCE into closures (decoder: fo -> value, encoder:
 # (fo, value) -> None); per-record decode then runs no schema dispatch.
 # That matters because the decoder executes inside every read task.
+# Records, enums and fixed register their codec in ``named`` under their
+# fullname, and a bare-name reference resolves through avro_schema's naming
+# rule against the enclosing namespace ``ns``, as Java's Schema.toString()
+# writes the second use of a named type.
 
 
 def _logical(node: dict) -> str | None:
     return node.get("logicalType") if isinstance(node, dict) else None
 
 
-def _compile_decoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryIO], Any]:
+def _register(
+    named: dict[str, Callable], node: dict, ns: str | None, codec: Callable
+) -> Callable:
+    """Register a named type's codec under its fullname; return the codec."""
+    fullname, _ = _fullname_and_ns(node, ns)
+    if fullname:
+        named[fullname] = codec
+    return codec
+
+
+def _compile_decoder(
+    node: Any, named: dict[str, Callable], ns: str | None
+) -> Callable[[BinaryIO], Any]:
     if isinstance(node, str):
-        if node in named:
-            return lambda fo: named[node](fo)
-        t = node
-        node = {"type": t}
+        if node not in _PRIMITIVES:
+            return _resolve_ref(node, named, ns)
+        node = {"type": node}
     if isinstance(node, list):  # union: varint branch index + value
-        branches = [_compile_decoder(b, named) for b in node]
+        branches = [_compile_decoder(b, named, ns) for b in node]
 
         def dec_union(fo: BinaryIO) -> Any:
             idx = read_long(fo)
@@ -244,8 +265,8 @@ def _compile_decoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
                 unscaled = int.from_bytes(_read_exact(fo, size), "big", signed=True)
                 return Decimal(unscaled).scaleb(-scale)
 
-            return dec_fixed_decimal
-        return lambda fo: _read_exact(fo, size)
+            return _register(named, node, ns, dec_fixed_decimal)
+        return _register(named, node, ns, lambda fo: _read_exact(fo, size))
     if t == "enum":
         symbols = node["symbols"]
 
@@ -255,9 +276,9 @@ def _compile_decoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
                 raise AvroBinaryError(f"enum index {i} out of range")
             return symbols[i]
 
-        return dec_enum
+        return _register(named, node, ns, dec_enum)
     if t == "array":
-        item = _compile_decoder(node["items"], named)
+        item = _compile_decoder(node["items"], named, ns)
 
         def dec_array(fo: BinaryIO) -> list:
             out = []
@@ -273,7 +294,7 @@ def _compile_decoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
 
         return dec_array
     if t == "map":
-        val = _compile_decoder(node["values"], named)
+        val = _compile_decoder(node["values"], named, ns)
 
         def dec_map(fo: BinaryIO) -> dict:
             out: dict[str, Any] = {}
@@ -292,26 +313,28 @@ def _compile_decoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
 
         return dec_map
     if t == "record":
-        fullname = _record_fullname(node)
+        _, inner_ns = _fullname_and_ns(node, ns)
         field_decs: list[Callable] = []
 
         def dec_record(fo: BinaryIO) -> tuple:
             return tuple(d(fo) for d in field_decs)
 
-        named[fullname] = dec_record  # registered before fields: recursion-safe
+        _register(named, node, ns, dec_record)  # before fields: recursion-safe
         for f in node["fields"]:
-            field_decs.append(_compile_decoder(f["type"], named))
+            field_decs.append(_compile_decoder(f["type"], named, inner_ns))
         return dec_record
     raise AvroBinaryError(f"unsupported Avro type: {t!r}")
 
 
-def _compile_encoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryIO, Any], None]:
+def _compile_encoder(
+    node: Any, named: dict[str, Callable], ns: str | None
+) -> Callable[[BinaryIO, Any], None]:
     if isinstance(node, str):
-        if node in named:
-            return lambda fo, v: named[node](fo, v)
+        if node not in _PRIMITIVES:
+            return _resolve_ref(node, named, ns)
         node = {"type": node}
     if isinstance(node, list):
-        branches = [_compile_encoder(b, named) for b in node]
+        branches = [_compile_encoder(b, named, ns) for b in node]
         null_idx = next(
             (i for i, b in enumerate(node) if b == "null" or b == {"type": "null"}), None
         )
@@ -371,12 +394,12 @@ def _compile_encoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
                 raise AvroBinaryError(f"fixed size mismatch: {len(v)} != {size}")
             fo.write(v)
 
-        return enc_fixed
+        return _register(named, node, ns, enc_fixed)
     if t == "enum":
         index = {s: i for i, s in enumerate(node["symbols"])}
-        return lambda fo, v: write_long(fo, index[v])
+        return _register(named, node, ns, lambda fo, v: write_long(fo, index[v]))
     if t == "array":
-        item = _compile_encoder(node["items"], named)
+        item = _compile_encoder(node["items"], named, ns)
 
         def enc_array(fo: BinaryIO, v: list) -> None:
             if v:
@@ -387,7 +410,7 @@ def _compile_encoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
 
         return enc_array
     if t == "map":
-        val = _compile_encoder(node["values"], named)
+        val = _compile_encoder(node["values"], named, ns)
 
         def enc_map(fo: BinaryIO, v: dict) -> None:
             if v:
@@ -399,7 +422,7 @@ def _compile_encoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
 
         return enc_map
     if t == "record":
-        fullname = _record_fullname(node)
+        _, inner_ns = _fullname_and_ns(node, ns)
         field_encs: list[Callable] = []
         fields = node["fields"]
 
@@ -412,31 +435,23 @@ def _compile_encoder(node: Any, named: dict[str, Callable]) -> Callable[[BinaryI
                 for x, e in zip(v, field_encs):
                     e(fo, x)
 
-        named[fullname] = enc_record
+        _register(named, node, ns, enc_record)
         for f in fields:
-            field_encs.append(_compile_encoder(f["type"], named))
+            field_encs.append(_compile_encoder(f["type"], named, inner_ns))
         return enc_record
     raise AvroBinaryError(f"unsupported Avro type: {t!r}")
-
-
-def _record_fullname(node: dict) -> str:
-    name = node["name"]
-    ns = node.get("namespace")
-    if "." in name or not ns:
-        return name
-    return f"{ns}.{name}"
 
 
 def compile_decoder(schema: str | dict | list) -> Callable[[BinaryIO], Any]:
     if isinstance(schema, str) and schema.lstrip()[:1] in "[{\"":
         schema = json.loads(schema)
-    return _compile_decoder(schema, {})
+    return _compile_decoder(schema, {}, None)
 
 
 def compile_encoder(schema: str | dict | list) -> Callable[[BinaryIO, Any], None]:
     if isinstance(schema, str) and schema.lstrip()[:1] in "[{\"":
         schema = json.loads(schema)
-    return _compile_encoder(schema, {})
+    return _compile_encoder(schema, {}, None)
 
 
 # ---------------------------------------------------------------------------
@@ -474,8 +489,9 @@ def _record_fields(schema_json: str) -> tuple[_Field, ...]:
     # included) is defined before a field refers to it
     dec_named: dict[str, Callable] = {}
     enc_named: dict[str, Callable] = {}
-    _compile_decoder(schema, dec_named)
-    _compile_encoder(schema, enc_named)
+    _compile_decoder(schema, dec_named, None)
+    _compile_encoder(schema, enc_named, None)
+    _, ns = _fullname_and_ns(schema, None)
     fields = []
     for f in schema["fields"]:
         node = inner = f["type"]
@@ -496,8 +512,8 @@ def _record_fields(schema_json: str) -> tuple[_Field, ...]:
                 nullable and kernel is not None,
                 null_idx,
                 value_idx,
-                _compile_decoder(node, dec_named),
-                _compile_encoder(node, enc_named),
+                _compile_decoder(node, dec_named, ns),
+                _compile_encoder(node, enc_named, ns),
             )
         )
     return tuple(fields)

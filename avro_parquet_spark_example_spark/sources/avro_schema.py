@@ -23,9 +23,10 @@ environment). Full Avro 1.x type surface:
   logical types     decimal / date / time-millis|micros /
                      timestamp-millis|micros / local-timestamp-*
 
-Avro file IO is out of scope offline (no spark-avro jar is bundled); on a
-networked cluster add ``--packages org.apache.spark:spark-avro_2.13:<ver>``
-and ``spark.read.format("avro")`` composes with everything here.
+Avro files themselves are read and written by ``avro_binary`` (the binary
+codec and object container format) and ``avro_datasource`` (the ``avrofile``
+Spark data source and ``write_distributed``), which declare their Spark
+schema through :func:`parse_avro_schema`.
 """
 
 from __future__ import annotations
@@ -78,13 +79,14 @@ def parse_avro_schema(schema: str | dict | list) -> T.StructType:
     return dt
 
 
-def _resolve_ref(ref: str, named: dict[str, T.DataType], ns: str | None) -> T.DataType:
+def _resolve_ref(ref: str, named: dict[str, Any], ns: str | None) -> Any:
     """Resolve a named-type reference per the Avro spec: a dotted name is a
     fullname looked up as-is; a bare name resolves relative to the enclosing
     namespace first, then the null namespace. Named types are registered
     under fullname ONLY — two records sharing a simple name in different
     namespaces stay distinct instead of the later silently shadowing the
-    earlier."""
+    earlier. ``named`` maps fullnames to Spark types here and to compiled
+    codecs in ``avro_binary``, so both follow one naming rule."""
     if "." in ref:
         if ref in named:
             return named[ref]

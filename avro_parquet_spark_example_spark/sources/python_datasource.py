@@ -273,25 +273,19 @@ def pysource_custom_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization); commit messages are O(tasks). In local mode the
     tasks share a filesystem; a production sink targets a shared store —
     the two-phase structure is identical."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from avro_parquet_spark_example_spark.sources.catalog import (
-        load,
-        scratch_suffix,
-    )
+    from avro_parquet_spark_example_spark.sources.catalog import load
+    from avro_parquet_spark_example_spark.sources.scans import _scratch
 
     if not getattr(spark, "_pycsvsink_registered", False):
         spark.dataSource.register(CsvSinkDataSource)
         spark._pycsvsink_registered = True
 
-    out_dir = os.path.join(
-        "/tmp/avro_parquet_spark_example_spark_scratch",
-        "pycsvsink_" + scratch_suffix(sf_dir),
-    )
+    out_dir = _scratch("pycsvsink", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     d = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     d.write.format("pycsvsink").option("path", out_dir).mode("append").save()

@@ -41,3 +41,8 @@ def _durations(spark, sf_dir):
 
 def _frame(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
+
+def _type1(xs: list[int], q: int) -> int:
+    """Smallest value whose running count reaches ceil(q·n/100)."""
+    n = len(xs)
+    return xs[(q * n + 99) // 100 - 1]

@@ -1,7 +1,9 @@
 """Aggregate operators (operators/aggregates.py): the Theil index against an
 independent Python reference over the collected fixture (the oracle pins
 cross-engine equality; this pins the math), plus boundary pins on hand-built
-frames for the rank correlations, HHI and mutual information."""
+frames for the rank correlations, HHI and mutual information. The robust
+statistics (quantile bands, trimmed/winsorized means, MAD outliers,
+Hodges–Lehmann) get the same pair: a Python reference and closed forms."""
 
 from __future__ import annotations
 
@@ -14,7 +16,7 @@ from avro_parquet_spark_example_spark.operators.aggregates import (
     spearman_rho,
 )
 from avro_parquet_spark_example_spark.registry import get_query
-from tests._refs import _frame
+from tests._refs import _frame, _type1
 
 
 def test_theil_matches_python_reference(spark, sf_dir):
@@ -93,3 +95,149 @@ def test_mutual_information_at_the_boundaries(spark):
     copy = _frame(spark, copy_rows, "seg int, x string, y string")
     got = mutual_information(copy, "x", "y", "seg").collect()[0].mi_nats
     assert abs(got - round(math.log(2), 6)) < 1e-6
+
+
+def _quantities(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").collect()
+    by_flag: dict[str, list[int]] = {}
+    for r in li:
+        by_flag.setdefault(r.l_returnflag, []).append(int(r.l_quantity))
+    for xs in by_flag.values():
+        xs.sort()
+    return by_flag
+
+
+def test_quantile_bands_match_python_reference(spark, sf_dir):
+    by_flag = _quantities(spark, sf_dir)
+    rows = {
+        r.l_returnflag: r
+        for r in get_query("agg_quantile_bands_exact")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    assert set(rows) == set(by_flag)
+    for flag, xs in by_flag.items():
+        r = rows[flag]
+        assert r.n == len(xs)
+        for q in (25, 50, 75, 90):
+            assert r[f"p{q}"] == _type1(xs, q), (flag, q)
+
+
+def test_trimmed_winsorized_match_python_reference(spark, sf_dir):
+    by_flag = _quantities(spark, sf_dir)
+    rows = {
+        r.l_returnflag: r
+        for r in get_query("agg_trimmed_winsorized_mean")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    for flag, xs in by_flag.items():
+        n = len(xs)
+        k = n // 20
+        mid = xs[k : n - k]
+        tm = sum(mid) / (n - 2 * k)
+        wm = (sum(mid) + k * xs[k] + k * xs[n - k - 1]) / n
+        r = rows[flag]
+        assert (r.n, r.n_trim) == (n, k)
+        assert abs(r.trimmed_mean - round(tm, 6)) < 1e-9
+        assert abs(r.winsorized_mean - round(wm, 6)) < 1e-9
+
+
+def _median_type1(xs: list[int]) -> int:
+    return xs[(len(xs) + 1) // 2 - 1]
+
+
+def test_mad_and_outliers_match_python_reference(spark, sf_dir):
+    by_flag = _quantities(spark, sf_dir)
+    mads = {
+        r.l_returnflag: r
+        for r in get_query("agg_mad_robust").fn(spark, sf_dir).collect()
+    }
+    outs = {
+        r.l_returnflag: r
+        for r in get_query("dq_outlier_mad_flags").fn(spark, sf_dir).collect()
+    }
+    for flag, xs in by_flag.items():
+        med = _median_type1(xs)
+        devs = sorted(abs(x - med) for x in xs)
+        mad = _median_type1(devs)
+        r = mads[flag]
+        assert (r.n, r.median, r.mad) == (len(xs), med, mad)
+        n_out = sum(1 for x in xs if abs(x - med) > 3 * mad)
+        o = outs[flag]
+        assert (o.n, o.n_outlier) == (len(xs), n_out)
+        assert abs(o.outlier_share - round(n_out / len(xs), 6)) < 1e-9
+
+
+def test_hodges_lehmann_matches_python_reference(spark, sf_dir):
+    from collections import Counter
+
+    by_flag = _quantities(spark, sf_dir)
+    xs, ys = by_flag["R"], by_flag["A"]
+    cx, cy = Counter(xs), Counter(ys)
+    diff = Counter()
+    for vx, fx in cx.items():
+        for vy, fy in cy.items():
+            diff[vx - vy] += fx * fy
+    total = sum(diff.values())
+    cum = 0
+    hl = None
+    for d in sorted(diff):
+        cum += diff[d]
+        if 2 * cum >= total:
+            hl = d
+            break
+    row = get_query("agg_hodges_lehmann_shift").fn(spark, sf_dir).collect()[0]
+    assert (row.n_x, row.n_y, row.hl_shift) == (len(xs), len(ys), hl)
+
+
+def test_robust_stats_closed_form_boundaries(spark):
+    """Degenerate-input pins: MAD of a constant column is 0, a group's
+    HL shift against itself is 0, trimming nothing reproduces the plain
+    mean, and every quantile of a constant column is that constant."""
+    from avro_parquet_spark_example_spark.engine import Engine
+
+    eng = Engine(spark=spark)
+    const = spark.createDataFrame(
+        [("g", 7)] * 10, "grp string, v long"
+    )
+    r = eng.mad(const, group="grp", value="v").collect()[0]
+    assert (r.median, r.mad) == (7, 0)
+    q = eng.quantile_bands(const, group="grp", value="v").collect()[0]
+    assert (q.p25, q.p50, q.p75, q.p90) == (7, 7, 7, 7)
+
+    mixed = spark.createDataFrame(
+        [("g", v) for v in (1, 2, 2, 3, 9)], "grp string, v long"
+    )
+    t = eng.trimmed_mean(
+        mixed, group="grp", value="v", trim_denom=100
+    ).collect()[0]
+    # k = 5 div 100 = 0: nothing trimmed → both estimates equal the mean
+    assert t.n_trim == 0
+    assert abs(t.trimmed_mean - 3.4) < 1e-9
+    assert abs(t.winsorized_mean - 3.4) < 1e-9
+
+    hl = eng.hl_shift(
+        mixed.select("v"), mixed.select("v"), value="v"
+    ).collect()[0]
+    assert hl.hl_shift == 0
+
+
+def test_median_ci_survives_flag_and_v_names(spark):
+    from avro_parquet_spark_example_spark.operators.aggregates import (
+        median_ci,
+    )
+
+    # group column named 'v', value column named 'flag' — the exact
+    # collision class the r13 ADVICE flagged
+    df = spark.createDataFrame(
+        [("a", x) for x in range(1, 102)] + [("b", x) for x in range(5, 16)],
+        "v string, flag int",
+    )
+    got = {r.v: r for r in median_ci(df, "v", "flag").collect()}
+    assert got["a"].median == 51 and got["a"].n == 101
+    assert got["b"].median == 10 and got["b"].n == 11
+    # plain names still work
+    df2 = df.withColumnRenamed("v", "g").withColumnRenamed("flag", "x")
+    got2 = {r.g: r.median for r in median_ci(df2, "g", "x").collect()}
+    assert got2 == {"a": 51, "b": 10}

@@ -53,6 +53,11 @@ FULL_SCHEMA = {
             "type": "record", "name": "Inner",
             "fields": [{"name": "a", "type": "long"},
                        {"name": "b", "type": ["null", "double"]}]}},
+        # second uses of named types: a bare name resolves in the enclosing
+        # namespace (Java writes these), a dotted name is a fullname
+        {"name": "f_enum_ref", "type": "Color"},
+        {"name": "f_fixed_ref", "type": "F8"},
+        {"name": "f_nested_ref", "type": "example.avro.Inner"},
     ],
 }
 
@@ -78,6 +83,9 @@ def _mk_row(i: int) -> tuple:
         i * 86_399_999 % 86_400_000_000,
         Decimal(i * 100 - 5000).scaleb(-2),
         (i * 2, None if i % 2 else float(i)),
+        ["BLUE", "RED", "GREEN"][i % 3],
+        bytes([(i * 3) % 256]) * 8,
+        (-i, float(i) / 2 if i % 2 else None),
     )
 
 
@@ -100,11 +108,13 @@ def _edge_row(i: int, **values) -> tuple:
 EDGE_ROWS = [
     _edge_row(1, f_long=-(2**63), f_int=-(2**31), f_float=float("nan"),
               f_double=float("nan"), f_str="", f_opt=None, f_bytes=b"",
-              f_nested=(0, None), f_time_ms=0, f_time_us=0),
+              f_nested=(0, None), f_time_ms=0, f_time_us=0,
+              f_fixed_ref=b"\x00" * 8, f_nested_ref=(-(2**63), None)),
     _edge_row(2, f_long=2**63 - 1, f_int=2**31 - 1, f_float=float("inf"),
               f_double=float("-inf"), f_str="żółw · 日本語 · \U0001f980",
               f_opt="", f_nested=(-(2**63), -0.0), f_time_ms=86_399_999,
-              f_time_us=86_399_999_999),
+              f_time_us=86_399_999_999, f_enum_ref="GREEN",
+              f_fixed_ref=b"\xff" * 8, f_nested_ref=(2**63 - 1, -0.0)),
     _edge_row(3, f_float=-0.0, f_double=-0.0, f_str="é", f_opt="ünï",
               f_nested=(2**63 - 1, float("nan"))),
     _edge_row(4, f_float=float("-inf"), f_double=float("inf"), f_opt=None),

@@ -131,3 +131,35 @@ def test_checkpoint_heavy_queries_leave_no_oversized_blocks(spark, sf_dir):
         if i.memSize() + i.diskSize() > cap
     ]
     assert not big, f"corpus-scale persisted blocks survived: {big}"
+
+
+def test_kcenter_leaves_no_cached_blocks(spark, sf_dir):
+    """ADVICE r11 #2 regression: kcenter_greedy persisted its final
+    running-min frame and never released it — in a long single-JVM
+    session each call leaked a corpus-sized DISK_ONLY block. After the
+    fix, repeated calls must leave the storage layer exactly as they
+    found it."""
+    from avro_parquet_spark_example_spark.operators.clustering import (
+        kcenter_greedy,
+    )
+    from avro_parquet_spark_example_spark.sources.catalog import load
+
+    # Leak detection is by RDD ID, not by global count: other operators'
+    # eager localCheckpoints (r15) leave persisted RDDs that the async
+    # ContextCleaner releases at unpredictable times, so the total count
+    # drifts DOWN mid-test (observed 119 -> 115) even though kcenter
+    # leaks nothing. A NEW id surviving a call is exactly the ADVICE
+    # r11 #2 regression; ids vanishing are other frames being cleaned.
+    def cached_ids() -> set:
+        return set(
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+        )
+
+    before = cached_ids()
+    pool = load(spark, sf_dir, "embeddings").limit(200)
+    for _ in range(3):
+        assert kcenter_greedy(pool, k=4).count() == 4
+        leaked = cached_ids() - before
+        assert not leaked, (
+            f"kcenter_greedy left persisted blocks behind: {leaked}"
+        )

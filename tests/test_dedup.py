@@ -696,3 +696,56 @@ def test_prefix_filter_candidates_prune(spark, sf_dir):
         ).count()
 
     assert fanout(prefix) < fanout(toks) / 2
+
+
+def test_cluster_size_histogram_matches_python_reference(spark, sf_dir):
+    from collections import Counter
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    keys = [r.text.strip().lower() for r in docs]
+    keys += [r.text.strip().lower() for r in docs if r.doc_id < 50]
+    sizes = Counter(Counter(keys).values())
+    got = {
+        r.cluster_size: (r.n_clusters, r.n_docs)
+        for r in get_query("dedup_cluster_size_histogram")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    assert got == {
+        sz: (cnt, sz * cnt) for sz, cnt in sizes.items()
+    }
+    # conservation law: Σ n_docs == corpus + injected copies
+    assert sum(nd for _, nd in got.values()) == len(keys)
+
+
+# --------------------------------------------------------------------------
+# connected_components observability (r14, the x100-leg instrumentation)
+# --------------------------------------------------------------------------
+
+
+def test_cc_observer_local_and_iterative(spark):
+    from avro_parquet_spark_example_spark.operators import dedup as dd
+
+    # small edge set -> driver union-find, mode 'local'
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "a long, b long"
+    )
+    labels = {r.id: r.cluster_id for r in dd.connected_components(edges).collect()}
+    assert dd.LAST_CC_INFO["mode"] == "local"
+    assert dd.LAST_CC_INFO["probe_edges"] == 3
+    assert labels[1] == labels[2] == labels[3] == 1
+    assert labels[10] == labels[11] == 10
+
+    # force the iterative path with a tiny threshold: a diameter-1
+    # clique must converge in 2 rounds (1 propagating + 1 confirming)
+    clique = spark.createDataFrame(
+        [(a, b) for a in range(5) for b in range(a + 1, 5)],
+        "a long, b long",
+    )
+    labels2 = {
+        r.id: r.cluster_id
+        for r in dd.connected_components(clique, local_threshold=2).collect()
+    }
+    assert dd.LAST_CC_INFO["mode"] == "iterative"
+    assert dd.LAST_CC_INFO["rounds"] == 2
+    assert set(labels2.values()) == {0}

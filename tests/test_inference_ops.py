@@ -6,8 +6,10 @@ from __future__ import annotations
 import math
 from collections import Counter
 
+import pytest
+
 from avro_parquet_spark_example_spark.registry import get_query
-from tests._refs import _events
+from tests._refs import _events, _is_weekend
 
 
 # --------------------------------------------------------------------------
@@ -1404,3 +1406,668 @@ def test_by_fdr_never_rejects_more_than_bh(spark, sf_dir):
     # step-up coherence: rejections are exactly ranks 1..k
     rej = sorted(r.p_rank for r in by.values() if r.rejected)
     assert rej == list(range(1, len(rej) + 1))
+
+
+# --------------------------------------------------------------------------
+# McNemar
+# --------------------------------------------------------------------------
+
+
+def test_mcnemar_matches_python_reference(spark, sf_dir):
+    b: Counter = Counter()
+    c: Counter = Counter()
+    n: Counter = Counter()
+    for r in _events(spark, sf_dir):
+        ya = 1 if r.value > 50 else 0
+        yb = _is_weekend(r.ts)
+        n[r.event_type] += 1
+        if ya and not yb:
+            b[r.event_type] += 1
+        if yb and not ya:
+            c[r.event_type] += 1
+    got = {
+        r.event_type: r
+        for r in get_query("eval_mcnemar_paired").fn(spark, sf_dir).collect()
+    }
+    assert set(got) == set(n)
+    for t in n:
+        g = got[t]
+        assert (g.n, g.b, g.c) == (n[t], b[t], c[t])
+        bc = b[t] + c[t]
+        assert abs(g.chi2 - round((b[t] - c[t]) ** 2 / bc, 6)) < 1e-9
+        cc = max(abs(b[t] - c[t]) - 1, 0) ** 2 / bc
+        assert abs(g.chi2_cc - round(cc, 6)) < 1e-9
+        assert g.rejected == (cc > 3.841458820694124)
+
+
+def test_mcnemar_closed_forms():
+    # symmetric discordance -> 0; all-one-sided -> (b-1)^2/b with CC.
+    assert (10 - 10) ** 2 / 20 == 0.0
+    b, c = 10, 0
+    assert (abs(b - c) - 1) ** 2 / (b + c) == 8.1
+    # CC never exceeds the uncorrected statistic
+    for b, c in ((5, 1), (9, 3), (100, 40)):
+        assert (abs(b - c) - 1) ** 2 / (b + c) <= (b - c) ** 2 / (b + c)
+
+
+# --------------------------------------------------------------------------
+# Cochran's Q
+# --------------------------------------------------------------------------
+
+
+def _q_stat(rows):
+    k = 3
+    ca = sum(a for a, _, _ in rows)
+    cb = sum(bb for _, bb, _ in rows)
+    cc = sum(cv for _, _, cv in rows)
+    g = ca + cb + cc
+    sr2 = sum((a + bb + cv) ** 2 for a, bb, cv in rows)
+    den = k * g - sr2
+    if den == 0:
+        return None
+    return (k - 1) * (k * (ca * ca + cb * cb + cc * cc) - g * g) / den
+
+
+def test_cochran_q_matches_python_reference(spark, sf_dir):
+    per: dict[str, list] = {}
+    for r in _events(spark, sf_dir):
+        per.setdefault(r.event_type, []).append(
+            (
+                1 if r.value > 50 else 0,
+                _is_weekend(r.ts),
+                1 if int(r.event_id) % 2 == 0 else 0,
+            )
+        )
+    got = {
+        r.event_type: r
+        for r in get_query("eval_cochran_q").fn(spark, sf_dir).collect()
+    }
+    for t, rows in per.items():
+        g = got[t]
+        q = _q_stat(rows)
+        assert g.n == len(rows)
+        assert abs(g.q_stat - round(q, 6)) < 1e-9, t
+        assert g.rejected == (q > 5.991464547107979)
+
+
+def test_cochran_q_closed_forms():
+    # equal column totals with discordant rows -> Q = 0 (no marginal
+    # differences; note fully concordant rows are degenerate, below)
+    assert _q_stat([(1, 0, 0), (0, 1, 0), (0, 0, 1)]) == 0.0
+    # one dominant column inflates Q
+    q = _q_stat([(1, 0, 0)] * 6 + [(1, 1, 1)] * 2 + [(0, 0, 0)] * 2)
+    assert q > 5.991  # A passes everywhere B/C don't: rejected
+    # all-equal rows (r_i = 0 or 3 only) -> denominator 0 -> undefined
+    assert _q_stat([(1, 1, 1), (0, 0, 0)]) is None
+
+
+# --------------------------------------------------------------------------
+# Krippendorff's alpha (nominal)
+# --------------------------------------------------------------------------
+
+
+def _kripp_ref(items):
+    m = len(items[0])
+    big_n = len(items)
+    s_in = 0
+    n_c: Counter = Counter()
+    for it in items:
+        cnt = Counter(it)
+        s_in += sum(v * v for v in cnt.values())
+        n_c.update(cnt)
+    n_tot = big_n * m
+    don = big_n * m * m - s_in
+    den = n_tot * n_tot - sum(v * v for v in n_c.values())
+    d_o = don / (big_n * m * (m - 1))
+    d_e = den / (n_tot * (n_tot - 1))
+    return d_o, d_e, 1 - (don * n_tot * (n_tot - 1)) / (
+        big_n * m * (m - 1) * den
+    )
+
+
+def test_krippendorff_matches_python_reference(spark, sf_dir):
+    by_user: dict[int, list] = {}
+    for r in _events(spark, sf_dir):
+        by_user.setdefault(r.user_id, []).append(r)
+    items = []
+    for rs in by_user.values():
+        rs.sort(key=lambda r: (r.ts, r.event_id))
+        items.append([r.event_type for r in rs[:5]])
+    d_o, d_e, alpha = _kripp_ref(items)
+    row = get_query("stat_krippendorff_alpha").fn(spark, sf_dir).collect()[0]
+    assert row.n_items == len(items)
+    assert row.n_raters == 5
+    assert abs(row.d_o - d_o) < 1e-6
+    assert abs(row.d_e - d_e) < 1e-6
+    assert abs(row.alpha - alpha) < 1e-6
+
+
+def test_krippendorff_closed_forms():
+    # perfect agreement -> alpha = 1 regardless of mix
+    _, _, a1 = _kripp_ref([["x"] * 5, ["y"] * 5, ["x"] * 5])
+    assert abs(a1 - 1.0) < 1e-12
+    # alpha <= 1 always; systematic disagreement drives it negative
+    _, _, a2 = _kripp_ref(
+        [["a", "b", "a", "b", "a"], ["b", "a", "b", "a", "b"]]
+    )
+    assert a2 < 0.1
+    # vs Fleiss on the same data: same D_o-style numerator, different
+    # chance model — Krippendorff uses n_tot(n_tot-1) pairs (without
+    # replacement), so alpha > kappa slightly for finite samples.
+    items = [["a", "a", "a", "b", "b"], ["b", "b", "a", "a", "a"]]
+    _, _, alpha = _kripp_ref(items)
+    n, big_n = 5, 2
+    p_bar = sum(
+        (sum(v * v for v in Counter(it).values()) - n) / (n * (n - 1))
+        for it in items
+    ) / big_n
+    tot = Counter(c for it in items for c in it)
+    p_e = sum((v / (big_n * n)) ** 2 for v in tot.values())
+    kappa = (p_bar - p_e) / (1 - p_e)
+    assert alpha > kappa
+
+
+# --------------------------------------------------------------------------
+# DeLong SE
+# --------------------------------------------------------------------------
+
+
+def test_delong_matches_python_reference(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").collect()
+    pos, neg = [], []
+    for r in li:
+        v = int(round(r.l_discount * 100))
+        (pos if r.l_returnflag == "R" else neg).append(v)
+    m, n = len(pos), len(neg)
+    neg_cnt = Counter(neg)
+    pos_cnt = Counter(pos)
+    below = {}
+    tied_n = {}
+    acc = 0
+    for v in range(0, 101):
+        below[v] = acc
+        tied_n[v] = neg_cnt.get(v, 0)
+        acc += neg_cnt.get(v, 0)
+    above_p = {}
+    tied_p = {}
+    acc = 0
+    for v in range(100, -1, -1):
+        above_p[v] = acc
+        tied_p[v] = pos_cnt.get(v, 0)
+        acc += pos_cnt.get(v, 0)
+    v10 = [(below[v] + tied_n[v] / 2) / n for v in pos]
+    v01 = [(above_p[v] + tied_p[v] / 2) / m for v in neg]
+    auc = sum(v10) / m
+    assert abs(auc - sum(v01) / n) < 1e-9  # DeLong identity
+    s10 = sum((x - auc) ** 2 for x in v10) / (m - 1)
+    s01 = sum((x - auc) ** 2 for x in v01) / (n - 1)
+    se = math.sqrt(s10 / m + s01 / n)
+    row = get_query("eval_auc_delong_se").fn(spark, sf_dir).collect()[0]
+    assert (row.n_pos, row.n_neg) == (m, n)
+    assert abs(row.auc - auc) < 1e-6
+    assert abs(row.se_delong - se) < 1e-6
+    assert abs(row.ci_lo - (auc - 1.959963984540054 * se)) < 2e-6
+    assert abs(row.ci_hi - (auc + 1.959963984540054 * se)) < 2e-6
+
+
+def test_delong_consistent_with_bootstrap_and_exact(spark, sf_dir):
+    """The analytic CI and the cell-bootstrap CI estimate the same
+    sampling distribution; the point estimate is the exact midrank
+    AUC."""
+    d = get_query("eval_auc_delong_se").fn(spark, sf_dir).collect()[0]
+    e = get_query("eval_auc_exact").fn(spark, sf_dir).collect()[0]
+    assert abs(d.auc - e.auc) < 1e-6
+    b = get_query("eval_auc_bootstrap_cell_ci").fn(spark, sf_dir).collect()[0]
+    w_d = d.ci_hi - d.ci_lo
+    w_b = b.ci_hi - b.ci_lo
+    assert 0.5 < w_d / w_b < 2.0  # same order; bootstrap has MC noise
+    assert d.ci_lo <= d.auc <= d.ci_hi
+
+
+# --------------------------------------------------------------------------
+# Brier decomposition
+# --------------------------------------------------------------------------
+
+
+def test_brier_decomposition_matches_python_reference(spark, sf_dir):
+    per: dict[str, list] = {}
+    for r in _events(spark, sf_dir):
+        q = math.floor(r.value * 100.0 + 0.5)
+        per.setdefault(r.event_type, []).append((q, _is_weekend(r.ts)))
+    got = {
+        r.event_type: r
+        for r in get_query("eval_brier_decomposition")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    for t, rows in per.items():
+        n = len(rows)
+        brier = sum((q - 10000 * o) ** 2 for q, o in rows) / 1e8 / n
+        ob = sum(o for _, o in rows) / n
+        bins: dict[int, list] = {}
+        for q, o in rows:
+            bins.setdefault(min(9, q // 1000), []).append((q, o))
+        rel = sum(
+            round(
+                len(bs)
+                * (
+                    sum(q for q, _ in bs) / 10000.0 / len(bs)
+                    - sum(o for _, o in bs) / len(bs)
+                )
+                ** 2,
+                9,
+            )
+            for bs in bins.values()
+        ) / n
+        res = sum(
+            round(len(bs) * (sum(o for _, o in bs) / len(bs) - ob) ** 2, 9)
+            for bs in bins.values()
+        ) / n
+        unc = ob * (1 - ob)
+        g = got[t]
+        assert g.n == n
+        assert abs(g.brier - brier) < 1e-6
+        assert abs(g.reliability - rel) < 1e-6
+        assert abs(g.resolution - res) < 1e-6
+        assert abs(g.uncertainty - unc) < 1e-6
+        # Murphy identity up to within-bin variance (>= 0):
+        wbv = g.brier - (g.reliability - g.resolution + g.uncertainty)
+        assert wbv > -1e-5
+        assert g.resolution <= g.uncertainty + 1e-9  # RES bounded by UNC
+
+
+def test_brier_decomposition_closed_forms():
+    # perfectly calibrated constant forecast p = base rate: REL = 0,
+    # RES = 0, brier = UNC + within-bin variance (0 for binary-matching
+    # quantized p). With p = 0.3 and 30% outcomes in one bin:
+    rows = [(3000, 1)] * 3 + [(3000, 0)] * 7
+    n = len(rows)
+    ob = 0.3
+    rel = n * (3000 / 10000 - ob) ** 2 / n
+    assert rel == 0.0
+    brier = sum((q - 10000 * o) ** 2 for q, o in rows) / 1e8 / n
+    unc = ob * (1 - ob)
+    assert abs(brier - unc) < 1e-12  # identity: brier = UNC here
+
+
+# --------------------------------------------------------------------------
+# G-test
+# --------------------------------------------------------------------------
+
+
+def test_g_test_matches_python_reference(spark, sf_dir):
+    marg: dict[str, list] = {}
+    for r in _events(spark, sf_dir):
+        wk = _is_weekend(r.ts)
+        hi = 1 if r.value > 50 else 0
+        m = marg.setdefault(r.event_type, [0, 0, 0, 0])
+        m[0] += wk * hi
+        m[1] += wk
+        m[2] += hi
+        m[3] += 1
+    got = {
+        r.event_type: r
+        for r in get_query("stat_g_test").fn(spark, sf_dir).collect()
+    }
+    for t, (a, r1, c1, n) in marg.items():
+        s = 0.0
+        for o, rr, cc in (
+            (a, r1, c1),
+            (r1 - a, r1, n - c1),
+            (c1 - a, n - r1, c1),
+            (n - r1 - c1 + a, n - r1, n - c1),
+        ):
+            if o:
+                s += round(o * math.log(o * n / (rr * cc)), 9)
+        g2 = 2.0 * s
+        g = got[t]
+        assert g.n == n
+        assert abs(g.g_stat - round(g2, 6)) < 1e-9, t
+        assert g.rejected == (g2 > 3.841458820694124)
+
+
+def test_g_test_closed_forms():
+    # independence (perfectly proportional cells) -> G = 0
+    a, r1, c1, n = 25, 50, 50, 100  # E11 = 25 = O11
+    s = 0.0
+    for o, rr, cc in (
+        (a, r1, c1),
+        (r1 - a, r1, n - c1),
+        (c1 - a, n - r1, c1),
+        (n - r1 - c1 + a, n - r1, n - c1),
+    ):
+        s += o * math.log(o * n / (rr * cc))
+    assert abs(s) < 1e-12
+    # G ~ Pearson X^2 to first order on mild departures
+    a = 30
+    g2 = 2 * sum(
+        o * math.log(o * n / (rr * cc))
+        for o, rr, cc in (
+            (a, r1, c1),
+            (r1 - a, r1, n - c1),
+            (c1 - a, n - r1, c1),
+            (n - r1 - c1 + a, n - r1, n - c1),
+        )
+    )
+    x2 = sum(
+        (o - rr * cc / n) ** 2 / (rr * cc / n)
+        for o, rr, cc in (
+            (a, r1, c1),
+            (r1 - a, r1, n - c1),
+            (c1 - a, n - r1, c1),
+            (n - r1 - c1 + a, n - r1, n - c1),
+        )
+    )
+    assert abs(g2 - x2) / x2 < 0.05
+
+
+# --------------------------------------------------------------------------
+# Rank-biased overlap
+# --------------------------------------------------------------------------
+
+
+def _rbo_ref(l1, l2, p=0.9, k=50):
+    s1, s2 = set(), set()
+    trunc = 0.0
+    xd = 0
+    for d in range(1, k + 1):
+        s1.add(l1[d - 1])
+        s2.add(l2[d - 1])
+        xd = len(s1 & s2)
+        trunc += round(round((1 - p) * p ** (d - 1), 12) * xd / d, 9)
+    return trunc, xd, trunc + round(p**k, 12) * xd / k
+
+
+def test_rbo_matches_python_reference(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    by_chars = sorted(docs, key=lambda r: (-r.n_chars, r.doc_id))[:50]
+    by_tok = sorted(
+        docs, key=lambda r: (-len(r.text.split(" ")), r.doc_id)
+    )[:50]
+    trunc, xk, ext = _rbo_ref(
+        [r.doc_id for r in by_chars], [r.doc_id for r in by_tok]
+    )
+    row = get_query("eval_rbo_rankings").fn(spark, sf_dir).collect()[0]
+    assert row.k == 50
+    assert row.overlap_at_k == xk
+    assert abs(row.a_k - xk / 50) < 1e-9
+    assert abs(row.rbo_trunc - round(trunc, 6)) < 1e-9
+    assert abs(row.rbo_ext - round(ext, 6)) < 1e-6
+
+
+def test_rbo_closed_forms():
+    # identical rankings -> extrapolated RBO = 1 exactly
+    ids = list(range(50))
+    trunc, xk, ext = _rbo_ref(ids, ids)
+    assert xk == 50
+    assert abs(ext - 1.0) < 1e-9
+    assert trunc < 1.0  # truncated form leaves the p^k tail on the table
+    # disjoint rankings -> 0
+    t0, x0, e0 = _rbo_ref(list(range(50)), list(range(100, 150)))
+    assert (t0, x0, e0) == (0.0, 0, 0.0)
+    # top-weighting: agreement at the TOP counts more than at the tail.
+    # swap-in disagreement at depth 1 hurts more than at depth 50
+    head = list(range(50))
+    tail_diff = head[:-1] + [999]
+    head_diff = [999] + head[1:]
+    _, _, e_tail = _rbo_ref(head, tail_diff)
+    _, _, e_head = _rbo_ref(head, head_diff)
+    assert e_head < e_tail
+
+
+# --------------------------------------------------------------------------
+# CUPED
+# --------------------------------------------------------------------------
+
+
+def test_cuped_matches_python_reference(spark, sf_dir):
+    rows = _events(spark, sf_dir)
+    cut = min(r.ts for r in rows) + __import__("datetime").timedelta(days=15)
+    per: dict[int, list[int]] = {}
+    for r in rows:
+        q = math.floor(r.value * 100.0 + 0.5)
+        x, y = per.setdefault(r.user_id, [0, 0])
+        if r.ts < cut:
+            per[r.user_id][0] = x + q
+        else:
+            per[r.user_id][1] = y + q
+    n = len(per)
+    xs = [v[0] for v in per.values()]
+    ys = [v[1] for v in per.values()]
+    sx, sy = sum(xs), sum(ys)
+    sxx = sum(x * x for x in xs)
+    sxy = sum(x * y for x, y in zip(xs, ys))
+    syy = sum(y * y for y in ys)
+    cxy, cxx, cyy = n * sxy - sx * sy, n * sxx - sx * sx, n * syy - sy * sy
+    row = get_query("stat_cuped_adjustment").fn(spark, sf_dir).collect()[0]
+    assert row.n_users == n
+    assert abs(row.theta - cxy / cxx) < 1e-6
+    assert abs(row.mean_y - sy / 100.0 / n) < 1e-6
+    assert abs(row.var_y - cyy / 1e4 / n / n) < 1e-4
+    assert abs(row.var_y_adj - (cyy - cxy**2 / cxx) / 1e4 / n / n) < 1e-4
+    assert abs(row.var_reduction_pct - 100.0 * cxy**2 / (cxx * cyy)) < 1e-4
+    # structure: adjustment can only help, and never past 100%
+    assert 0.0 <= row.var_reduction_pct <= 100.0
+    assert row.var_y_adj <= row.var_y + 1e-12
+
+
+def test_cuped_closed_forms():
+    # perfectly correlated covariate -> 100% variance reduction
+    xs, ys = [1, 2, 3, 4], [10, 20, 30, 40]
+    n = 4
+    sx, sy = sum(xs), sum(ys)
+    cxy = n * sum(x * y for x, y in zip(xs, ys)) - sx * sy
+    cxx = n * sum(x * x for x in xs) - sx * sx
+    cyy = n * sum(y * y for y in ys) - sy * sy
+    assert abs(100.0 * cxy**2 / (cxx * cyy) - 100.0) < 1e-9
+    # independent covariate (orthogonal) -> theta ~ 0, no reduction
+    xs, ys = [1, -1, 1, -1], [5, 5, -5, -5]
+    sx, sy = sum(xs), sum(ys)
+    cxy = 4 * sum(x * y for x, y in zip(xs, ys)) - sx * sy
+    assert cxy == 0
+
+
+# --------------------------------------------------------------------------
+# Group-sequential OBF
+# --------------------------------------------------------------------------
+
+
+def test_group_sequential_obf_matches_python_reference(spark, sf_dir):
+    rows = _events(spark, sf_dir)
+    allq = [math.floor(r.value * 100.0 + 0.5) for r in rows]
+    ng = len(allq)
+    mu0 = sum(allq) / 100.0 / ng
+    var = sum(q * q for q in allq) / 1e4 / ng - mu0 * mu0
+    sigma = math.sqrt(var)
+    daily: dict[tuple, list[int]] = {}
+    for r in rows:
+        daily.setdefault((r.event_type, r.ts.date()), []).append(
+            math.floor(r.value * 100.0 + 0.5)
+        )
+    got = {
+        (r.event_type, r.look): r
+        for r in get_query("stat_group_sequential_obf")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    bounds = {
+        k: round(2.040 * math.sqrt(5 / k), 6) for k in range(1, 6)
+    }
+    types = sorted({t for t, _ in daily})
+    for t in types:
+        days = sorted(d for tt, d in daily if tt == t)
+        nd = len(days)
+        cn = cs = 0
+        cums = []
+        for d in days:
+            qs = daily[(t, d)]
+            cn += len(qs)
+            cs += sum(qs)
+            cums.append((cn, cs))
+        for k in range(1, 6):
+            r = (k * nd) // 5
+            if r == 0:
+                continue
+            n_k, s_k = cums[r - 1]
+            z = (s_k / 100.0 / n_k - mu0) * math.sqrt(n_k) / sigma
+            g = got[(t, k)]
+            assert g.n_k == n_k
+            assert abs(g.z - round(z, 6)) < 1e-9, (t, k)
+            assert abs(float(g.bound) - bounds[k]) < 1e-9
+            assert g.crossed == (abs(z) > bounds[k])
+    assert len(got) == 5 * len(types)
+
+
+def test_obf_boundary_shape():
+    # boundaries decrease monotonically to ~the fixed-horizon z at the
+    # final look, and spend almost no alpha early
+    bounds = [2.040 * math.sqrt(5 / k) for k in range(1, 6)]
+    assert all(a > b for a, b in zip(bounds, bounds[1:]))
+    assert bounds[0] > 4.5  # look 1 nearly impossible to cross
+    assert abs(bounds[-1] - 2.040) < 1e-12
+
+
+# --------------------------------------------------------------------------
+# Kendall's W (concordance)
+# --------------------------------------------------------------------------
+
+
+def _kendall_w_ref(matrix):
+    """matrix: {judge: {item: score}} complete block; tie-corrected W
+    via midranks, the exact integer identity the engines use."""
+    judges = sorted(matrix)
+    items = sorted(next(iter(matrix.values())))
+    m, n = len(judges), len(items)
+    d2 = {i: 0 for i in items}
+    tt = 0
+    for j in judges:
+        scores = matrix[j]
+        for i in items:
+            below = sum(1 for i2 in items if scores[i2] < scores[i])
+            tied = sum(1 for i2 in items if scores[i2] == scores[i])
+            d2[i] += 2 * below + tied + 1
+        ties = Counter(scores.values())
+        tt += sum(t**3 - t for t in ties.values())
+    s4 = sum((d2[i] - m * (n + 1)) ** 2 for i in items)
+    den = m * m * (n**3 - n) - m * tt
+    w = 3 * s4 / den
+    return w, m * (n - 1) * w
+
+
+def test_kendall_w_matches_python_reference(spark, sf_dir):
+    mat: dict[str, dict[int, int]] = {}
+    for r in _events(spark, sf_dir):
+        dow = r.ts.isoweekday() % 7 + 1
+        mat.setdefault(r.event_type, {}).setdefault(dow, 0)
+        mat[r.event_type][dow] += 1
+    # complete the block with zero counts (the operator densifies)
+    items = sorted({i for sc in mat.values() for i in sc})
+    for sc in mat.values():
+        for i in items:
+            sc.setdefault(i, 0)
+    w, chi2 = _kendall_w_ref(mat)
+    row = get_query("stat_kendall_w").fn(spark, sf_dir).collect()[0]
+    assert row.n_items == len(items)
+    assert row.n_judges == len(mat)
+    assert abs(row.w - round(w, 6)) < 1e-9
+    assert abs(row.chi2 - round(chi2, 6)) < 1e-9
+    assert row.rejected == (chi2 > 12.591587243743977)
+    assert 0.0 <= row.w <= 1.0
+
+
+def test_kendall_w_closed_forms():
+    # unanimous rankings -> W = 1 exactly
+    mat = {j: {i: i * 10 for i in range(1, 6)} for j in "abc"}
+    w, _ = _kendall_w_ref(mat)
+    assert abs(w - 1.0) < 1e-12
+    # perfectly opposed pair of judges -> W = 0
+    mat2 = {
+        "a": {i: i for i in range(1, 6)},
+        "b": {i: 6 - i for i in range(1, 6)},
+    }
+    w2, _ = _kendall_w_ref(mat2)
+    assert abs(w2) < 1e-12
+    # all-tied scores: denominator fully tie-corrected; S = 0 -> W = 0/0
+    # guarded upstream by design (not a valid concordance question) —
+    # assert the identity's components vanish together
+    mat3 = {"a": {1: 5, 2: 5}, "b": {1: 5, 2: 5}}
+    judges = mat3.keys()
+    tt = sum(
+        sum(t**3 - t for t in Counter(mat3[j].values()).values())
+        for j in judges
+    )
+    assert 2 * 2 * (2**3 - 2) - 2 * tt == 0
+
+
+# --------------------------------------------------------------------------
+# rbo_overlap id inference is now validated (ADVICE r13 #2)
+# --------------------------------------------------------------------------
+
+
+def _rank_frames(spark):
+    t1 = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "doc_id int, r1 int"
+    )
+    t2 = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "doc_id int, r2 int"
+    )
+    return t1, t2
+
+
+def test_rbo_overlap_rejects_ambiguous_t1(spark):
+    from avro_parquet_spark_example_spark.operators.inference import (
+        rbo_overlap,
+    )
+
+    t1, t2 = _rank_frames(spark)
+    wide = t1.withColumn("extra", t1.doc_id * 2)
+    with pytest.raises(ValueError, match="exactly two"):
+        rbo_overlap(wide, t2, k=10)
+    # explicit id_col rescues the wide frame
+    row = rbo_overlap(wide, t2, k=10, id_col="doc_id").collect()[0]
+    assert row.overlap_at_k == 10
+
+
+def test_rbo_overlap_rejects_id_missing_from_t2(spark):
+    from avro_parquet_spark_example_spark.operators.inference import (
+        rbo_overlap,
+    )
+
+    t1, t2 = _rank_frames(spark)
+    t1_renamed = t1.withColumnRenamed("doc_id", "other_id")
+    with pytest.raises(ValueError, match="not in t2"):
+        rbo_overlap(t1_renamed, t2, k=10)
+    with pytest.raises(ValueError, match="must exist in both"):
+        rbo_overlap(t1, t2, k=10, id_col="nope")
+
+
+def test_rbo_overlap_identical_rankings_unchanged(spark):
+    from avro_parquet_spark_example_spark.operators.inference import (
+        rbo_overlap,
+    )
+
+    t1, t2 = _rank_frames(spark)
+    row = rbo_overlap(t1, t2, k=10).collect()[0]
+    assert row.overlap_at_k == 10
+    assert abs(row.rbo_ext - 1.0) < 1e-6
+
+
+# --------------------------------------------------------------------------
+# collision-proof internal columns (ADVICE r13 #3)
+# --------------------------------------------------------------------------
+
+
+def test_events_sample_spark_survives_nr_column(spark):
+    from avro_parquet_spark_example_spark.operators.inference import (
+        _events_sample_spark,
+    )
+
+    e = spark.createDataFrame(
+        [(i, i % 3, 7) for i in range(100)],
+        "event_id long, event_type int, nr int",
+    )
+    out = _events_sample_spark(e)
+    # under the cap -> identity sample; caller's nr column intact
+    assert out.count() == 100
+    assert "nr" in out.columns
+    assert out.agg({"nr": "min"}).collect()[0][0] == 7

@@ -1,4 +1,5 @@
-"""Copy-paste guard over the package source and the test suite (no Spark).
+"""Copy-paste guard over the package source and the test suite, plus two
+layout guards (no Spark).
 
 A fix to a copied block has to be made once per copy, and copies drift. These
 tests fail when a run of ``RUN`` consecutive code lines appears twice under
@@ -11,10 +12,15 @@ constant or builder; for test references: ``tests/_refs.py``).
 
 A pair that must stay apart goes in ``ALLOWED`` with a one-line reason,
 keyed by the two copies' ``(file, first line text)`` of the shared run.
+
+The layout guards pin that round-named test files only go away (each test
+lives in the family file of the module it exercises) and that every
+``/tmp`` path in the package is built from one of its two scratch roots.
 """
 
 from __future__ import annotations
 
+import ast
 from collections import defaultdict
 from pathlib import Path
 
@@ -32,6 +38,20 @@ ALLOWED: dict[frozenset, str] = {}
 
 #: Kept copies under ``tests/``, keyed like ``ALLOWED``.
 ALLOWED_TESTS: dict[frozenset, str] = {}
+
+#: Round-named test files whose tests have not yet moved to their family
+#: files. The set only shrinks; the guard goes when it is empty.
+ROUND_FILES = {
+    "test_round5_ops.py",
+    "test_round5_late_ops.py",
+    "test_round11_ops.py",
+    "test_round14_ops.py",
+    "test_round15_ops.py",
+}
+
+#: The package's scratch roots, ``(file, module-level name)``: every other
+#: scratch path is built from them, so moving them moves all scratch output.
+SCRATCH_ROOTS = [("sources/scans.py", "SCRATCH"), ("streaming/stateful.py", "SCRATCH")]
 
 
 def _code_lines(path: Path) -> list[tuple[int, str]]:
@@ -115,3 +135,33 @@ def test_guard_flags_a_copied_block(tmp_path):
     assert duplicate_runs(tmp_path) == [("a.py", 2, "b.py", 2)]
     (tmp_path / "b.py").write_text("\n".join(block[1:]) + "\n")
     assert duplicate_runs(tmp_path) == []
+
+
+def test_no_new_round_named_test_files():
+    assert {p.name for p in TESTS.glob("test_round*.py")} == ROUND_FILES
+
+
+def _tmp_literals(root: Path) -> list[tuple[str, object]]:
+    """Each string constant under ``root`` that starts with ``/tmp``, as
+    (file, module-level name it defines) or, elsewhere, (file, line)."""
+    out = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        names = {
+            id(n.value): n.targets[0].id
+            for n in tree.body
+            if isinstance(n, ast.Assign) and isinstance(n.targets[0], ast.Name)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith("/tmp")
+            ):
+                rel = str(path.relative_to(root))
+                out.append((rel, names.get(id(node), node.lineno)))
+    return out
+
+
+def test_tmp_paths_come_from_the_scratch_roots():
+    assert _tmp_literals(PACKAGE) == SCRATCH_ROOTS

@@ -1,6 +1,6 @@
 """Projection-group statistics (operators/projection.py) vs independent
-Python references: the exact PR AUC and the Jensen–Shannon divergence
-terms."""
+Python references: the exact PR AUC, the Jensen–Shannon divergence
+terms, the column profile, ECE/Brier calibration and KL drift."""
 
 from __future__ import annotations
 
@@ -72,3 +72,123 @@ def test_jsd_terms_match_python_and_bound(spark, sf_dir):
     # base-2 JSD of (sub-)distributions is bounded by 1 and non-negative
     # up to smoothing mass truncation
     assert -1e-9 <= total <= 1.0
+
+
+def test_column_profile_matches_python_reference(spark, sf_dir):
+    import datetime
+    from decimal import Decimal
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
+    rows = {
+        r.col_name: r
+        for r in get_query("dq_column_profile").fn(spark, sf_dir).collect()
+    }
+    assert set(rows) == {
+        "o_orderkey",
+        "o_custkey",
+        "o_totalprice",
+        "o_orderdate",
+        "o_orderpriority",
+    }
+    n = len(orders)
+    keys = [r.o_orderkey for r in orders]
+    r = rows["o_orderkey"]
+    assert (r.n, r.n_null, r.n_distinct) == (n, 0, len(set(keys)))
+    assert (r.min_s, r.max_s) == (str(min(keys)), str(max(keys)))
+    prices = [
+        Decimal(str(round(r.o_totalprice, 2))) for r in orders
+    ]
+    r = rows["o_totalprice"]
+    assert r.n_distinct == len(set(prices))
+    dates = [
+        r.o_orderdate.date()
+        if isinstance(r.o_orderdate, datetime.datetime)
+        else r.o_orderdate
+        for r in orders
+    ]
+    r = rows["o_orderdate"]
+    assert (r.min_s, r.max_s) == (str(min(dates)), str(max(dates)))
+
+
+def test_ece_brier_match_python_reference(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").collect()
+    pairs = [
+        (int(round(r.l_discount * 100)), 1 if r.l_returnflag == "R" else 0)
+        for r in li
+    ]
+    n = len(pairs)
+    bins: dict[int, list[int]] = {}
+    for pct, y in pairs:
+        c = bins.setdefault(pct, [0, 0])
+        c[0] += 1
+        c[1] += y
+    ece = sum(
+        abs(10 * pos - pct * cnt) for pct, (cnt, pos) in bins.items()
+    ) / (10 * n)
+    row = get_query("eval_ece_calibration").fn(spark, sf_dir).collect()[0]
+    assert (row.n_bins, row.n) == (len(bins), n)
+    assert abs(row.ece - round(ece, 6)) < 1e-9
+
+    brier = sum((pct - 10 * y) ** 2 for pct, y in pairs) / (100 * n)
+    rb = get_query("eval_brier_score").fn(spark, sf_dir).collect()[0]
+    assert rb.n == n
+    assert abs(rb.brier - round(brier, 6)) < 1e-9
+
+    # closed forms: a perfect 0/1 predictor has ECE = 0 and Brier = 0;
+    # a constant p=0.5 predictor on balanced labels has Brier = 0.25
+    from avro_parquet_spark_example_spark.engine import Engine
+
+    eng = Engine(spark=spark)
+    perfect = spark.createDataFrame(
+        [(10, 1)] * 5 + [(0, 0)] * 5, "pct long, y long"
+    )
+    assert eng.calibration_error(
+        perfect, pred="pct", outcome="y", prob_denom=10
+    ).collect()[0].ece == 0.0
+    assert eng.brier(
+        perfect, pred="pct", outcome="y", prob_denom=10
+    ).collect()[0].brier == 0.0
+    half = spark.createDataFrame(
+        [(5, 1)] * 5 + [(5, 0)] * 5, "pct long, y long"
+    )
+    assert abs(
+        eng.brier(half, pred="pct", outcome="y", prob_denom=10)
+        .collect()[0]
+        .brier
+        - 0.25
+    ) < 1e-9
+
+
+def test_kl_drift_matches_python_reference(spark, sf_dir):
+    import datetime
+    import math as m
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
+    split = datetime.datetime(1997, 1, 1)
+    ref = [0] * 10
+    cur = [0] * 10
+    for r in orders:
+        b = min(int(r.o_totalprice // 50000), 9)
+        od = r.o_orderdate
+        if isinstance(od, datetime.date) and not isinstance(
+            od, datetime.datetime
+        ):
+            od = datetime.datetime(od.year, od.month, od.day)
+        (ref if od < split else cur)[b] += 1
+    n_ref, n_cur = sum(ref), sum(cur)
+    rows = {
+        r.bucket: r
+        for r in get_query("dq_drift_kl").fn(spark, sf_dir).collect()
+    }
+    total = 0.0
+    for b in range(10):
+        p_cur = (cur[b] + 1.0) / (n_cur + 10)
+        p_ref = (ref[b] + 1.0) / (n_ref + 10)
+        term = p_cur * m.log(p_cur / p_ref)
+        r = rows[b]
+        assert (r.c_ref, r.c_cur) == (ref[b], cur[b])
+        assert abs(r.kl_term - round(term, 9)) < 1e-9
+        total += term
+    # smoothed KL of two non-identical samples is non-negative up to
+    # smoothing wiggle; identical distributions would pin at ~0
+    assert total > -1e-6

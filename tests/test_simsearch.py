@@ -510,3 +510,26 @@ def test_top2_pcs_orthogonal_and_consistent(spark, sf_dir):
     n2 = math.sqrt(sum(x * x for x in v2.values()))
     assert n2 > 1e-6  # non-degenerate second direction
     assert abs(dot / (n1 * n2)) < 1e-3, dot / (n1 * n2)
+
+
+def test_dim_variance_matches_python_reference(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").collect()
+    dims = len(emb[0].embedding)
+    sums = [0] * dims
+    sqs = [0] * dims
+    for r in emb:
+        for i, v in enumerate(r.embedding):
+            v7 = math.floor(float(v) * 10000000)
+            sums[i] += v7
+            sqs[i] += v7 * v7
+    n = len(emb)
+    var = [
+        ((n * sqs[i] - sums[i] * sums[i]) / (n * n)) / 1e14
+        for i in range(dims)
+    ]
+    order = sorted(range(dims), key=lambda i: (-var[i], i))[:8]
+    rows = get_query("vec_dim_variance_topk").fn(spark, sf_dir).collect()
+    assert [r.pos for r in rows] == [i + 1 for i in order]
+    for r in rows:
+        assert r.n == n
+        assert abs(r.variance - round(var[r.pos - 1], 9)) < 1e-12

@@ -182,3 +182,71 @@ def test_stream_session_keeps_no_data_batch(spark, sf_dir):
         "trailing watermark-advance batch missing on an append session "
         "window"
     )
+
+
+# --------------------------------------------------------------------------
+# streaming state-partition sizing + no-data-batch elision (VERDICT r13 #6)
+# --------------------------------------------------------------------------
+
+
+def test_stream_state_partitions_sizing(spark, sf_dir):
+    from avro_parquet_spark_example_spark.streaming.stateful import (
+        stream_state_partitions,
+    )
+
+    # sf0.001 events (1k rows) -> floor of 4
+    assert stream_state_partitions(spark, sf_dir) == 4
+
+
+def test_parquet_rows_matches_spark_count(spark, sf_dir, tmp_path):
+    from avro_parquet_spark_example_spark.sources.catalog import table_path
+    from avro_parquet_spark_example_spark.streaming.stateful import parquet_rows
+
+    single = table_path(sf_dir, "events")
+    two_files = str(tmp_path / "events.parquet")
+    spark.read.parquet(single).repartition(2).write.parquet(two_files)
+    assert len([f for f in os.listdir(two_files) if f.endswith(".parquet")]) == 2
+    for path in (single, two_files):
+        assert parquet_rows(path) == spark.read.parquet(path).count()
+
+
+def test_run_to_table_restores_session_confs(spark, sf_dir):
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    before_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    before_nodata = spark.conf.get(
+        "spark.sql.streaming.noDataMicroBatches.enabled"
+    )
+    get_query("stream_window_unique_users").fn(spark, sf_dir).collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before_parts
+    assert (
+        spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
+        == before_nodata
+    )
+
+
+def test_tuned_streams_match_batch(spark, sf_dir):
+    from avro_parquet_spark_example_spark.registry import get_query
+    from pyspark.sql import functions as F
+
+    # stream_window_unique_users == batch COUNT(DISTINCT) per hour window
+    got = {
+        (r.win_start, r.n_users)
+        for r in get_query("stream_window_unique_users")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    from avro_parquet_spark_example_spark.sources.catalog import (
+        normalize_events,
+    )
+
+    want = {
+        (r.win_start, r.n_users)
+        for r in normalize_events(e)
+        .groupBy(F.window("ts", "1 hour").alias("win"))
+        .agg(F.countDistinct("user_id").alias("n_users"))
+        .select(F.col("win.start").alias("win_start"), "n_users")
+        .collect()
+    }
+    assert got == want

@@ -1,9 +1,11 @@
 """Text-analysis operators (operators/text_analysis.py): the driver-side BPE
-merge loop against the distributed per-round form it replaced."""
+merge loop against the distributed per-round form it replaced, and the
+document-length quantiles against a Python reference."""
 
 from __future__ import annotations
 
 from avro_parquet_spark_example_spark.registry import get_query
+from tests._refs import _type1
 
 
 def test_bpe_driver_replay_identical_to_distributed_rounds(spark, sf_dir):
@@ -67,3 +69,22 @@ def test_bpe_driver_replay_identical_to_distributed_rounds(spark, sf_dir):
         top.pb,
         top.cnt,
     )
+
+
+def test_doclen_quantiles_match_python_reference(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    by_lang: dict[str, list[int]] = {}
+    for r in docs:
+        by_lang.setdefault(r.lang, []).append(int(r.n_chars))
+    for xs in by_lang.values():
+        xs.sort()
+    rows = {
+        r.lang: r
+        for r in get_query("text_doclen_quantiles").fn(spark, sf_dir).collect()
+    }
+    assert set(rows) == set(by_lang)
+    for lang, xs in by_lang.items():
+        r = rows[lang]
+        assert r.n == len(xs)
+        for q in (25, 50, 75, 90):
+            assert r[f"p{q}"] == _type1(xs, q), (lang, q)

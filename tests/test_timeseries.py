@@ -1,14 +1,18 @@
 """Time-series operator invariants that go beyond the oracle hash: the
 EWMA closed form must equal the sequential recursion EXACTLY (dyadic α),
 transition counts must conserve events, pattern runs must be genuinely
-increasing."""
+increasing. ACF, Fano, Theil–Sen and Mann–Kendall are checked against
+Python references and their closed forms."""
 
 from __future__ import annotations
+
+import math
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import get_query
-from tests._refs import _frame
+from tests._refs import _events, _frame
 
 
 def _assert_ewma_is_recursion(spark, sf_dir, rel_tol):
@@ -384,3 +388,202 @@ def test_cusum_constant_series_is_flat(spark):
     ).collect()[0]
     assert folded["out"]["best"] == 0
     assert str(folded["out"]["bestday"]) == "2024-01-01"
+
+
+def test_acf_matches_python_reference_and_lag0_pins_at_one(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    daily = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    series: dict[str, dict] = {}
+    for r in daily:
+        series.setdefault(r.event_type, {})[r.day] = r.n
+    got = {
+        (r.event_type, r.lag): r
+        for r in get_query("ts_autocorr_acf").fn(spark, sf_dir).collect()
+    }
+    import datetime
+
+    for et, s in series.items():
+        for lag in range(8):
+            pairs = [
+                (x, s[d + datetime.timedelta(days=lag)])
+                for d, x in s.items()
+                if d + datetime.timedelta(days=lag) in s
+            ]
+            n = len(pairs)
+            key = (et, lag)
+            if n < 2:
+                continue
+            sa = sum(a for a, _ in pairs)
+            sb = sum(b for _, b in pairs)
+            saa = sum(a * a for a, _ in pairs)
+            sbb = sum(b * b for _, b in pairs)
+            sab = sum(a * b for a, b in pairs)
+            den = math.sqrt(n * saa - sa * sa) * math.sqrt(n * sbb - sb * sb)
+            r = (n * sab - sa * sb) / den if den else float("nan")
+            row = got[key]
+            assert row.n_days == n
+            if den:
+                assert abs(row.acf - round(r, 6)) < 1e-5, key
+            if lag == 0:
+                # closed form: lag-0 autocorrelation of any
+                # non-constant series is exactly 1
+                assert abs(row.acf - 1.0) < 1e-9
+
+
+def test_fano_matches_python_reference_and_poisson_line(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    daily = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    series: dict[str, list[int]] = {}
+    for r in daily:
+        series.setdefault(r.event_type, []).append(r.n)
+    rows = {
+        r.event_type: r
+        for r in get_query("ts_burstiness_fano").fn(spark, sf_dir).collect()
+    }
+    for et, xs in series.items():
+        n = len(xs)
+        s1 = sum(xs)
+        s2 = sum(x * x for x in xs)
+        mean = s1 / n
+        fano = (n * s2 - s1 * s1) / (n * s1)
+        r = rows[et]
+        assert r.n_days == n
+        assert abs(r.mean_daily - round(mean, 6)) < 1e-9
+        assert abs(r.fano - round(fano, 6)) < 1e-9
+        assert r.fano >= 0.0
+
+    # closed form: a constant series is maximally regular — Fano 0
+    from avro_parquet_spark_example_spark.engine import Engine
+
+    const = spark.createDataFrame(
+        [("g", i, 5) for i in range(10)], "k string, day long, n long"
+    )
+    f0 = Engine(spark=spark).fano(const, key="k", value="n").collect()[0]
+    assert f0.fano == 0.0
+
+
+def test_theil_sen_matches_python_reference(spark, sf_dir):
+    import math as m
+
+    from pyspark.sql import functions as F
+
+    daily = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    series: dict[str, list] = {}
+    for r in daily:
+        series.setdefault(r.event_type, []).append((r.day, r.n))
+    rows = {
+        r.event_type: r
+        for r in get_query("ts_theil_sen_slope").fn(spark, sf_dir).collect()
+    }
+    for et, pts in series.items():
+        pts.sort()
+        slopes = []
+        for i in range(len(pts)):
+            for j in range(i + 1, len(pts)):
+                dd = (pts[j][0] - pts[i][0]).days
+                slopes.append(m.floor((pts[j][1] - pts[i][1]) * 1e6 / dd))
+        slopes.sort()
+        med = slopes[(len(slopes) + 1) // 2 - 1]
+        r = rows[et]
+        assert r.n_pairs == len(slopes)
+        assert abs(r.sen_slope - round(med / 1e6, 6)) < 1e-9
+
+    # closed form: a perfectly linear series has Theil-Sen slope exactly
+    # its increment, regardless of an injected single outlier's pull on
+    # the MEAN-based estimators
+    from avro_parquet_spark_example_spark.engine import Engine
+
+    import datetime
+
+    base = datetime.date(2024, 1, 1)
+    lin = [
+        ("g", base + datetime.timedelta(days=i), 100 + 3 * i)
+        for i in range(10)
+    ]
+    df = spark.createDataFrame(lin, "k string, day date, n long")
+    r = (
+        Engine(spark=spark)
+        .theil_sen(df, key="k", order="day", value="n")
+        .collect()[0]
+    )
+    assert r.sen_slope == 3.0
+
+
+# --------------------------------------------------------------------------
+# Mann-Kendall
+# --------------------------------------------------------------------------
+
+
+def _mk_ref(series):
+    n = len(series)
+    s = 0
+    for i in range(n):
+        for j in range(i + 1, n):
+            s += (series[j] > series[i]) - (series[j] < series[i])
+    ties = Counter(series)
+    tie_adj = sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
+    var_s = (n * (n - 1) * (2 * n + 5) - tie_adj) / 18.0
+    if s > 0:
+        z = (s - 1) / math.sqrt(var_s)
+    elif s < 0:
+        z = (s + 1) / math.sqrt(var_s)
+    else:
+        z = 0.0
+    return s, var_s, z
+
+
+def test_mann_kendall_matches_python_reference(spark, sf_dir):
+    daily: Counter = Counter()
+    for r in _events(spark, sf_dir):
+        daily[(r.event_type, r.ts.date())] += 1
+    got = {
+        r.event_type: r
+        for r in get_query("ts_mann_kendall").fn(spark, sf_dir).collect()
+    }
+    types = sorted({t for t, _ in daily})
+    for t in types:
+        days = sorted(d for tt, d in daily if tt == t)
+        series = [daily[(t, d)] for d in days]
+        s, var_s, z = _mk_ref(series)
+        g = got[t]
+        assert g.n_days == len(days)
+        assert g.s_stat == s
+        assert abs(g.var_s - round(var_s, 6)) < 1e-9
+        assert abs(g.z - round(z, 6)) < 1e-9
+        want = (
+            "increasing"
+            if s > 0 and z > 1.959963984540054
+            else "decreasing"
+            if s < 0 and z < -1.959963984540054
+            else "none"
+        )
+        assert g.trend == want, t
+
+
+def test_mann_kendall_closed_forms():
+    # strictly increasing -> S = n(n-1)/2, strong positive z
+    s, _, z = _mk_ref(list(range(1, 11)))
+    assert s == 45 and z > 1.96
+    # strictly decreasing mirrors
+    s2, _, z2 = _mk_ref(list(range(10, 0, -1)))
+    assert s2 == -45 and z2 < -1.96
+    # constant series -> S = 0, var fully tie-corrected to 0 -> z = 0
+    s3, v3, z3 = _mk_ref([7] * 10)
+    assert (s3, v3, z3) == (0, 0.0, 0.0)

@@ -100,3 +100,38 @@ def test_perf_sweep_record_reports_jobs_and_shuffle(spark, sf_dir):
         profiler.close()
     assert rec["jobs"] > 0
     assert rec["shuffle_write_bytes"] > 0
+
+
+# --------------------------------------------------------------------------
+# bench contention-recapture rule (VERDICT r13 task #3)
+# --------------------------------------------------------------------------
+
+
+def test_bench_recapture_decision():
+    import bench
+
+    # all probes hot -> recapture
+    assert bench._should_recapture([75.0, 109.4, 95.5])
+    # one quiet probe -> normal flag machinery handles it, no recapture
+    assert not bench._should_recapture([109.4, 95.5, 12.0])
+    # no prior record -> nothing to compare
+    assert not bench._should_recapture([])
+    # boundary: strictly-greater semantics
+    assert not bench._should_recapture([50.0, 50.0, 50.0])
+
+
+def test_bench_calib_deltas_read_latest_record():
+    import bench
+
+    prev = bench._prev_bench()
+    assert prev is not None
+    ref, pdata = prev
+    assert ref.startswith("BENCH_r")
+    cap = {
+        "calib_sec": pdata["calib_sec"],
+        "calib_shuffle_sec": pdata.get("calib_shuffle_sec", 0),
+        "calib_scan_sec": pdata.get("calib_scan_sec", 0),
+    }
+    deltas = bench._calib_deltas_vs_prev(cap)
+    # identical calib values -> all deltas exactly 0
+    assert deltas and all(d == 0.0 for d in deltas)
