@@ -17,10 +17,23 @@ write Parquet → register → query) maps each step 1:1:
 
 Every method returns a plain DataFrame — compose freely with the DataFrame
 API; nothing here materializes data.
+
+Most operator methods are the library functions themselves. ``_OPERATORS``
+maps each such facade name to ``"module:function"`` under ``operators/``,
+and an ``_Operator`` descriptor imports the module on first access and
+returns the function unchanged. So ``eng.pagerank(edges)``,
+``help(Engine.pagerank)`` and ``inspect.signature(Engine.pagerank)`` show
+the operator's own signature and docstring, and a facade cannot drift from
+its operator. The import waits for first access because importing every
+operator module up front would add 0.1–0.2 s to ``import engine``
+(measured on 4 vCPUs).
+Methods that rename, reorder or hide parameters, or that carry logic of
+their own, stay hand-written in the class.
 """
 
 from __future__ import annotations
 
+import importlib
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -37,10 +50,7 @@ from avro_parquet_spark_example_spark.operators.curation import (
 from avro_parquet_spark_example_spark.operators.dedup import (
     connected_components,
     incremental_minhash_matches,
-    keep_first_per_text,
-    minhash_candidate_pairs,
     minhash_clusters,
-    semantic_cell_dropped,
     simhash64,
     substring_dup_spans,
 )
@@ -103,13 +113,6 @@ class Engine:
 
     # -- LLM-pipeline operators ------------------------------------------
 
-    def dedup_exact(
-        self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-    ) -> DataFrame:
-        """Keep the lowest-id row per normalized-text group (shared
-        implementation with the oracle-checked ``dedup_exact`` operator)."""
-        return keep_first_per_text(df, text_col=text_col, id_col=id_col)
-
     def dedup_near(
         self,
         df: DataFrame,
@@ -131,23 +134,6 @@ class Engine:
             text_col=text_col,
             sim_threshold=threshold,
             collapse_exact=collapse_exact,
-        )
-
-    def dedup_semantic(
-        self,
-        df: DataFrame,
-        emb_col: str = "embedding",
-        id_col: str = "vec_id",
-        threshold: float = 0.35,
-        n_bits: int = 6,
-    ) -> DataFrame:
-        """SemDeDup-shaped semantic dedup: rows DROPPED because a lower-id
-        vector in the same sign-bit cell has cosine >= threshold, as
-        (id, cell, kept_for). Anti-join ``df`` against the result to keep
-        the survivors (shared implementation with the oracle-checked
-        ``dedup_semantic_cell`` operator)."""
-        return semantic_cell_dropped(
-            df, emb_col=emb_col, id_col=id_col, threshold=threshold, n_bits=n_bits
         )
 
     def dedup_incremental(
@@ -293,24 +279,6 @@ class Engine:
         )
         return df.withColumn("split", split)
 
-    def chunk(
-        self,
-        df: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        chunk: int = 200,
-        stride: int = 150,
-    ) -> DataFrame:
-        """(id, chunk_id, chunk, chunk_len) sliding-window pieces of each
-        document — map-only, zero shuffle (operators/curation.py)."""
-        from avro_parquet_spark_example_spark.operators.curation import (
-            chunk_documents,
-        )
-
-        return chunk_documents(
-            df, text_col=text_col, id_col=id_col, chunk=chunk, stride=stride
-        )
-
     def shuffle_export(
         self, df: DataFrame, id_col: str = "doc_id", seed: int = 42
     ) -> DataFrame:
@@ -327,7 +295,7 @@ class Engine:
             "shuffle_key", id_col
         )
 
-    # -- graph / retrieval (round-5 continuation additions) ---------------
+    # -- graph / retrieval / statistics ----------------------------------
 
     def cooccurrence_graph(
         self, max_user: int | None = None
@@ -341,23 +309,6 @@ class Engine:
         if self.sf_dir is None:
             raise ValueError("Engine(sf_dir=...) required for table access")
         return cooccurrence_edges(self.spark, self.sf_dir, max_user=max_user)
-
-    def pagerank(
-        self, edges: DataFrame, damping: float = 0.85, iters: int = 10
-    ) -> DataFrame:
-        """(node, rank) PageRank over oriented (u, v) edges — power
-        iteration, two key-partitioned shuffles per round, no driver
-        state (operators/graph.py)."""
-        from avro_parquet_spark_example_spark.operators.graph import pagerank_edges
-
-        return pagerank_edges(edges, damping=damping, iters=iters)
-
-    def triangles(self, edges: DataFrame) -> DataFrame:
-        """(node, n_triangles) over oriented (u < v) edges — ordered
-        edge-join, each triangle found once (operators/graph.py)."""
-        from avro_parquet_spark_example_spark.operators.graph import triangle_counts
-
-        return triangle_counts(edges)
 
     def sparse_topk(
         self,
@@ -377,32 +328,6 @@ class Engine:
         return sparse_cosine_topk(
             docs, query_doc_id, k=k, text_col=text_col, id_col=id_col
         )
-
-    def quality_gate(
-        self, df: DataFrame, text_col: str = "text", id_cols: list[str] | None = None
-    ) -> DataFrame:
-        """Gopher-style quality signals + per-rule flags + ``keep`` verdict
-        (operators/curation.py; callers filter NULL text first)."""
-        from avro_parquet_spark_example_spark.operators.curation import (
-            gopher_quality_flags,
-        )
-
-        return gopher_quality_flags(df, text_col=text_col, id_cols=id_cols)
-
-    def blocklist_filter(
-        self,
-        df: DataFrame,
-        terms,
-        text_col: str = "text",
-        id_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Term-blocklist density verdict with matched-term attribution
-        (operators/curation.py)."""
-        from avro_parquet_spark_example_spark.operators.curation import (
-            blocklist_flags,
-        )
-
-        return blocklist_flags(df, terms, text_col=text_col, id_cols=id_cols)
 
     def sessionize(
         self,
@@ -448,9 +373,6 @@ class Engine:
         (operators/entity.py, with the engine's standard per-block skew
         cap) closed transitively with the shared connected-components.
         Drop every id whose cluster_id != id to keep golden records."""
-        from avro_parquet_spark_example_spark.operators.dedup import (
-            connected_components,
-        )
         from avro_parquet_spark_example_spark.operators.entity import (
             ER_MAX_BLOCK,
             blocked_match_pairs,
@@ -603,50 +525,6 @@ class Engine:
 
         return local_clustering_coefficients(edges)
 
-    def spearman(
-        self, df: DataFrame, x: str, y: str, group: str
-    ) -> DataFrame:
-        """(grp, n, spearman_rho) — exact average-rank Spearman
-        correlation of two bounded-domain columns per group
-        (operators/aggregates.py; quantize continuous columns first)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            spearman_rho,
-        )
-
-        return spearman_rho(df, x=x, y=y, group=group)
-
-    def kendall(
-        self, df: DataFrame, x: str, y: str, group: str
-    ) -> DataFrame:
-        """(grp, n, kendall_tau_b) — exact tie-corrected Kendall tau-b of
-        two bounded-domain columns per group (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            kendall_tau_b,
-        )
-
-        return kendall_tau_b(df, x=x, y=y, group=group)
-
-    def mutual_information(
-        self, df: DataFrame, x: str, y: str, segment: str
-    ) -> DataFrame:
-        """(seg, n, mi_nats) — exact categorical mutual information per
-        segment (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            mutual_information,
-        )
-
-        return mutual_information(df, x=x, y=y, segment=segment)
-
-    def hhi(self, df: DataFrame, group: str, amount: str) -> DataFrame:
-        """(group, n_members, hhi12, hhi) — Herfindahl–Hirschman
-        concentration over per-member exact integer amounts
-        (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            hhi_index,
-        )
-
-        return hhi_index(df, group=group, amount=amount)
-
     def decision_stump(
         self, df: DataFrame, feature: str, target: str
     ) -> DataFrame:
@@ -662,84 +540,6 @@ class Engine:
                 F.col(feature).alias("v"), F.col(target).alias("is_ref")
             )
         )
-
-    def percent_rank_cume(
-        self, df: DataFrame, partition_by: str, order_by: str
-    ) -> DataFrame:
-        """(partition_by, order_by, pr, cd) — exact PERCENT_RANK /
-        CUME_DIST per partition class via the domain-sized frequency
-        matrix, no full-table window (operators/windows.py); quantize
-        continuous order columns first."""
-        from avro_parquet_spark_example_spark.operators.windows import (
-            percent_rank_cume,
-        )
-
-        return percent_rank_cume(
-            df, partition_by=partition_by, order_by=order_by
-        )
-
-    def cramers_v(self, df: DataFrame, x: str, y: str) -> DataFrame:
-        """(n, chi2, cramers_v) — Cramér's V effect size of the x × y
-        contingency table (operators/aggregates.py); bounded domains."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            cramers_v,
-        )
-
-        return cramers_v(df, x=x, y=y)
-
-    def cusum(
-        self, daily: DataFrame, key: str, order: str, value: str
-    ) -> DataFrame:
-        """(key, n_days, cusum_max, peak_day) — one-sided Page CUSUM
-        drift detector over a keyed (DATE-ordered) integral series
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            cusum_drift,
-        )
-
-        return cusum_drift(daily, key=key, order=order, value=value)
-
-    def rolling_median(
-        self,
-        daily: DataFrame,
-        key: str,
-        order: str,
-        value: str,
-        half_window: int = 3,
-    ) -> DataFrame:
-        """(key, order, value, med{W}) — centered W-point rolling median
-        of a keyed ordered integral series (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            rolling_median,
-        )
-
-        return rolling_median(
-            daily, key=key, order=order, value=value, half_window=half_window
-        )
-
-    def lead_lag_xcorr(
-        self, lead: DataFrame, lagging: DataFrame, max_lag: int = 3
-    ) -> DataFrame:
-        """(lag, n_days, xcorr) — Pearson cross-correlation of two
-        (day, x) daily integral series at every lag in ±max_lag
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            lead_lag_xcorr,
-        )
-
-        return lead_lag_xcorr(lead, lagging, max_lag=max_lag)
-
-    def anova(
-        self, df: DataFrame, segment: str, group: str, value: str
-    ) -> DataFrame:
-        """(segment, k, n_obs, f_stat) — one-way ANOVA F of an integral
-        value across group levels, per segment
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            anova_oneway,
-        )
-
-        return anova_oneway(df, segment=segment, group=group, value=value)
 
     def log_odds(
         self,
@@ -766,16 +566,6 @@ class Engine:
             min_count=MONROE_MIN_COUNT if min_count is None else min_count,
         )
 
-    def ttr_hapax(self, df: DataFrame, text: str, group: str) -> DataFrame:
-        """(group, n_tokens, n_types, n_hapax, ttr, hapax_share) —
-        lexical-richness profile per group
-        (operators/text_analysis.py)."""
-        from avro_parquet_spark_example_spark.operators.text_analysis import (
-            ttr_hapax,
-        )
-
-        return ttr_hapax(df, text=text, group=group)
-
     def assortativity(self, edges: DataFrame) -> DataFrame:
         """(n_edges, assortativity) — Newman degree assortativity of an
         undirected (u, v) edge frame (operators/graph.py)."""
@@ -784,250 +574,6 @@ class Engine:
         )
 
         return degree_assortativity(edges)
-
-    def confusion(
-        self,
-        df: DataFrame,
-        id_col: str = "vec_id",
-        label_col: str = "label",
-        vec_col: str = "embedding",
-    ) -> DataFrame:
-        """(true_label, pred_label, n) — nearest-centroid confusion
-        matrix of an (id, label, vector) frame
-        (operators/simsearch.py)."""
-        from avro_parquet_spark_example_spark.operators.simsearch import (
-            nearest_centroid_confusion,
-        )
-
-        return nearest_centroid_confusion(
-            df, id_col=id_col, label_col=label_col, vec_col=vec_col
-        )
-
-    def kappa(self, conf: DataFrame) -> DataFrame:
-        """(n, diag, observed_agreement, kappa) — Cohen's kappa over a
-        (true_label, pred_label, n) confusion-count frame
-        (operators/simsearch.py)."""
-        from avro_parquet_spark_example_spark.operators.simsearch import (
-            cohens_kappa,
-        )
-
-        return cohens_kappa(conf)
-
-    def quantile_bands(
-        self,
-        df: DataFrame,
-        group: str,
-        value: str,
-        bands: tuple[int, ...] = (25, 50, 75, 90),
-    ) -> DataFrame:
-        """(grp, n, p{q}...) — exact type-1 quantiles of an integral
-        bounded-domain value column per group, computed from the
-        value-domain matrix with no per-row sort
-        (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            quantile_bands,
-        )
-
-        return quantile_bands(df, group=group, value=value, bands=bands)
-
-    def trimmed_mean(
-        self, df: DataFrame, group: str, value: str, trim_denom: int = 20
-    ) -> DataFrame:
-        """(grp, n, n_trim, trimmed_mean, winsorized_mean) — robust
-        location estimates per group, ⌊n/trim_denom⌋ trimmed each side
-        (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            trimmed_winsorized_mean,
-        )
-
-        return trimmed_winsorized_mean(
-            df, group=group, value=value, trim_denom=trim_denom
-        )
-
-    def mad(self, df: DataFrame, group: str, value: str) -> DataFrame:
-        """(grp, n, median, mad) — exact type-1 median and MAD per group
-        (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            mad_robust,
-        )
-
-        return mad_robust(df, group=group, value=value)
-
-    def outlier_flags(
-        self, df: DataFrame, group: str, value: str, k: int = 3
-    ) -> DataFrame:
-        """(grp, n, n_outlier, outlier_share) — Hampel-style |v−median| >
-        k·MAD outlier census per group (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            outlier_flags,
-        )
-
-        return outlier_flags(df, group=group, value=value, k=k)
-
-    def hl_shift(
-        self, dfx: DataFrame, dfy: DataFrame, value: str
-    ) -> DataFrame:
-        """(n_x, n_y, hl_shift) — Hodges-Lehmann two-sample shift
-        estimate via histogram convolution (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            hl_shift,
-        )
-
-        return hl_shift(dfx, dfy, value=value)
-
-    def autocorr(
-        self,
-        daily: DataFrame,
-        key: str,
-        order: str,
-        value: str,
-        max_lag: int = 7,
-    ) -> DataFrame:
-        """(key, lag, n_days, acf) — lag-k autocorrelation of a keyed
-        daily integral series, k = 0..max_lag
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            autocorr,
-        )
-
-        return autocorr(
-            daily, key=key, order=order, value=value, max_lag=max_lag
-        )
-
-    def theil_sen(
-        self, daily: DataFrame, key: str, order: str, value: str
-    ) -> DataFrame:
-        """(key, n_pairs, sen_slope) — Theil-Sen robust median trend
-        slope of a keyed daily integral series
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            theil_sen,
-        )
-
-        return theil_sen(daily, key=key, order=order, value=value)
-
-    def calibration_error(
-        self, df: DataFrame, pred: str, outcome: str, prob_denom: int
-    ) -> DataFrame:
-        """(n_bins, n, ece) — expected calibration error of an integral
-        predictor (prob = pred/prob_denom) vs a 0/1 outcome
-        (operators/projection.py)."""
-        from avro_parquet_spark_example_spark.operators.projection import (
-            calibration_error,
-        )
-
-        return calibration_error(
-            df, pred=pred, outcome=outcome, prob_denom=prob_denom
-        )
-
-    def brier(
-        self, df: DataFrame, pred: str, outcome: str, prob_denom: int
-    ) -> DataFrame:
-        """(n, brier) — Brier score of an integral predictor (prob =
-        pred/prob_denom) vs a 0/1 outcome (operators/projection.py)."""
-        from avro_parquet_spark_example_spark.operators.projection import (
-            brier_score,
-        )
-
-        return brier_score(
-            df, pred=pred, outcome=outcome, prob_denom=prob_denom
-        )
-
-    def fano(self, daily: DataFrame, key: str, value: str) -> DataFrame:
-        """(key, n_days, mean_daily, fano) — Fano factor (variance/mean)
-        burstiness index of a keyed integral series
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            fano_factor,
-        )
-
-        return fano_factor(daily, key=key, value=value)
-
-    def column_profile(
-        self,
-        df: DataFrame,
-        columns: tuple[str, ...] | list[str],
-        rendered: dict | None = None,
-    ) -> DataFrame:
-        """(col_name, n, n_null, n_distinct, min_s, max_s) — per-column
-        dataset-card profile in one aggregate pass
-        (operators/projection.py)."""
-        from avro_parquet_spark_example_spark.operators.projection import (
-            column_profile,
-        )
-
-        return column_profile(df, columns, rendered=rendered)
-
-    def cluster_size_histogram(
-        self, df: DataFrame, text_col: str = "text"
-    ) -> DataFrame:
-        """(cluster_size, n_clusters, n_docs) — exact-dup group-size
-        histogram by the canonical normalized-text key
-        (operators/dedup.py)."""
-        from avro_parquet_spark_example_spark.operators.dedup import (
-            cluster_size_histogram,
-        )
-
-        return cluster_size_histogram(df, text_col=text_col)
-
-    def dim_variance(
-        self, df: DataFrame, vec_col: str = "embedding"
-    ) -> DataFrame:
-        """(pos, n, variance) — exact per-dimension population variance
-        of a vector column (operators/simsearch.py); order/limit for a
-        top-k screen."""
-        from avro_parquet_spark_example_spark.operators.simsearch import (
-            dim_variance,
-        )
-
-        return dim_variance(df, vec_col=vec_col)
-
-    def mcc(self, conf: DataFrame) -> DataFrame:
-        """(n, corr, mcc) — Gorodkin multiclass Matthews correlation over
-        a (true_label, pred_label, n) confusion-count frame
-        (operators/simsearch.py); Σt_k²/Σp_k² from each marginal alone
-        so never-predicted classes keep their terms."""
-        from avro_parquet_spark_example_spark.operators.simsearch import (
-            mcc_multiclass,
-        )
-
-        return mcc_multiclass(conf)
-
-    def pass_at_k(self, per: DataFrame) -> DataFrame:
-        """(k, n_problems, mean_pass) — unbiased pass@k over a
-        per-problem frame with integer columns ``n`` (samples) and
-        ``c`` (passes) (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            pass_at_k,
-        )
-
-        return pass_at_k(per)
-
-    def fleiss_kappa(
-        self, ratings: DataFrame, item: str, category: str, n_raters: int
-    ) -> DataFrame:
-        """(n_items, n_raters, p_bar, p_e, kappa) — Fleiss' multi-rater
-        agreement over a ratings frame with exactly n_raters rows per
-        item (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            fleiss_kappa,
-        )
-
-        return fleiss_kappa(
-            ratings, item=item, category=category, n_raters=n_raters
-        )
-
-    def jackknife_se(
-        self, per: DataFrame, scale: float = 10000.0
-    ) -> DataFrame:
-        """(n_clusters, theta_hat, jackknife_se) — delete-one-cluster
-        jackknife SE from per-cluster iusum sums ``su`` and counts
-        ``cnt`` (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            jackknife_ratio_se,
-        )
-
-        return jackknife_ratio_se(per, scale=scale)
 
     def poisson_bootstrap(
         self, rows: DataFrame, scale: float = 10000.0
@@ -1040,90 +586,6 @@ class Engine:
         )
 
         return poisson_bootstrap_ci(rows, scale=scale)
-
-    def effect_sizes(self, e: DataFrame) -> DataFrame:
-        """(event_type, n_weekend, n_weekday, cohens_d, hedges_g,
-        cliffs_delta) — over a (event_type, wk∈{0,1}, q int) two-sample
-        frame (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            effect_sizes,
-        )
-
-        return effect_sizes(e)
-
-    def power_mde(self, e: DataFrame) -> DataFrame:
-        """(event_type, n_weekend, n_weekday, pooled_sd, mde_abs,
-        mde_rel) — minimal detectable effect at α=0.05/power 0.8 over
-        the same two-sample frame shape as effect_sizes
-        (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            power_mde,
-        )
-
-        return power_mde(e)
-
-    def bradley_terry(self, wins: DataFrame) -> DataFrame:
-        """(event_type, wins, games, pi9, rating) — Bradley-Terry MM
-        strengths + Elo-scale ratings from an (i, j, nij) ordered duel
-        frame (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            bradley_terry,
-        )
-
-        return bradley_terry(wins)
-
-    def forecast_backtest(
-        self,
-        daily: DataFrame,
-        key: str,
-        order: str,
-        value: str,
-        season: int = 7,
-    ) -> DataFrame:
-        """(key, n_days, mae, rmse, mape, smape, mase) — seasonal-naive
-        backtest metrics over a keyed DATE-grid integer series
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            forecast_backtest,
-        )
-
-        return forecast_backtest(
-            daily, key=key, order=order, value=value, season=season
-        )
-
-    def bleu_corpus(
-        self,
-        pairs: DataFrame,
-        group: str = "lang",
-        pair: str = "doc_id",
-        cand: str = "cand",
-        ref: str = "ref",
-    ) -> DataFrame:
-        """(group, n_pairs, c_len, r_len, p1, p2, bp, bleu2) — corpus
-        BLEU-2 over a (group, pair-id, candidate, reference) text-pair
-        frame (operators/text_analysis.py)."""
-        from avro_parquet_spark_example_spark.operators.text_analysis import (
-            bleu_corpus,
-        )
-
-        return bleu_corpus(pairs, group=group, pair=pair, cand=cand, ref=ref)
-
-    def rouge_n(
-        self,
-        pairs: DataFrame,
-        group: str = "lang",
-        pair: str = "doc_id",
-        cand: str = "cand",
-        ref: str = "ref",
-    ) -> DataFrame:
-        """(group, n_pairs, rouge1/2 recall/precision/f1) — corpus
-        ROUGE-1/ROUGE-2 over the same text-pair frame shape as
-        bleu_corpus (operators/text_analysis.py)."""
-        from avro_parquet_spark_example_spark.operators.text_analysis import (
-            rouge_n,
-        )
-
-        return rouge_n(pairs, group=group, pair=pair, cand=cand, ref=ref)
 
     def scc(
         self, edges: DataFrame, nodes: DataFrame, rounds: int | None = None
@@ -1142,113 +604,6 @@ class Engine:
             edges, nodes, rounds=_SCC_ROUNDS if rounds is None else rounds
         )
 
-    def piecewise_trend(
-        self,
-        daily: DataFrame,
-        key: str,
-        order: str,
-        value: str,
-        segments: int = 3,
-    ) -> DataFrame:
-        """(key, segment, n_days, mean_level, slope) — rank-tercile
-        piecewise OLS trend over a keyed ordered integer series
-        (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            piecewise_trend,
-        )
-
-        return piecewise_trend(
-            daily, key=key, order=order, value=value, segments=segments
-        )
-
-    def median_ci(
-        self, df: DataFrame, group: str, value: str
-    ) -> DataFrame:
-        """(group, n, median, ci_lo, ci_hi) — median with a
-        distribution-free 95% order-statistic CI per group over any
-        integer-valued column (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            median_ci,
-        )
-
-        return median_ci(df, group=group, value=value)
-
-    def auc_bootstrap_cell(self, scored: DataFrame) -> DataFrame:
-        """(n_pos, n_neg, auc, ci_lo, ci_hi) — corpus-size-independent
-        cell-sufficiency AUC bootstrap over a scored frame with integer
-        score column ``v`` (bounded value grid) and 0/1 label ``pos``
-        (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            auc_bootstrap_cell,
-        )
-
-        return auc_bootstrap_cell(scored)
-
-    def mcnemar(self, paired: DataFrame) -> DataFrame:
-        """(event_type, n, b, c, chi2, chi2_cc, rejected) — McNemar's
-        paired test over a (event_type, ya, yb) 0/1 frame, one row per
-        shared item (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            mcnemar_paired,
-        )
-
-        return mcnemar_paired(paired)
-
-    def cochran_q(self, paired: DataFrame) -> DataFrame:
-        """(event_type, n, ca, cb, cc, q_stat, rejected) — Cochran's Q
-        over a (event_type, ya, yb, yc) 0/1 frame, k = 3 treatments
-        (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            cochran_q,
-        )
-
-        return cochran_q(paired)
-
-    def krippendorff_alpha(
-        self, ratings: DataFrame, item: str, category: str, n_raters: int
-    ) -> DataFrame:
-        """(n_items, n_raters, d_o, d_e, alpha) — nominal Krippendorff
-        agreement over a ratings frame with exactly n_raters rows per
-        item (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            krippendorff_alpha,
-        )
-
-        return krippendorff_alpha(
-            ratings, item=item, category=category, n_raters=n_raters
-        )
-
-    def auc_delong_se(self, scored: DataFrame) -> DataFrame:
-        """(n_pos, n_neg, auc, se_delong, ci_lo, ci_hi) — DeLong
-        analytic SE + 95% CI for ROC AUC over a (v integer score,
-        pos 0/1) scored frame (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            auc_delong_se,
-        )
-
-        return auc_delong_se(scored)
-
-    def brier_decomposition(self, scored: DataFrame) -> DataFrame:
-        """(event_type, n, brier, reliability, resolution, uncertainty)
-        — Murphy decomposition over a (event_type, q forecast in
-        [0, 10000], o 0/1 outcome, bin bucket id) frame
-        (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            brier_decomposition,
-        )
-
-        return brier_decomposition(scored)
-
-    def g_test(self, e: DataFrame) -> DataFrame:
-        """(event_type, n, g_stat, rejected) — likelihood-ratio G-test
-        of 2x2 independence over a (event_type, wk 0/1, hi 0/1) frame
-        (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            g_test,
-        )
-
-        return g_test(e)
-
     def rbo(self, t1: DataFrame, t2: DataFrame, k: int = 50) -> DataFrame:
         """(k, overlap_at_k, a_k, rbo_trunc, rbo_ext) — rank-biased
         overlap at p=0.9 between two rank frames (shared id column +
@@ -1259,229 +614,100 @@ class Engine:
 
         return rbo_overlap(t1, t2, k=k)
 
-    def cuped(self, per_user: DataFrame) -> DataFrame:
-        """(n_users, theta, mean_y, var_y, var_y_adj,
-        var_reduction_pct) — CUPED variance reduction over a per-unit
-        frame with exact-integer pre-period covariate ``x`` and metric
-        ``y`` (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            cuped,
-        )
 
-        return cuped(per_user)
+# Facade name -> "module:function" under ``operators/``. Each entry is the
+# library function itself, bound onto ``Engine`` below.
+_OPERATORS = {
+    "spearman": "aggregates:spearman_rho",
+    "kendall": "aggregates:kendall_tau_b",
+    "mutual_information": "aggregates:mutual_information",
+    "hhi": "aggregates:hhi_index",
+    "cramers_v": "aggregates:cramers_v",
+    "quantile_bands": "aggregates:quantile_bands",
+    "trimmed_mean": "aggregates:trimmed_winsorized_mean",
+    "mad": "aggregates:mad_robust",
+    "outlier_flags": "aggregates:outlier_flags",
+    "hl_shift": "aggregates:hl_shift",
+    "median_ci": "aggregates:median_ci",
+    "equidepth_histogram_bucketed": "aggregates:equidepth_histogram_bucketed",
+    "chunk": "curation:chunk_documents",
+    "quality_gate": "curation:gopher_quality_flags",
+    "blocklist_filter": "curation:blocklist_flags",
+    "dedup_exact": "dedup:keep_first_per_text",
+    "dedup_semantic": "dedup:semantic_cell_dropped",
+    "cluster_size_histogram": "dedup:cluster_size_histogram",
+    "pagerank": "graph:pagerank_edges",
+    "triangles": "graph:triangle_counts",
+    "pass_at_k": "inference:pass_at_k",
+    "fleiss_kappa": "inference:fleiss_kappa",
+    "jackknife_se": "inference:jackknife_ratio_se",
+    "effect_sizes": "inference:effect_sizes",
+    "power_mde": "inference:power_mde",
+    "bradley_terry": "inference:bradley_terry",
+    "auc_bootstrap_cell": "inference:auc_bootstrap_cell",
+    "mcnemar": "inference:mcnemar_paired",
+    "cochran_q": "inference:cochran_q",
+    "krippendorff_alpha": "inference:krippendorff_alpha",
+    "auc_delong_se": "inference:auc_delong_se",
+    "brier_decomposition": "inference:brier_decomposition",
+    "g_test": "inference:g_test",
+    "cuped": "inference:cuped",
+    "kendall_w": "inference:kendall_w",
+    "calibration_error": "projection:calibration_error",
+    "brier": "projection:brier_score",
+    "column_profile": "projection:column_profile",
+    "jonckheere_terpstra": "rankstats:jonckheere_terpstra",
+    "gk_gamma_tau": "rankstats:gk_gamma_tau",
+    "mood_median": "rankstats:mood_median",
+    "runs_test": "rankstats:runs_test",
+    "cliff_delta": "rankstats:cliff_delta",
+    "kappa_weighted": "rankstats:kappa_weighted",
+    "ks_two_sample": "rankstats:ks_two_sample",
+    "auc_partial": "rankstats:auc_partial",
+    "brunner_munzel": "rankstats:brunner_munzel",
+    "lorenz_curve": "rankstats:lorenz_curve",
+    "cvm_two_sample": "rankstats:cvm_two_sample",
+    "cochran_armitage": "rankstats:cochran_armitage",
+    "hosmer_lemeshow": "rankstats:hosmer_lemeshow",
+    "lorenz_curve_bucketed": "rankstats:lorenz_curve_bucketed",
+    "confusion": "simsearch:nearest_centroid_confusion",
+    "kappa": "simsearch:cohens_kappa",
+    "dim_variance": "simsearch:dim_variance",
+    "mcc": "simsearch:mcc_multiclass",
+    "kaplan_meier": "survival:kaplan_meier",
+    "nelson_aalen": "survival:nelson_aalen",
+    "rmst": "survival:rmst",
+    "ttr_hapax": "text_analysis:ttr_hapax",
+    "bleu_corpus": "text_analysis:bleu_corpus",
+    "rouge_n": "text_analysis:rouge_n",
+    "cusum": "timeseries:cusum_drift",
+    "rolling_median": "timeseries:rolling_median",
+    "lead_lag_xcorr": "timeseries:lead_lag_xcorr",
+    "anova": "timeseries:anova_oneway",
+    "autocorr": "timeseries:autocorr",
+    "theil_sen": "timeseries:theil_sen",
+    "fano": "timeseries:fano_factor",
+    "forecast_backtest": "timeseries:forecast_backtest",
+    "piecewise_trend": "timeseries:piecewise_trend",
+    "mann_kendall": "timeseries:mann_kendall",
+    "percent_rank_cume": "windows:percent_rank_cume",
+}
 
-    def mann_kendall(
-        self, daily: DataFrame, key: str, order: str, value: str
-    ) -> DataFrame:
-        """(key, n_days, s_stat, var_s, z, trend) — tie-corrected
-        Mann-Kendall trend test over a keyed ordered integer series on
-        a bounded grid (operators/timeseries.py)."""
-        from avro_parquet_spark_example_spark.operators.timeseries import (
-            mann_kendall,
-        )
 
-        return mann_kendall(daily, key=key, order=order, value=value)
+class _Operator:
+    """Resolve ``"module:function"`` on first access; return the function."""
 
-    def kendall_w(self, counts: DataFrame) -> DataFrame:
-        """(n_items, n_judges, w, chi2, rejected) — tie-corrected
-        Kendall's coefficient of concordance over a (judge, item, cnt)
-        score frame; densifies to the complete judge x item block
-        (operators/inference.py)."""
-        from avro_parquet_spark_example_spark.operators.inference import (
-            kendall_w,
-        )
+    def __init__(self, target: str):
+        self.target = target
+        self.fn = None
 
-        return kendall_w(counts)
+    def __get__(self, obj, owner=None):
+        if self.fn is None:
+            module, name = self.target.split(":")
+            path = f"{__package__}.operators.{module}"
+            self.fn = getattr(importlib.import_module(path), name)
+        return self.fn
 
-    def jonckheere_terpstra(
-        self, base: DataFrame, n_groups: int = 7
-    ) -> DataFrame:
-        """(event_type, n, jt2, mean_jt, var_jt, z, rejected) —
-        ordered-alternative trend test over a (event_type, g ordered
-        group, v integer value) observation frame
-        (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            jonckheere_terpstra,
-        )
 
-        return jonckheere_terpstra(base, n_groups=n_groups)
-
-    def gk_gamma_tau(self, base: DataFrame) -> DataFrame:
-        """(event_type, concordant, discordant, gamma, somers_dyx,
-        tau_b) — ordinal association over a (event_type, x, y)
-        observation frame (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            gk_gamma_tau,
-        )
-
-        return gk_gamma_tau(base)
-
-    def mood_median(self, base: DataFrame) -> DataFrame:
-        """(event_type, n_i, above, at_or_below, pooled_median, chi2,
-        rejected) — Mood's k-group median test over a (event_type, q
-        integer value) observation frame (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            mood_median,
-        )
-
-        return mood_median(base)
-
-    def runs_test(self, daily: DataFrame) -> DataFrame:
-        """(event_type, runs, n1, n2, mean_runs, z, rejected) —
-        Wald–Wolfowitz randomness test over a keyed ordered integer
-        series (event_type, day, tq) (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            runs_test,
-        )
-
-        return runs_test(daily)
-
-    def cliff_delta(self, base: DataFrame) -> DataFrame:
-        """(event_type, n_weekend, n_weekday, delta, magnitude) —
-        ordinal dominance effect size over a (event_type, wk 0/1, v
-        integer value) frame (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            cliff_delta,
-        )
-
-        return cliff_delta(base)
-
-    def kappa_weighted(self, base: DataFrame) -> DataFrame:
-        """(event_type, n, kappa_linear, kappa_quadratic) — weighted
-        Cohen's kappa over a (event_type, ra, rb) ordinal rating-pair
-        frame (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            kappa_weighted,
-        )
-
-        return kappa_weighted(base)
-
-    def ks_two_sample(self, base: DataFrame) -> DataFrame:
-        """(event_type, n_weekend, n_weekday, ks_d, ks_stat, rejected)
-        — exact two-sample Kolmogorov–Smirnov distance over a
-        (event_type, wk 0/1, v integer value) frame
-        (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            ks_two_sample,
-        )
-
-        return ks_two_sample(base)
-
-    def auc_partial(self, scored: DataFrame) -> DataFrame:
-        """(n_pos, n_neg, pauc, pauc_mcclish) — partial AUC over FPR ∈
-        [0, 0.1] with McClish standardization, over a scored frame with
-        integer column v (bounded grid, higher = more positive) and 0/1
-        column pos (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            auc_partial,
-        )
-
-        return auc_partial(scored)
-
-    def brunner_munzel(self, base: DataFrame) -> DataFrame:
-        """(event_type, n_weekend, n_weekday, p_hat, w_stat, rejected)
-        — nonparametric Behrens–Fisher test over a (event_type, wk 0/1,
-        v integer value) frame (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            brunner_munzel,
-        )
-
-        return brunner_munzel(base)
-
-    def kaplan_meier(self, subj: DataFrame) -> DataFrame:
-        """(grp, t, n_risk, n_event, n_censor, survival) — Kaplan–Meier
-        estimator over a (user_id, grp cohort, t integer duration, ev
-        0/1 observed flag) subject frame (operators/survival.py)."""
-        from avro_parquet_spark_example_spark.operators.survival import (
-            kaplan_meier,
-        )
-
-        return kaplan_meier(subj)
-
-    def lorenz_curve(self, per_user: DataFrame) -> DataFrame:
-        """(event_type, decile, n_users, cum_user_share,
-        cum_value_share) — Lorenz curve decile points over a
-        (event_type, user_id, s integer total) per-unit frame
-        (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            lorenz_curve,
-        )
-
-        return lorenz_curve(per_user)
-
-    def equidepth_histogram_bucketed(
-        self, e: DataFrame, tiles: int = 8, n_buckets: int = 64
-    ) -> DataFrame:
-        """(event_type, bucket, n, lo, hi) — per-type equi-depth NTILE
-        histogram via the partitioned two-phase bucketed rank — no
-        per-type full-population sort (operators/aggregates.py)."""
-        from avro_parquet_spark_example_spark.operators.aggregates import (
-            equidepth_histogram_bucketed,
-        )
-
-        return equidepth_histogram_bucketed(
-            e, tiles=tiles, n_buckets=n_buckets
-        )
-
-    def nelson_aalen(self, subj: DataFrame) -> DataFrame:
-        """(grp, t, n_risk, n_event, n_censor, cum_hazard, var_hazard)
-        — Nelson–Aalen cumulative hazard over a (user_id, grp, t, ev)
-        subject frame (operators/survival.py)."""
-        from avro_parquet_spark_example_spark.operators.survival import (
-            nelson_aalen,
-        )
-
-        return nelson_aalen(subj)
-
-    def rmst(self, subj: DataFrame, tau: int = 30) -> DataFrame:
-        """(grp, tau, rmst) — restricted mean survival time at horizon
-        ``tau`` over a (user_id, grp, t, ev) subject frame
-        (operators/survival.py)."""
-        from avro_parquet_spark_example_spark.operators.survival import (
-            rmst,
-        )
-
-        return rmst(subj, tau=tau)
-
-    def cvm_two_sample(self, base: DataFrame) -> DataFrame:
-        """(event_type, n_weekend, n_weekday, cvm_t, rejected) —
-        Cramér–von Mises two-sample criterion over a (event_type, wk
-        0/1, v integer) frame (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            cvm_two_sample,
-        )
-
-        return cvm_two_sample(base)
-
-    def cochran_armitage(self, base: DataFrame) -> DataFrame:
-        """(event_type, n, r, n_groups, z, rejected) — Cochran–Armitage
-        trend test over a (event_type, s integer score, y 0/1) frame
-        (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            cochran_armitage,
-        )
-
-        return cochran_armitage(base)
-
-    def hosmer_lemeshow(self, scored: DataFrame) -> DataFrame:
-        """(n, n_groups, hl_chi2, rejected) — Hosmer–Lemeshow
-        calibration test over a (v integer score, pos 0/1) frame
-        (operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            hosmer_lemeshow,
-        )
-
-        return hosmer_lemeshow(scored)
-
-    def lorenz_curve_bucketed(
-        self, per_user: DataFrame, n_buckets: int = 64
-    ) -> DataFrame:
-        """:meth:`lorenz_curve` with the per-type rank computed by the
-        partitioned two-phase bucketed prefix sum — bit-identical
-        output, no per-type full-population sort (the 100 TB form;
-        operators/rankstats.py)."""
-        from avro_parquet_spark_example_spark.operators.rankstats import (
-            lorenz_curve_bucketed,
-        )
-
-        return lorenz_curve_bucketed(per_user, n_buckets=n_buckets)
+for _name, _target in _OPERATORS.items():
+    setattr(Engine, _name, _Operator(_target))

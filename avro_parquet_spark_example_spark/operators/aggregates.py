@@ -948,7 +948,11 @@ def agg_equidepth_histogram_bucketed(
 def equidepth_histogram_bucketed(
     e: DataFrame, tiles: int = 8, n_buckets: int = 64
 ) -> DataFrame:
-    """Frame-level core of :func:`agg_equidepth_histogram_bucketed`:
+    """(event_type, bucket, n, lo, hi) per-type equi-depth NTILE
+    histogram with no per-type full-population sort (the library form
+    the Engine facade exposes).
+
+    Frame-level core of :func:`agg_equidepth_histogram_bucketed`:
     ``e`` has columns (event_type, value orderable-numeric, event_id
     tiebreak). Range-buckets on a per-type [min, max] grid (monotone in
     the (value, event_id) total order), exclusive offsets via a
@@ -1926,7 +1930,8 @@ def _joint_matrix(df: DataFrame, x: str, y: str, group: str) -> DataFrame:
 def spearman_rho(
     df: DataFrame, x: str, y: str, group: str
 ) -> DataFrame:
-    """(grp, n, spearman_rho) over arbitrary columns — the library form
+    """(grp, n, spearman_rho) exact average-rank Spearman correlation of
+    two arbitrary columns per group — the library form
     the Engine facade exposes; ``agg_spearman_rank_corr`` is its
     registered oracle-checked instance (facade-parity single-source
     rule). Columns must have bounded distinct domains (quantize
@@ -2050,7 +2055,8 @@ def agg_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kendall_tau_b(
     df: DataFrame, x: str, y: str, group: str
 ) -> DataFrame:
-    """(grp, n, kendall_tau_b) over arbitrary columns — the library form
+    """(grp, n, kendall_tau_b) exact tie-corrected Kendall tau-b of two
+    arbitrary columns per group — the library form
     the Engine facade exposes; ``agg_kendall_tau_b`` is its registered
     oracle-checked instance (facade-parity single-source rule). Columns
     must have bounded distinct domains (quantize continuous ones
@@ -2188,7 +2194,8 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mutual_information(
     df: DataFrame, x: str, y: str, segment: str
 ) -> DataFrame:
-    """(seg, n, mi_nats) over arbitrary categorical columns per segment —
+    """(seg, n, mi_nats) exact mutual information of two arbitrary
+    categorical columns per segment —
     the library form the Engine facade exposes; ``agg_mutual_information``
     is its registered oracle-checked instance (facade-parity
     single-source rule)."""
@@ -2293,11 +2300,11 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hhi_index(df: DataFrame, group: str, amount: str) -> DataFrame:
-    """(group, n_members, hhi12, hhi) over per-member exact integer
-    amounts — the library form the Engine facade exposes;
-    ``agg_hhi_concentration`` is its registered oracle-checked instance
-    (facade-parity single-source rule). ``df`` carries one row per
-    (group, member) with its integer amount."""
+    """(group, n_members, hhi12, hhi) Herfindahl–Hirschman concentration
+    over per-member exact integer amounts — the library form the Engine
+    facade exposes; ``agg_hhi_concentration`` is its registered
+    oracle-checked instance (facade-parity single-source rule). ``df``
+    carries one row per (group, member) with its integer amount."""
     rev = df.select(F.col(group).alias("grp"), F.col(amount).alias("cents"))
     tot = rev.groupBy("grp").agg(
         F.sum("cents").cast("bigint").alias("total"),
@@ -2382,7 +2389,8 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cramers_v(df: DataFrame, x: str, y: str) -> DataFrame:
-    """(n, chi2, cramers_v) over two arbitrary categorical columns — the
+    """(n, chi2, cramers_v) Cramér's V effect size of the contingency
+    table of two arbitrary categorical columns — the
     library form the Engine facade exposes; ``agg_cramers_v`` is its
     registered oracle-checked instance (facade-parity single-source
     rule). Domains must be bounded (the contingency table is |x|·|y|
@@ -2537,7 +2545,8 @@ def quantile_bands(
     bands: tuple[int, ...] = QUANTILE_BANDS,
 ) -> DataFrame:
     """(grp, n, p{q}...) exact type-1 quantiles of an integral
-    bounded-domain value column per group — the library form the Engine
+    bounded-domain value column per group, computed from the value-domain
+    matrix with no per-row sort — the library form the Engine
     facade exposes; ``agg_quantile_bands_exact`` is its registered
     oracle-checked instance (facade-parity single-source rule)."""
     cum = _cumulative_matrix(_value_matrix(df, group, value))
@@ -2603,10 +2612,12 @@ def agg_trimmed_winsorized_mean(
 def trimmed_winsorized_mean(
     df: DataFrame, group: str, value: str, trim_denom: int = TRIM_DENOM
 ) -> DataFrame:
-    """(grp, n, n_trim, trimmed_mean, winsorized_mean) over an integral
-    bounded-domain value column — the library form the Engine facade
-    exposes; ``agg_trimmed_winsorized_mean`` is its registered
-    oracle-checked instance (facade-parity single-source rule)."""
+    """(grp, n, n_trim, trimmed_mean, winsorized_mean) robust location
+    estimates of an integral bounded-domain value column per group,
+    ⌊n/trim_denom⌋ values trimmed each side — the library form the
+    Engine facade exposes; ``agg_trimmed_winsorized_mean`` is its
+    registered oracle-checked instance (facade-parity single-source
+    rule)."""
     cum = _cumulative_matrix(_value_matrix(df, group, value))
     t = cum.withColumn("k", F.expr(f"n div {trim_denom}"))
     surviving = F.greatest(
@@ -2885,7 +2896,8 @@ def agg_hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hl_shift(dfx: DataFrame, dfy: DataFrame, value: str) -> DataFrame:
     """(n_x, n_y, hl_shift) Hodges-Lehmann shift estimate between two
-    frames' integral bounded-domain value columns — the library form the
+    frames' integral bounded-domain value columns, via histogram
+    convolution — the library form the
     Engine facade exposes; ``agg_hodges_lehmann_shift`` is its
     registered oracle-checked instance (facade-parity single-source
     rule)."""

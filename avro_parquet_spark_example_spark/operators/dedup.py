@@ -46,7 +46,8 @@ def keep_first_per_text(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Drop exact duplicates, keeping the lowest-id row per normalized-text
-    group (deterministic winner)."""
+    group (deterministic winner). Shared by the oracle-checked
+    ``dedup_exact`` operator and ``Engine.dedup_exact``."""
     w = Window.partitionBy(normalized_text_key(text_col)).orderBy(id_col)
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -217,14 +218,8 @@ def minhash_signatures_df(
         F.col("__t").isNotNull()
     )
     # A small parquet input yields few splits (sf0.1 documents: 2), leaving
-    # the shingle+hash stage underparallelized; widen to the cluster's
-    # parallelism when — and only when — the scan is narrower than it
-    # (production-size tables have enough splits, making this a no-op, so
-    # no gratuitous full-text shuffle at scale). Measured −0.25 s at sf0.1.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    shingled = with_shingles(base, text_col="__t")
+    # the shingle+hash stage underparallelized. Measured −0.25 s at sf0.1.
+    shingled = with_shingles(spread(base), text_col="__t")
     exploded = shingled.select("id", F.explode("sh").alias("s")).select(
         "id", F.xxhash64("s").alias("h")
     )
@@ -1259,7 +1254,8 @@ def semantic_cell_dropped(
     """SemDeDup-shaped semantic dedup: within each sign-bit cell, a vector
     is dropped when some lower-id vector has cosine >= threshold; returns
     the dropped rows as (id_col, cell, kept_for = min surviving id).
-    Shared by the oracle-checked ``dedup_semantic_cell`` query and
+    Anti-join ``df`` against the result to keep the survivors. Shared by
+    the oracle-checked ``dedup_semantic_cell`` query and
     ``Engine.dedup_semantic``."""
     cells = df.select(
         F.col(id_col), F.col(emb_col), sign_cell(emb_col, n_bits).alias("cell")

@@ -198,9 +198,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
-    """(node, n_triangles) over an oriented (u < v) edge DataFrame — the
-    library form the Engine facade exposes; graph_triangle_count is its
-    registered oracle-checked instance."""
+    """(node, n_triangles) over an oriented (u < v) edge DataFrame by an
+    ordered edge-join that finds each triangle once — the library form
+    the Engine facade exposes; graph_triangle_count is its registered
+    oracle-checked instance."""
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     e3 = edges.alias("e3")

@@ -2871,7 +2871,8 @@ def eval_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mcnemar_paired(paired: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`eval_mcnemar_paired` (the library
+    """(event_type, n, b, c, chi2, chi2_cc, rejected) — McNemar's paired
+    test. Frame-level core of :func:`eval_mcnemar_paired` (the library
     form the Engine facade exposes): ``paired`` has columns
     (event_type group key, ya 0/1, yb 0/1) — one row per shared item."""
     m = paired.groupBy("event_type").agg(
@@ -2965,7 +2966,9 @@ def eval_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cochran_q(paired: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`eval_cochran_q` (the library form the
+    """(event_type, n, ca, cb, cc, q_stat, rejected) — Cochran's Q over
+    k = 3 treatments. Frame-level core of :func:`eval_cochran_q` (the
+    library form the
     Engine facade exposes): ``paired`` has columns (event_type group
     key, ya, yb, yc all 0/1) — one row per shared item, k = 3."""
     r = F.col("ya") + F.col("yb") + F.col("yc")
@@ -3256,11 +3259,11 @@ def eval_auc_delong_se(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def auc_delong_se(scored: DataFrame) -> DataFrame:
-    """(n_pos, n_neg, auc, se_delong, ci_lo, ci_hi) — DeLong AUC SE
-    over any scored frame with integer column ``v`` (bounded value
-    grid) and 0/1 column ``pos`` (the library form the Engine facade
-    exposes; ``eval_auc_delong_se`` is its registered oracle-checked
-    instance)."""
+    """(n_pos, n_neg, auc, se_delong, ci_lo, ci_hi) — DeLong analytic
+    AUC SE and 95% CI over any scored frame with integer column ``v``
+    (bounded value grid) and 0/1 column ``pos`` (the library form the
+    Engine facade exposes; ``eval_auc_delong_se`` is its registered
+    oracle-checked instance)."""
     grid = scored.groupBy("v").agg(
         F.sum("pos").cast("bigint").alias("wp"),
         F.sum(1 - F.col("pos")).cast("bigint").alias("wn"),
@@ -3449,7 +3452,9 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def brier_decomposition(scored: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`eval_brier_decomposition` (the
+    """(event_type, n, brier, reliability, resolution, uncertainty) —
+    Murphy decomposition of the Brier score. Frame-level core of
+    :func:`eval_brier_decomposition` (the
     library form the Engine facade exposes): ``scored`` has columns
     (event_type group key, q int forecast in [0, 10000] = p·10⁴,
     o 0/1 outcome, bin int bucket id)."""
@@ -3596,7 +3601,9 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def g_test(e: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_g_test` (the library form the
+    """(event_type, n, g_stat, rejected) — likelihood-ratio G-test of
+    2x2 independence. Frame-level core of :func:`stat_g_test` (the
+    library form the
     Engine facade exposes): ``e`` has columns (event_type stratum key,
     wk 0/1 row factor, hi 0/1 column factor)."""
     marg = e.groupBy("event_type").agg(

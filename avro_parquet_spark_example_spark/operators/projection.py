@@ -1673,12 +1673,13 @@ def column_profile(
     columns: tuple[str, ...] | list[str],
     rendered: dict | None = None,
 ) -> DataFrame:
-    """(col_name, n, n_null, n_distinct, min_s, max_s) per-column profile
-    — the library form the Engine facade exposes; ``dq_column_profile``
-    is its registered oracle-checked instance (facade-parity
-    single-source rule). ``rendered`` optionally maps a column name to
-    the Column expression used for distinct/min/max (e.g. a decimal cast
-    for doubles, whose raw string render is engine-specific)."""
+    """(col_name, n, n_null, n_distinct, min_s, max_s) per-column
+    dataset-card profile in one aggregate pass — the library form the
+    Engine facade exposes; ``dq_column_profile`` is its registered
+    oracle-checked instance (facade-parity single-source rule).
+    ``rendered`` optionally maps a column name to the Column expression
+    used for distinct/min/max (e.g. a decimal cast for doubles, whose raw
+    string render is engine-specific)."""
     rendered = rendered or {}
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n")]
     for i, c in enumerate(columns, start=1):

@@ -225,7 +225,9 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def jonckheere_terpstra(base: DataFrame, n_groups: int = 7) -> DataFrame:
-    """Frame-level core of :func:`stat_jonckheere_terpstra` (the library
+    """(event_type, n, jt2, mean_jt, var_jt, z, rejected) —
+    ordered-alternative trend test. Frame-level core of
+    :func:`stat_jonckheere_terpstra` (the library
     form the Engine facade exposes): ``base`` has columns (event_type
     stratum key, g ordered group 1..n_groups, v integer value) — one
     row per observation."""
@@ -426,7 +428,9 @@ def stat_gk_gamma_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gk_gamma_tau(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_gk_gamma_tau` (the library form
+    """(event_type, concordant, discordant, gamma, somers_dyx, tau_b) —
+    ordinal association. Frame-level core of :func:`stat_gk_gamma_tau`
+    (the library form
     the Engine facade exposes): ``base`` has columns (event_type
     stratum key, x ordinal, y ordinal) — one row per observation; the
     (x × y) contingency must be bounded (it becomes both pair-join
@@ -636,7 +640,9 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mood_median(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_mood_median` (the library form
+    """(event_type, n_i, above, at_or_below, pooled_median, chi2,
+    rejected) — Mood's k-group median test. Frame-level core of
+    :func:`stat_mood_median` (the library form
     the Engine facade exposes): ``base`` has columns (event_type group
     key, q integer value) — one row per observation."""
     vc = (
@@ -826,7 +832,9 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def runs_test(daily: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_runs_test` (the library form the
+    """(event_type, runs, n1, n2, mean_runs, z, rejected) —
+    Wald–Wolfowitz randomness test. Frame-level core of
+    :func:`stat_runs_test` (the library form the
     Engine facade exposes): ``daily`` has columns (event_type series
     key, day orderable, tq integer value) — one row per series point."""
     daily = daily.localCheckpoint(eager=True)  # day-grid; consumed twice
@@ -986,7 +994,9 @@ def stat_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cliff_delta(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_cliff_delta` (the library form
+    """(event_type, n_weekend, n_weekday, delta, magnitude) — ordinal
+    dominance effect size. Frame-level core of :func:`stat_cliff_delta`
+    (the library form
     the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
     cells = base.groupBy("event_type", "v").agg(
@@ -1144,7 +1154,8 @@ def eval_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kappa_weighted(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`eval_kappa_weighted` (the library
+    """(event_type, n, kappa_linear, kappa_quadratic) — weighted Cohen's
+    kappa. Frame-level core of :func:`eval_kappa_weighted` (the library
     form the Engine facade exposes): ``base`` has columns (event_type
     stratum key, ra ordinal rating, rb ordinal rating) — one row per
     rated item; the rating grid must be bounded (marginal cross
@@ -1312,7 +1323,9 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ks_two_sample(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_ks_two_sample` (the library form
+    """(event_type, n_weekend, n_weekday, ks_d, ks_stat, rejected) —
+    exact two-sample Kolmogorov–Smirnov distance. Frame-level core of
+    :func:`stat_ks_two_sample` (the library form
     the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
     cum = _ecdf_cells(base)
@@ -1481,7 +1494,9 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lorenz_curve(per_user: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`agg_lorenz_curve` (the library form
+    """(event_type, decile, n_users, cum_user_share, cum_value_share) —
+    Lorenz curve decile points. Frame-level core of
+    :func:`agg_lorenz_curve` (the library form
     the Engine facade exposes): ``per_user`` has columns (event_type
     group key, user_id ranking tiebreak, s integer value total) — one
     row per unit."""
@@ -1518,7 +1533,11 @@ def agg_lorenz_curve_bucketed(
 def lorenz_curve_bucketed(
     per_user: DataFrame, n_buckets: int = 64
 ) -> DataFrame:
-    """Frame-level core of :func:`agg_lorenz_curve_bucketed` — the
+    """:func:`lorenz_curve`'s output, bit-identical, with no per-type
+    full-population sort (the 100 TB form; the library form the Engine
+    facade exposes).
+
+    Frame-level core of :func:`agg_lorenz_curve_bucketed` — the
     low-cardinality-partition rank pattern, pure-DataFrame (no driver
     collect, unlike ``global_ntiles``' offset round-trip, because the
     offsets here are per-GROUP and must stay distributed):
@@ -1688,7 +1707,9 @@ def eval_auc_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def auc_partial(scored: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`eval_auc_partial` (the library form
+    """(n_pos, n_neg, pauc, pauc_mcclish) — partial AUC over FPR ∈
+    [0, 0.1] with McClish standardization. Frame-level core of
+    :func:`eval_auc_partial` (the library form
     the Engine facade exposes): ``scored`` has integer column ``v``
     (bounded score grid, HIGHER = more positive) and 0/1 column
     ``pos``."""
@@ -1883,7 +1904,9 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def brunner_munzel(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_brunner_munzel` (the library
+    """(event_type, n_weekend, n_weekday, p_hat, w_stat, rejected) —
+    nonparametric Behrens–Fisher test. Frame-level core of
+    :func:`stat_brunner_munzel` (the library
     form the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
     cells = _sample_cells(base)
@@ -2038,7 +2061,9 @@ def stat_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cvm_two_sample(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_cvm_two_sample` (the library form
+    """(event_type, n_weekend, n_weekday, cvm_t, rejected) — Cramér–von
+    Mises two-sample criterion. Frame-level core of
+    :func:`stat_cvm_two_sample` (the library form
     the Engine facade exposes): ``base`` has columns (event_type
     stratum key, wk 0/1 sample flag, v integer value)."""
     cum = _ecdf_cells(base, (F.col("c1") + F.col("c2")).alias("cz"))
@@ -2159,7 +2184,9 @@ def stat_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cochran_armitage(base: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`stat_cochran_armitage` (the library
+    """(event_type, n, r, n_groups, z, rejected) — Cochran–Armitage
+    trend test. Frame-level core of :func:`stat_cochran_armitage` (the
+    library
     form the Engine facade exposes): ``base`` has columns (event_type
     stratum key, s integer group score, y 0/1 outcome) — one row per
     trial; the score domain must be bounded (grid algebra)."""
@@ -2275,7 +2302,8 @@ def eval_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hosmer_lemeshow(scored: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`eval_hosmer_lemeshow` (the library
+    """(n, n_groups, hl_chi2, rejected) — Hosmer–Lemeshow calibration
+    test. Frame-level core of :func:`eval_hosmer_lemeshow` (the library
     form the Engine facade exposes): ``scored`` has integer score
     column ``v`` (bounded grid; π = (v+1)/{_HL_SMOOTH[1]} must stay in
     (0,1)) and 0/1 column ``pos``."""

@@ -2709,9 +2709,9 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cohens_kappa(conf: DataFrame) -> DataFrame:
-    """(n, diag, observed_agreement, kappa) over a (true_label,
-    pred_label, n) confusion-count frame — the library form the Engine
-    facade exposes; ``eval_cohens_kappa`` is its registered
+    """(n, diag, observed_agreement, kappa) Cohen's kappa over a
+    (true_label, pred_label, n) confusion-count frame — the library form
+    the Engine facade exposes; ``eval_cohens_kappa`` is its registered
     oracle-checked instance (facade-parity single-source rule)."""
     marg = conf.agg(
         F.sum("n").cast("bigint").alias("n"),
@@ -2954,7 +2954,8 @@ def dim_variance(
     """(pos, n, variance) exact per-dimension population variance of a
     vector column (v7 fixed-point) — the library form the Engine facade
     exposes; ``vec_dim_variance_topk`` is its registered oracle-checked
-    instance (facade-parity single-source rule)."""
+    instance (facade-parity single-source rule). Order and limit the
+    result for a top-k screen."""
     fixed = df.select(
         F.posexplode(vec_col).alias("pos0", "val")
     ).select(

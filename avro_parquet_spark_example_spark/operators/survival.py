@@ -205,7 +205,9 @@ def surv_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kaplan_meier(subj: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`surv_kaplan_meier` (the library form
+    """(grp, t, n_risk, n_event, n_censor, survival) — Kaplan–Meier
+    estimator. Frame-level core of :func:`surv_kaplan_meier` (the library
+    form
     the Engine facade exposes): ``subj`` has columns (user_id, grp
     group key, t integer duration, ev 0/1 event-observed flag)."""
     risk = _km_grid(subj)
@@ -469,7 +471,9 @@ def surv_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def nelson_aalen(subj: DataFrame) -> DataFrame:
-    """Frame-level core of :func:`surv_nelson_aalen` (the library form
+    """(grp, t, n_risk, n_event, n_censor, cum_hazard, var_hazard) —
+    Nelson–Aalen cumulative hazard. Frame-level core of
+    :func:`surv_nelson_aalen` (the library form
     the Engine facade exposes): ``subj`` has columns (user_id, grp
     group key, t integer duration, ev 0/1 event-observed flag)."""
     risk = _km_grid(subj)
@@ -563,7 +567,8 @@ def surv_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def rmst(subj: DataFrame, tau: int = _RMST_TAU) -> DataFrame:
-    """Frame-level core of :func:`surv_rmst` (the library form the
+    """(grp, tau, rmst) — restricted mean survival time at horizon
+    ``tau``. Frame-level core of :func:`surv_rmst` (the library form the
     Engine facade exposes): ``subj`` as in :func:`kaplan_meier`;
     ``tau`` = truncation horizon in duration units."""
     surv = kaplan_meier(subj).select("grp", "t", F.col("survival").alias("s"))

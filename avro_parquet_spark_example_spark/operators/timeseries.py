@@ -2990,8 +2990,9 @@ def ts_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fano_factor(daily: DataFrame, key: str, value: str) -> DataFrame:
-    """(key, n_days, mean_daily, fano) variance-to-mean ratio of a keyed
-    integral series — the library form the Engine facade exposes;
+    """(key, n_days, mean_daily, fano) Fano factor (variance-to-mean
+    ratio), the burstiness index of a keyed integral series — the library
+    form the Engine facade exposes;
     ``ts_burstiness_fano`` is its registered oracle-checked instance
     (facade-parity single-source rule)."""
     d = daily.select(F.col(key).alias("k"), F.col(value).alias("x"))

@@ -74,8 +74,8 @@ import numpy as np
 import pyarrow as pa
 
 from avro_parquet_spark_example_spark.sources.avro_schema import (
-    _PRIMITIVES,
     _fullname_and_ns,
+    _ref_name,
     _resolve_ref,
 )
 
@@ -212,9 +212,10 @@ def _register(
 def _compile_decoder(
     node: Any, named: dict[str, Callable], ns: str | None
 ) -> Callable[[BinaryIO], Any]:
+    ref = _ref_name(node)
+    if ref is not None:
+        return _resolve_ref(ref, named, ns)
     if isinstance(node, str):
-        if node not in _PRIMITIVES:
-            return _resolve_ref(node, named, ns)
         node = {"type": node}
     if isinstance(node, list):  # union: varint branch index + value
         branches = [_compile_decoder(b, named, ns) for b in node]
@@ -329,9 +330,10 @@ def _compile_decoder(
 def _compile_encoder(
     node: Any, named: dict[str, Callable], ns: str | None
 ) -> Callable[[BinaryIO, Any], None]:
+    ref = _ref_name(node)
+    if ref is not None:
+        return _resolve_ref(ref, named, ns)
     if isinstance(node, str):
-        if node not in _PRIMITIVES:
-            return _resolve_ref(node, named, ns)
         node = {"type": node}
     if isinstance(node, list):
         branches = [_compile_encoder(b, named, ns) for b in node]

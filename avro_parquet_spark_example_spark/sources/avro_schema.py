@@ -48,6 +48,9 @@ _PRIMITIVES: dict[str, T.DataType] = {
     "null": T.NullType(),
 }
 
+#: ``type`` values that define a type rather than name one.
+_DEFINITIONS = frozenset(("record", "enum", "array", "map", "fixed"))
+
 _LOGICAL: dict[str, T.DataType] = {
     "date": T.DateType(),
     "time-millis": T.IntegerType(),
@@ -98,13 +101,27 @@ def _resolve_ref(ref: str, named: dict[str, Any], ns: str | None) -> Any:
     raise AvroSchemaError(f"unknown Avro type reference: {ref!r} (namespace {ns!r})")
 
 
+def _ref_name(node: Any) -> str | None:
+    """The named type a node refers to, or None for a primitive or a type
+    definition. A reference is a bare name, ``"E"``, or the object form
+    ``{"type": "E"}``; Java's ``Schema.Parser`` accepts both and ignores the
+    object form's other attributes."""
+    t = node.get("type") if isinstance(node, dict) else node
+    if not isinstance(t, str) or t in _PRIMITIVES:
+        return None
+    if isinstance(node, dict) and t in _DEFINITIONS:
+        return None
+    return t
+
+
 def _translate(
     node: Any, named: dict[str, T.DataType], ns: str | None
 ) -> T.DataType:
+    ref = _ref_name(node)
+    if ref is not None:
+        return _resolve_ref(ref, named, ns)
     if isinstance(node, str):
-        if node in _PRIMITIVES:
-            return _PRIMITIVES[node]
-        return _resolve_ref(node, named, ns)
+        return _PRIMITIVES[node]
 
     if isinstance(node, list):  # union
         non_null = [b for b in node if b != "null"]

@@ -100,8 +100,7 @@ def spread(df: DataFrame, width_from: DataFrame | None = None) -> DataFrame:
     ``defaultParallelism`` (follows the master's core count locally, the
     cluster width in production) and the repartition only fires when the
     frame is NARROWER than it, so production-size inputs — which already
-    carry enough splits — never pay a gratuitous shuffle. Same rule and
-    rationale as ``dedup.minhash_signatures_df`` (r12, measured −0.25 s).
+    carry enough splits — never pay a gratuitous shuffle.
 
     Round-robin repartition is deterministic here (sort-before-repartition
     is on by default, SPARK-23207) and every caller's downstream

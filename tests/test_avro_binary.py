@@ -58,6 +58,8 @@ FULL_SCHEMA = {
         {"name": "f_enum_ref", "type": "Color"},
         {"name": "f_fixed_ref", "type": "F8"},
         {"name": "f_nested_ref", "type": "example.avro.Inner"},
+        # the object form of a reference, which Java's Schema.Parser accepts
+        {"name": "f_enum_obj_ref", "type": {"type": "Color"}},
     ],
 }
 
@@ -86,6 +88,7 @@ def _mk_row(i: int) -> tuple:
         ["BLUE", "RED", "GREEN"][i % 3],
         bytes([(i * 3) % 256]) * 8,
         (-i, float(i) / 2 if i % 2 else None),
+        ["GREEN", "BLUE", "RED"][i % 3],
     )
 
 

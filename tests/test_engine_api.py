@@ -232,7 +232,7 @@ def test_engine_graph_and_retrieval_parity(spark, sf_dir):
     assert all(r.n_triangles > 0 for r in tri)
 
 
-def test_engine_round5_facade_parity(spark, sf_dir):
+def test_engine_quality_blocklist_sessionize_bfs_facade_parity(spark, sf_dir):
     """quality_gate / blocklist_filter / sessionize / bfs share
     single-source implementations with their oracle-checked queries."""
     from pyspark.sql import functions as F
@@ -283,7 +283,7 @@ def test_engine_round5_facade_parity(spark, sf_dir):
     assert via_engine == via_query and via_engine
 
 
-def test_engine_round10_facade_parity(spark, sf_dir):
+def test_engine_entities_knn_silhouette_bipartite_facade_parity(spark, sf_dir):
     """The r10 facade methods return the same results as the registered
     queries / library ops they wrap: entity clusters == er_match_clusters,
     exact knn_graph (1-cell degenerate IVF) == vec_knn_graph on the same
@@ -369,7 +369,7 @@ def test_engine_round10_facade_parity(spark, sf_dir):
     assert got_b == want_b
 
 
-def test_engine_round11_facade_parity(spark, sf_dir):
+def test_engine_kcenter_clustering_coefficients_facade_parity(spark, sf_dir):
     """The r11 facade methods return the same results as the registered
     queries they wrap (the facade-parity single-source rule):
     kcenter_seeds == cluster_kcenter_greedy, clustering_coefficients on
@@ -411,7 +411,7 @@ def test_engine_round11_facade_parity(spark, sf_dir):
     assert got_c == want_c
 
 
-def test_engine_round11_stats_facade_parity(spark, sf_dir):
+def test_engine_correlation_hhi_stump_facade_parity(spark, sf_dir):
     """The generic statistics facade methods reproduce their registered
     oracle-checked instances when pointed at the same fixture columns
     (single-source rule): spearman/kendall on lineitem, MI on orders,
@@ -521,7 +521,7 @@ def test_engine_round11_stats_facade_parity(spark, sf_dir):
     assert got == want
 
 
-def test_engine_round12_stats_facade_parity(spark, sf_dir):
+def test_engine_contingency_drift_text_confusion_facade_parity(spark, sf_dir):
     """The r12 facade methods reproduce their registered oracle-checked
     instances when pointed at the same fixture columns (single-source
     rule): cramers_v / cusum / rolling_median / lead_lag_xcorr / anova
@@ -765,7 +765,7 @@ def test_engine_inference_facade_parity(spark, sf_dir):
     ) == want("ts_forecast_backtest")
 
 
-def test_engine_round13_facade_parity(spark, sf_dir):
+def test_engine_bleu_rouge_scc_trend_median_auc_facade_parity(spark, sf_dir):
     """r13 facade additions reproduce their registered oracle-checked
     instances when pointed at the same fixture frames (single-source
     rule): bleu_corpus / rouge_n / scc / piecewise_trend / median_ci /
@@ -854,7 +854,7 @@ def test_engine_round13_facade_parity(spark, sf_dir):
     )
 
 
-def test_engine_round13_stats_facade_parity(spark, sf_dir):
+def test_engine_paired_agreement_auc_brier_g_facade_parity(spark, sf_dir):
     """The six r13 inference additions' facade methods reproduce their
     registered oracle-checked instances (single-source rule): mcnemar /
     cochran_q / krippendorff_alpha / auc_delong_se /
@@ -1312,3 +1312,58 @@ def test_engine_scc_default_tracks_operator_constant():
     src = inspect.getsource(Engine.scc)
     assert "_SCC_ROUNDS" in src
     assert "rounds: int | None = None" in src
+
+#: Every method name the facade has had; hand-written or bound from the
+#: operator table, each stays callable as ``Engine.<name>``.
+ENGINE_NAMES = {
+    "__init__", "anova", "assortativity", "auc_bootstrap_cell",
+    "auc_delong_se", "auc_partial", "autocorr", "bfs", "bleu_corpus",
+    "blocklist_filter", "bradley_terry", "brier", "brier_decomposition",
+    "brunner_munzel", "calibration_error", "chunk", "cliff_delta",
+    "cluster", "cluster_size_histogram", "clustering_coefficients",
+    "cochran_armitage", "cochran_q", "column_profile", "confusion",
+    "cooccurrence_graph", "cramers_v", "cuped", "cusum", "cvm_two_sample",
+    "decision_stump", "dedup_exact", "dedup_incremental", "dedup_near",
+    "dedup_semantic", "dedup_substrings", "dim_variance", "effect_sizes",
+    "equidepth_histogram_bucketed", "fano", "fleiss_kappa",
+    "forecast_backtest", "g_test", "gk_gamma_tau", "hhi", "hl_shift",
+    "hosmer_lemeshow", "jackknife_se", "jonckheere_terpstra",
+    "kaplan_meier", "kappa", "kappa_weighted", "kcenter_seeds", "kendall",
+    "kendall_w", "knn_graph", "krippendorff_alpha", "ks_two_sample",
+    "lead_lag_xcorr", "log_odds", "lorenz_curve", "lorenz_curve_bucketed",
+    "mad", "mann_kendall", "mcc", "mcnemar", "median_ci", "mood_median",
+    "mutual_information", "nelson_aalen", "outlier_flags", "pagerank",
+    "pass_at_k", "percent_rank_cume", "piecewise_trend",
+    "poisson_bootstrap", "power_mde", "project_bipartite", "quality_gate",
+    "quantile_bands", "rbo", "read_parquet", "read_with_avro_schema",
+    "redact_pii", "resample_temperature", "resolve_entities", "rmst",
+    "rolling_median", "rouge_n", "runs_test", "scc", "search_topk",
+    "select_dsir", "sessionize", "shuffle_export", "silhouette", "simhash",
+    "sparse_topk", "spearman", "split", "sql", "table", "theil_sen",
+    "triangles", "trimmed_mean", "ttr_hapax", "write_parquet",
+}
+
+
+def test_engine_operator_table_binds_library_functions():
+    """No Spark: each ``_OPERATORS`` entry resolves to the library function
+    itself, so ``help`` and ``inspect.signature`` on the facade show the
+    operator's own signature and docstring; no facade name went missing."""
+    import importlib
+    import inspect
+
+    from avro_parquet_spark_example_spark.engine import _OPERATORS
+
+    for name, target in _OPERATORS.items():
+        module, fn_name = target.split(":")
+        fn = getattr(
+            importlib.import_module(
+                f"avro_parquet_spark_example_spark.operators.{module}"
+            ),
+            fn_name,
+        )
+        assert getattr(Engine, name) is fn, name
+        assert inspect.signature(getattr(Engine, name)) == inspect.signature(fn)
+    assert len(ENGINE_NAMES) == 106
+    assert {n for n in dir(Engine) if not n.startswith("_")} | {"__init__"} == (
+        ENGINE_NAMES
+    )

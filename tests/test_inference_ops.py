@@ -2071,3 +2071,24 @@ def test_events_sample_spark_survives_nr_column(spark):
     assert out.count() == 100
     assert "nr" in out.columns
     assert out.agg({"nr": "min"}).collect()[0][0] == 7
+
+
+# --------------------------------------------------------------------------
+# sampling scope visible in output (ADVICE r13 #1)
+# --------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "stat_poisson_bootstrap_ci",
+        "stat_randomization_dow",
+        "eval_auc_bootstrap_ci",
+    ],
+)
+def test_capped_fixtures_emit_sampled_flag(spark, sf_dir, key):
+    df = get_query(key).fn(spark, sf_dir)
+    assert "sampled" in df.columns
+    vals = {r.sampled for r in df.select("sampled").distinct().collect()}
+    # sf0.001 fixtures sit far below both caps -> flag must be False
+    assert vals == {False}
