@@ -15,8 +15,15 @@ Design rules (engine-wide):
     or Arrow-batched pandas UDFs where Python is unavoidable.
   * Pairwise computations are bucketed (LSH banding), never cartesian.
   * Broadcast only bounded dims; AQE handles skew; partition-prune by date.
+
+Importing the package first patches ``zipimport`` (``_zipimport``): every
+PySpark worker task starts with ``importlib.invalidate_caches()``, which on
+CPython 3.11 re-parses the whole directory of ``pyspark.zip`` once per zip
+importer; the patch re-reads an archive only when its ``stat`` (mtime, size,
+inode) changed, so a rewritten or deleted archive is still seen.
 """
 
+from avro_parquet_spark_example_spark import _zipimport  # noqa: F401 - stays first
 from avro_parquet_spark_example_spark.registry import (  # noqa: F401
     all_queries,
     all_oracle_sql,

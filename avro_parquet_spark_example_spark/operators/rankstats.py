@@ -1525,7 +1525,7 @@ def agg_lorenz_curve_bucketed(
     has 3–5 values, so the window form sorts each type's ENTIRE user
     population in one task — fine at sf0.1 (10× leg 1.7×), billions of
     rows in one sorter at 100 TB. Same oracle, bit-identical output
-    (pinned in tests/test_round15_ops.py); the window form stays
+    (pinned in tests/test_rankstats.py); the window form stays
     registered as the semantics reference."""
     return lorenz_curve_bucketed(_per_user_cents(spark, sf_dir))
 

@@ -145,6 +145,8 @@ def _translate(
         # Unknown logical types fall back to the underlying Avro type.
 
     kind = node.get("type")
+    if not isinstance(kind, str):  # e.g. {"type": {...}} or {"type": [...]}
+        raise AvroSchemaError(f"untranslatable Avro type: {node!r}")
     if kind in _PRIMITIVES:  # unknown logical types fall back to base type
         return _PRIMITIVES[kind]
 

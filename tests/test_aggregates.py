@@ -3,7 +3,8 @@ independent Python reference over the collected fixture (the oracle pins
 cross-engine equality; this pins the math), plus boundary pins on hand-built
 frames for the rank correlations, HHI and mutual information. The robust
 statistics (quantile bands, trimmed/winsorized means, MAD outliers,
-Hodges–Lehmann) get the same pair: a Python reference and closed forms."""
+Hodges–Lehmann) get the same pair: a Python reference and closed forms.
+The bucketed equi-depth histogram must equal the window form and NTILE."""
 
 from __future__ import annotations
 
@@ -241,3 +242,73 @@ def test_median_ci_survives_flag_and_v_names(spark):
     df2 = df.withColumnRenamed("v", "g").withColumnRenamed("flag", "x")
     got2 = {r.g: r.median for r in median_ci(df2, "g", "x").collect()}
     assert got2 == {"a": 51, "b": 10}
+
+
+def test_equidepth_bucketed_identical_to_window_form(spark, sf_dir):
+    window_rows = sorted(
+        map(
+            tuple,
+            get_query("agg_equidepth_histogram").fn(spark, sf_dir).collect(),
+        )
+    )
+    bucketed_rows = sorted(
+        map(
+            tuple,
+            get_query("agg_equidepth_histogram_bucketed")
+            .fn(spark, sf_dir)
+            .collect(),
+        )
+    )
+    assert bucketed_rows == window_rows
+
+
+def test_equidepth_bucketed_plan_has_no_per_type_sort(spark, sf_dir):
+    import re
+
+    plan = (
+        get_query("agg_equidepth_histogram_bucketed")
+        .fn(spark, sf_dir)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    for m in re.finditer(
+        r"row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan
+    ):
+        assert "__bk" in m.group(1), f"rank window not bucket-partitioned: {m.group(1)}"
+
+
+def test_equidepth_bucketed_iso_remainder_rule(spark):
+    # 10 rows into 8 tiles: ISO NTILE gives the FIRST n mod k = 2 tiles
+    # 2 rows each (the library-form closed form must match NTILE exactly,
+    # including at n < tiles where q = 0)
+    from avro_parquet_spark_example_spark.operators.aggregates import (
+        equidepth_histogram_bucketed,
+    )
+
+    e = spark.createDataFrame(
+        [("a", float(v), v) for v in range(10)]
+        + [("b", float(v), v) for v in range(5)],
+        "event_type string, value double, event_id long",
+    )
+    got = {
+        (r.event_type, r.bucket): (r.n, r.lo, r.hi)
+        for r in equidepth_histogram_bucketed(e).collect()
+    }
+    assert [got[("a", b)][0] for b in range(1, 9)] == [2, 2, 1, 1, 1, 1, 1, 1]
+    assert got[("a", 1)] == (2, 0.0, 1.0) and got[("a", 8)] == (1, 9.0, 9.0)
+    # n < tiles: every row its own tile, tiles 1..5
+    assert [got[("b", b)][0] for b in range(1, 6)] == [1] * 5
+    assert ("b", 6) not in got
+    # skewed: all values equal -> one range bucket, ranks still exact
+    sk = spark.createDataFrame(
+        [("a", 7.0, i) for i in range(10)],
+        "event_type string, value double, event_id long",
+    )
+    counts = [
+        r.n
+        for r in sorted(
+            equidepth_histogram_bucketed(sk).collect(), key=lambda r: r.bucket
+        )
+    ]
+    assert counts == [2, 2, 1, 1, 1, 1, 1, 1]

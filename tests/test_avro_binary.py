@@ -716,3 +716,44 @@ def test_avro_path_job_counts(spark, sf_dir, tmp_path):
         spark.read.format("avrofile").option("path", out).load().count()
         read_jobs = len(status.new_jobs())
     assert (write_jobs, read_jobs) == (2, 2)
+
+
+def test_python_workers_skip_unchanged_zip_rereads(spark):
+    """A Python worker that unpickles engine code imports the package, which
+    installs the stat-checked ``zipimporter.invalidate_caches``. Each task
+    starts with ``importlib.invalidate_caches()``; once the wrapper is in,
+    that re-reads no unchanged archive, however many zip importers the
+    worker holds for ``pyspark.zip``."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        # ``ab`` is a package module, so unpickling ``probe`` imports the package
+        assert issubclass(ab.AvroBinaryError, ValueError)
+        installer = zipimport.zipimporter.invalidate_caches.__module__
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist(
+            [{"installer": installer, "zips": zips, "rereads": len(reads)}]
+        )
+
+    df = spark.range(1, numPartitions=1)
+    schema = "installer string, zips long, rereads long"
+    runs = [df.mapInArrow(probe, schema).collect()[0] for _ in range(2)]
+    assert all(r.zips > 0 for r in runs), runs  # workers import from a zip
+    wrapper = "avro_parquet_spark_example_spark._zipimport"
+    assert [(r.installer, r.rereads) for r in runs] == [(wrapper, 0)] * 2, runs

@@ -127,6 +127,17 @@ def test_rejects_multi_type_union_and_garbage():
         parse_avro_schema('"string"')  # top level must be a record
 
 
+@pytest.mark.parametrize(
+    "field_type", [{"type": {"a": 1}}, {"type": ["int"]}], ids=["object", "array"]
+)
+def test_rejects_non_string_type_attribute(field_type):
+    """A type object whose own ``type`` is an object or an array is not a
+    schema (Java's parser wants a name there): the error names the node."""
+    with pytest.raises(AvroSchemaError, match="untranslatable Avro type"):
+        parse_avro_schema({"type": "record", "name": "Bad3",
+                           "fields": [{"name": "x", "type": field_type}]})
+
+
 def test_declared_schema_read_applies(spark, sf_dir):
     """End-to-end: translated schema drives a real Parquet read."""
     from avro_parquet_spark_example_spark.sources.scans import (

@@ -1,5 +1,6 @@
 """tools/: every script imports, ``scaleup.py`` grows the corpus by its
-stated rules, and a ``perf_sweep`` record carries the status-store layers."""
+stated rules, and a ``perf_sweep`` record carries the status-store layers
+and its header the host keys."""
 
 from __future__ import annotations
 
@@ -100,6 +101,20 @@ def test_perf_sweep_record_reports_jobs_and_shuffle(spark, sf_dir):
         profiler.close()
     assert rec["jobs"] > 0
     assert rec["shuffle_write_bytes"] > 0
+
+
+def test_perf_sweep_host_keys():
+    import platform
+
+    from tools.perf_sweep import host_keys
+
+    zipped = host_keys("/usr/local/spark/python/lib/pyspark.zip/pyspark/__init__.py")
+    assert zipped == {
+        "python_version": platform.python_version(),
+        "worker_pyspark_zip": True,
+    }
+    site = host_keys("/usr/lib/python3/site-packages/pyspark/__init__.py")
+    assert site["worker_pyspark_zip"] is False
 
 
 # --------------------------------------------------------------------------

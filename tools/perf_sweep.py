@@ -24,7 +24,11 @@ run into layers:
 tools/scaleup.py runs the same function on a base and a grown corpus. The
 record header states the master and parallelism it ran at, and bench.py's
 noise probes at sweep start and end, so a reader can normalize before
-calling a delta a regression. Queries run in sorted order.
+calling a delta a regression. It also states the Python version and whether
+Python workers import PySpark from a ``pyspark.zip`` (as from
+``$SPARK_HOME/python/lib``), which set each Python task's start-up cost
+(see ``avro_parquet_spark_example_spark/_zipimport.py``). Queries run in
+sorted order.
 
 Usage: python tools/perf_sweep.py [out.json]   # default PERF_sweep.json
 """
@@ -33,6 +37,7 @@ from __future__ import annotations
 
 import json
 import os
+import platform
 import sys
 import time
 
@@ -97,6 +102,27 @@ class Profiler:
         }
 
 
+def worker_pyspark_file(spark) -> str:
+    """The ``pyspark.__file__`` a Python worker imports (one 1-row task)."""
+
+    def where(_):
+        import pyspark
+
+        yield pyspark.__file__
+
+    return spark.sparkContext.parallelize([0], 1).mapPartitions(where).first()
+
+
+def host_keys(worker_pyspark: str) -> dict:
+    """Header keys for comparing records across hosts: the Python version,
+    and whether workers import PySpark from a zip (``worker_pyspark`` is
+    their ``pyspark.__file__``)."""
+    return {
+        "python_version": platform.python_version(),
+        "worker_pyspark_zip": f"pyspark.zip{os.sep}" in worker_pyspark,
+    }
+
+
 def main(out_path: str | None) -> int:
     from avro_parquet_spark_example_spark.registry import all_queries
     from avro_parquet_spark_example_spark.session import get_session
@@ -127,6 +153,7 @@ def main(out_path: str | None) -> int:
         "sf_dir": SF_DIR,
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
+        **host_keys(worker_pyspark_file(spark)),
         "calib_start": calib_start,
         "calib_end": calibrate(),
         "n_queries": len(keys),
