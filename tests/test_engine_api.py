@@ -1392,55 +1392,3 @@ def test_engine_lorenz_bucketed_facade_parity(spark, sf_dir):
     )
     assert got == want
 
-
-# --------------------------------------------------------------------------
-# r15 ANSI sweep, aggregate/graph/eval facade surface: seven more fixed
-# (REVIEW_r15_stats.md §facade)
-# --------------------------------------------------------------------------
-
-
-def test_facade_degenerate_margins(spark):
-    from avro_parquet_spark_example_spark.engine import Engine
-
-    eng = Engine(spark=spark, sf_dir="/root/testdata/sf0.001")
-
-    hz = eng.hhi(
-        spark.createDataFrame(
-            [("g", i, 0) for i in range(4)], "g string, m int, amt long"
-        ),
-        "g", "amt",
-    ).collect()[0]
-    assert hz.hhi is None and hz.hhi12 is None
-
-    cv = eng.cramers_v(
-        spark.createDataFrame([("x1", "y1")] * 10, "x string, y string"),
-        "x", "y",
-    ).collect()[0]
-    assert cv.chi2 == 0.0 and cv.cramers_v is None
-
-    # 4-cycle: every endpoint degree 2 -> excess-degree variance 0
-    ar = eng.assortativity(
-        spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (4, 1)], "u long, v long"
-        )
-    ).collect()[0]
-    assert ar.assortativity is None
-
-    conf1 = spark.createDataFrame(
-        [("a", "a", 10)], "true_label string, pred_label string, n long"
-    )
-    kp = eng.kappa(conf1).collect()[0]
-    assert kp.observed_agreement == 1.0 and kp.kappa is None  # p_e = 1
-    assert eng.mcc(conf1).collect()[0].mcc is None  # one-class margins
-
-    # zero-game duel catalog: MM update has no information -> uniform
-    # strengths survive instead of a driver-side ZeroDivisionError
-    bt = eng.bradley_terry(
-        spark.createDataFrame([("a", "a", 0)], "i string, j string, nij long")
-    ).collect()[0]
-    assert bt.games == 0 and bt.pi9 == 10**9
-
-    ac = eng.auc_bootstrap_cell(
-        spark.createDataFrame([(v, 0) for v in range(5)], "v long, pos int")
-    ).collect()[0]
-    assert ac.auc is None and ac.ci_lo is None and ac.ci_hi is None

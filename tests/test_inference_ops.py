@@ -2092,90 +2092,3 @@ def test_capped_fixtures_emit_sampled_flag(spark, sf_dir, key):
     vals = {r.sampled for r in df.select("sampled").distinct().collect()}
     # sf0.001 fixtures sit far below both caps -> flag must be False
     assert vals == {False}
-
-
-# --------------------------------------------------------------------------
-# r15 registry-wide ANSI sweep (REVIEW_r15_stats.md §older families):
-# seven PRE-r14 library forms crashed on the same degenerate margins —
-# including two whose REVIEW_r14 entries claimed "NULL on both engines
-# (probed)" (cuped, krippendorff: that claim was WRONG under ANSI).
-# --------------------------------------------------------------------------
-
-
-def test_cuped_constant_covariate(spark):
-    from avro_parquet_spark_example_spark.operators.inference import cuped
-
-    r = cuped(
-        spark.createDataFrame([(7, y) for y in range(10)], "x long, y long")
-    ).collect()[0]
-    assert r.theta is None and r.var_y_adj is None
-    assert r.var_reduction_pct is None
-    assert r.mean_y is not None and r.var_y is not None  # still defined
-
-
-def test_agreement_single_category(spark):
-    from avro_parquet_spark_example_spark.operators.inference import (
-        fleiss_kappa,
-        krippendorff_alpha,
-    )
-
-    ratings = spark.createDataFrame(
-        [(i, "x") for i in range(6) for _ in range(3)],
-        "item int, category string",
-    )
-    fk = fleiss_kappa(ratings, "item", "category", 3).collect()[0]
-    assert fk.p_bar == 1.0 and fk.p_e == 1.0 and fk.kappa is None
-    ka = krippendorff_alpha(ratings, "item", "category", 3).collect()[0]
-    assert ka.d_o == 0.0 and ka.alpha is None
-
-
-def test_two_sample_degenerates(spark):
-    from avro_parquet_spark_example_spark.operators.inference import (
-        effect_sizes,
-        power_mde,
-    )
-
-    allequal = spark.createDataFrame(
-        [("a", w, 5) for w in (0, 1) for _ in range(5)],
-        "event_type string, wk int, q long",
-    )
-    es = effect_sizes(allequal).collect()[0]
-    assert es.cohens_d is None and es.hedges_g is None
-    assert es.cliffs_delta == 0.0  # ties -> exactly no dominance
-    empty = spark.createDataFrame(
-        [("a", 0, v) for v in range(5)], "event_type string, wk int, q long"
-    )
-    assert effect_sizes(empty).collect()[0].cohens_d is None
-    pm = power_mde(empty).collect()[0]
-    assert pm.pooled_sd is None and pm.mde_abs is None
-    zero = spark.createDataFrame(
-        [("a", w, 0) for w in (0, 1) for _ in range(5)],
-        "event_type string, wk int, q long",
-    )
-    pz = power_mde(zero).collect()[0]
-    assert pz.mde_abs == 0.0 and pz.mde_rel is None  # zero-mean metric
-
-
-def test_delong_kendall_degenerates(spark):
-    from avro_parquet_spark_example_spark.operators.inference import (
-        auc_delong_se,
-        kendall_w,
-    )
-
-    one_class = auc_delong_se(
-        spark.createDataFrame([(v, 0) for v in range(5)], "v long, pos int")
-    ).collect()[0]
-    assert one_class.auc is None and one_class.se_delong is None
-    one_pos = auc_delong_se(
-        spark.createDataFrame(
-            [(5, 1)] + [(v, 0) for v in range(5)], "v long, pos int"
-        )
-    ).collect()[0]
-    assert one_pos.auc == 1.0  # AUC defined at np = 1...
-    assert one_pos.se_delong is None  # ...but its variance df is 0
-    kw = kendall_w(
-        spark.createDataFrame(
-            [(j, 1, 5) for j in range(3)], "judge int, item int, cnt long"
-        )
-    ).collect()[0]
-    assert kw.w is None and kw.chi2 is None and kw.rejected is False

@@ -45,6 +45,7 @@ ROUND_FILES = {
     "test_round5_ops.py",
     "test_round5_late_ops.py",
     "test_round11_ops.py",
+    "test_round15_ops.py",
 }
 
 #: The package's scratch roots, ``(file, module-level name)``: every other

@@ -1,296 +1,13 @@
-"""Round-15 operators: the partitioned two-phase bucketed Lorenz rank
-(bit-identical to the window form), the scaled LSH density dial, and the
-r15 self-review degenerate-margin pins."""
+"""Degenerate-margin pins from the registry-wide ANSI sweep (inference,
+timeseries and facade library forms), the scaled LSH density dial, and the
+single-pass BLEU/ROUGE clip counts and diversity metrics against the join
+forms they replaced."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-
-from avro_parquet_spark_example_spark.registry import get_query
-
-
-# --------------------------------------------------------------------------
-# agg_lorenz_curve_bucketed ≡ agg_lorenz_curve
-# --------------------------------------------------------------------------
-
-
-def test_lorenz_bucketed_identical_to_window_form(spark, sf_dir):
-    window_rows = sorted(
-        map(tuple, get_query("agg_lorenz_curve").fn(spark, sf_dir).collect())
-    )
-    bucketed_rows = sorted(
-        map(
-            tuple,
-            get_query("agg_lorenz_curve_bucketed").fn(spark, sf_dir).collect(),
-        )
-    )
-    assert bucketed_rows == window_rows
-
-
-def test_lorenz_bucketed_plan_has_no_per_type_sort(spark, sf_dir):
-    # the window form's scale hazard is a row_number() partitioned by the
-    # 3-5-value event_type — the bucketed form's only rank window must
-    # partition by (event_type, bk)
-    plan = get_query("agg_lorenz_curve_bucketed").fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
-    import re
-
-    for m in re.finditer(r"row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan):
-        spec = m.group(1)
-        assert "bk" in spec, f"rank window not bucket-partitioned: {spec}"
-
-
-def test_lorenz_bucketed_library_form_on_skewed_frame(spark):
-    # all users share one s value -> every user lands in bucket 0 (span
-    # 0); ranks must still be the exact (s, user_id) sequence and the
-    # curve the uniform diagonal
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        lorenz_curve,
-        lorenz_curve_bucketed,
-    )
-
-    rows = [("a", uid, 7) for uid in range(40)]
-    pu = spark.createDataFrame(rows, "event_type string, user_id int, s long")
-    got = sorted(map(tuple, lorenz_curve_bucketed(pu).collect()))
-    want = sorted(map(tuple, lorenz_curve(pu).collect()))
-    assert got == want
-    # uniform s: cum_value_share == cum_user_share at every decile
-    for _et, _dec, _nu, cus, cvs in got:
-        assert cvs == pytest.approx(cus, abs=1e-9)
-
-
-def test_lorenz_bucketed_library_form_mixed_groups(spark):
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        lorenz_curve,
-        lorenz_curve_bucketed,
-    )
-
-    rows = [("a", uid, (uid * 37) % 101 + 1) for uid in range(73)] + [
-        ("b", uid, (uid * uid) % 53 + 5) for uid in range(29)
-    ]
-    pu = spark.createDataFrame(rows, "event_type string, user_id int, s long")
-    assert sorted(map(tuple, lorenz_curve_bucketed(pu).collect())) == sorted(
-        map(tuple, lorenz_curve(pu).collect())
-    )
-
-
-def test_equidepth_bucketed_identical_to_window_form(spark, sf_dir):
-    window_rows = sorted(
-        map(
-            tuple,
-            get_query("agg_equidepth_histogram").fn(spark, sf_dir).collect(),
-        )
-    )
-    bucketed_rows = sorted(
-        map(
-            tuple,
-            get_query("agg_equidepth_histogram_bucketed")
-            .fn(spark, sf_dir)
-            .collect(),
-        )
-    )
-    assert bucketed_rows == window_rows
-
-
-def test_equidepth_bucketed_plan_has_no_per_type_sort(spark, sf_dir):
-    import re
-
-    plan = (
-        get_query("agg_equidepth_histogram_bucketed")
-        .fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    for m in re.finditer(
-        r"row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan
-    ):
-        assert "__bk" in m.group(1), f"rank window not bucket-partitioned: {m.group(1)}"
-
-
-def test_equidepth_bucketed_iso_remainder_rule(spark):
-    # 10 rows into 8 tiles: ISO NTILE gives the FIRST n mod k = 2 tiles
-    # 2 rows each (the library-form closed form must match NTILE exactly,
-    # including at n < tiles where q = 0)
-    from avro_parquet_spark_example_spark.operators.aggregates import (
-        equidepth_histogram_bucketed,
-    )
-
-    e = spark.createDataFrame(
-        [("a", float(v), v) for v in range(10)]
-        + [("b", float(v), v) for v in range(5)],
-        "event_type string, value double, event_id long",
-    )
-    got = {
-        (r.event_type, r.bucket): (r.n, r.lo, r.hi)
-        for r in equidepth_histogram_bucketed(e).collect()
-    }
-    assert [got[("a", b)][0] for b in range(1, 9)] == [2, 2, 1, 1, 1, 1, 1, 1]
-    assert got[("a", 1)] == (2, 0.0, 1.0) and got[("a", 8)] == (1, 9.0, 9.0)
-    # n < tiles: every row its own tile, tiles 1..5
-    assert [got[("b", b)][0] for b in range(1, 6)] == [1] * 5
-    assert ("b", 6) not in got
-    # skewed: all values equal -> one range bucket, ranks still exact
-    sk = spark.createDataFrame(
-        [("a", 7.0, i) for i in range(10)],
-        "event_type string, value double, event_id long",
-    )
-    counts = [
-        r.n
-        for r in sorted(
-            equidepth_histogram_bucketed(sk).collect(), key=lambda r: r.bucket
-        )
-    ]
-    assert counts == [2, 2, 1, 1, 1, 1, 1, 1]
-
-
-def test_engine_lorenz_bucketed_facade_parity(spark, sf_dir):
-    from avro_parquet_spark_example_spark.engine import Engine
-    from pyspark.sql import functions as F
-
-    eng = Engine(spark=spark, sf_dir=sf_dir)
-    per_user = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("event_type", "user_id")
-        .agg(
-            F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("bigint"))
-            .cast("bigint")
-            .alias("s")
-        )
-    )
-    got = sorted(map(tuple, eng.lorenz_curve_bucketed(per_user).collect()))
-    want = sorted(
-        map(
-            tuple,
-            get_query("agg_lorenz_curve_bucketed").fn(spark, sf_dir).collect(),
-        )
-    )
-    assert got == want
-
-
-# --------------------------------------------------------------------------
-# r15 self-review degenerate-margin pins (REVIEW_r15_stats.md): before the
-# guards, every one of these inputs THREW on ANSI Spark (divide-by-zero)
-# while the DuckDB oracle shape returned NULL — and cliff's band CASE fell
-# through NULL to 'large'. Pinned: NULL statistic / FALSE rejected / NULL
-# magnitude, no exception.
-# --------------------------------------------------------------------------
-
-
-def test_mood_median_degenerate_all_equal(spark):
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        mood_median,
-    )
-
-    base = spark.createDataFrame(
-        [("a", 5)] * 30 + [("b", 5)] * 20, "event_type string, q long"
-    )
-    rows = {r.event_type: r for r in mood_median(base).collect()}
-    assert rows["a"].chi2 is None and rows["a"].rejected is False
-    assert rows["a"].above == 0 and rows["a"].pooled_median == 5
-
-
-def test_runs_test_degenerate_one_sided(spark):
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        runs_test,
-    )
-
-    daily = spark.createDataFrame(
-        [("a", d, 10 if d < 9 else 99) for d in range(10)],
-        "event_type string, day int, tq long",
-    )
-    row = runs_test(daily).collect()[0]
-    assert (row.n1, row.n2) == (1, 0)
-    assert row.z is None and row.rejected is False
-    assert row.mean_runs == 1.0
-
-
-def test_ks_cliff_degenerate_empty_side(spark):
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        cliff_delta,
-        ks_two_sample,
-    )
-
-    base = spark.createDataFrame(
-        [("a", 0, v) for v in range(5)], "event_type string, wk int, v long"
-    )
-    ks = ks_two_sample(base).collect()[0]
-    assert ks.ks_d is None and ks.ks_stat is None and ks.rejected is False
-    cd = cliff_delta(base).collect()[0]
-    assert cd.delta is None
-    assert cd.magnitude is None  # NOT 'large' (the pre-guard fall-through)
-
-
-def test_bm_kappa_gamma_jt_degenerates(spark):
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        brunner_munzel,
-        gk_gamma_tau,
-        jonckheere_terpstra,
-        kappa_weighted,
-    )
-
-    bm = brunner_munzel(
-        spark.createDataFrame(
-            [("a", 1, 5)] + [("a", 0, v) for v in range(10)],
-            "event_type string, wk int, v long",
-        )
-    ).collect()[0]
-    assert bm.w_stat is None and bm.rejected is False
-    # p_hat is still well-defined at n1 = 1
-    assert bm.p_hat == pytest.approx(0.45)
-
-    kw = kappa_weighted(
-        spark.createDataFrame(
-            [("a", 3, 3)] * 10, "event_type string, ra long, rb long"
-        )
-    ).collect()[0]
-    assert kw.kappa_linear is None and kw.kappa_quadratic is None
-
-    gk = gk_gamma_tau(
-        spark.createDataFrame(
-            [("a", 2, 3)] * 10, "event_type string, x long, y long"
-        )
-    ).collect()[0]
-    assert gk.gamma is None and gk.somers_dyx is None and gk.tau_b is None
-    assert int(gk.concordant) == 0  # DECIMAL(38,0) after the overflow fix
-
-    # fully-tied single-group stratum: var_jt is EXACTLY 0 (the three
-    # variance terms cancel algebraically — derived in the review note)
-    jt = jonckheere_terpstra(
-        spark.createDataFrame(
-            [("a", 2, 7)] * 10, "event_type string, g int, v long"
-        )
-    ).collect()[0]
-    assert jt.var_jt == 0.0 and jt.z is None and jt.rejected is False
-    jt2 = jonckheere_terpstra(
-        spark.createDataFrame(
-            [("a", 1, 1), ("a", 2, 2)], "event_type string, g int, v long"
-        )
-    ).collect()[0]
-    assert jt2.var_jt is None and jt2.z is None  # n < 3
-
-
-def test_pauc_lorenz_degenerates(spark):
-    from avro_parquet_spark_example_spark.operators.rankstats import (
-        auc_partial,
-        lorenz_curve,
-        lorenz_curve_bucketed,
-    )
-
-    pa = auc_partial(
-        spark.createDataFrame([(v, 0) for v in range(5)], "v long, pos int")
-    ).collect()[0]
-    assert pa.pauc is None and pa.pauc_mcclish is None
-
-    zeros = spark.createDataFrame(
-        [("a", u, 0) for u in range(20)],
-        "event_type string, user_id int, s long",
-    )
-    for fn in (lorenz_curve, lorenz_curve_bucketed):
-        rows = fn(zeros).collect()
-        assert all(r.cum_value_share is None for r in rows)
-        assert max(r.cum_user_share for r in rows) == pytest.approx(1.0)
 
 
 # --------------------------------------------------------------------------

@@ -1,8 +1,6 @@
 """Text-analysis operators (operators/text_analysis.py): the driver-side BPE
 merge loop against the distributed per-round form it replaced, and the
-document-length quantiles against a Python reference; the single-pass
-BLEU/ROUGE clip counts and diversity metrics against the join forms they
-replaced."""
+document-length quantiles against a Python reference."""
 
 from __future__ import annotations
 
@@ -90,97 +88,3 @@ def test_doclen_quantiles_match_python_reference(spark, sf_dir):
         assert r.n == len(xs)
         for q in (25, 50, 75, 90):
             assert r[f"p{q}"] == _type1(xs, q), (lang, q)
-
-
-def test_ngram_clip_counts_matches_join_form_semantics(spark):
-    """Pin the r15 tagged-union clip rewrite (§7, OPTIMIZATION_r15.md) to
-    the OLD double-inner-join semantics on the cases the fixtures never
-    exercise:
-
-    * one-sided tokens contribute 0, never a negative/phantom match;
-    * a lang with unigram matches but NO co-occurring bigram is DROPPED
-      (the old clip(2) inner join produced no row for it), including the
-      all-NULL conditional-sum case where no bigram rows exist at all;
-    * clipping uses min(count_cand, count_ref) per token.
-    """
-    from avro_parquet_spark_example_spark.operators.text_analysis import (
-        _ngram_clip_counts,
-    )
-
-    pairs = spark.createDataFrame(
-        [
-            # lang 'a': cand has 'x' twice / ref once (clip -> 1);
-            # bigram 'x x' co-occurs once -> kept, m1=1+1(y), m2=1
-            ("a", 1, "x x y", "x y z"),
-            # lang 'b': unigram match ('x') but the two bigrams are
-            # disjoint ('x p' vs 'x q') -> old clip(2) join empty ->
-            # lang dropped entirely
-            ("b", 1, "x p", "x q"),
-            # lang 'c': single-word texts -> NO bigram rows at all
-            # (all-NULL conditional sum) -> dropped
-            ("c", 1, "x", "x"),
-            # lang 'd': no shared tokens at all -> m1=0 -> dropped
-            ("d", 1, "p p", "q q"),
-        ],
-        "lang string, doc_id int, cand string, ref string",
-    )
-    out = {r["lang"]: r for r in _ngram_clip_counts(pairs).collect()}
-    assert set(out) == {"a"}
-    assert out["a"]["m1"] == 2  # min(2,1) for 'x' + min(1,1) for 'y'
-    assert out["a"]["m2"] == 1  # 'x x' bigram co-occurs min(1,1)
-
-
-def test_ngram_clip_plan_has_no_token_join(spark, sf_dir):
-    """The §7 rewrite's plan pin: the BLEU/ROUGE clip machinery must not
-    reintroduce the per-token (lang, doc_id, tok) joins — the only joins
-    left are the two broadcast lens+clips attachments on the lang key
-    (plan census: 14 -> 6 Exchanges, 8 -> 2 BHJ per consumer)."""
-    import re
-
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    for name in ("eval_bleu_corpus", "eval_rouge_n"):
-        df = get_query(name).fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "SortMergeJoin" not in plan, name
-        assert len(re.findall(r"BroadcastHashJoin", plan)) <= 2, name
-        assert len(re.findall(r"\bExchange\b", plan)) <= 6, name
-
-
-def test_text_diversity_single_pass_matches_join_form_semantics(spark):
-    """Pin the r15 tagged-union rewrite of text_diversity_metrics' core
-    to the OLD docs⋈uni⋈bi inner-join semantics on degenerate langs the
-    fixtures never exercise: a lang whose docs are all single words has
-    no bigrams (dropped), a lang with only NULL text has no tokens
-    (dropped), and n_docs counts NULL-text docs for surviving langs."""
-    from avro_parquet_spark_example_spark.operators import text_analysis
-    from avro_parquet_spark_example_spark.sources import catalog
-    import avro_parquet_spark_example_spark.operators.text_analysis as ta
-
-    docs = spark.createDataFrame(
-        [
-            ("en", 1, "a b a"),      # tokens 3, bigrams 2 ('a b','b a')
-            ("en", 2, None),          # counted in n_docs, no tokens
-            ("solo", 3, "x"),         # 1-word docs only -> no bigrams
-            ("nul", 4, None),         # all-NULL text -> no tokens
-        ],
-        "lang string, doc_id int, text string",
-    )
-    orig = catalog.load
-    try:
-        catalog.load = lambda spark, sf_dir, name: docs
-        ta.load = catalog.load
-        out = {r["lang"]: r for r in
-               ta.text_diversity_metrics(spark, "ignored").collect()}
-    finally:
-        catalog.load = orig
-        ta.load = orig
-    assert set(out) == {"en"}
-    r = out["en"]
-    assert (r["n_docs"], r["n_tokens"], r["distinct_unigrams"]) == (2, 3, 2)
-    assert r["distinct_bigrams"] == 2
-    assert r["distinct_bigram_ratio"] == 1.0  # 2 distinct / 2 bigrams

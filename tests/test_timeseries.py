@@ -587,83 +587,3 @@ def test_mann_kendall_closed_forms():
     # constant series -> S = 0, var fully tie-corrected to 0 -> z = 0
     s3, v3, z3 = _mk_ref([7] * 10)
     assert (s3, v3, z3) == (0, 0.0, 0.0)
-
-
-# --------------------------------------------------------------------------
-# r15 ANSI sweep, timeseries family: seven more library forms crashed on
-# degenerate series (REVIEW_r15_stats.md §timeseries)
-# --------------------------------------------------------------------------
-
-
-def test_ts_degenerate_margins(spark):
-    import datetime
-
-    from avro_parquet_spark_example_spark.operators import timeseries as ts
-
-    D = datetime.date
-    days = [D(2024, 1, 1) + datetime.timedelta(days=i) for i in range(6)]
-    const = spark.createDataFrame(
-        [("k", d, 5) for d in days], "k string, day date, x long"
-    )
-
-    # ANOVA: single group level / zero within-group variance -> NULL F
-    single = ts.anova_oneway(
-        spark.createDataFrame(
-            [("s", "g", 5), ("s", "g", 7), ("s", "g", 9)],
-            "seg string, grp string, v long",
-        ),
-        "seg", "grp", "v",
-    ).collect()[0]
-    assert single.k == 1 and single.f_stat is None
-    zw = ts.anova_oneway(
-        spark.createDataFrame(
-            [("s", "a", 5), ("s", "a", 5), ("s", "b", 9), ("s", "b", 9)],
-            "seg string, grp string, v long",
-        ),
-        "seg", "grp", "v",
-    ).collect()[0]
-    assert zw.f_stat is None  # perfect separation: within-SS exactly 0
-
-    # constant series: every ACF lag and every xcorr lag undefined
-    assert all(
-        r.acf is None for r in ts.autocorr(const, "k", "day", "x").collect()
-    )
-    lagg = spark.createDataFrame(
-        [(d, i) for i, d in enumerate(days)], "day date, x long"
-    )
-    lead = spark.createDataFrame(
-        [(d, 5) for d in days], "day date, x long"
-    )
-    assert all(
-        r.xcorr is None
-        for r in ts.lead_lag_xcorr(lead, lagg, max_lag=1).collect()
-    )
-
-    # zero-total series: Fano variance-to-mean undefined
-    fz = ts.fano_factor(
-        spark.createDataFrame([("k", 0)] * 6, "k string, x long"), "k", "x"
-    ).collect()[0]
-    assert fz.mean_daily == 0.0 and fz.fano is None
-
-    # constant series: MASE scale 0 -> NULL; MAPE/sMAPE exact 0
-    bc = ts.forecast_backtest(const, "k", "day", "x", season=2).collect()[0]
-    assert (bc.mae, bc.mape, bc.smape, bc.mase) == (0.0, 0.0, 0.0, None)
-    # all-zero series: MAPE undefined (zero actuals), sMAPE 0 by the
-    # both-zero convention, MASE still NULL
-    bz = ts.forecast_backtest(
-        spark.createDataFrame(
-            [("k", d, 0) for d in days], "k string, day date, x long"
-        ),
-        "k", "day", "x", season=2,
-    ).collect()[0]
-    assert bz.mape is None and bz.smape == 0.0 and bz.mase is None
-
-    # 2-day series over 3 segments: single-day segments get NULL slope
-    pw = ts.piecewise_trend(
-        spark.createDataFrame(
-            [("k", days[0], 5), ("k", days[1], 6)],
-            "k string, day date, x long",
-        ),
-        "k", "day", "x", segments=3,
-    ).collect()
-    assert all(r.slope is None for r in pw if r.n_days == 1)
