@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from avro_parquet_spark_example_spark.session import (
     configure,
-    session_key,
+    session_state,
     verify_events_readable,
 )
 
@@ -96,40 +96,27 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: (application id, sf_dir, query name) → built DataFrame. A DataFrame is an
-#: immutable analyzed-plan handle: caching it skips re-running Catalyst
-#: analysis/optimization on repeated invocations (the dominant cost of small
-#: warm queries — ~1 s vs ~0.1 s execution). Note the execution-side
-#: consequence: repeated ``collect`` calls reuse the SAME RDD DAG, and
-#: Spark's DAGScheduler skips shuffle map stages whose outputs are already
-#: registered — so a repeated shuffle query re-runs only its post-shuffle
-#: stages (results are never cached; narrow/scan-only plans re-execute in
-#: full). That is the intended long-lived-session behavior; timings that
-#: must include full re-execution (bench "fresh" protocol, scale-up
-#: stresses) bypass the wrapper and rebuild the plan per run.
-_PLAN_CACHE: dict[tuple[tuple[str, int], str, str], DataFrame] = {}
-
-
-#: (session, sf_dir) pairs whose events read-type probe already ran. The
-#: probe (one Parquet footer read) turns engine drift in how TIMESTAMP(NANOS)
-#: is surfaced into a loud boot failure (round-3 postmortem) — run it once
-#: per session+dataset, not per query.
-_PROBED: set[tuple[tuple[str, int], str]] = set()
-
-
 def _wrap(q: Query) -> Callable[[SparkSession, str], DataFrame]:
+    """``q.fn`` behind the session's plan cache: each ``(sf_dir, name)``
+    builds at most once per session, even when threads race, until
+    ``session.release``. Caching the plan handle skips Catalyst analysis on
+    repeated calls. Those reuse the SAME RDD DAG, and the DAGScheduler skips
+    shuffle map stages whose outputs are registered, so a repeated shuffle
+    query re-runs only its post-shuffle stages; timings that need full
+    re-execution (bench "fresh", scale-up) call ``q.fn`` directly. The
+    events read-type probe (round-3 postmortem) runs once per ``sf_dir``."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (session_key(spark), sf_dir, q.name)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
+        state = session_state(spark)
+
+        def build() -> DataFrame:
             configure(spark)
-            probe_key = (key[0], sf_dir)
-            if probe_key not in _PROBED:
-                verify_events_readable(spark, sf_dir)
-                _PROBED.add(probe_key)
-            df = q.fn(spark, sf_dir)
-            _PLAN_CACHE[key] = df
-        return df
+            state.get(
+                state.probed, sf_dir, lambda: verify_events_readable(spark, sf_dir)
+            )
+            return q.fn(spark, sf_dir)
+
+        return state.get(state.plans, (sf_dir, q.name), build)
 
     run.__name__ = q.name
     run.__doc__ = q.doc

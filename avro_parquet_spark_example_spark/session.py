@@ -31,12 +31,11 @@ Config rationale:
 
 from __future__ import annotations
 
-import itertools
 import os
+import threading
 import warnings
-import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Configs that can be applied to a live session via ``spark.conf.set``.
 RUNTIME_CONFIGS: dict[str, str] = {
@@ -81,41 +80,55 @@ BUILD_CONFIGS: dict[str, str] = {
 }
 
 
-#: session identity → monotonic token. The identity is the py4j target id
-#: of the underlying JVM SparkSession when available: py4j target ids are
-#: a monotonic counter per gateway and are never reused, so (unlike
-#: ``id()``) a dead session's key can never be reissued to a new one — and
-#: (unlike keying by the Python wrapper) two wrappers around the SAME JVM
-#: session (``SparkSession(sc, jsparkSession)`` re-wrapping) share one
-#: token, so caches never silently split. Wrapper-keyed WeakKeyDictionary
-#: is the fallback for session implementations without ``_jsparkSession``
-#: (Spark Connect), where wrapper identity defines session scope.
-_SESSION_TOKENS: dict[str, int] = {}
-_SESSION_TOKENS_BY_WRAPPER: "weakref.WeakKeyDictionary[SparkSession, int]" = (
-    weakref.WeakKeyDictionary()
-)
-_TOKEN_COUNTER = itertools.count()
+class SessionState:
+    """The engine's state for one session, kept on its Python wrapper the
+    way Spark keeps temp views and SQL conf: table frames and built plans
+    keyed ``(sf_dir, name)``, and each probed ``sf_dir``'s events dtype.
+
+    A ``spark.newSession()`` sibling is a new wrapper with its own state. So
+    is a second wrapper around the same JVM session (``SparkSession(sc,
+    jss)``), e.g. PySpark's ``foreachBatch`` rewrap, whose JVM session is a
+    clone that must not share state anyway. Cached frames refer to their
+    session, so the two form a cycle the garbage collector reclaims once the
+    session is dropped; in a dict keyed weakly by the session, the frames
+    would keep their own keys alive.
+    """
+
+    def __init__(self) -> None:
+        self.tables: dict[tuple[str, str], DataFrame] = {}
+        self.plans: dict[tuple[str, str], DataFrame] = {}
+        self.probed: dict[str, str] = {}
+        self._lock = threading.Lock()
+        self._key_locks: dict[tuple[int, object], threading.Lock] = {}
+
+    def get(self, store: dict, key, build):
+        """``store[key]``, filled by ``build()`` at most once. Each key of
+        each store has its own lock, so other keys still build concurrently
+        (a plan's build loads tables while it holds its plan's lock)."""
+        value = store.get(key)
+        if value is None:
+            with self._lock:
+                lock = self._key_locks.setdefault((id(store), key), threading.Lock())
+            with lock:
+                value = store.get(key)
+                if value is None:
+                    value = store[key] = build()
+        return value
 
 
-def session_key(spark: SparkSession) -> tuple[str, int]:
-    """Stable cache-key component for a live session, used by the catalog
-    and plan caches. Composite of the Spark application id (unique per
-    context — survives a context restart) and a monotonic per-JVM-session
-    token (distinguishes sibling sessions from ``spark.newSession()``, which
-    share one application id but must not share session-scoped state)."""
-    jvm_session = getattr(spark, "_jsparkSession", None)
-    target_id = getattr(jvm_session, "_target_id", None)
-    if target_id is not None:
-        token = _SESSION_TOKENS.get(target_id)
-        if token is None:
-            token = next(_TOKEN_COUNTER)
-            _SESSION_TOKENS[target_id] = token
-    else:  # pragma: no cover - Spark Connect fallback
-        token = _SESSION_TOKENS_BY_WRAPPER.get(spark)
-        if token is None:
-            token = next(_TOKEN_COUNTER)
-            _SESSION_TOKENS_BY_WRAPPER[spark] = token
-    return (spark.sparkContext.applicationId, token)
+def session_state(spark: SparkSession) -> SessionState:
+    """``spark``'s :class:`SessionState`, made on first use (``setdefault``
+    is atomic, so racing threads get one holder)."""
+    attrs = vars(spark)
+    state = attrs.get("_engine_state")
+    return state or attrs.setdefault("_engine_state", SessionState())
+
+
+def release(spark: SparkSession) -> None:
+    """Drop the session's plans, tables and probes, so that a garbage
+    collection can free the checkpointed RDDs their lineage held. Callers
+    that run the whole registry in one session call it between keys."""
+    vars(spark).pop("_engine_state", None)
 
 
 def configure(spark: SparkSession) -> SparkSession:

@@ -35,7 +35,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from avro_parquet_spark_example_spark.session import session_key
+from avro_parquet_spark_example_spark.session import session_state
 
 #: All driver-generated tables (TESTDATA.md): TPC-H-ish star schema +
 #: events stream + LLM-pipeline tables.
@@ -57,14 +57,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: (session key, sf_dir, table) → DataFrame. DataFrames are immutable plan
-#: handles, so sharing one per table is safe and mirrors registering a view
-#: once: the file listing, footer schema, and analyzed relation are reused
-#: instead of being rebuilt on every query invocation. Keyed by
-#: ``session.session_key`` (see its docstring for the aliasing rationale).
-_CACHE: dict[tuple[tuple[str, int], str, str], DataFrame] = {}
-
-
 def scratch_suffix(sf_dir: str) -> str:
     """Injective filesystem-safe token for an sf_dir, shared by every
     scratch-writing operator (batch sinks and streaming landing dirs must
@@ -76,15 +68,18 @@ def scratch_suffix(sf_dir: str) -> str:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. ``events`` gets its ``ts`` normalized to TimestampType."""
-    key = (session_key(spark), sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
+    """Read one table. ``events`` gets its ``ts`` normalized to TimestampType.
+
+    One frame per table and session, kept on the session: DataFrames are
+    immutable plan handles, so sharing one mirrors registering a view once
+    (file listing, footer schema and analyzed relation are reused)."""
+
+    def read() -> DataFrame:
         df = spark.read.parquet(table_path(sf_dir, name))
-        if name == "events":
-            df = normalize_events(df)
-        _CACHE[key] = df
-    return df
+        return normalize_events(df) if name == "events" else df
+
+    state = session_state(spark)
+    return state.get(state.tables, (sf_dir, name), read)
 
 
 def spread(df: DataFrame, width_from: DataFrame | None = None) -> DataFrame:

@@ -288,20 +288,26 @@ def test_plan_audit_full_registry(spark, sf_dir):
     none are expected, and the zero-skip assertion pins that."""
     from avro_parquet_spark_example_spark.plans.audit import audit_plan
     from avro_parquet_spark_example_spark.registry import all_queries
+    from avro_parquet_spark_example_spark.session import release
 
     build_errors: dict[str, str] = {}
     violations: dict[str, list[str]] = {}
     n_audited = 0
-    for name, fn in sorted(all_queries().items()):
-        try:
-            plan = formatted_plan(fn(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 - collected and asserted
-            build_errors[name] = f"{type(exc).__name__}: {exc}"[:120]
-            continue
-        _, unexpected = audit_plan(name, plan)
-        if unexpected:
-            violations[name] = unexpected
-        n_audited += 1
+    try:
+        for name, fn in sorted(all_queries().items()):
+            try:
+                plan = formatted_plan(fn(spark, sf_dir))
+            except Exception as exc:  # noqa: BLE001 - collected and asserted
+                build_errors[name] = f"{type(exc).__name__}: {exc}"[:120]
+                continue
+            _, unexpected = audit_plan(name, plan)
+            if unexpected:
+                violations[name] = unexpected
+            n_audited += 1
+    finally:
+        # the other tests share this session: leave them no cached plans
+        # and none of the checkpoints those plans hold
+        release(spark)
     assert not build_errors, f"queries failed to build a plan: {build_errors}"
     assert not violations, f"plan-audit violations: {violations}"
     assert n_audited >= 170, f"registry shrank? only {n_audited} plans audited"

@@ -11,18 +11,30 @@ silently breaking six event-time queries. These tests pin the defenses:
   * ``configure`` reports (not swallows) configs that fail to apply;
   * an UNCONFIGURED session can still run an event-time query — correctness
     must not depend on a config the engine can't verify is honored.
+
+The engine's per-session state (``session.session_state``) is pinned here
+too: a registry key builds once per session even when threads race,
+``release`` frees the checkpoints that cached plans hold, and
+``newSession()`` siblings keep separate plans.
 """
 
 from __future__ import annotations
 
 import datetime
+import gc
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from avro_parquet_spark_example_spark.registry import Query, _wrap, all_queries
 from avro_parquet_spark_example_spark.session import (
     LAST_UNAPPLIED_CONFIGS,
     configure,
+    release,
+    session_state,
     verify_events_readable,
 )
 from avro_parquet_spark_example_spark.sources.catalog import (
@@ -139,3 +151,77 @@ def test_upsert_partition_overwrite_keeps_session_conf(
     rel = con.sql(e.oracle_sql()["upsert_partition_overwrite"])
     assert got == canon_rows(rel.columns, rel.fetchall())
     assert got
+
+
+def test_racing_threads_build_a_key_once(spark, sf_dir):
+    """Threads asking at once for one unbuilt key (more threads than
+    cores, with a short switch interval): the build runs once and every
+    thread gets the same plan. An unlocked check-then-set built it once per
+    thread, paying its build jobs each time."""
+    calls = []
+
+    def fn(spark, sf_dir):
+        calls.append(threading.get_ident())
+        time.sleep(0.3)
+        return spark.range(1)
+
+    run = _wrap(Query(name="race_probe", fn=fn, oracle=None, doc=""))
+    got = [None] * 8
+
+    def ask(i):
+        got[i] = run(spark, sf_dir)
+
+    threads = [threading.Thread(target=ask, args=(i,)) for i in range(len(got))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert got[0] is not None and all(df is got[0] for df in got)
+
+
+def test_release_frees_cached_checkpoints(spark, sf_dir):
+    """Cached plans pin the eager localCheckpoints their lineage holds;
+    ``release`` drops the plans, and a GC then frees exactly those RDDs.
+    Matched by RDD id, not by count (see
+    ``test_kcenter_leaves_no_cached_blocks``)."""
+
+    def stored_ids() -> set:
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {info.id() for info in infos}
+
+    release(spark)  # build afresh, whatever earlier tests cached
+    queries = all_queries()
+    before = stored_ids()
+    for key in ("graph_degree_hist", "graph_triangle_count", "graph_kcore_peel"):
+        queries[key](spark, sf_dir)
+    held = stored_ids() - before
+    assert held, "the keys no longer checkpoint while they build"
+    release(spark)
+    deadline = time.time() + 15
+    while held & stored_ids() and time.time() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert not held & stored_ids()
+
+
+def test_sibling_sessions_keep_separate_plans(spark, sf_dir):
+    """A ``newSession()`` sibling builds its own plan for a key; each
+    session returns its own plan object on every call, and releasing one
+    session leaves the other's plans in place."""
+    run = all_queries()["agg_scan_group"]
+    sibling = spark.newSession()
+    mine, theirs = run(spark, sf_dir), run(sibling, sf_dir)
+    assert mine is not theirs
+    assert run(spark, sf_dir) is mine and run(sibling, sf_dir) is theirs
+    assert session_state(sibling) is not session_state(spark)
+    release(sibling)
+    assert run(spark, sf_dir) is mine
+    assert run(sibling, sf_dir) is not theirs

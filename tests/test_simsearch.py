@@ -1,10 +1,12 @@
 """Similarity-search correctness: hand-computed cosine ranking on tiny
-vectors, and LSH recall vs the brute-force baseline (FIXTURES.md §3)."""
+vectors, LSH recall vs the brute-force baseline (FIXTURES.md §3), and the
+scaled LSH bit-count dial."""
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.operators.simsearch import dot_product
@@ -533,3 +535,65 @@ def test_dim_variance_matches_python_reference(spark, sf_dir):
     for r in rows:
         assert r.n == n
         assert abs(r.variance - round(var[r.pos - 1], 9)) < 1e-12
+
+
+# --------------------------------------------------------------------------
+# scaled_lsh_bits — the LSH density dial (x100 ANN program finding)
+# --------------------------------------------------------------------------
+
+
+def test_scaled_lsh_bits_dial():
+    from avro_parquet_spark_example_spark.operators.simsearch import (
+        K_BITS,
+        scaled_lsh_bits,
+    )
+
+    assert scaled_lsh_bits(2000, 2000) == K_BITS
+    assert scaled_lsh_bits(1000, 2000) == K_BITS  # never below reference
+    # x100 corpus: K grows by log2(100) ~ 6.64 -> +7
+    assert scaled_lsh_bits(200_000, 2000) == K_BITS + 7
+    # constant occupancy invariant: n / 2^K within a factor 2 of reference
+    for n in (2000, 20_000, 200_000, 2_000_000):
+        k = scaled_lsh_bits(n, 2000)
+        occ = n / 2**k
+        ref_occ = 2000 / 2**K_BITS
+        assert ref_occ / 2 <= occ <= ref_occ * 2
+    with pytest.raises(ValueError):
+        scaled_lsh_bits(0, 2000)
+
+
+def test_lsh_table_keys_scaled_k_roundtrip(spark):
+    # the parameterized key builder must produce L keys whose low k bits
+    # vary and whose table tag rides the high bits, for non-default k
+    from pyspark.sql import functions as F
+
+    from avro_parquet_spark_example_spark.operators.simsearch import (
+        L_TABLES,
+        hyperplanes,
+        lsh_table_keys,
+        multiprobe_keys,
+    )
+
+    k = 8
+    planes = hyperplanes(n_planes=L_TABLES * k)
+    df = spark.createDataFrame(
+        [(i, [math.sin(i * 64 + d) for d in range(64)]) for i in range(20)],
+        "vec_id int, embedding array<float>",
+    )
+    keys = df.select(
+        F.explode(lsh_table_keys(F.col("embedding"), planes, k=k)).alias("key")
+    )
+    rows = [r["key"] for r in keys.collect()]
+    assert len(rows) == 20 * L_TABLES
+    tables = {r >> 32 for r in rows}
+    assert tables == set(range(L_TABLES))
+    assert all(0 <= (r & 0xFFFFFFFF) < 2**k for r in rows)
+    # multiprobe at k flips: k+1 distinct probes per table
+    probes = df.limit(1).select(
+        F.explode(
+            multiprobe_keys(
+                lsh_table_keys(F.col("embedding"), planes, k=k), k_bits=k
+            )
+        ).alias("p")
+    )
+    assert probes.distinct().count() == L_TABLES * (k + 1)

@@ -111,7 +111,7 @@ def main(names: list[str]) -> int:
     import duckdb
 
     import __spark_entry__ as e
-    from avro_parquet_spark_example_spark.session import get_session
+    from avro_parquet_spark_example_spark.session import get_session, release
     from avro_parquet_spark_example_spark.sources.catalog import TABLES
 
     qs, oracles = e.queries(), e.oracle_sql()
@@ -156,6 +156,9 @@ def main(names: list[str]) -> int:
 
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
+        # drop the previous key's plan, tables and the checkpoints they
+        # hold, so the gate keeps one key's state at a time
+        release(spark)
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)

@@ -68,6 +68,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from avro_parquet_spark_example_spark.session import release
 
     t0 = time.time()
     spark = (
@@ -120,8 +121,11 @@ def main() -> int:
             # stage 2879 at vec_power_iteration_top_pc, killing the JVM —
             # the r9 'transient' made deterministic). This is harness
             # hygiene, not an engine fix: no real driver runs 352 queries
-            # without releasing its result handles.
+            # without releasing its result handles. The gc.collect() cannot
+            # free what the session's plan cache holds, so release() drops
+            # the cached plans and tables first.
             if ki % 20 == 0:
+                release(spark)
                 gc.collect()
                 spark.catalog.clearCache()
             try:
