@@ -500,14 +500,6 @@ def _cc_union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
-#: Observability for the most recent connected_components() call (r14,
-#: the ×100-leg instrumentation): mode is "local" (driver union-find on
-#: a small probe) or "iterative" (min-label propagation), rounds counts
-#: propagation rounds INCLUDING the fixpoint-confirming one. Read-only
-#: diagnostic — queries never branch on it.
-LAST_CC_INFO: dict = {}
-
-
 def connected_components(
     edges: DataFrame,
     max_iter: int = 10,
@@ -536,8 +528,6 @@ def connected_components(
     # redundant upstream run is amortized over the propagation rounds.
     head = edges.select("a", "b").limit(local_threshold + 1).collect()
     if len(head) <= local_threshold:
-        LAST_CC_INFO.clear()
-        LAST_CC_INFO.update(mode="local", rounds=1, probe_edges=len(head))
         labels = _cc_union_find([(r.a, r.b) for r in head])
         return edges.sparkSession.createDataFrame(
             list(labels.items()), schema="id long, cluster_id long"
@@ -553,9 +543,7 @@ def connected_components(
         .withColumn("cluster_id", F.col("id"))
     )
     prev_sum: int | None = None
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         neighbor_min = (
             sym.join(labels, sym.b == labels.id)
             .groupBy(sym.a.alias("id"))
@@ -578,10 +566,6 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    LAST_CC_INFO.clear()
-    LAST_CC_INFO.update(
-        mode="iterative", rounds=rounds, probe_edges=len(head)
-    )
     return labels
 
 

@@ -83,7 +83,8 @@ BUILD_CONFIGS: dict[str, str] = {
 class SessionState:
     """The engine's state for one session, kept on its Python wrapper the
     way Spark keeps temp views and SQL conf: table frames and built plans
-    keyed ``(sf_dir, name)``, and each probed ``sf_dir``'s events dtype.
+    keyed ``(sf_dir, name)``, each probed ``sf_dir``'s events dtype, and
+    the Python data sources registered on the session.
 
     A ``spark.newSession()`` sibling is a new wrapper with its own state. So
     is a second wrapper around the same JVM session (``SparkSession(sc,
@@ -98,6 +99,7 @@ class SessionState:
         self.tables: dict[tuple[str, str], DataFrame] = {}
         self.plans: dict[tuple[str, str], DataFrame] = {}
         self.probed: dict[str, str] = {}
+        self.sources: dict[str, type] = {}
         self._lock = threading.Lock()
         self._key_locks: dict[tuple[int, object], threading.Lock] = {}
 
@@ -127,41 +129,52 @@ def session_state(spark: SparkSession) -> SessionState:
 def release(spark: SparkSession) -> None:
     """Drop the session's plans, tables and probes, so that a garbage
     collection can free the checkpointed RDDs their lineage held. Callers
-    that run the whole registry in one session call it between keys."""
-    vars(spark).pop("_engine_state", None)
+    that run the whole registry in one session call it between keys. The
+    record of registered data sources carries over: the registrations stay
+    in the JVM session."""
+    old = vars(spark).pop("_engine_state", None)
+    if old is not None:
+        session_state(spark).sources.update(old.sources)
+
+
+def register_source(spark: SparkSession, source: type) -> None:
+    """Register the Python data source class ``source`` on ``spark`` once.
+    A repeat ``spark.dataSource.register`` costs milliseconds and logs a
+    warning that it replaced the earlier registration; a genuine failure
+    propagates rather than resurfacing as an unknown format at read time."""
+
+    def build():
+        spark.dataSource.register(source)
+        return source
+
+    state = session_state(spark)
+    state.get(state.sources, source.name(), build)
 
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine configs to an existing session.
 
     Safe to call repeatedly (idempotent). Configs the running Spark refuses
-    to change at runtime don't fail the query, but they are no longer
-    swallowed silently either: every non-applied config is warned about and
-    recorded in :data:`LAST_UNAPPLIED_CONFIGS` — round 3 proved that a
-    silently-ignored config (nanosAsLong) can hide environment drift for a
-    full round.
+    to change at runtime don't fail the query, but they are not swallowed
+    silently either: each one emits a ``RuntimeWarning`` naming it — round
+    3 proved that a silently-ignored config (nanosAsLong) can hide
+    environment drift for a full round. ``conf.set`` succeeding does NOT
+    prove the engine honors a config (nanosAsLong reads back "true" yet is
+    ignored by the Parquet reader); behavioral drift is caught by
+    :func:`verify_events_readable`.
     """
-    unapplied: dict[str, str] = {}
     for key, value in RUNTIME_CONFIGS.items():
         try:
             spark.conf.set(key, value)
             applied = spark.conf.get(key, None)
-            if applied != value:
-                unapplied[key] = f"set accepted but read back {applied!r}"
-        except Exception as exc:  # pragma: no cover - version-dependent
-            unapplied[key] = f"{type(exc).__name__}: {exc}"
-    LAST_UNAPPLIED_CONFIGS.clear()
-    LAST_UNAPPLIED_CONFIGS.update(unapplied)
-    for key, why in unapplied.items():
+        except Exception as exc:
+            why = f"{type(exc).__name__}: {exc}"
+        else:
+            if applied == value:
+                continue
+            why = f"set accepted but read back {applied!r}"
         warnings.warn(f"Spark config {key} did not apply: {why}", RuntimeWarning)
     return spark
-
-
-#: Configs the most recent :func:`configure` call could not apply, for tests
-#: and postmortems. NOTE: ``conf.set`` succeeding does NOT prove the engine
-#: honors the config (nanosAsLong reads back "true" yet is ignored by the
-#: Parquet reader) — behavioral drift is caught by verify_events_readable.
-LAST_UNAPPLIED_CONFIGS: dict[str, str] = {}
 
 
 def verify_events_readable(spark: SparkSession, sf_dir: str) -> str:

@@ -45,6 +45,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from avro_parquet_spark_example_spark.registry import register
+from avro_parquet_spark_example_spark.session import register_source
 from avro_parquet_spark_example_spark.sources import avro_binary
 from avro_parquet_spark_example_spark.sources.avro_schema import parse_avro_schema
 from avro_parquet_spark_example_spark.sources.catalog import spread
@@ -163,9 +164,7 @@ class AvroContainerDataSource(DataSource):
 
 
 def ensure_registered(spark: SparkSession) -> None:
-    if not getattr(spark, "_avrofile_registered", False):
-        spark.dataSource.register(AvroContainerDataSource)
-        spark._avrofile_registered = True
+    register_source(spark, AvroContainerDataSource)
 
 
 def write_shard(

@@ -32,6 +32,7 @@ from pyspark.sql.datasource import (
 )
 
 from avro_parquet_spark_example_spark.registry import register
+from avro_parquet_spark_example_spark.session import register_source
 
 #: rows per partition and partition count — the synthetic table is
 #: N_PARTS * PART_ROWS rows of (id, bucket, score), all derived from id.
@@ -92,12 +93,7 @@ def pysource_custom_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose correctly. ``sf_dir`` is unused: the source IS the data."""
     from pyspark.sql import functions as F
 
-    # Register once per session; a genuine registration failure (missing
-    # pyspark-4 API, serialization error) must propagate, not resurface as
-    # a confusing AnalysisException on the read below.
-    if not getattr(spark, "_rangelog_registered", False):
-        spark.dataSource.register(RangeLogDataSource)
-        spark._rangelog_registered = True
+    register_source(spark, RangeLogDataSource)
     df = spark.read.format("rangelog").load()
     return df.filter(F.col("id") % 11 == 0).select("id", "bucket", "score")
 
@@ -179,9 +175,7 @@ def pysource_stream_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from avro_parquet_spark_example_spark.streaming.stateful import run_to_table
 
-    if not getattr(spark, "_rangelog_stream_registered", False):
-        spark.dataSource.register(RangeLogStreamDataSource)
-        spark._rangelog_stream_registered = True
+    register_source(spark, RangeLogStreamDataSource)
     stream = spark.readStream.format("rangelog_stream").load()
     filtered = stream.filter(F.col("id") % 11 == 0).select("id", "bucket", "score")
     return run_to_table(filtered, "append")
@@ -281,9 +275,7 @@ def pysource_custom_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_parquet_spark_example_spark.sources.catalog import load
     from avro_parquet_spark_example_spark.sources.scans import _scratch
 
-    if not getattr(spark, "_pycsvsink_registered", False):
-        spark.dataSource.register(CsvSinkDataSource)
-        spark._pycsvsink_registered = True
+    register_source(spark, CsvSinkDataSource)
 
     out_dir = _scratch("pycsvsink", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)

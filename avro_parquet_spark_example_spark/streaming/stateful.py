@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 import pyarrow.dataset as pads
@@ -34,11 +35,8 @@ from avro_parquet_spark_example_spark.sources.catalog import (
 
 SCRATCH = "/tmp/avro_parquet_spark_example_spark_streams"
 
-#: Micro-batch progress of the most recent :func:`run_to_table` run —
-#: ``StreamingQueryProgress`` JSON dicts, newest last. Diagnostic only
-#: (tests read it to pin the batch count; tools/perf_sweep.py counts
-#: batches with a ``StreamingQueryListener``); queries never consume it.
-LAST_STREAM_PROGRESS: list[dict] = []
+#: Held across the session-conf override in :func:`run_to_table`.
+_START_LOCK = threading.Lock()
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,46 +120,47 @@ def run_to_table(
     queries whose late/closed results emit ON watermark advance (outer
     joins, append windowed aggs, session windows) MUST keep the default.
 
-    NOT REENTRANT: the overrides mutate SESSION-global confs around the
-    run (Spark offers no per-query knob for either — the state-store
-    partition count comes from the session shuffle conf at first batch,
-    and noDataMicroBatches has no writeStream option). Concurrent batch
-    or streaming work in the same session during the window sees the
-    override, and two concurrent run_to_table calls can restore each
-    other's values. All registry/test callers are serial; a production
-    deployment would set these per-job at session build instead."""
+    NOT REENTRANT only inside ``start()``: the overrides are SESSION-global
+    confs (Spark offers no per-query knob for either — the state-store
+    partition count comes from the shuffle conf, and noDataMicroBatches
+    has no writeStream option). They hold only while ``start()`` runs: the
+    stream clones the session's conf there, so the override covers nothing
+    after it returns, and one module lock keeps two calls from restoring
+    each other's values. Other work the session starts inside that window
+    still sees the override.
+
+    The memory sink's temp view is dropped once the result frame is bound,
+    so the sink's rows live exactly as long as the returned frame."""
     spark = df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(SCRATCH, name)
     shutil.rmtree(ckpt, ignore_errors=True)
-    saved: dict[str, str] = {}
     overrides: dict[str, str] = {}
     if state_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
     if not final_no_data_batch:
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    for k, v in overrides.items():
-        saved[k] = spark.conf.get(k)
-        spark.conf.set(k, v)
-    try:
-        query = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        LAST_STREAM_PROGRESS.clear()
-        LAST_STREAM_PROGRESS.extend(
-            p if isinstance(p, dict) else __import__("json").loads(p.json)
-            for p in query.recentProgress
-        )
-    finally:
-        for k, v in saved.items():
+    with _START_LOCK:
+        saved = {k: spark.conf.get(k) for k in overrides}
+        for k, v in overrides.items():
             spark.conf.set(k, v)
-    return spark.table(name)
+        try:
+            query = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+    try:
+        query.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(

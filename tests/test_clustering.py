@@ -1,5 +1,5 @@
-"""Property tests for the iterative k-means operator (rows-only in the
-driver, so these ARE its correctness gate — SURVEY.md §5)."""
+"""Property tests for the iterative k-means operators (rows-only in the
+driver, so these ARE their correctness gate — SURVEY.md §5)."""
 
 from __future__ import annotations
 
@@ -163,3 +163,13 @@ def test_kcenter_leaves_no_cached_blocks(spark, sf_dir):
         assert not leaked, (
             f"kcenter_greedy left persisted blocks behind: {leaked}"
         )
+
+
+def test_kmeans_exact_partitions_corpus(spark, sf_dir):
+    rows = get_query("cluster_kmeans_exact").fn(spark, sf_dir).collect()
+    clusters = {r["cluster"] for r in rows}
+    assert clusters == {0, 1, 2, 3}
+    n_total = {r["cluster"]: r["n"] for r in rows}
+    n_vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    assert sum(n_total.values()) == n_vecs
+    assert len(rows) == 4 * 64  # full centroid table

@@ -1,6 +1,6 @@
 """Property tests for the dedup operators over literal fixtures
 (FIXTURES.md §3): idempotence, near-dup recall, fingerprint locality,
-connected-components correctness."""
+connected-components correctness, and pHash recall of injected copies."""
 
 from __future__ import annotations
 
@@ -724,28 +724,58 @@ def test_cluster_size_histogram_matches_python_reference(spark, sf_dir):
 
 
 def test_cc_observer_local_and_iterative(spark):
+    from perfbench.tracing import StatusStore
+
     from avro_parquet_spark_example_spark.operators import dedup as dd
 
-    # small edge set -> driver union-find, mode 'local'
+    # small edge set -> driver union-find: with max_iter=0 no propagation
+    # round runs, so only the local path can give full components
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "a long, b long"
     )
-    labels = {r.id: r.cluster_id for r in dd.connected_components(edges).collect()}
-    assert dd.LAST_CC_INFO["mode"] == "local"
-    assert dd.LAST_CC_INFO["probe_edges"] == 3
+    labels = {
+        r.id: r.cluster_id
+        for r in dd.connected_components(edges, max_iter=0).collect()
+    }
     assert labels[1] == labels[2] == labels[3] == 1
     assert labels[10] == labels[11] == 10
 
     # force the iterative path with a tiny threshold: a diameter-1
-    # clique must converge in 2 rounds (1 propagating + 1 confirming)
+    # clique must converge in 2 rounds (1 propagating + 1 confirming),
+    # so max_iter=10 runs the jobs of max_iter=2, and more than 1 round's
     clique = spark.createDataFrame(
         [(a, b) for a in range(5) for b in range(a + 1, 5)],
         "a long, b long",
     )
-    labels2 = {
-        r.id: r.cluster_id
-        for r in dd.connected_components(clique, local_threshold=2).collect()
+    status = StatusStore(spark)
+
+    def jobs(max_iter):
+        labels2 = {
+            r.id: r.cluster_id
+            for r in dd.connected_components(
+                clique, max_iter=max_iter, local_threshold=2
+            ).collect()
+        }
+        assert set(labels2.values()) == {0}
+        return len(status.new_jobs())
+
+    assert jobs(1) < jobs(2) == jobs(10)
+
+
+def test_phash_dedup_catches_all_injected_copies(spark, sf_dir):
+    pairs = {
+        (r["i"], r["j"])
+        for r in get_query("multimodal_phash_dedup").fn(spark, sf_dir).collect()
     }
-    assert dd.LAST_CC_INFO["mode"] == "iterative"
-    assert dd.LAST_CC_INFO["rounds"] == 2
-    assert set(labels2.values()) == {0}
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    injected = {
+        r["doc_id"]
+        for r in docs.filter(
+            F.col("text").isNotNull() & (F.col("doc_id") < 50)
+        ).collect()
+    }
+    for d in injected:
+        assert (d, d + 100000) in pairs, f"missing injected pair for {d}"
+    # tolerance respected
+    for r in get_query("multimodal_phash_dedup").fn(spark, sf_dir).collect():
+        assert 0 <= r["hamming"] <= 3

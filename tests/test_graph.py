@@ -1,10 +1,13 @@
 """Graph operators: edge-build invariants and the PageRank properties that
 replace a value-hash check for the rows-only query (FIXTURES.md model:
-deterministic structure, float values property-tested)."""
+deterministic structure, float values property-tested). k-core peeling
+and BFS hops also run against sequential Python references."""
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import get_query
@@ -338,3 +341,126 @@ def test_personalized_pagerank_seed_properties(spark, sf_dir):
         get_query("graph_personalized_pagerank").fn(spark, sf_dir).collect()
     )
     assert {r.node: r.rank for r in rows2} == got
+
+
+def test_kcore_monotone_and_bounded(spark, sf_dir):
+    from avro_parquet_spark_example_spark.operators.graph import (
+        KCORE_K,
+        cooccurrence_edges,
+    )
+
+    core = get_query("graph_kcore_peel").fn(spark, sf_dir)
+    nodes = {r["node"] for r in core.collect()}
+    e = cooccurrence_edges(spark, sf_dir)
+    deg0 = {
+        r["node"]: r["d"]
+        for r in e.selectExpr("u AS node")
+        .unionByName(e.selectExpr("v AS node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .collect()
+    }
+    # peeling only removes: survivors are original nodes whose ORIGINAL
+    # degree was at least k (necessary condition of surviving round 1)
+    assert nodes <= set(deg0)
+    assert all(deg0[n] >= KCORE_K for n in nodes)
+    # final degrees can't exceed original ones
+    for r in get_query("graph_kcore_peel").fn(spark, sf_dir).collect():
+        assert r["degree"] <= deg0[r["node"]]
+
+
+# -- property tests (hypothesis): graph ops vs pure-Python references --
+
+_edges_strategy = st.lists(
+    st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(
+        lambda p: p[0] != p[1]
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+def _ref_bfs(sym_edges, seeds, hops):
+    dist = {s: 0 for s in seeds}
+    frontier = set(seeds)
+    for d in range(1, hops + 1):
+        nxt = set()
+        for u, v in sym_edges:
+            if u in dist and dist[u] == d - 1 and v not in dist:
+                nxt.add(v)
+        for v in nxt:
+            dist[v] = d
+        frontier = nxt
+    return dist
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_edges_strategy)
+def test_bfs_matches_reference(spark, raw):
+    from avro_parquet_spark_example_spark.operators.graph import bfs_hops
+
+    sym_pairs = sorted({(u, v) for u, v in raw} | {(v, u) for u, v in raw})
+    nodes = sorted({u for u, _ in sym_pairs})
+    seeds = [n for n in nodes if n % 3 == 0]
+    if not seeds:
+        return
+    sym = spark.createDataFrame(sym_pairs, "src long, dst long")
+    seeds_df = spark.createDataFrame([(s,) for s in seeds], "node long")
+    got = {
+        r["node"]: r["hops"]
+        for r in bfs_hops(sym, seeds_df, hops=3).collect()
+    }
+    want = _ref_bfs(sym_pairs, seeds, 3)
+    assert got == want
+
+
+def _ref_kcore(edges, k, rounds):
+    es = set(edges)
+    for _ in range(rounds):
+        deg = {}
+        for u, v in es:
+            deg[u] = deg.get(u, 0) + 1
+            deg[v] = deg.get(v, 0) + 1
+        keep = {n for n, d in deg.items() if d >= k}
+        es = {(u, v) for u, v in es if u in keep and v in keep}
+    deg = {}
+    for u, v in es:
+        deg[u] = deg.get(u, 0) + 1
+        deg[v] = deg.get(v, 0) + 1
+    return deg
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_edges_strategy)
+def test_kcore_matches_reference(spark, raw):
+    """Re-run the registered query's peel loop on a synthetic edge set and
+    compare against a sequential reference (k=2 so small graphs survive)."""
+    from pyspark.sql import functions as F
+
+    edges = sorted({(min(u, v), max(u, v)) for u, v in raw})
+    e = spark.createDataFrame(edges, "u long, v long")
+    k, rounds = 2, 3
+    for _ in range(rounds):
+        deg = (
+            e.selectExpr("u AS node")
+            .unionByName(e.selectExpr("v AS node"))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        keep = deg.filter(F.col("d") >= k).select("node")
+        e = (
+            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+            .select("u", "v")
+        )
+    got = {
+        r["node"]: r["degree"]
+        for r in e.selectExpr("u AS node")
+        .unionByName(e.selectExpr("v AS node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
+        .collect()
+    }
+    assert got == _ref_kcore(edges, k, rounds)

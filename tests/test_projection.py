@@ -1,6 +1,7 @@
 """Projection-group statistics (operators/projection.py) vs independent
 Python references: the exact PR AUC, the Jensen–Shannon divergence
-terms, the column profile, ECE/Brier calibration and KL drift."""
+terms, the column profile, ECE/Brier calibration, and KL, KS, Welch and
+Mann–Whitney drift."""
 
 from __future__ import annotations
 
@@ -192,3 +193,86 @@ def test_kl_drift_matches_python_reference(spark, sf_dir):
     # smoothed KL of two non-identical samples is non-negative up to
     # smoothing wiggle; identical distributions would pin at ~0
     assert total > -1e-6
+
+
+def test_ks_drift_matches_python_reference(spark, sf_dir):
+    """The distributed two-phase KS equals a single-threaded recompute of
+    max |CDF_ref − CDF_cur| over pooled observed values, and sits in
+    [0, 1] with the period split conserving rows."""
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    row = get_query("dq_drift_ks").fn(spark, sf_dir).collect()[0]
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
+    import datetime
+
+    split = datetime.datetime(1997, 1, 1)
+    ref = sorted(o.o_totalprice for o in orders if o.o_orderdate < split)
+    cur = sorted(o.o_totalprice for o in orders if o.o_orderdate >= split)
+    assert (row.n_ref, row.n_cur) == (len(ref), len(cur))
+    assert len(ref) + len(cur) == len(orders)
+    import bisect
+
+    ks = 0.0
+    for v in set(ref) | set(cur):
+        f1 = bisect.bisect_right(ref, v) / len(ref)
+        f2 = bisect.bisect_right(cur, v) / len(cur)
+        ks = max(ks, abs(f1 - f2))
+    assert abs(row.ks_stat - ks) < 1e-8, (row.ks_stat, ks)
+    assert 0.0 <= row.ks_stat <= 1.0
+
+
+def test_welch_ttest_matches_python_reference(spark, sf_dir):
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    row = get_query("dq_drift_welch_ttest").fn(spark, sf_dir).collect()[0]
+    import datetime
+    import statistics
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
+    split = datetime.datetime(1997, 1, 1)
+    ref = [o.o_totalprice for o in orders if o.o_orderdate < split]
+    cur = [o.o_totalprice for o in orders if o.o_orderdate >= split]
+    assert (row.n1, row.n2) == (len(ref), len(cur))
+    m1, m2 = statistics.fmean(ref), statistics.fmean(cur)
+    s1, s2 = statistics.variance(ref), statistics.variance(cur)
+    se2 = s1 / len(ref) + s2 / len(cur)
+    t = (m1 - m2) / se2**0.5
+    dof = se2**2 / (
+        (s1 / len(ref)) ** 2 / (len(ref) - 1)
+        + (s2 / len(cur)) ** 2 / (len(cur) - 1)
+    )
+    assert abs(row.mean_diff - (m1 - m2)) < 1e-4
+    assert abs(row.t_stat - t) < 1e-4
+    assert abs(row.dof - dof) < 1e-2
+    assert min(len(ref), len(cur)) - 1 <= row.dof <= len(ref) + len(cur) - 2
+
+
+def test_mannwhitney_identities_and_reference(spark, sf_dir):
+    """U_ref + U_cur == n1·n2 exactly; rank-sum re-derives from a
+    pure-Python midrank computation."""
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    row = get_query("dq_drift_mannwhitney").fn(spark, sf_dir).collect()[0]
+    import datetime
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
+    split = datetime.datetime(1997, 1, 1)
+    pooled = sorted(
+        (o.o_totalprice, o.o_orderdate < split) for o in orders
+    )
+    n1 = sum(1 for _, r in pooled if r)
+    n2 = len(pooled) - n1
+    assert (row.n1, row.n2) == (n1, n2)
+    # midranks
+    r1 = 0.0
+    i = 0
+    while i < len(pooled):
+        j = i
+        while j < len(pooled) and pooled[j][0] == pooled[i][0]:
+            j += 1
+        midrank = (i + 1 + j) / 2.0  # ranks i+1..j
+        r1 += midrank * sum(1 for k in range(i, j) if pooled[k][1])
+        i = j
+    assert abs(row.rank_sum_ref - r1) < 0.51  # both rounded at 1dp
+    assert abs(row.u_ref - (r1 - n1 * (n1 + 1) / 2.0)) < 0.51
+    assert abs(row.u_ref + row.u_cur - n1 * n2) < 1e-6

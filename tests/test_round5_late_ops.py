@@ -1,11 +1,8 @@
-"""Invariant tests for the later round-5 additions (as-of family
-completion, spectral ops, k-core, pHash dedup, attribution, bag set ops).
-As in test_round5_ops: the oracle proves engine agreement; these pin the
-claimed SEMANTICS."""
+"""Invariant test for the later round-5 as-of join: the oracle proves
+engine agreement; this pins the claimed SEMANTICS. It moves with the join
+tests of test_round5_ops."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import get_query
 
@@ -26,401 +23,3 @@ def test_asof_nearest_is_no_farther_than_either_direction(spark, sf_dir):
         b = back.get(eid)
         if b is not None:  # backward match exists (and was fresh): nearest
             assert abs(ts - nc) <= ts - b  # must be at least as close
-
-
-def test_kcore_monotone_and_bounded(spark, sf_dir):
-    from avro_parquet_spark_example_spark.operators.graph import (
-        KCORE_K,
-        cooccurrence_edges,
-    )
-
-    core = get_query("graph_kcore_peel").fn(spark, sf_dir)
-    nodes = {r["node"] for r in core.collect()}
-    e = cooccurrence_edges(spark, sf_dir)
-    deg0 = {
-        r["node"]: r["d"]
-        for r in e.selectExpr("u AS node")
-        .unionByName(e.selectExpr("v AS node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .collect()
-    }
-    # peeling only removes: survivors are original nodes whose ORIGINAL
-    # degree was at least k (necessary condition of surviving round 1)
-    assert nodes <= set(deg0)
-    assert all(deg0[n] >= KCORE_K for n in nodes)
-    # final degrees can't exceed original ones
-    for r in get_query("graph_kcore_peel").fn(spark, sf_dir).collect():
-        assert r["degree"] <= deg0[r["node"]]
-
-
-def test_phash_dedup_catches_all_injected_copies(spark, sf_dir):
-    pairs = {
-        (r["i"], r["j"])
-        for r in get_query("multimodal_phash_dedup").fn(spark, sf_dir).collect()
-    }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    injected = {
-        r["doc_id"]
-        for r in docs.filter(
-            F.col("text").isNotNull() & (F.col("doc_id") < 50)
-        ).collect()
-    }
-    for d in injected:
-        assert (d, d + 100000) in pairs, f"missing injected pair for {d}"
-    # tolerance respected
-    for r in get_query("multimodal_phash_dedup").fn(spark, sf_dir).collect():
-        assert 0 <= r["hamming"] <= 3
-
-
-def test_power_iteration_normalized_and_deterministic(spark, sf_dir):
-    a = get_query("vec_power_iteration_top_pc").fn(spark, sf_dir).collect()
-    b = get_query("vec_power_iteration_top_pc").fn(spark, sf_dir).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    mx = max(abs(float(r["direction"])) for r in a)
-    assert abs(mx - 1.0) < 1e-9  # max-abs normalization
-    assert len(a) == 64
-
-
-def test_kmeans_exact_partitions_corpus(spark, sf_dir):
-    rows = get_query("cluster_kmeans_exact").fn(spark, sf_dir).collect()
-    clusters = {r["cluster"] for r in rows}
-    assert clusters == {0, 1, 2, 3}
-    n_total = {r["cluster"]: r["n"] for r in rows}
-    n_vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    assert sum(n_total.values()) == n_vecs
-    assert len(rows) == 4 * 64  # full centroid table
-
-
-def test_attribution_credits_conserve(spark, sf_dir):
-    rows = get_query("ts_attribution_linear").fn(spark, sf_dir).collect()
-    assert rows
-    total_purchases = sum(r["n_attributed_purchases"] for r in rows)
-    total_credit = sum(r["total_credit"] for r in rows)
-    # each attributed purchase distributes ~1.0 credit (round-9 per touch)
-    assert abs(total_credit - total_purchases) < 1e-3 * max(total_purchases, 1)
-    for r in rows:
-        assert r["n_touches"] >= r["n_attributed_purchases"]
-
-
-def test_bag_semantics_multiplicities(spark, sf_dir):
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    ca = (
-        c.filter(F.col("c_acctbal") > 0)
-        .groupBy("c_nationkey")
-        .count()
-        .collect()
-    )
-    cb = (
-        c.filter(F.col("c_mktsegment") == "BUILDING")
-        .groupBy("c_nationkey")
-        .count()
-        .collect()
-    )
-    m_a = {r["c_nationkey"]: r["count"] for r in ca}
-    m_b = {r["c_nationkey"]: r["count"] for r in cb}
-    got = get_query("set_bag_semantics").fn(spark, sf_dir).collect()
-    for r in got:
-        if r["op"] == "intersect_all":
-            assert r["n"] == min(m_a.get(r["k"], 0), m_b.get(r["k"], 0))
-        else:
-            assert r["n"] == m_a.get(r["k"], 0) - m_b.get(r["k"], 0)
-
-
-def test_seasonal_baseline_scores_only_with_history(spark, sf_dir):
-    rows = get_query("ts_seasonal_baseline").fn(spark, sf_dir).collect()
-    assert rows
-    daily = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("event_type", F.col("ts").cast("date"))
-        .count()
-        .groupBy("event_type")
-        .count()
-        .collect()
-    )
-    n_days = {r["event_type"]: r["count"] for r in daily}
-    for r in rows:
-        assert r["mae"] >= 0
-        # first occurrence of each weekday is unscored
-        assert r["n_scored"] < n_days[r["event_type"]]
-
-
-# -- property tests (hypothesis): graph ops vs pure-Python references --
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-_edges_strategy = st.lists(
-    st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(
-        lambda p: p[0] != p[1]
-    ),
-    min_size=1,
-    max_size=30,
-)
-
-
-def _ref_bfs(sym_edges, seeds, hops):
-    dist = {s: 0 for s in seeds}
-    frontier = set(seeds)
-    for d in range(1, hops + 1):
-        nxt = set()
-        for u, v in sym_edges:
-            if u in dist and dist[u] == d - 1 and v not in dist:
-                nxt.add(v)
-        for v in nxt:
-            dist[v] = d
-        frontier = nxt
-    return dist
-
-
-@settings(max_examples=20, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(_edges_strategy)
-def test_bfs_matches_reference(spark, raw):
-    from avro_parquet_spark_example_spark.operators.graph import bfs_hops
-
-    sym_pairs = sorted({(u, v) for u, v in raw} | {(v, u) for u, v in raw})
-    nodes = sorted({u for u, _ in sym_pairs})
-    seeds = [n for n in nodes if n % 3 == 0]
-    if not seeds:
-        return
-    sym = spark.createDataFrame(sym_pairs, "src long, dst long")
-    seeds_df = spark.createDataFrame([(s,) for s in seeds], "node long")
-    got = {
-        r["node"]: r["hops"]
-        for r in bfs_hops(sym, seeds_df, hops=3).collect()
-    }
-    want = _ref_bfs(sym_pairs, seeds, 3)
-    assert got == want
-
-
-def _ref_kcore(edges, k, rounds):
-    es = set(edges)
-    for _ in range(rounds):
-        deg = {}
-        for u, v in es:
-            deg[u] = deg.get(u, 0) + 1
-            deg[v] = deg.get(v, 0) + 1
-        keep = {n for n, d in deg.items() if d >= k}
-        es = {(u, v) for u, v in es if u in keep and v in keep}
-    deg = {}
-    for u, v in es:
-        deg[u] = deg.get(u, 0) + 1
-        deg[v] = deg.get(v, 0) + 1
-    return deg
-
-
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(_edges_strategy)
-def test_kcore_matches_reference(spark, raw):
-    """Re-run the registered query's peel loop on a synthetic edge set and
-    compare against a sequential reference (k=2 so small graphs survive)."""
-    from pyspark.sql import functions as F
-
-    edges = sorted({(min(u, v), max(u, v)) for u, v in raw})
-    e = spark.createDataFrame(edges, "u long, v long")
-    k, rounds = 2, 3
-    for _ in range(rounds):
-        deg = (
-            e.selectExpr("u AS node")
-            .unionByName(e.selectExpr("v AS node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("node")
-        e = (
-            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
-        )
-    got = {
-        r["node"]: r["degree"]
-        for r in e.selectExpr("u AS node")
-        .unionByName(e.selectExpr("v AS node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .collect()
-    }
-    assert got == _ref_kcore(edges, k, rounds)
-
-
-def test_langid_confusion_matrix_consistency(spark, sf_dir):
-    """Confusion matrix is a complete partition of the corpus: shares per
-    gold language sum to 1, n sums to the document count, and the fr/zh
-    coverage gap is visible (no marker set -> zero diagonal mass)."""
-    from pyspark.sql import functions as F
-
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    rows = get_query("eval_langid_confusion").fn(spark, sf_dir).collect()
-    n_docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    )
-    assert sum(r.n for r in rows) == n_docs
-    by_gold: dict[str, float] = {}
-    for r in rows:
-        by_gold[r.lang] = by_gold.get(r.lang, 0.0) + r.share
-    for lang, s in by_gold.items():
-        assert abs(s - 1.0) < 1e-4, (lang, s)
-    # fr/zh have no marker set: the heuristic can never predict them
-    assert not any(r.pred_lang in ("fr", "zh") for r in rows)
-
-
-def test_keyness_llr_matches_python_reference(spark, sf_dir):
-    """LLR re-derives (±1e-5) from a pure-Python recount of the token
-    split, is non-negative, and the direction flag matches exact rate
-    comparison."""
-    import math
-
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    rows = get_query("text_keyness_llr").fn(spark, sf_dir).collect()
-    assert rows, "fixture vocabulary clears the min-count floor"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    k1: dict[str, int] = {}
-    k2: dict[str, int] = {}
-    for d in docs:
-        if d.text is None:
-            continue
-        for t in d.text.strip().lower().split(" "):
-            side = k1 if d.lang == "en" else k2
-            side[t] = side.get(t, 0) + 1
-    n1, n2 = sum(k1.values()), sum(k2.values())
-
-    def ll(k, n, ktot):
-        return 0.0 if k == 0 else k * math.log(k * (n1 + n2) / (n * ktot))
-
-    for r in rows:
-        a, b = k1.get(r.term, 0), k2.get(r.term, 0)
-        assert (a, b) == (r.focus_count, r.ref_count), r.term
-        want = 2.0 * (ll(a, n1, a + b) + ll(b, n2, a + b))
-        assert abs(r.llr - want) < 1e-5, (r.term, r.llr, want)
-        assert r.llr >= -1e-9, "LLR is a likelihood RATIO — never negative"
-        assert r.overused_in == ("focus" if a * n2 > b * n1 else "reference")
-
-
-def test_ks_drift_matches_python_reference(spark, sf_dir):
-    """The distributed two-phase KS equals a single-threaded recompute of
-    max |CDF_ref − CDF_cur| over pooled observed values, and sits in
-    [0, 1] with the period split conserving rows."""
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    row = get_query("dq_drift_ks").fn(spark, sf_dir).collect()[0]
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
-    import datetime
-
-    split = datetime.datetime(1997, 1, 1)
-    ref = sorted(o.o_totalprice for o in orders if o.o_orderdate < split)
-    cur = sorted(o.o_totalprice for o in orders if o.o_orderdate >= split)
-    assert (row.n_ref, row.n_cur) == (len(ref), len(cur))
-    assert len(ref) + len(cur) == len(orders)
-    import bisect
-
-    ks = 0.0
-    for v in set(ref) | set(cur):
-        f1 = bisect.bisect_right(ref, v) / len(ref)
-        f2 = bisect.bisect_right(cur, v) / len(cur)
-        ks = max(ks, abs(f1 - f2))
-    assert abs(row.ks_stat - ks) < 1e-8, (row.ks_stat, ks)
-    assert 0.0 <= row.ks_stat <= 1.0
-
-
-def test_seasonality_decomposition_identity(spark, sf_dir):
-    """observed == grand_mean + dow_effect + residual (±2e-6 for the
-    per-column 6dp rounding), and residuals average ≈ 0 within each
-    day-of-week group (the defining property of the dow-mean fit)."""
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    rows = get_query("ts_seasonality_decompose").fn(spark, sf_dir).collect()
-    assert rows
-    by_dow: dict[int, list] = {}
-    for r in rows:
-        assert abs(r.n - (r.grand_mean + r.dow_effect + r.residual)) < 2e-6
-        by_dow.setdefault(r.day.weekday(), []).append(r.residual)
-    for dow, res in by_dow.items():
-        assert abs(sum(res) / len(res)) < 1e-5, (dow, sum(res))
-
-
-def test_stream_window_topk_matches_batch(spark, sf_dir):
-    """The streaming count + batch rank split reproduces a pure-batch
-    top-3-per-window recount, with ranks dense in 1..3."""
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    rows = get_query("stream_window_topk_types").fn(spark, sf_dir).collect()
-    assert rows
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = (
-        ev.groupBy(
-            F.date_trunc("hour", (F.col("ts") / 1000).cast("timestamp")).alias("w")
-            if dict(ev.dtypes)["ts"] == "bigint"
-            else F.date_trunc("hour", "ts").alias("w"),
-            "event_type",
-        )
-        .count()
-        .collect()
-    )
-    counts: dict = {}
-    for b in batch:
-        counts.setdefault(b.w, []).append((b["count"], b.event_type))
-    for r in rows:
-        assert 1 <= r.rk <= 3
-        top = sorted(counts[r.win_start], key=lambda t: (-t[0], t[1]))[:3]
-        assert (r.n, r.event_type) == top[r.rk - 1], (r.win_start, r.rk)
-
-
-def test_welch_ttest_matches_python_reference(spark, sf_dir):
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    row = get_query("dq_drift_welch_ttest").fn(spark, sf_dir).collect()[0]
-    import datetime
-    import statistics
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
-    split = datetime.datetime(1997, 1, 1)
-    ref = [o.o_totalprice for o in orders if o.o_orderdate < split]
-    cur = [o.o_totalprice for o in orders if o.o_orderdate >= split]
-    assert (row.n1, row.n2) == (len(ref), len(cur))
-    m1, m2 = statistics.fmean(ref), statistics.fmean(cur)
-    s1, s2 = statistics.variance(ref), statistics.variance(cur)
-    se2 = s1 / len(ref) + s2 / len(cur)
-    t = (m1 - m2) / se2**0.5
-    dof = se2**2 / (
-        (s1 / len(ref)) ** 2 / (len(ref) - 1)
-        + (s2 / len(cur)) ** 2 / (len(cur) - 1)
-    )
-    assert abs(row.mean_diff - (m1 - m2)) < 1e-4
-    assert abs(row.t_stat - t) < 1e-4
-    assert abs(row.dof - dof) < 1e-2
-    assert min(len(ref), len(cur)) - 1 <= row.dof <= len(ref) + len(cur) - 2
-
-
-def test_mannwhitney_identities_and_reference(spark, sf_dir):
-    """U_ref + U_cur == n1·n2 exactly; rank-sum re-derives from a
-    pure-Python midrank computation."""
-    from avro_parquet_spark_example_spark.registry import get_query
-
-    row = get_query("dq_drift_mannwhitney").fn(spark, sf_dir).collect()[0]
-    import datetime
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").collect()
-    split = datetime.datetime(1997, 1, 1)
-    pooled = sorted(
-        (o.o_totalprice, o.o_orderdate < split) for o in orders
-    )
-    n1 = sum(1 for _, r in pooled if r)
-    n2 = len(pooled) - n1
-    assert (row.n1, row.n2) == (n1, n2)
-    # midranks
-    r1 = 0.0
-    i = 0
-    while i < len(pooled):
-        j = i
-        while j < len(pooled) and pooled[j][0] == pooled[i][0]:
-            j += 1
-        midrank = (i + 1 + j) / 2.0  # ranks i+1..j
-        r1 += midrank * sum(1 for k in range(i, j) if pooled[k][1])
-        i = j
-    assert abs(row.rank_sum_ref - r1) < 0.51  # both rounded at 1dp
-    assert abs(row.u_ref - (r1 - n1 * (n1 + 1) / 2.0)) < 0.51
-    assert abs(row.u_ref + row.u_cur - n1 * n2) < 1e-6

@@ -15,7 +15,8 @@ silently breaking six event-time queries. These tests pin the defenses:
 The engine's per-session state (``session.session_state``) is pinned here
 too: a registry key builds once per session even when threads race,
 ``release`` frees the checkpoints that cached plans hold, and
-``newSession()`` siblings keep separate plans.
+``newSession()`` siblings keep separate plans and data source
+registrations.
 """
 
 from __future__ import annotations
@@ -25,14 +26,16 @@ import gc
 import sys
 import threading
 import time
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
 from avro_parquet_spark_example_spark.registry import Query, _wrap, all_queries
+from avro_parquet_spark_example_spark import session
 from avro_parquet_spark_example_spark.session import (
-    LAST_UNAPPLIED_CONFIGS,
     configure,
+    register_source,
     release,
     session_state,
     verify_events_readable,
@@ -80,10 +83,22 @@ def test_ts_us_total_over_read_types(spark):
 
 
 def test_configure_reports_unapplied_configs(spark):
-    configure(spark)
-    # On the pinned sandbox Spark everything is runtime-settable; what we
-    # really pin is the contract: failures land in the dict, not in a pass.
-    assert LAST_UNAPPLIED_CONFIGS == {}
+    # On the pinned sandbox Spark everything is runtime-settable, so
+    # configure warns about nothing.
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        configure(spark)
+    assert [w for w in caught if issubclass(w.category, RuntimeWarning)] == []
+
+
+def test_configure_warns_on_static_config(spark, monkeypatch):
+    """A config Spark refuses at runtime is reported by name, not
+    swallowed: a static conf stands in for a version-dependent one."""
+    monkeypatch.setattr(
+        session, "RUNTIME_CONFIGS", {"spark.sql.warehouse.dir": "elsewhere"}
+    )
+    with pytest.warns(RuntimeWarning, match="spark.sql.warehouse.dir"):
+        configure(spark)
 
 
 def test_unconfigured_session_runs_event_time_query(spark, sf_dir):
@@ -225,3 +240,29 @@ def test_sibling_sessions_keep_separate_plans(spark, sf_dir):
     release(sibling)
     assert run(spark, sf_dir) is mine
     assert run(sibling, sf_dir) is not theirs
+
+
+def test_register_source_once_per_session(spark, monkeypatch):
+    """A Python data source registers once per session, ``release`` keeps
+    the record (the registration lives in the JVM session), and a
+    ``newSession()`` sibling registers its own."""
+    from pyspark.sql.datasource import DataSource, DataSourceRegistration
+
+    class Probe(DataSource):
+        @classmethod
+        def name(cls):
+            return "probe_source"
+
+    registered = []
+
+    def register(self, source):
+        registered.append(source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", register)
+    register_source(spark, Probe)
+    register_source(spark, Probe)
+    release(spark)
+    register_source(spark, Probe)
+    assert registered == [Probe]
+    register_source(spark.newSession(), Probe)
+    assert registered == [Probe, Probe]

@@ -1,6 +1,7 @@
 """Similarity-search correctness: hand-computed cosine ranking on tiny
 vectors, LSH recall vs the brute-force baseline (FIXTURES.md §3), and the
-scaled LSH bit-count dial."""
+scaled LSH bit-count dial; the power-iteration top component is
+normalized and deterministic."""
 
 from __future__ import annotations
 
@@ -597,3 +598,12 @@ def test_lsh_table_keys_scaled_k_roundtrip(spark):
         ).alias("p")
     )
     assert probes.distinct().count() == L_TABLES * (k + 1)
+
+
+def test_power_iteration_normalized_and_deterministic(spark, sf_dir):
+    a = get_query("vec_power_iteration_top_pc").fn(spark, sf_dir).collect()
+    b = get_query("vec_power_iteration_top_pc").fn(spark, sf_dir).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    mx = max(abs(float(r["direction"])) for r in a)
+    assert abs(mx - 1.0) < 1e-9  # max-abs normalization
+    assert len(a) == 64

@@ -1,16 +1,72 @@
 """Streaming semantics over literal fixtures (FIXTURES.md §3 late_events):
-dedup drops duplicate ids, stream final state equals batch aggregate."""
+dedup drops duplicate ids, stream final state equals batch aggregate.
+``run_to_table``'s micro-batches are observed through a
+``StreamingQueryListener``; it leaves no sink view behind, and its conf
+override ends with ``start()``."""
 
 from __future__ import annotations
 
+import json
 import os
+import sys
+import threading
+import time
+from collections import defaultdict
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from avro_parquet_spark_example_spark.registry import get_query
 from avro_parquet_spark_example_spark.streaming.stateful import run_to_table
 
 FIXTURE_DIR = "/tmp/avro_parquet_spark_example_spark_test_stream"
+
+
+class _Progress(StreamingQueryListener):
+    """Progress of every streaming query the session runs, by query id, and
+    the ids of the queries that started and terminated. Callbacks run on
+    py4j threads."""
+
+    def __init__(self):
+        self.cond = threading.Condition()
+        self.started: set[str] = set()
+        self.terminated: set[str] = set()
+        self.progress: dict[str, list[dict]] = defaultdict(list)
+
+    def onQueryStarted(self, event):
+        with self.cond:
+            self.started.add(str(event.id))
+
+    def onQueryProgress(self, event):
+        with self.cond:
+            self.progress[str(event.progress.id)].append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self.cond:
+            self.terminated.add(str(event.id))
+            self.cond.notify_all()
+
+
+def _run_observed(spark, run):
+    """``run()``'s result and, for each streaming query it runs, that
+    query's progress, one dict per micro-batch. Listener events arrive
+    asynchronously, so this waits for each query's termination event."""
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        result = run()
+        with listener.cond:
+            assert listener.cond.wait_for(
+                lambda: listener.started and listener.started <= listener.terminated,
+                timeout=60,
+            ), "no termination event"
+    finally:
+        spark.streams.removeListener(listener)
+    return result, [listener.progress[q] for q in listener.started]
 
 
 def _write_fixture(spark):
@@ -156,16 +212,13 @@ def test_stream_dedup_elides_no_data_batch(spark, sf_dir):
     """Append dropDuplicates emits rows WITH the data batch, so the r16
     elision must leave exactly the data batch(es) — and the output stays
     the full dedup (oracle-checked elsewhere; row count pinned here)."""
-    from avro_parquet_spark_example_spark.streaming import stateful
-
-    out = get_query("stream_watermark_dedup").fn(spark, sf_dir)
+    out, [progress] = _run_observed(
+        spark, lambda: get_query("stream_watermark_dedup").fn(spark, sf_dir)
+    )
     n = out.count()
     assert n == spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert stateful.LAST_STREAM_PROGRESS, "progress not captured"
-    data_batches = [
-        p for p in stateful.LAST_STREAM_PROGRESS if p.get("numInputRows")
-    ]
-    assert len(stateful.LAST_STREAM_PROGRESS) == len(data_batches), (
+    assert progress, "progress not captured"
+    assert all(p["numInputRows"] for p in progress), (
         "no-data batch ran despite final_no_data_batch=False"
     )
 
@@ -174,14 +227,97 @@ def test_stream_session_keeps_no_data_batch(spark, sf_dir):
     """Append session windows emit ON watermark advance: the trailing
     no-data batch must STAY (eliding it would withhold every session
     closed by the final watermark — a correctness bug, not a tuning)."""
-    from avro_parquet_spark_example_spark.streaming import stateful
-
-    get_query("stream_session_windowed").fn(spark, sf_dir).count()
-    progress = stateful.LAST_STREAM_PROGRESS
-    assert any(p.get("numInputRows") == 0 for p in progress), (
+    _, [progress] = _run_observed(
+        spark,
+        lambda: get_query("stream_session_windowed").fn(spark, sf_dir).count(),
+    )
+    assert progress and progress[-1]["numInputRows"] == 0, (
         "trailing watermark-advance batch missing on an append session "
         "window"
     )
+
+
+def test_run_to_table_leaves_no_sink_view(spark, sf_dir):
+    """The memory sink's temp view goes once the result frame is bound:
+    the sink's rows live as long as the result, not as long as the
+    session, and the bound frame still reads them all."""
+    out = get_query("stream_watermark_dedup").fn(spark, sf_dir)
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("sink_")]
+    assert views == []
+    assert out.count() == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+
+
+def test_run_to_table_overrides_conf_only_in_start(spark, tmp_path):
+    """``state_partitions`` overrides the session's shuffle partitions only
+    while ``start()`` runs: the stream has cloned the conf by then. So the
+    session reads its own value while the query runs, and the query's
+    state store still has the overridden partition count."""
+    src = str(tmp_path / "src")
+    for i in range(10):
+        batch = spark.range(i * 10, i * 10 + 10, numPartitions=1)
+        batch.selectExpr("id", "id % 3 AS k").write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    own = spark.conf.get("spark.sql.shuffle.partitions")
+    assert own != "3"
+    seen: list[str] = []
+
+    def run():
+        with ThreadPoolExecutor(1) as pool:
+            done = pool.submit(
+                run_to_table, stream.groupBy("k").count(), "complete", 3
+            )
+            deadline = time.monotonic() + 120
+            while not done.done():
+                assert time.monotonic() < deadline, "run_to_table did not finish"
+                # a query with a finished batch has long returned from start()
+                if any(q.lastProgress for q in spark.streams.active):
+                    seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+                time.sleep(0.05)
+            return done.result()
+
+    out, [progress] = _run_observed(spark, run)
+    assert sorted(r["count"] for r in out.collect()) == [33, 33, 34]
+    assert seen, "the poll never saw the query running"
+    assert set(seen) == {own}
+    assert len(progress) >= 10
+    assert progress[-1]["stateOperators"][0]["numShufflePartitions"] == 3
+
+
+def test_concurrent_run_to_table_keep_their_overrides(spark, tmp_path):
+    """Five concurrent ``run_to_table`` calls, each with its own
+    ``state_partitions``, on more threads than cores and a short switch
+    interval: each query gets its own partition count, and the session
+    ends with its own value."""
+    src = str(tmp_path / "src")
+    spark.range(0, 30, numPartitions=1).selectExpr("id", "id % 3 AS k").write.parquet(
+        src
+    )
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    own = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run():
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(5) as pool:
+                runs = [
+                    pool.submit(run_to_table, stream.groupBy("k").count(), "complete", n)
+                    for n in range(1, 6)
+                ]
+                return [r.result(timeout=120).count() for r in runs]
+        finally:
+            sys.setswitchinterval(switch)
+
+    counts, progress = _run_observed(spark, run)
+    assert counts == [3] * 5
+    assert sorted(
+        p[-1]["stateOperators"][0]["numShufflePartitions"] for p in progress
+    ) == [1, 2, 3, 4, 5]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == own
 
 
 # --------------------------------------------------------------------------
@@ -250,3 +386,30 @@ def test_tuned_streams_match_batch(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_stream_window_topk_matches_batch(spark, sf_dir):
+    """The streaming count + batch rank split reproduces a pure-batch
+    top-3-per-window recount, with ranks dense in 1..3."""
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    rows = get_query("stream_window_topk_types").fn(spark, sf_dir).collect()
+    assert rows
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = (
+        ev.groupBy(
+            F.date_trunc("hour", (F.col("ts") / 1000).cast("timestamp")).alias("w")
+            if dict(ev.dtypes)["ts"] == "bigint"
+            else F.date_trunc("hour", "ts").alias("w"),
+            "event_type",
+        )
+        .count()
+        .collect()
+    )
+    counts: dict = {}
+    for b in batch:
+        counts.setdefault(b.w, []).append((b["count"], b.event_type))
+    for r in rows:
+        assert 1 <= r.rk <= 3
+        top = sorted(counts[r.win_start], key=lambda t: (-t[0], t[1]))[:3]
+        assert (r.n, r.event_type) == top[r.rk - 1], (r.win_start, r.rk)

@@ -2,7 +2,8 @@
 merge loop against the distributed per-round form it replaced, and the
 document-length quantiles against a Python reference; the single-pass
 BLEU/ROUGE clip counts and diversity metrics against the join forms they
-replaced."""
+replaced; keyness LLR against a Python recount, and the language-id
+confusion matrix as a partition of the corpus."""
 
 from __future__ import annotations
 
@@ -184,3 +185,58 @@ def test_text_diversity_single_pass_matches_join_form_semantics(spark):
     assert (r["n_docs"], r["n_tokens"], r["distinct_unigrams"]) == (2, 3, 2)
     assert r["distinct_bigrams"] == 2
     assert r["distinct_bigram_ratio"] == 1.0  # 2 distinct / 2 bigrams
+
+
+def test_langid_confusion_matrix_consistency(spark, sf_dir):
+    """Confusion matrix is a complete partition of the corpus: shares per
+    gold language sum to 1, n sums to the document count, and the fr/zh
+    coverage gap is visible (no marker set -> zero diagonal mass)."""
+    from pyspark.sql import functions as F
+
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    rows = get_query("eval_langid_confusion").fn(spark, sf_dir).collect()
+    n_docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    )
+    assert sum(r.n for r in rows) == n_docs
+    by_gold: dict[str, float] = {}
+    for r in rows:
+        by_gold[r.lang] = by_gold.get(r.lang, 0.0) + r.share
+    for lang, s in by_gold.items():
+        assert abs(s - 1.0) < 1e-4, (lang, s)
+    # fr/zh have no marker set: the heuristic can never predict them
+    assert not any(r.pred_lang in ("fr", "zh") for r in rows)
+
+
+def test_keyness_llr_matches_python_reference(spark, sf_dir):
+    """LLR re-derives (±1e-5) from a pure-Python recount of the token
+    split, is non-negative, and the direction flag matches exact rate
+    comparison."""
+    import math
+
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    rows = get_query("text_keyness_llr").fn(spark, sf_dir).collect()
+    assert rows, "fixture vocabulary clears the min-count floor"
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    k1: dict[str, int] = {}
+    k2: dict[str, int] = {}
+    for d in docs:
+        if d.text is None:
+            continue
+        for t in d.text.strip().lower().split(" "):
+            side = k1 if d.lang == "en" else k2
+            side[t] = side.get(t, 0) + 1
+    n1, n2 = sum(k1.values()), sum(k2.values())
+
+    def ll(k, n, ktot):
+        return 0.0 if k == 0 else k * math.log(k * (n1 + n2) / (n * ktot))
+
+    for r in rows:
+        a, b = k1.get(r.term, 0), k2.get(r.term, 0)
+        assert (a, b) == (r.focus_count, r.ref_count), r.term
+        want = 2.0 * (ll(a, n1, a + b) + ll(b, n2, a + b))
+        assert abs(r.llr - want) < 1e-5, (r.term, r.llr, want)
+        assert r.llr >= -1e-9, "LLR is a likelihood RATIO — never negative"
+        assert r.overused_in == ("focus" if a * n2 > b * n1 else "reference")

@@ -2,7 +2,9 @@
 EWMA closed form must equal the sequential recursion EXACTLY (dyadic α),
 transition counts must conserve events, pattern runs must be genuinely
 increasing. ACF, Fano, Theil–Sen and Mann–Kendall are checked against
-Python references and their closed forms."""
+Python references and their closed forms; attribution conserves credit,
+the seasonal baseline scores only days with history, and the seasonality
+decomposition adds back up to the series."""
 
 from __future__ import annotations
 
@@ -667,3 +669,48 @@ def test_ts_degenerate_margins(spark):
         "k", "day", "x", segments=3,
     ).collect()
     assert all(r.slope is None for r in pw if r.n_days == 1)
+
+
+def test_attribution_credits_conserve(spark, sf_dir):
+    rows = get_query("ts_attribution_linear").fn(spark, sf_dir).collect()
+    assert rows
+    total_purchases = sum(r["n_attributed_purchases"] for r in rows)
+    total_credit = sum(r["total_credit"] for r in rows)
+    # each attributed purchase distributes ~1.0 credit (round-9 per touch)
+    assert abs(total_credit - total_purchases) < 1e-3 * max(total_purchases, 1)
+    for r in rows:
+        assert r["n_touches"] >= r["n_attributed_purchases"]
+
+
+def test_seasonal_baseline_scores_only_with_history(spark, sf_dir):
+    rows = get_query("ts_seasonal_baseline").fn(spark, sf_dir).collect()
+    assert rows
+    daily = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .groupBy("event_type", F.col("ts").cast("date"))
+        .count()
+        .groupBy("event_type")
+        .count()
+        .collect()
+    )
+    n_days = {r["event_type"]: r["count"] for r in daily}
+    for r in rows:
+        assert r["mae"] >= 0
+        # first occurrence of each weekday is unscored
+        assert r["n_scored"] < n_days[r["event_type"]]
+
+
+def test_seasonality_decomposition_identity(spark, sf_dir):
+    """observed == grand_mean + dow_effect + residual (±2e-6 for the
+    per-column 6dp rounding), and residuals average ≈ 0 within each
+    day-of-week group (the defining property of the dow-mean fit)."""
+    from avro_parquet_spark_example_spark.registry import get_query
+
+    rows = get_query("ts_seasonality_decompose").fn(spark, sf_dir).collect()
+    assert rows
+    by_dow: dict[int, list] = {}
+    for r in rows:
+        assert abs(r.n - (r.grand_mean + r.dow_effect + r.residual)) < 2e-6
+        by_dow.setdefault(r.day.weekday(), []).append(r.residual)
+    for dow, res in by_dow.items():
+        assert abs(sum(res) / len(res)) < 1e-5, (dow, sum(res))

@@ -117,6 +117,27 @@ def test_perf_sweep_host_keys():
     assert site["worker_pyspark_zip"] is False
 
 
+def test_oracle_compare_flags_driver_render_types():
+    """The one comparison both oracle gates run: equal results pass; a
+    HUGEINT oracle column, a decimal of another precision, a missing
+    column and a changed value each fail."""
+    from decimal import Decimal
+
+    from pyspark.sql.types import DecimalType, LongType, StructField, StructType
+
+    from tools.check_oracle import compare
+
+    schema = StructType([StructField("a", LongType()), StructField("d", DecimalType(10, 2))])
+    rows = [(1, Decimal("1.00"))]
+    assert compare(schema, rows, ["a", "d"], ["BIGINT", "DECIMAL(10,2)"], rows) == []
+    [hug, dec] = compare(schema, rows, ["a", "d"], ["HUGEINT", "DECIMAL(12,2)"], rows)
+    assert "HUGEINT" in hug and "decimal render mismatch on d" in dec
+    [missing, cols] = compare(schema, rows, ["a", "e"], ["BIGINT", "DECIMAL(10,2)"], rows)
+    assert "spark=missing-column" in missing and cols.startswith("cols")
+    [value] = compare(schema, rows, ["a", "d"], ["BIGINT", "DECIMAL(10,2)"], [(2, rows[0][1])])
+    assert value.startswith("value mismatch")
+
+
 # --------------------------------------------------------------------------
 # bench contention-recapture rule (VERDICT r13 task #3)
 # --------------------------------------------------------------------------

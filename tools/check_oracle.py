@@ -74,6 +74,45 @@ def canon_rows(cols, rows):
     return sorted("|".join(canon_cell(r[i]) for i in idx) for r in rows)
 
 
+def compare(schema, srows, dcols, dtypes, drows) -> list[str]:
+    """How a Spark result (``schema``, ``srows``) differs from its DuckDB
+    oracle (column names, type strings, rows): row count, columns,
+    driver-render types and the canonical value multiset. Empty if equal."""
+    scols = schema.names
+    problems = []
+    # driver-render type lint (see tests/test_oracles.py): a HUGEINT
+    # column hashes differently from Spark's BIGINT on the driver even
+    # when fetchall() values compare equal below — fail it here so the
+    # local gate can never again pass what the driver fails.
+    hug = [c for c, t in zip(dcols, dtypes) if "HUGEINT" in t]
+    if hug:
+        problems.append(f"oracle emits HUGEINT (driver render bug): {hug}")
+    spark_types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    for c, t in zip(dcols, dtypes):
+        if "DECIMAL" in t:
+            want = "decimal" + t.split("DECIMAL", 1)[1].replace(" ", "")
+            # a DuckDB DECIMAL column with no Spark counterpart must
+            # report FAIL, not raise: the column-name check comes later
+            got = spark_types.get(str(c).lower(), "missing-column")
+            if got != want.lower():
+                problems.append(
+                    f"decimal render mismatch on {c}: duck={t} spark={got}"
+                )
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
+    if sorted(scols) != sorted(c.lower() for c in map(str, dcols)):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
+    if not problems:
+        sc, dc = canon_rows(scols, srows), canon_rows(dcols, drows)
+        if sc != dc:
+            diff = next(
+                (i for i, (a, b) in enumerate(zip(sc, dc)) if a != b), None
+            )
+            detail = f" first diff row {diff}:\n  spark={sc[diff]}\n  duck ={dc[diff]}" if diff is not None else ""
+            problems.append(f"value mismatch{detail}")
+    return problems
+
+
 def _prev_listing_timings() -> tuple[str, dict[str, float]]:
     """Per-query seconds from the committed CORRECTNESS_LOCAL.md
     record's section for THIS scale factor — the only like-for-like
@@ -162,7 +201,6 @@ def main(names: list[str]) -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception:
             print(f"FAIL {name}: spark raised")
@@ -189,51 +227,7 @@ def main(names: list[str]) -> int:
             n_fail += 1
             continue
         oracle_s = time.time() - t1
-        problems = []
-        # driver-render type lint (see tests/test_oracles.py): a HUGEINT
-        # column hashes differently from Spark's BIGINT on the driver even
-        # when fetchall() values compare equal below — fail it here so the
-        # local gate can never again pass what the driver fails.
-        hug = [c for c, t in zip(dcols, dtypes) if "HUGEINT" in t]
-        if hug:
-            problems.append(f"oracle emits HUGEINT (driver render bug): {hug}")
-        spark_dec = {
-            f.name: f.dataType.simpleString()
-            for f in sdf.schema.fields
-            if f.dataType.typeName() == "decimal"
-        }
-        for c, t in zip(dcols, dtypes):
-            if "DECIMAL" in t:
-                want = "decimal" + t.split("DECIMAL", 1)[1].replace(" ", "")
-                got = spark_dec.get(str(c).lower())
-                if got != want.lower():
-                    # guarded fallback: the column-name comparison runs
-                    # AFTER this lint, so a DuckDB DECIMAL column with no
-                    # Spark counterpart must report FAIL, not raise
-                    fallback = next(
-                        (
-                            f.dataType.simpleString()
-                            for f in sdf.schema.fields
-                            if f.name == str(c).lower()
-                        ),
-                        "missing-column",
-                    )
-                    problems.append(
-                        f"decimal render mismatch on {c}: duck={t} "
-                        f"spark={got or fallback}"
-                    )
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        if sorted(scols) != sorted(c.lower() for c in map(str, dcols)):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        if not problems:
-            sc, dc = canon_rows(scols, srows), canon_rows(dcols, drows)
-            if sc != dc:
-                diff = next(
-                    (i for i, (a, b) in enumerate(zip(sc, dc)) if a != b), None
-                )
-                detail = f" first diff row {diff}:\n  spark={sc[diff]}\n  duck ={dc[diff]}" if diff is not None else ""
-                problems.append(f"value mismatch{detail}")
+        problems = compare(sdf.schema, srows, dcols, dtypes, drows)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
             n_fail += 1

@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check_oracle import canon_rows  # noqa: E402
+from check_oracle import compare  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -103,7 +103,7 @@ def main() -> int:
         keys = keys[: args.window]
 
     # Oracle results are deterministic — compute once per key, reuse per repeat.
-    oracle_cache: dict[str, tuple[list, list]] = {}
+    oracle_cache: dict[str, tuple[list, list, list]] = {}
     fails: list[str] = []
     n_checked = 0
     import gc
@@ -130,21 +130,16 @@ def main() -> int:
                 spark.catalog.clearCache()
             try:
                 df = queries[name](spark, sf_dir)
-                scols, srows = df.columns, [tuple(r) for r in df.collect()]
+                srows = [tuple(r) for r in df.collect()]
                 if name in oracles:
                     if name not in oracle_cache:
-                        res = con.execute(oracles[name])
+                        rel = con.sql(oracles[name])
                         oracle_cache[name] = (
-                            [d[0] for d in res.description],
-                            res.fetchall(),
+                            list(rel.columns),
+                            [str(t) for t in rel.types],
+                            rel.fetchall(),
                         )
-                    dcols, drows = oracle_cache[name]
-                    ok = (
-                        len(srows) == len(drows)
-                        and sorted(scols) == sorted(c.lower() for c in map(str, dcols))
-                        and canon_rows(scols, srows) == canon_rows(dcols, drows)
-                    )
-                    if not ok:
+                    if compare(df.schema, srows, *oracle_cache[name]):
                         rep_fails.append(name)
                     n_checked += 1
             except Exception as exc:
